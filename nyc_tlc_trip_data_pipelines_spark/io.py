@@ -775,6 +775,20 @@ def append_versioned(
         return n
 
 
+def _affected_jobs(jobs: DataFrame, path: str) -> set[str]:
+    """Distinct ``__job`` values of a rewrite probe. An empty id means a
+    matched file does not sit directly in its ``job_col=`` directory (a
+    nested partition layout); treating it as "no job affected" would
+    silently skip the rewrite, so it fails loudly instead."""
+    affected = {r[0] for r in jobs.distinct().collect()}
+    if "" in affected:
+        raise ValueError(
+            f"{path}: a matched file is not directly under its job "
+            "directory (nested partitions?); refusing to skip its rewrite"
+        )
+    return affected
+
+
 def delete_where(spark: SparkSession, path: str, condition: Column) -> int:
     """Copy-on-write row-level DELETE over a versioned-append table —
     the Delta ``DELETE FROM`` analog, time-travel preserved: every
@@ -821,13 +835,12 @@ def delete_where(spark: SparkSession, path: str, condition: Column) -> int:
     # when a parent path segment happens to look like one (e.g.
     # /data/__job_id=archive/tbl), and job_col must be regex-escaped.
     job_rx = re.escape(job_col) + "=([^/]+)/[^/]*$"
-    affected = {
-        r[0]
-        for r in probe.filter(condition)
-        .select(F.regexp_extract(F.input_file_name(), job_rx, 1).alias("__job"))
-        .distinct()
-        .collect()
-    }
+    affected = _affected_jobs(
+        probe.filter(condition).select(
+            F.regexp_extract(F.input_file_name(), job_rx, 1).alias("__job")
+        ),
+        path,
+    )
     new_jobs: list[str] = []
     new_zones: dict = {}
     changed = False
@@ -1005,16 +1018,14 @@ def merge_versioned(
     # EXPRESSION whenever `updates` itself came from a file source).
     # Regex anchored to the leaf directory + escaped, as delete_where's.
     job_rx = re.escape(job_col) + "=([^/]+)/[^/]*$"
-    affected = {
-        r[0]
-        for r in probe.select(
+    affected = _affected_jobs(
+        probe.select(
             *keys, F.regexp_extract(F.input_file_name(), job_rx, 1).alias("__job")
         )
         .join(F.broadcast(keyset), list(keys), "left_semi")
-        .select("__job")
-        .distinct()
-        .collect()
-    }
+        .select("__job"),
+        path,
+    )
     new_jobs: list[str] = []
     new_zones: dict = {}
     for job in jobs:

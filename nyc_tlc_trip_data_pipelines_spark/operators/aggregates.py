@@ -716,6 +716,9 @@ def _u_threshold_to_h(t: float) -> int:
             hi = mid
         else:
             lo = mid
+    # h = 2⁶⁰ (t above every u) would format as 16 hex digits and break
+    # the fixed-width 15-digit compare of the CASE ladder
+    assert hi < 1 << 60, f"threshold {t!r} has no 15-hex-digit flip point"
     return hi
 
 

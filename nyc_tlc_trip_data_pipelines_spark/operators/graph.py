@@ -31,7 +31,8 @@ bounds the adversarial chain case.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from .joins import size_gated_broadcast
@@ -212,43 +213,63 @@ def pagerank(
     formulation). Returns (node, pr) after ``iterations`` rounds from a
     uniform 1/N start.
 
-    Scale shape: ranks and out-degrees shuffle on node id each round —
-    at 100 TB pre-partition both by id (bucketing) so every iteration's
-    join is exchange-free, and persist the degree table once. The
-    iteration count is fixed (no driver-side convergence collect), so
-    the whole run is ``iterations`` chained stages Catalyst can see.
+    Materialization: the caller's edge plan runs exactly ONCE, into a
+    ``localCheckpoint`` of the weighted edge list (src, dst, out_deg),
+    with out_deg a window count over src (no degree join). The node
+    table is derived from that checkpoint and checkpointed too, with N
+    read from an ``Observation`` on the same job instead of a separate
+    ``count()``. Both are stored serialized (PySpark's MEMORY_AND_DISK,
+    ~12× smaller than deserialized rows) and are freed when the result
+    is garbage-collected, so nothing stays pinned as ``persist()``
+    blocks would. Each round is one aggregate over the contributions
+    plus one (node, NULL) row per node, which keeps nodes without
+    in-edges at the (1-d)/N teleport term without a left join against
+    the node table. Round 1 divides the literal 1/N by out_deg instead
+    of joining a constant rank table. out_deg is carried (not
+    pre-inverted to a weight): pr/deg rounds once, pr*(1/deg) twice —
+    every term keeps the ``pr / out_deg`` form, bit-identical to a
+    plain SQL replay.
+
+    Scale shape: the per-round rank table (one row per node) is
+    broadcast to the edge list while Catalyst's size estimate allows
+    (``size_gated_broadcast``), so the join is planned before the run
+    instead of AQE picking it as stages finish, which gave two runs of
+    one query different plans and generated code. Past the gate ranks
+    shuffle on node id each round — at 100 TB pre-partition the edge
+    list by src (bucketing) so every iteration's join is exchange-free
+    on the edge side. The iteration
+    count is fixed (no driver-side convergence collect), so the whole
+    run is ``iterations`` chained stages Catalyst can see.
     """
     e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")).distinct()
+    e_w = e.withColumn(
+        "out_deg", F.count(F.lit(1)).over(Window.partitionBy("src"))
+    ).localCheckpoint(storageLevel=StorageLevel.MEMORY_AND_DISK)
+    obs = Observation()
     nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
+        e_w.select(F.col("src").alias("node"))
+        .union(e_w.select(F.col("dst").alias("node")))
         .distinct()
-        .persist()
+        .observe(obs, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint(storageLevel=StorageLevel.MEMORY_AND_DISK)
     )
-    n_nodes = nodes.count()
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
-    # weighted edge list, materialized ONCE: each iteration then needs
-    # only (edges ⋈ ranks) + one aggregate, not a second degree join
-    # out_deg is carried (not pre-inverted to a weight): pr/deg rounds
-    # once, pr*(1/deg) twice — keeping the division inside the iteration
-    # makes every term bit-identical to a plain SQL replay
-    e_w = e.join(deg, "src").select("src", "dst", "out_deg").persist()
-    ranks = nodes.withColumn("pr", F.lit(1.0 / n_nodes))
+    n_nodes = obs.get["n"]
     base = (1.0 - damping) / n_nodes
+    no_mass = nodes.select("node", F.lit(None).cast("double").alias("c"))
+    ranks = nodes.withColumn("pr", F.lit(1.0 / n_nodes))
+    src = e_w.withColumn("pr", F.lit(1.0 / n_nodes))  # round 1: no join
     for _ in range(iterations):
-        contribs = (
-            e_w.join(ranks, e_w["src"] == ranks["node"])
-            .select(F.col("dst").alias("node"), (F.col("pr") / F.col("out_deg")).alias("c"))
+        ranks = (
+            src.select(F.col("dst").alias("node"), (F.col("pr") / F.col("out_deg")).alias("c"))
+            .union(no_mass)
             .groupBy("node")
             .agg(F.sum("c").alias("in_mass"))
-        )
-        ranks = (
-            nodes.join(contribs, "node", "left")
             .select(
                 "node",
                 (F.lit(base) + F.lit(damping) * F.coalesce("in_mass", F.lit(0.0))).alias("pr"),
             )
         )
+        src = e_w.join(size_gated_broadcast(ranks), e_w["src"] == ranks["node"])
     return ranks
 
 

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -489,8 +490,18 @@ def _kmeans_train_micro(
     the SAME value as the fold tier's (micro = round(x·10⁶) either
     way); only the distance comparison differs. Quantizing a 6-dp
     mean back to micro is exact (m·10⁶ is integer-valued up to one
-    double ulp, far from any rounding boundary)."""
-    emb_q = _quantize_micro(df, vec_col, id_col)
+    double ulp, far from any rounding boundary).
+
+    The quantized input is materialized ONCE by an eager
+    ``localCheckpoint`` before the init collect: the init, every
+    Lloyd round and the final assignment read those blocks instead of
+    re-reading and re-quantizing the caller's plan each time. Blocks
+    are stored serialized (PySpark's MEMORY_AND_DISK), an order of
+    magnitude smaller than deserialized rows, and are freed when the
+    returned frames are garbage-collected."""
+    emb_q = _quantize_micro(df, vec_col, id_col).localCheckpoint(
+        storageLevel=StorageLevel.MEMORY_AND_DISK
+    )
     init_rows = emb_q.orderBy("id").limit(k).collect()
     if len(init_rows) < k:
         raise ValueError(

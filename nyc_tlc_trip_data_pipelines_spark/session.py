@@ -45,6 +45,18 @@ def get_spark(app_name: str = "nyc_tlc_trip_data_pipelines_spark") -> SparkSessi
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
+        # Generated code is reused, not recompiled, when a query runs
+        # again. The class cache (a static conf) defaults to 100 entries in
+        # 4 LRU segments, less than one PageRank run and one k-means run
+        # need (65 + ~30 classes), so each rerun recompiled some classes
+        # and ran them interpreted until the JIT caught up. Stage ids in
+        # class names made the second run of a query differ from its
+        # first. The two-level aggregate map generates a hash map class per
+        # aggregate that is slow until JIT-compiled; without it aggregates
+        # share one hot BytesToBytesMap path.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
+        .config("spark.sql.codegen.useIdInClassName", "false")
+        .config("spark.sql.codegen.aggregate.map.twolevel.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     spark = builder.getOrCreate()

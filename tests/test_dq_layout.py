@@ -117,6 +117,118 @@ def test_pagerank_star_graph(spark):
     assert abs(sum(pr.values()) - 1.0) < 1e-6
 
 
+def _pagerank_replay(edges, iterations, damping):
+    """Plain-Python PageRank with the operator's formula and term order."""
+    edges = sorted(set(edges))
+    nodes = {n for e in edges for n in e}
+    n = len(nodes)
+    out_deg = {}
+    for s, _ in edges:
+        out_deg[s] = out_deg.get(s, 0) + 1
+    pr = {v: 1.0 / n for v in nodes}
+    for _ in range(iterations):
+        mass = {}
+        for s, d in edges:
+            mass[d] = mass.get(d, 0.0) + pr[s] / out_deg[s]
+        pr = {v: (1.0 - damping) / n + damping * mass.get(v, 0.0) for v in nodes}
+    return pr
+
+
+def test_pagerank_source_and_dangling_nodes_match_replay(spark):
+    from nyc_tlc_trip_data_pipelines_spark.operators import graph as GR
+
+    # s has no in-edges, c has no out-edges (dangling); the duplicate
+    # s->a is dropped. Every node has at most two in-edges, so the sum
+    # order cannot change a bit and the comparison is exact.
+    edges = [("s", "a"), ("s", "a"), ("s", "b"), ("a", "b"), ("b", "a"), ("a", "c"), ("b", "c")]
+    df = spark.createDataFrame(edges, "src string, dst string")
+    for iterations in (1, 3):
+        got = {r.node: r.pr for r in GR.pagerank(df, iterations=iterations).collect()}
+        assert got == _pagerank_replay(edges, iterations, 0.85)
+        assert got["s"] == (1.0 - 0.85) / 4
+
+
+def test_pagerank_evaluates_edges_once(spark):
+    """The caller's edge plan runs once: every later read comes from the
+    materialized weighted edge list, not a recomputation."""
+    from pyspark.sql import functions as F
+
+    from nyc_tlc_trip_data_pipelines_spark.operators import graph as GR
+
+    seen = spark.sparkContext.accumulator(0)
+
+    @F.udf("string")
+    def counted(x):
+        seen.add(1)
+        return x
+
+    rows = [(f"n{i}", f"n{(i * 7 + 1) % 40}") for i in range(60)]
+    edges = spark.createDataFrame(rows, "src string, dst string").select(
+        counted("src").alias("src"), "dst"
+    )
+    assert len(GR.pagerank(edges, iterations=3).collect()) > 0
+    assert seen.value == len(rows)
+
+
+def test_repeated_pagerank_compiles_no_new_classes(spark):
+    """A PageRank run again after other queries reuses every generated
+    class: one run needs about 46 classes, and with Spark's default
+    codegen cache (100 entries) the other queries' classes evict some,
+    so the rerun recompiled them (12 here) and ran them interpreted."""
+    from pyspark.sql import functions as F
+
+    from nyc_tlc_trip_data_pipelines_spark.operators import graph as GR
+
+    compiles = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    edges = spark.createDataFrame(
+        [(f"n{i}", f"n{(i * 7 + 1) % 40}") for i in range(60)], "src string, dst string"
+    )
+    GR.pagerank(edges, iterations=3).collect()
+    other = spark.range(200).select(
+        (F.col("id") % 7).alias("k"), "id", F.col("id").cast("string").alias("s")
+    )
+    for i in range(1, 12):
+        other.groupBy((F.col("k") * i).alias("g")).agg(F.sum("id"), F.max("s"), F.count("*")).collect()
+    before = compiles.getCount()
+    GR.pagerank(edges, iterations=3).collect()
+    assert compiles.getCount() == before
+
+
+def test_iterative_checkpoints_are_released_after_gc(spark):
+    """PageRank and the Arrow-tier k-means hold their loop inputs in
+    localCheckpoint blocks, which Spark frees once the frames are
+    garbage-collected; persist() blocks would stay pinned."""
+    import gc
+    import time
+
+    from nyc_tlc_trip_data_pipelines_spark.operators import graph as GR
+    from nyc_tlc_trip_data_pipelines_spark.operators import vectors as V
+
+    store = spark.sparkContext._jsc.sc().statusStore()
+
+    def stored_ids():
+        infos = store.rddList(True)
+        return {infos.apply(i).id() for i in range(infos.size())}
+
+    before = stored_ids()
+    edges = spark.createDataFrame([("a", "b"), ("b", "c"), ("c", "a")], "src string, dst string")
+    GR.pagerank(edges).collect()
+    pts = spark.createDataFrame(
+        [(i, [float(i), 0.0]) for i in range(6)], "vec_id long, embedding array<float>"
+    )
+    assigned, _ = V.kmeans_train(pts, k=2, tier="arrow")
+    assigned.collect()
+    del edges, pts, assigned
+    assert stored_ids() - before  # the checkpoints were stored
+    for _ in range(40):
+        gc.collect()
+        spark.sparkContext._jvm.System.gc()
+        if not stored_ids() - before:
+            break
+        time.sleep(0.25)
+    assert not stored_ids() - before
+
+
 def test_cohort_retention_daily(spark):
     from pyspark.sql import functions as F
 

@@ -476,6 +476,20 @@ def test_poisson_weight_string_thresholds_match_conv_formulation(spark):
     assert bad == 0
 
 
+def test_u_threshold_to_h_bound_stays_15_hex_digits():
+    """Every flip point is below 2^60, so it formats as exactly 15 hex
+    digits; a threshold above every u would give 2^60 (16 digits) and
+    break the fixed-width compare, so the helper refuses it."""
+    import pytest
+
+    from nyc_tlc_trip_data_pipelines_spark.operators import aggregates as agg
+
+    for t in agg.poisson1_cdf_thresholds(20):
+        assert len(format(agg._u_threshold_to_h(t), "015x")) == 15
+    with pytest.raises(AssertionError):
+        agg._u_threshold_to_h(1.5)
+
+
 def test_equidepth_histogram_uniform_and_skewed(spark):
     """Uniform 1..80 over 8 bins -> each bin holds exactly 10 rows with
     boundaries at multiples of 10; a heavy-hitter value collapses its

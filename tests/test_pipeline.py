@@ -238,6 +238,24 @@ def test_merge_versioned_single_commit_upsert(spark, tmp_path):
     assert IO.list_versions(path)[-1][1] == ["b1.m2", "b2.m2", "u1"]
 
 
+def test_versioned_rewrites_reject_nested_job_layout(spark, tmp_path):
+    """A file nested below its job directory extracts an empty job id;
+    delete_where and merge_versioned must fail instead of treating it
+    as "job unaffected" and silently skipping the rewrite."""
+    from nyc_tlc_trip_data_pipelines_spark import io as IO
+
+    path = str(tmp_path / "versioned")
+    df = spark.createDataFrame([(i, "a" if i % 2 else "b") for i in range(6)], "k long, tag string")
+    v0 = IO.append_versioned(df, path, "j1")
+    df.write.partitionBy("tag").mode("overwrite").parquet(f"{path}/__job_id=j1")
+    with pytest.raises(ValueError, match="nested partitions"):
+        IO.delete_where(spark, path, F.col("k") == 2)
+    updates = spark.createDataFrame([(3, "c")], "k long, tag string")
+    with pytest.raises(ValueError, match="nested partitions"):
+        IO.merge_versioned(spark, path, updates, ["k"], "u1")
+    assert [v for v, _ in IO.list_versions(path)] == [v0]  # nothing committed
+
+
 def test_merge_versioned_with_parquet_sourced_updates(spark, tmp_path):
     """r15 regression: the affected-job probe extracts the job id via
     input_file_name(), which is illegal over a plan with more than one

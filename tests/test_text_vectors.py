@@ -782,6 +782,25 @@ def test_kmeans_arrow_tier_is_deterministic_and_auto_selects(spark):
         V.kmeans_train(emb.limit(3), k=20)  # auto -> arrow, n < k
 
 
+def test_kmeans_arrow_evaluates_input_once(spark):
+    """The Arrow-tier Lloyd loop quantizes its input once: the init,
+    each round and the final assignment read the materialized copy."""
+    seen = spark.sparkContext.accumulator(0)
+
+    @F.udf("long")
+    def counted(x):
+        seen.add(1)
+        return x
+
+    pts = [(i, [float(i % 5), float(i // 5)]) for i in range(30)]
+    df = spark.createDataFrame(pts, "vec_id long, embedding array<float>").select(
+        counted("vec_id").alias("vec_id"), "embedding"
+    )
+    assigned, _ = V.kmeans_train(df, k=3, iterations=2, tier="arrow")
+    assert len(assigned.collect()) == len(pts)
+    assert seen.value == len(pts)
+
+
 def test_auto_tier_boundary_is_k16(spark):
     """auto keeps the codegen fold path through k=16 and switches to
     the Arrow micro tier at k=17 — pinned via the physical plan (the
