@@ -13,7 +13,10 @@ computed column is aliased identically on both sides.
 
 from __future__ import annotations
 
+import glob
+import json
 import os
+import re
 import tempfile
 from collections.abc import Callable
 
@@ -6334,20 +6337,34 @@ def q_abtest_did(spark: SparkSession, sf: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
+_HERE = os.path.dirname(os.path.abspath(__file__))
+
+
+def _latest_rounds(root: str = _HERE) -> dict[str, int]:
+    """Query id -> the latest round N whose committed
+    ``CORRECTNESS_r{N}.json`` in ``root`` holds a row for it. A
+    malformed file raises: it must not silently reorder the registry."""
+    latest: dict[str, int] = {}
+    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", os.path.basename(path))
+        if m:
+            with open(path) as fh:
+                for k in json.load(fh):
+                    latest[k] = max(latest.get(k, 0), int(m.group(1)))
+    return latest
+
+
+def _stalest_first(keys, root: str = _HERE) -> list[str]:
+    """``keys`` ordered by (latest checked round, 0 if never; name):
+    the driver checks the first 50 ids, so the stalest evidence is
+    refreshed first and no id can age out."""
+    latest = _latest_rounds(root)
+    return sorted(keys, key=lambda k: (latest.get(k, 0), k))
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # ORDERING CONTRACT: the driver's correctness budget covers exactly
-    # the FIRST 50 keys of this dict (confirmed every round since r3:
-    # CORRECTNESS keys == prefix-50, in order). Cumulative driver
-    # coverage after round 5: 194/253 distinct ids checked, 192 green
-    # on their latest check (the 2 reds were the array-output
-    # canonicalizer ERRs, fixed this round). The literal below keeps
-    # its historical (round-5) grouping; the EFFECTIVE round-6 order
-    # is applied by the explicit `prefix` rotation after it — see that
-    # list's comment for the selection rationale. Every id is oracle-
-    # and vanilla-session-checked locally at sf0.001/0.01/0.1 before
-    # it enters a prefix.
+    """Registry id -> query, stalest driver evidence first."""
     base = {
-        # — (a) never driver-checked: r1b leftovers —
         "q_scd2_merge": q_scd2_merge,
         "q_json_flatten": q_json_flatten,
         "q_text_normalize": q_text_normalize,
@@ -6361,7 +6378,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_date_extract2": q_date_extract2,
         "q_sink_json": q_sink_json,
         "q_sink_orc": q_sink_orc,
-        # — (a) never driver-checked: round-4 wave —
         "q_multimodal_video_decode": q_multimodal_video_decode,
         "q_multimodal_features": q_multimodal_features,
         "q_multimodal_framesample": q_multimodal_framesample,
@@ -6376,15 +6392,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_schema_evolution": q_schema_evolution,
         "q_delete_where": q_delete_where,
         "q_merge_versioned": q_merge_versioned,
-        # — (b) stale round-1 FAIL rows, oracles reworked in r4 —
         "q_source_discovery": q_source_discovery,
         "q_text_fingerprint": q_text_fingerprint,
-        # — (c) new round-5: streamed CDC replay into a versioned table —
         "q_stream_cdc_apply": q_stream_cdc_apply,
-        # — (d) round-5 additions with no driver row, env-sensitive
-        #   paths first (filesystem-versioned, Python DataSource,
-        #   Spark-4 VARIANT/recursive-CTE, Observation, quarantines,
-        #   iterative/broadcast-model ops) —
         "q_vacuum": q_vacuum,
         "q_table_changes": q_table_changes,
         "q_ann_index_probe": q_ann_index_probe,
@@ -6437,9 +6447,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_sample_es": q_sample_es,
         "q_geo_binning": q_geo_binning,
         "q_doc_chunk": q_doc_chunk,
-        # ——— driver-budget boundary (50) ———
-        # — remaining round-5 additions (pure-codegen SQL twins, lowest
-        #   env risk) + r1-green-only ids: the round-6 rotation pool —
         "q_markov_transitions": q_markov_transitions,
         "q_time_interpolate": q_time_interpolate,
         "q_group_regress": q_group_regress,
@@ -6469,7 +6476,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_partition_overwrite_dynamic": q_partition_overwrite_dynamic,
         "q_session_window_native": q_session_window_native,
         "q_udf_arrow": q_udf_arrow,
-        # — round-5 wave 4 (mining/statistics/anti-entropy; round-6 pool) —
         "q_assoc_rules": q_assoc_rules,
         "q_collocations_pmi": q_collocations_pmi,
         "q_rolling_distinct": q_rolling_distinct,
@@ -6517,7 +6523,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_text_wordcount": q_text_wordcount,
         "q_text_quality": q_text_quality,
         "q_text_token_count": q_text_token_count,
-        # — round-4 prefix, all driver-green in CORRECTNESS_r04 —
         "q_sessionize": q_sessionize,
         "q_window_time_range": q_window_time_range,
         "q_dedup_pipeline": q_dedup_pipeline,
@@ -6568,7 +6573,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_ann_lsh": q_ann_lsh,
         "q_ann_ivf": q_ann_ivf,
         "q_dedup_embedding": q_dedup_embedding,
-        # — green driver rows in rounds 1-3 (still gated by tools/check.py) —
         "q_join_anti": q_join_anti,
         "q_agg_approx_distinct": q_agg_approx_distinct,
         "q_agg_approx_percentile": q_agg_approx_percentile,
@@ -6618,9 +6622,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_string_distance": q_string_distance,
         "q_incremental_agg": q_incremental_agg,
         "q_grouped_map": q_grouped_map,
-        # — green in CORRECTNESS_r01.json (still gated by tools/check.py);
-        #   the 26 remaining single-round-checked ids: low-risk
-        #   scalar/filter/projection/base-agg paths —
         "q_count": q_count,
         "q_cast_schema": q_cast_schema,
         "q_filter_time_range": q_filter_time_range,
@@ -6647,7 +6648,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_array_explode": q_array_explode,
         "q_array_posexplode": q_array_posexplode,
         "q_null_funcs": q_null_funcs,
-        # — round 6: LLM-curation + statistics wave —
         "q_dedup_span": q_dedup_span,
         "q_domain_mixture": q_domain_mixture,
         "q_mutual_info": q_mutual_info,
@@ -6656,7 +6656,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_ann_pq": q_ann_pq,
         "q_random_projection": q_random_projection,
         "q_attribution_decay": q_attribution_decay,
-        # — round 8: survival / experimentation / calibration / diversity —
         "q_survival_km": q_survival_km,
         "q_acf": q_acf,
         "q_abtest_cuped": q_abtest_cuped,
@@ -6675,83 +6674,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_abtest_srm": q_abtest_srm,
         "q_abtest_did": q_abtest_did,
     }
-    # Round-14 prefix-50 rotation (the driver checks the FIRST 50 keys).
-    # Pure freshness, exactly the plan pinned in round 13 (DESIGN.md
-    # "Round-14 prefix fully pinned"; all 57 candidates were validated
-    # green at BOTH sf0.01 and sf0.1 by round 13's two full-registry
-    # oracle sweeps): (a) the committed round-14 queue — the 6 r07 ids
-    # deferred by the r13 rotation plus q_zipf_fit (displaced from the
-    # r13 prefix by q_versioned_zone_skip); (b) 42 of the 50 round-8
-    # driver rows, plus the new round-14 engine feature
-    # q_versioned_sidecar (needs a real driver row this round; the
-    # displaced q_math_funcs joins the round-15 queue — the same swap
-    # q_versioned_zone_skip made in round 13). The 8 deferred to the
-    # round-15 queue (q_count, q_project_drop, q_project_case,
-    # q_filter_predicates, q_cast_schema, q_derive_year_month,
-    # q_null_funcs, q_math_funcs — the simplest deterministic
-    # relational staples in the tier) hit the 6-round horizon at round
-    # 15; tests/test_registry.py pins that queue and its freshness
-    # tripwire enforces the deferral once r14's results land.
-    prefix = [
-        # ---- (a) must-rotate tier: the committed round-14 queue ----
-        "q_agg_maxby",
-        "q_benford",
-        "q_ddl_create",
-        "q_join_nullsafe",
-        "q_sink_csv",
-        "q_streaks",
-        "q_zipf_fit",
-        # ---- (b) refresh tier: 43 of the 50 round-8 driver rows ----
-        "q_abtest_cuped",
-        "q_abtest_did",
-        "q_abtest_sprt",
-        "q_abtest_srm",
-        "q_acf",
-        "q_agg_basic",
-        "q_agg_count_distinct",
-        "q_agg_having",
-        "q_agg_rollup",
-        "q_array_explode",
-        "q_array_posexplode",
-        "q_assoc_rules",
-        "q_calibration",
-        "q_ccf",
-        "q_date_arithmetic",
-        "q_date_funcs",
-        "q_dedup_exact",
-        "q_filter_time_range",
-        "q_gini",
-        "q_graph_jaccard",
-        "q_graph_kcore",
-        "q_graph_labelprop",
-        "q_groupby_avg_orderby",
-        "q_item_cf",
-        "q_join_broadcast",
-        "q_join_cross",
-        "q_join_inner",
-        "q_join_outer",
-        "q_join_range",
-        "q_join_semi",
-        "q_join_star",
-        "q_json_extract",
-        "q_mannwhitney",
-        "q_map_funcs",
-        # round-14 engine feature, scheduled for a real driver row this
-        # round; the displaced q_math_funcs joins the round-15 queue
-        "q_versioned_sidecar",
-        "q_mmr_diversify",
-        "q_partition_prune",
-        "q_path_mining",
-        "q_sample_negatives",
-        "q_seq_pairs",
-        "q_spearman",
-        "q_survival_km",
-        "q_survival_logrank",
-    ]
-    assert len(prefix) == 50 and len(set(prefix)) == 50
-    out = {k: base[k] for k in prefix}
-    out.update((k, v) for k, v in base.items() if k not in out)
-    return out
+    return {k: base[k] for k in _stalest_first(base)}
 
 
 def _sql_vec(v) -> str:
@@ -7424,8 +7347,6 @@ def _nb_cv_oracle(k_folds: int = 5) -> str:
     """q_nb_cross_validate twin: the _NB_CHAIN replayed once per fold
     (CTE names suffixed, the holdout remainder swapped), each fold
     reduced to one accuracy row, UNION ALL'd."""
-    import re
-
     names = [
         "base", "toks", "train_wc", "class_tok", "class_doc", "n_train",
         "classes", "vocab", "v_size", "grid", "hold_wc", "word_scores",

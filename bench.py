@@ -38,36 +38,29 @@ HEADLINE = [
     "q_sql_tpch_q6",
 ]
 
-# round-2 heavyweights tracked separately so regressions in the newer
-# surface are visible without moving the cross-round headline baseline
+# heavyweights tracked separately so their regressions are visible
+# without moving the headline baseline
 EXTENDED = [
     "q_decontaminate",
     "q_pagerank",
     "q_entity_resolve",
 ]
 
-# round-5: the Delta-CRUD analogs do real filesystem work (partition
-# writes, manifest commits, COW rewrites, compaction); tracked as their
-# own section so manifest/compaction I/O regressions are visible before
-# they reach a driver round
+# the Delta-CRUD analogs do real filesystem work (partition writes,
+# manifest commits, COW rewrites, compaction, zone-map skipping and
+# sidecar-backed zones on the pruned read); tracked as their own
+# section so manifest/compaction I/O regressions are visible
 VERSIONED_IO = [
     "q_time_travel",
     "q_merge_versioned",
     "q_compact",
-    # round-13: manifest zone-map skipping (OPTIMIZE ZORDER write path
-    # + pruned read) — tracked so a regression in the stats-collection
-    # scan or the pruned-read planning shows up before a driver round
     "q_versioned_zone_skip",
-    # round-14: sidecar-backed zones (spill + marker resolution on the
-    # pruned read); no committed baseline yet — the gate skips
-    # missing-baseline ids, so this starts trending next round
     "q_versioned_sidecar",
 ]
 
-# round-5 second wave: the LLM-corpus / retrieval / iterative additions
-# (BM25, chunking, bigram-LM scoring, k-means training, BFS) — tracked
-# as their own section so their cost trend is visible per round without
-# moving the cross-round headline baseline
+# LLM-corpus / retrieval / iterative ops (BM25, chunking, bigram-LM
+# scoring, k-means training, BFS, web-corpus ingest and the curation
+# pipeline, whose trend catches a regression in any stage it chains)
 CORPUS_OPS = [
     "q_bm25_rank",
     "q_doc_chunk",
@@ -75,15 +68,12 @@ CORPUS_OPS = [
     "q_feature_hash",
     "q_kmeans",
     "q_graph_bfs",
-    # round-5 fifth wave: web-corpus ingest + the flagship composition —
-    # the pipeline query's trend catches a regression in ANY of the four
-    # curation stages it chains
     "q_url_canonicalize",
     "q_token_entropy",
     "q_curation_pipeline",
 ]
 
-# round-5 third wave: analytics / sketch / retrieval operators
+# analytics / sketch / retrieval operators
 ANALYTICS_OPS = [
     "q_markov_transitions",
     "q_time_interpolate",
@@ -99,10 +89,9 @@ ANALYTICS_OPS = [
     "q_xml_ingest",
 ]
 
-# round-5 fourth wave: mining / statistics / anti-entropy — the pair-
-# generation operators (assoc rules, PMI, simhash blocks, minhash
-# accuracy) are the ones whose cost would drift first if a prune
-# regressed, so their trend is tracked per round
+# mining / statistics / anti-entropy — the pair-generation operators
+# (assoc rules, PMI, simhash blocks, minhash accuracy) are the ones
+# whose cost would drift first if a prune regressed
 MINING_OPS = [
     "q_assoc_rules",
     "q_collocations_pmi",
@@ -114,7 +103,7 @@ MINING_OPS = [
     "q_table_diff",
 ]
 
-# round-5 fifth wave: real-decode multimodal fingerprints — fixture-
+# real-decode multimodal fingerprints — fixture-
 # generated payloads (SF-independent), so these lines isolate the
 # Arrow mapInPandas decode+hash cost from any table-scan effect
 MULTIMODAL_OPS = [
@@ -123,10 +112,10 @@ MULTIMODAL_OPS = [
     "q_multimodal_scene_detect",
 ]
 
-# round 6: embedding-space curation (SemDeDup clusters, PCA power
-# iteration) + the DP release — iterative/model-state ops whose cost
-# is dominated by per-iteration aggregate passes, tracked per round
-ROUND6_OPS = [
+# embedding-space curation, retrieval, forecasting, experimentation,
+# survival and statistics: iterative/model-state ops whose cost is
+# dominated by per-iteration aggregate passes
+CURATION_STATS_OPS = [
     "q_dedup_semantic",
     "q_pca_power",
     "q_dp_release",
@@ -138,11 +127,6 @@ ROUND6_OPS = [
     "q_ann_pq",
     "q_random_projection",
     "q_attribution_decay",
-]
-
-# round-7: scale-k SemDeDup (Arrow assignment tier) + the curation/
-# retrieval wave (DSIR selection, RRF fusion, hard negatives, kNN vote)
-ROUND7_OPS = [
     "q_dedup_semantic_scaled",
     "q_dsir_select",
     "q_rrf_fusion",
@@ -151,7 +135,6 @@ ROUND7_OPS = [
     "q_stl_decompose",
     "q_zipf_fit",
     "q_forecast_backtest",
-    # wave 3: classifier / bootstrap / pattern / stats additions
     "q_nb_classify",
     "q_bootstrap_ci",
     "q_event_pattern",
@@ -163,7 +146,6 @@ ROUND7_OPS = [
     "q_ann_ivfpq",
     "q_forecast_conformal",
     "q_percentile_weighted",
-    # wave 4: sequential testing / dedup capstone / model eval / mixtures
     "q_abtest_sprt",
     "q_dedup_savings",
     "q_classifier_eval",
@@ -174,10 +156,6 @@ ROUND7_OPS = [
     # q_nb_cross_validate is 5 full NB plans (~7 s/pass at sf0.1) —
     # deliberately NOT benched to keep the suite inside the 570 s
     # harness budget; its cost trend is k x q_nb_classify's line
-]
-
-# round-8: survival / experimentation / calibration / diversity wave
-ROUND8_OPS = [
     "q_survival_km",
     "q_acf",
     "q_abtest_cuped",
@@ -196,7 +174,6 @@ ROUND8_OPS = [
     "q_abtest_srm",
     "q_abtest_did",
 ]
-
 
 PASSES = 3
 
@@ -244,7 +221,7 @@ def _smooth_controls(window: int = 5) -> None:
         _CONTROLS[n] = round(w[len(w) // 2], 4)
 
 
-def _timed_pass(qs, names, spark, sf_dir, control=None, passes=None) -> dict[str, float]:
+def _timed_pass(qs, names, spark, sf_dir, control=None, passes=PASSES) -> dict[str, float]:
     """Per query: MEDIAN over PASSES steady-state runs (round-7
     verdict item 1). Ambient machine load has swung identical plans
     ~1.6× between rounds (BENCH_r2 vs r3: even scan-bound TPC-H Q6
@@ -254,8 +231,9 @@ def _timed_pass(qs, names, spark, sf_dir, control=None, passes=None) -> dict[str
     min would keep reporting the one lucky pass and hide the creep
     inside the ambient band.
 
-    Side channel: each query's max/min pass ratio is recorded into
-    ``_SPREADS`` — the per-run measured ambient noise. The payload
+    Side channel: the max/min pass ratio of each query timed more than
+    once is recorded into ``_SPREADS`` — the per-run measured ambient
+    noise. The payload
     summarizes it (``ambient_spread``) and every regression entry
     carries its own query's ratio, so a reader can tell "flagged
     inside the noise band" from "flagged well beyond it" without
@@ -269,40 +247,23 @@ def _timed_pass(qs, names, spark, sf_dir, control=None, passes=None) -> dict[str
     machine-wide shift (which moves query and control in lockstep)
     cancels instead of flagging every unchanged plan.
 
-    ``passes`` (round-9 budget fit): the full suite at median-of-3
-    everywhere ran 556 s — against the 570 s harness budget. The
-    headline section (the cross-round baseline metric) keeps
-    median-of-3; the trend sections run 2 passes and report their
-    MEAN — with the calm control cancelling drift, the third pass
-    bought little, and a real creep raises both passes (and the
-    mean) just as it raised the median. Even counts report the mean,
-    odd counts the median.
-
-    ``passes`` may also be a callable ``name -> int`` (round-12 budget
-    fit, verdict item 8): the trend sections alternate mean-of-2 /
-    single-pass per query by round parity — see :func:`_trend_passes`."""
+    ``passes``: the headline section (the cross-round baseline
+    metric) keeps median-of-3; the trend sections run one pass to fit
+    the 570 s harness budget. The retime pass re-measures every
+    flagged query at median-of-3, so a noisy single pass cannot raise
+    a flag that does not reproduce."""
     timings: dict[str, float] = {}
     for name in names:
-        if passes is None:
-            n_passes = PASSES
-        elif callable(passes):
-            n_passes = int(passes(name))
-        else:
-            n_passes = int(passes)
         if control is not None:
             _CONTROLS[name] = round(control(), 4)
         runs = []
-        for _ in range(n_passes):
+        for _ in range(passes):
             t0 = time.perf_counter()
             qs[name](spark, sf_dir).count()
             runs.append(time.perf_counter() - t0)
         runs.sort()
-        if len(runs) % 2:
-            est = runs[len(runs) // 2]
-        else:
-            est = sum(runs) / len(runs)
-        timings[name] = round(est, 3)
-        if runs[0] > 0:
+        timings[name] = round(runs[len(runs) // 2], 3)
+        if len(runs) > 1 and runs[0] > 0:
             _SPREADS[name] = round(runs[-1] / runs[0], 2)
     return timings
 
@@ -310,81 +271,6 @@ def _timed_pass(qs, names, spark, sf_dir, control=None, passes=None) -> dict[str
 # per-query max/min pass ratio from the most recent _timed_pass calls
 # (retime passes overwrite — the freshest measurement wins)
 _SPREADS: dict[str, float] = {}
-
-
-def _upcoming_round() -> int:
-    """The next driver round, from the newest CORRECTNESS_r{N}.json —
-    the same convention tests/test_registry.py uses. 1 when no driver
-    results exist (fresh checkout)."""
-    import glob as _g
-    import re as _re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    rounds = [
-        int(m.group(1))
-        for f in _g.glob(os.path.join(here, "CORRECTNESS_r*.json"))
-        if (m := _re.search(r"CORRECTNESS_r(\d+)\.json$", f))
-    ]
-    return (max(rounds) + 1) if rounds else 1
-
-
-# This run's 2-pass half, resolved once per run by _resolve_two_pass():
-# the COMPLEMENT of the half the committed baseline RECORDED as 2-pass
-# (round-13 verdict item 6 — the round-parity hash assumed consecutive
-# runs see consecutive _upcoming_round values, which the r12 history
-# could not confirm: the driver's refresh and the builder's quiet run
-# can land at the same round number. Recording the half and taking its
-# complement makes two-consecutive-runs coverage hold by construction,
-# with no cadence assumption). None until resolved → parity fallback.
-_TWO_PASS_SET: set | None = None
-
-
-def _resolve_two_pass(trend_names: list) -> list:
-    """Fix this run's 2-pass half: queries NOT in the baseline's
-    recorded ``trend_two_pass`` (so the halves alternate run-over-run
-    and a brand-new query starts with the better estimate); parity-hash
-    split when the baseline predates the field."""
-    global _TWO_PASS_SET
-    path = os.environ.get(
-        "SPARK_GRAFT_BENCH_BASELINE",
-        os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_LOCAL.json"),
-    )
-    prev_two: list | None = None
-    try:
-        with open(path) as fh:
-            prev_two = json.load(fh).get("trend_two_pass")
-    except (OSError, ValueError):
-        prev_two = None
-    if isinstance(prev_two, list):
-        _TWO_PASS_SET = {q for q in trend_names if q not in set(prev_two)}
-    else:
-        import zlib as _z
-
-        r = _upcoming_round()
-        _TWO_PASS_SET = {
-            q for q in trend_names if (_z.crc32(q.encode()) + r) % 2 == 0
-        }
-    return sorted(_TWO_PASS_SET)
-
-
-def _trend_passes(name: str) -> int:
-    """Round-12 budget fit (verdict item 8): the full suite at
-    trend-sections-mean-of-2 ran ~490 s against the 570 s harness cap
-    (and over the 500 s headroom target) once q_compact moved to the
-    versioned OPTIMIZE path. Trim: each round, only HALF the trend
-    queries run mean-of-2; the other half run a single pass, so every
-    query gets a 2-pass estimate at least every other run. The half is
-    the complement of the baseline's recorded half when available
-    (:func:`_resolve_two_pass`); otherwise a stable per-query hash
-    XOR'd with the round parity. Noise cost is bounded: a spurious
-    single-pass flag triggers the existing retime pass (median-of-3,
-    min-merged), and the calm control still runs before EVERY query
-    either way."""
-    if _TWO_PASS_SET is not None:
-        return 2 if name in _TWO_PASS_SET else 1
-    import zlib as _z
-
-    return 2 if (_z.crc32(name.encode()) + _upcoming_round()) % 2 == 0 else 1
 
 
 def _spread_summary() -> dict[str, float]:
@@ -535,11 +421,8 @@ def _flat_timings(prev: dict) -> dict[str, float]:
 
 def _flat_controls(prev: dict) -> tuple[dict[str, float], float | None]:
     """Calm references from a bench payload: the per-query control
-    times (stored under ``controls`` with ``c:`` key prefixes so the
-    tail-recovery regex for timings can never confuse them) and the
-    run-level control median. Tail fallback mirrors _flat_from_tail."""
-    import re
-
+    times (stored under ``controls`` with ``c:`` key prefixes, which
+    _flat_timings skips) and the run-level control median."""
     if isinstance(prev.get("parsed"), dict):
         prev = prev["parsed"]
     per_q = {
@@ -553,38 +436,8 @@ def _flat_controls(prev: dict) -> tuple[dict[str, float], float | None]:
     # unusable as a normalization reference and must read as missing.
     if not isinstance(run_level, (int, float)) or run_level <= 0:
         run_level = None
-    if not per_q and run_level is None and isinstance(prev.get("tail"), str):
-        per_q = {
-            q: float(t)
-            for q, t in re.findall(
-                r'"c:(q_\w+)":\s*([0-9]+(?:\.[0-9]+)?)', prev["tail"]
-            )
-        }
-        m = re.search(r'"control_sec":\s*([0-9]+(?:\.[0-9]+)?)', prev["tail"])
-        if m and float(m.group(1)) > 0:
-            run_level = float(m.group(1))
     per_q = {q: t for q, t in per_q.items() if t > 0}
     return per_q, (float(run_level) if run_level is not None else None)
-
-
-def _flat_from_tail(prev: dict) -> dict[str, float]:
-    """Best-effort baseline recovery from a driver wrapper whose
-    ``parsed`` is null: the ``tail`` field holds the LAST ~2000 chars
-    of the bench stdout — a head-truncated fragment of the JSON line —
-    so a targeted regex over `"q_*": <number>` pairs recovers every
-    per-query timing the fragment still contains (regression-list
-    entries don't match: their numbers sit under "prev"/"now", not a
-    q_* key). Round-6 verdict item 2: without this, a parsed:null
-    wrapper as the newest BENCH file silently disabled the gate."""
-    import re
-
-    tail = prev.get("tail")
-    if not isinstance(tail, str):
-        return {}
-    return {
-        q: float(t)
-        for q, t in re.findall(r'"(q_\w+)":\s*([0-9]+(?:\.[0-9]+)?)', tail)
-    }
 
 
 def _baseline() -> tuple[str | None, dict[str, float]]:
@@ -592,9 +445,8 @@ def _baseline() -> tuple[str | None, dict[str, float]]:
     (explicit path — lets a same-round re-run compare against the
     PRIOR round instead of its own output), else walk BENCH_r*.json
     newest → oldest and take the first file that yields any per-query
-    timings, reconstructing from the driver wrapper's tail when
-    ``parsed`` is null. Never silently returns an empty baseline while
-    naming a file."""
+    timings. Never silently returns an empty baseline while naming a
+    file."""
     import glob
     import re
 
@@ -614,7 +466,7 @@ def _baseline() -> tuple[str | None, dict[str, float]]:
                 prev = json.load(fh)
         except (OSError, ValueError):
             prev = {}
-        flat = _flat_timings(prev) or _flat_from_tail(prev)
+        flat = _flat_timings(prev)
         if flat:
             _note_controls(prev, flat)
             return os.path.basename(override), flat
@@ -632,9 +484,8 @@ def _baseline() -> tuple[str | None, dict[str, float]]:
     # .group(1) on None inside the sort key kills the whole bench run
     numbered = []
     # the committed BENCH_LOCAL.json is the FULL payload of the most
-    # recent bench run (every run rewrites it, every round commits
-    # it), so it outranks the driver wrappers — whose 2000-char stdout
-    # tails can't hold the per-query calm references
+    # recent bench run (every run rewrites it), so it outranks the
+    # driver wrappers, whose compact line holds only the headline
     local = os.path.join(here, "BENCH_LOCAL.json")
     if os.path.exists(local):
         numbered.append((1 << 30, local))
@@ -642,10 +493,9 @@ def _baseline() -> tuple[str | None, dict[str, float]]:
         m = re.search(r"BENCH_r(\d+)", p)
         if m:
             numbered.append((int(m.group(1)), p))
-    # union newest-wins: a tail-reconstructed wrapper only covers the
-    # sections its 2000-char fragment kept (BENCH_r06 lost the whole
-    # headline section), so keep walking and fill gaps from older
-    # files — every query gets its MOST RECENT available baseline
+    # union newest-wins: a driver wrapper covers only the headline
+    # section, so keep walking and fill gaps from older files — every
+    # query gets its MOST RECENT available baseline
     merged: dict[str, float] = {}
     names: list[str] = []
     for _, path in sorted(numbered, reverse=True):
@@ -654,7 +504,7 @@ def _baseline() -> tuple[str | None, dict[str, float]]:
                 prev = json.load(fh)
         except (OSError, ValueError):
             continue
-        flat = _flat_timings(prev) or _flat_from_tail(prev)
+        flat = _flat_timings(prev)
         fresh = {q: t for q, t in flat.items() if q not in merged}
         if fresh:
             _note_controls(prev, fresh)
@@ -757,8 +607,8 @@ def main() -> None:
         ("queries", HEADLINE), ("extended", EXTENDED),
         ("versioned_io", VERSIONED_IO), ("corpus_ops", CORPUS_OPS),
         ("analytics_ops", ANALYTICS_OPS), ("mining_ops", MINING_OPS),
-        ("multimodal_ops", MULTIMODAL_OPS), ("round6_ops", ROUND6_OPS),
-        ("round7_ops", ROUND7_OPS), ("round8_ops", ROUND8_OPS),
+        ("multimodal_ops", MULTIMODAL_OPS),
+        ("curation_stats_ops", CURATION_STATS_OPS),
     ]
 
     t_start = time.perf_counter()
@@ -784,17 +634,11 @@ def main() -> None:
     control_sec = round(control_runs[len(control_runs) // 2], 4)
 
     _CONTROLS.clear()
-    trend_two_pass = _resolve_two_pass(
-        [n for key, names in sections if key != "queries" for n in names]
-    )
     section_timings = {}
     for key, names in sections:
         section_timings[key] = _timed_pass(
             qs, names, spark, sf_dir, control=control,
-            # headline keeps median-of-3 (cross-round baseline metric);
-            # trend sections alternate mean-of-2 / single-pass per
-            # query by round parity (_trend_passes) to fit the budget
-            passes=PASSES if key == "queries" else _trend_passes,
+            passes=PASSES if key == "queries" else 1,
         )
         _mark(f"timed:{key}")
     timings = section_timings["queries"]
@@ -856,35 +700,22 @@ def main() -> None:
     payload.update({
                 "skew_join": skew_join,
                 "bloom_join": bloom_join,
-                # per-query calm references go BEFORE the gate outputs:
-                # the driver keeps only the stdout TAIL, and the small
-                # decision keys below must survive truncation
                 "controls": {f"c:{q}": c for q, c in _CONTROLS.items()},
                 "regressions_vs": baseline_name,
                 "regressions": regressions,
                 "ambient_dismissed": list(_AMBIENT_DISMISSED),
                 "retimes": retimes,
                 "ambient_spread": _spread_summary(),
-                "passes": {"headline": PASSES, "sections": 2, "retime": PASSES},
-                # the half that ran mean-of-2 this run; the next run
-                # takes the complement (round-13 verdict item 6), so
-                # two consecutive runs cover the full trend set by
-                # construction — auditable here, no cadence assumption
-                "trend_two_pass": trend_two_pass,
-                "trend_round": _upcoming_round(),
+                "passes": {"headline": PASSES, "sections": 1, "retime": PASSES},
                 "control_sec": control_sec,
                 "normalized_total": normalized_total,
                 "sf": sf_label,
     })
-    # Stdout contract (r15 fix, round-14 verdict item 2): the driver
-    # json-parses the LAST stdout line and keeps only a ~2000-char
-    # stdout tail, so the full multi-KB payload printed here in rounds
-    # 6-14 was always truncated mid-object and the driver scored
-    # `parsed: null` every round. The final stdout line is now a
-    # COMPACT summary — metric/value/unit/headline queries/sf, well
-    # under 1500 chars — while the full payload (trend sections,
-    # controls, regression gate, dismissals) goes to BENCH_LOCAL.json
-    # as before and to stderr for human tail-reading.
+    # Stdout contract: the driver json-parses the LAST stdout line and
+    # keeps only a ~2000-char stdout tail, so that line is a COMPACT
+    # summary (metric/value/unit/headline queries/sf) while the full
+    # payload (trend sections, controls, regression gate, dismissals)
+    # goes to BENCH_LOCAL.json and to stderr.
     compact = {
         "metric": payload["metric"],
         "value": payload["value"],

@@ -6,9 +6,12 @@ HUGEINT/DECIMAL, and (b) the values-match/differ verdict is reported
 even when a type trap fires. Pure-function tests: no Spark, no DuckDB.
 """
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(
+    0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
+)
 
 from check import compare_results, driver_canon, normalize  # noqa: E402
 

@@ -6,10 +6,15 @@ silently-unjustified rows-only queries) in milliseconds.
 """
 
 import importlib.util
+import os
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _entry():
-    spec = importlib.util.spec_from_file_location("entry", "/root/repo/__spark_entry__.py")
+    spec = importlib.util.spec_from_file_location(
+        "entry", os.path.join(ROOT, "__spark_entry__.py")
+    )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod
@@ -54,128 +59,37 @@ def test_oracle_sql_is_plain_select():
         assert head in ("SELECT", "WITH"), name
 
 
-def test_prefix_50_rotation_contract():
-    """The driver checks exactly the FIRST 50 registry keys; pin that
-    the round-14 prefix is pure freshness rotation — it leads with the
-    committed r13 NEXT_QUEUE (the 6 deferred round-7 ids plus the
-    displaced q_zipf_fit, all at the 6-round horizon), then 42 of the
-    50 round-8 ids plus the new engine-feature id q_versioned_sidecar — has no duplicates, and every prefix id has a
-    DuckDB oracle (a prefix slot without an oracle wastes a driver
-    window on a rows-only check)."""
-    import __spark_entry__ as E
-
-    keys = list(E.queries())
-    prefix = keys[:50]
-    assert len(set(prefix)) == 50
-    assert prefix[:7] == [
-        "q_agg_maxby",
-        "q_benford",
-        "q_ddl_create",
-        "q_join_nullsafe",
-        "q_sink_csv",
-        "q_streaks",
-        "q_zipf_fit",
-    ]
-    assert "q_agg_basic" in prefix and "q_join_star" in prefix
-    assert "q_survival_km" in prefix and "q_graph_kcore" in prefix
-    # the new round-14 engine feature gets a real driver row (the
-    # q_versioned_zone_skip swap pattern from round 13)
-    assert "q_versioned_sidecar" in prefix
-    # the 8 ids deferred to the round-15 queue are NOT in this prefix
-    for k in ("q_count", "q_project_drop", "q_project_case",
-              "q_filter_predicates", "q_cast_schema",
-              "q_derive_year_month", "q_null_funcs", "q_math_funcs"):
-        assert k not in prefix, k
-    oracles = E.oracle_sql()
-    missing = [k for k in prefix if k not in oracles]
-    assert not missing, f"prefix ids without oracle: {missing}"
-
-
-# The next-rotation queue, committed one round AHEAD (round-10 verdict
-# item 7 cadence): the ids that sit past the freshness horizon at
-# QUEUE_ROUND and therefore MUST lead that round's prefix-50. The
-# round-14 rotation deferred these 7 round-8 ids — the simplest
-# deterministic relational staples in the tier — to round 15, where
-# they hit the 6-round horizon, plus q_math_funcs, displaced from the
-# r14 prefix by the new q_versioned_sidecar (the round-14 engine
-# feature, which needs a real driver row); DESIGN.md carries the list.
-QUEUE_ROUND = 15
-NEXT_QUEUE = sorted([
-    "q_count",
-    "q_project_drop",
-    "q_project_case",
-    "q_filter_predicates",
-    "q_cast_schema",
-    "q_derive_year_month",
-    "q_null_funcs",
-    "q_math_funcs",
-])
-
-
-def _latest_driver_rounds():
-    """(latest-round-per-id map, sorted list of recorded rounds,
-    key set of the newest CORRECTNESS file)."""
-    import glob
+def test_stalest_first_ordering_rule(tmp_path):
+    """The registry order rule: latest CORRECTNESS round per id, never-
+    checked ids (round 0) first, ties by name; a malformed file raises."""
     import json
-    import re
 
-    latest, rounds, by_round = {}, [], {}
-    for f in glob.glob("/root/repo/CORRECTNESS_r*.json"):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", f)
-        if not m:
-            continue
-        r = int(m.group(1))
-        rounds.append(r)
-        try:
-            ids = set(json.load(open(f)).keys())
-        except Exception:
-            continue
-        by_round[r] = ids
-        for k in ids:
-            latest[k] = max(latest.get(k, 0), r)
-    rounds.sort()
-    newest_keys = by_round.get(rounds[-1], set()) if rounds else set()
-    return latest, rounds, newest_keys
+    import pytest
+
+    m = _entry()
+    keys = ["q_d", "q_c", "q_b", "q_a", "q_new"]
+    assert m._stalest_first(keys, tmp_path) == sorted(keys)  # no files
+    (tmp_path / "CORRECTNESS_r01.json").write_text(
+        json.dumps({k: {} for k in ("q_a", "q_b", "q_c", "q_d")})
+    )
+    (tmp_path / "CORRECTNESS_r02.json").write_text(
+        json.dumps({"q_a": {}, "q_c": {}})
+    )
+    assert m._stalest_first(keys, tmp_path) == [
+        "q_new", "q_b", "q_d", "q_a", "q_c",
+    ]
+    (tmp_path / "CORRECTNESS_r03.json").write_text("{not json")
+    with pytest.raises(ValueError):
+        m._stalest_first(keys, tmp_path)
 
 
-def test_next_rotation_queue_is_scheduled():
-    """Round-10 verdict item 7 cadence, made round-agnostic (the r11
-    verdict flagged the hard-coded ``max(rounds)+1`` — it broke the
-    moment the driver's results for the current prefix landed): bring
-    the current prefix's evidence up to date — simulating a driver
-    window for it ONLY if its results have not already landed — and
-    pin that the ids then past the horizon are exactly NEXT_QUEUE, so
-    the next rotation is fully determined in advance and nothing else
-    can age out."""
-    import __spark_entry__ as E
-
-    HORIZON = 6
-    latest, rounds, newest_keys = _latest_driver_rounds()
-    assert rounds, "no driver CORRECTNESS files found"
-    keys = list(E.queries())
-    prefix = keys[:50]
-    # If the newest CORRECTNESS file already covers the current prefix,
-    # the driver window happened at max(rounds); otherwise it is the
-    # upcoming window at max(rounds)+1.
-    sim_round = (
-        max(rounds) if newest_keys == set(prefix) else max(rounds) + 1
-    )
-    for k in prefix:
-        latest[k] = max(latest.get(k, 0), sim_round)
-    upcoming = sim_round + 1
-    assert upcoming == QUEUE_ROUND, (
-        f"NEXT_QUEUE is pinned for round {QUEUE_ROUND} but the next "
-        f"rotation to schedule is round {upcoming} — recompute the "
-        f"queue (DESIGN.md + this constant) for the new round"
-    )
-    stale = sorted(
-        k for k in keys if latest.get(k, 0) < upcoming - HORIZON
-    )
-    assert stale == NEXT_QUEUE, (
-        f"simulated round-{upcoming} staleness does not match the "
-        f"queued rotation: extra={sorted(set(stale) - set(NEXT_QUEUE))}, "
-        f"missing={sorted(set(NEXT_QUEUE) - set(stale))}"
-    )
+def test_driver_sample_has_oracles():
+    """The driver checks the first 50 ids against their oracles; a
+    rows-only id there would waste a slot."""
+    m = _entry()
+    oracles = m.oracle_sql()
+    prefix = list(m.queries())[:50]
+    assert [k for k in prefix if k not in oracles] == []
 
 
 def test_no_unscheduled_coverage_debt():
@@ -184,107 +98,14 @@ def test_no_unscheduled_coverage_debt():
     scheduled for the NEXT driver window). Adding a query without
     scheduling it fails here instead of surviving as a comment-tracked
     debt."""
-    import glob
-    import json
-
-    import __spark_entry__ as E
-
-    checked = set()
-    for f in glob.glob("/root/repo/CORRECTNESS_r*.json"):
-        try:
-            checked.update(json.load(open(f)).keys())
-        except Exception:
-            pass
-    keys = list(E.queries())
+    m = _entry()
+    checked = m._latest_rounds()
+    keys = list(m.queries())
     prefix = set(keys[:50])
     unscheduled = [k for k in keys if k not in checked and k not in prefix]
     assert unscheduled == [], (
         f"registry ids with no driver row and no prefix slot: {unscheduled}"
     )
-
-
-def test_freshness_horizon():
-    """Round-9 (verdict item 7): staleness can never silently
-    re-accumulate. For every registry id, its freshest evidence — the
-    latest recorded driver CORRECTNESS round, or the UPCOMING round if
-    the id sits in the current prefix-50 — must be no more than
-    HORIZON rounds behind the upcoming round.
-
-    Round-11 verdict item 1: the post-driver judged state ("results
-    for the current prefix just landed, next rotation not yet
-    committed" — the driver writes CORRECTNESS_r{N}.json AFTER the
-    builder's last commit, so every judged tree sits in this state)
-    gets exactly ONE round of grace: when the newest CORRECTNESS
-    file's key set equals the current prefix-50 AND the upcoming round
-    equals QUEUE_ROUND, ids in the committed NEXT_QUEUE count as
-    scheduled. The tripwire still fires if the rotation then does not
-    land — one round later the upcoming round moves past QUEUE_ROUND
-    and the grace no longer applies."""
-    import __spark_entry__ as E
-
-    HORIZON = 6
-    latest, rounds, newest_keys = _latest_driver_rounds()
-    assert rounds, "no driver CORRECTNESS files found"
-    upcoming = max(rounds) + 1
-    keys = list(E.queries())
-    prefix = set(keys[:50])
-    graced = (
-        set(NEXT_QUEUE)
-        if newest_keys == prefix and upcoming == QUEUE_ROUND
-        else set()
-    )
-    stale = sorted(
-        k for k in keys
-        if k not in graced
-        and (upcoming if k in prefix else latest.get(k, 0))
-        < upcoming - HORIZON
-    )
-    assert stale == [], (
-        f"ids whose latest evidence is more than {HORIZON} rounds old "
-        f"and not scheduled in the current prefix or the committed "
-        f"next-round queue: {stale}"
-    )
-
-
-def test_post_driver_grace_semantics():
-    """Round-11 verdict item 1, encoded mechanically: (a) at the
-    post-driver state (newest CORRECTNESS keys == current prefix-50,
-    upcoming == QUEUE_ROUND) the grace leaves NOTHING stale; (b) one
-    round later WITHOUT a rotation the grace no longer applies and the
-    NEXT_QUEUE ids trip the horizon — i.e. the grace is exactly one
-    round wide and the tripwire still fires on a missed rotation."""
-    import __spark_entry__ as E
-
-    HORIZON = 6
-    latest, rounds, newest_keys = _latest_driver_rounds()
-    keys = list(E.queries())
-    prefix = set(keys[:50])
-
-    def stale_at(upcoming, newest_keys, latest):
-        graced = (
-            set(NEXT_QUEUE)
-            if newest_keys == prefix and upcoming == QUEUE_ROUND
-            else set()
-        )
-        return sorted(
-            k for k in keys
-            if k not in graced
-            and (upcoming if k in prefix else latest.get(k, 0))
-            < upcoming - HORIZON
-        )
-
-    # (a) post-driver state: CORRECTNESS_{landed} covers the prefix —
-    # already on disk if the driver ran, otherwise simulated.
-    sim = dict(latest)
-    landed = max(rounds) if newest_keys == prefix else max(rounds) + 1
-    for k in prefix:
-        sim[k] = max(sim.get(k, 0), landed)
-    assert landed + 1 == QUEUE_ROUND  # rotation cadence intact
-    assert stale_at(landed + 1, prefix, sim) == []
-    # (b) one more driver window on the SAME prefix (rotation missed):
-    for k in prefix:
-        sim[k] = landed + 1
-    assert stale_at(landed + 2, prefix, sim) != []
 
 
 def test_sf1_rotation_is_class_preserving_bijection():
@@ -295,7 +116,7 @@ def test_sf1_rotation_is_class_preserving_bijection():
     while within-copy similarity structure is untouched."""
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(ROOT, "tools"))
     from make_sf1 import COPIES, rotation_alphabets
 
     import string
@@ -323,7 +144,7 @@ def test_sf1_rotation_guards_identity_indices():
 
     import pytest as _pytest
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(ROOT, "tools"))
     from make_sf1 import rotation_alphabets
 
     for bad in (0, 10, 26, 30, -3):

@@ -7,9 +7,11 @@ Usage: python tools/coverage.py
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def main() -> None:
@@ -40,7 +42,7 @@ def main() -> None:
         mark = "Y" if name in oracles else "rows-only"
         lines.append(f"| `{name}` | {mark} | {first} |")
     lines.append("")
-    with open("/root/repo/COVERAGE.md", "w") as f:
+    with open(os.path.join(ROOT, "COVERAGE.md"), "w") as f:
         f.write("\n".join(lines))
     print(f"wrote COVERAGE.md ({len(qs)} queries, {len(oracles)} oracle-checked)")
 

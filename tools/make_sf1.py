@@ -5,7 +5,7 @@ The driver ships sf0.001/sf0.01/sf0.1 only; sf1 exists to convert the
 100 TB design claims (n²/k semantic dedup, banded LSH, wedge joins,
 B-fold bootstrap) from docstring assertions into measured sf0.1→sf1
 growth curves. Method: TEN deterministically-salted copies of sf0.1,
-written to /root/repo/testdata_sf1 (gitignored — regenerate with
+written to testdata_sf1/ at the repo root (gitignored — regenerate with
 `python tools/make_sf1.py`, ~1 min on local[32]).
 
 Why salted replication instead of a fresh generator:
@@ -48,10 +48,11 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SRC = "/root/testdata/sf0.1"
-DST = "/root/repo/testdata_sf1"
+DST = os.path.join(ROOT, "testdata_sf1")
 COPIES = 10
 
 # (table, [key columns to offset per copy])

@@ -8,9 +8,11 @@ regressions show up as a diff of PLANS.md.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SKIP_PREFIXES = ("q_stream",)  # streaming plans are per-microbatch
 SKIP = {"q_count", "q_source_discovery", "q_sink_append", "q_sink_partitioned", "q_sink_csv", "q_ddl_create"}  # driver-side actions / side-effects
@@ -45,7 +47,7 @@ def main() -> None:
         except Exception as exc:  # pragma: no cover
             rows.append({"name": name, "error": f"{type(exc).__name__}: {exc}"})
 
-    with open("/root/repo/PLANS.md", "w") as fh:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as fh:
         fh.write("# PLANS — physical-plan audit (generated by tools/plan_audit.py)\n\n")
         fh.write(f"Scale indicators per contract query at `{sf}`. Exchanges = shuffle\n")
         fh.write("exchanges in the final plan (lower = better); BHJ/SMJ = broadcast vs\n")

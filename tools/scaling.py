@@ -17,7 +17,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1"]
 
@@ -93,7 +94,7 @@ def main() -> None:
         rows.append((name, family, times))
         print(name, [round(t, 3) for t in times], flush=True)
 
-    with open("/root/repo/SCALING.md", "w") as fh:
+    with open(os.path.join(ROOT, "SCALING.md"), "w") as fh:
         fh.write(
             "# SCALING — empirical growth per 10x SF step "
             "(generated by tools/scaling.py)\n\n"

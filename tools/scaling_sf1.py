@@ -21,13 +21,14 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 # sf1 partitions/rows need more than the 8g default driver heap
 os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "32g")
 
 SF01 = "/root/testdata/sf0.1"
-SF1 = "/root/repo/testdata_sf1"
+SF1 = os.path.join(ROOT, "testdata_sf1")
 
 # the verdict-named scale-sensitive set + linear anchors for context
 QUERIES = [
@@ -141,11 +142,11 @@ def main() -> None:
         "data-driven stages' true growth.\n"
     )
 
-    with open("/root/repo/SCALING.md") as fh:
+    with open(os.path.join(ROOT, "SCALING.md")) as fh:
         body = fh.read()
     if MARKER in body:  # replace the previous tier block
         body = body[: body.index("\n" + MARKER)]
-    with open("/root/repo/SCALING.md", "w") as fh:
+    with open(os.path.join(ROOT, "SCALING.md"), "w") as fh:
         fh.write(body + "".join(section))
     print("appended sf1 tier to SCALING.md")
 

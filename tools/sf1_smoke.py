@@ -25,10 +25,11 @@ import sys
 import threading
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "32g")
 
-SF1 = "/root/repo/testdata_sf1"
+SF1 = os.path.join(ROOT, "testdata_sf1")
 
 
 def main() -> None:

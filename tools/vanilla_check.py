@@ -20,13 +20,15 @@ Usage: python tools/vanilla_check.py [sf_dir] [n_prefix|query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.join(ROOT, "tools"))
 
 from check import TABLES, compare_results  # noqa: E402
 
