@@ -1,26 +1,45 @@
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
+"""Benchmark harness: registry ids at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
-Prints ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+    python bench.py                  # every section, writes BENCH_LOCAL.json
+    python bench.py --headline-only  # the 13 headline ids only
 
-Methodology: one shared SparkSession (JVM startup excluded). One
-untimed warmup pass of every headline query first (whole-stage-codegen
-compilation + JIT + parquet footer caching are one-time costs a
-long-running deployment doesn't pay per query), then each query timed
-end-to-end in steady state (plan → execute → count). Queries span the
-operator families: scan-agg, joins (broadcast + star), windows, top-k,
-text, dedup, vectors — the mix a 100 TB deployment would run.
+The last stdout line is one JSON object: {"metric", "value" (sum of the
+headline ids' wall seconds), "unit", "queries": {id: wall_s}, "sf",
+"failed" (ids that raised)}. The exit status is non-zero when any id
+failed, so a missing headline id cannot silently lower ``value``.
+
+Every execution goes through ``perfbench/run.py``'s ``run_op``: it
+starts from ``spark.catalog.clearCache()`` and writes the result to the
+``noop`` sink, which evaluates every output column (a ``count()`` lets
+Catalyst prune projected columns and the Python UDFs behind them).
+Per id: one untimed warm-up execution, then ``PASSES`` timed ones for
+the headline section and one for the others. Each timed execution is
+traced (``perfbench/spans.py``): the ``registry.build`` phase is the
+``fn(spark, sf)`` call, eager in-operator actions included, and the
+``operators.action`` phase is the ``noop`` write; both carry the
+status-store counters of the jobs they launched. ``BENCH_LOCAL.json``
+(full runs only) holds a per-id layer record, each field the median
+over the id's passes. The numbers are a record, not a verdict:
+regressions are judged by the paired parent/change runs of
+``perfbench``.
 """
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
+import statistics
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
+sys.path.insert(0, os.path.join(HERE, "perfbench"))
+
+import run  # noqa: E402
+from spans import Tracer  # noqa: E402
 
 HEADLINE = [
     "q_agg_basic",
@@ -174,132 +193,62 @@ CURATION_STATS_OPS = [
     "q_abtest_srm",
     "q_abtest_did",
 ]
-
 PASSES = 3
 
-
-def _control_fn(spark, sf_dir):
-    """The calm-mode control: a fixed scan-bound two-column lineitem
-    aggregate. Scan + hash-agg only — no joins, no windows, no Python —
-    so its run-to-run drift measures the MACHINE (CPU contention, page
-    cache, GC), not any operator under test."""
-    from pyspark.sql import functions as F
-
-    from nyc_tlc_trip_data_pipelines_spark.catalog import load_table
-
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_quantity", "l_extendedprice"
-    )
-
-    def run() -> float:
-        t0 = time.perf_counter()
-        li.agg(F.sum("l_quantity"), F.sum("l_extendedprice")).collect()
-        return time.perf_counter() - t0
-
-    return run
+# per-id record: wall and engine-CPU seconds from run_op, phase seconds
+# from the spans, job and stage counters from the status store
+COUNTERS = ("jobs", "stages", "exec_run_ms", "exec_cpu_ms", "shuffle_read_mb",
+            "shuffle_write_mb", "input_mb", "spill_mb")
+RECORD_KEYS = ("wall_s", "cpu_s", "build_s", "action_s", *COUNTERS, "persisted_mb")
+# a tracer names its job groups by run id and span index, so each tracer
+# needs its own run id or its counters include earlier tracers' jobs
+_TRACERS = itertools.count()
 
 
-# per-query control time measured IMMEDIATELY BEFORE each query's timed
-# passes — the calm-mode (round-8 verdict item 4) drift reference
-_CONTROLS: dict[str, float] = {}
+def _layers(rec: run.Recorder, qid: str, first: int) -> dict[str, float]:
+    """The record of ``qid``'s latest execution, whose spans start at
+    ``first`` in the recorder's tracer."""
+    out = dict.fromkeys(RECORD_KEYS, 0.0)
+    out["wall_s"], out["cpu_s"] = rec.times[qid][-1], rec.cpu[qid][-1]
+    for s in rec.tracer.spans[first + 1:]:
+        out["build_s" if s.name == "registry.build" else "action_s"] += s.seconds
+        for k in COUNTERS:
+            out[k] += s.counters.get(k, 0.0)
+    out["persisted_mb"] = rec.cached_mb[-1]
+    return out
 
 
-def _smooth_controls(window: int = 5) -> None:
-    """Replace each per-query control with the MEDIAN of the ``window``
-    adjacent control runs (insertion order = measurement order). A
-    single 0.1 s control run varies ±40%, which is pure noise against a
-    0.3 s query — measured: an unchanged query ran 0.96× raw yet
-    flagged 1.7× calm because its one adjacent control happened to run
-    0.066 s against a 0.11 s run median. The windowed median keeps the
-    within-run drift signal (a sustained machine shift moves every
-    control in the window) at ~1/√window the variance."""
-    names = list(_CONTROLS)
-    vals = [_CONTROLS[n] for n in names]
-    half = window // 2
-    for i, n in enumerate(names):
-        w = sorted(vals[max(0, i - half): i + half + 1])
-        _CONTROLS[n] = round(w[len(w) // 2], 4)
-
-
-def _timed_pass(qs, names, spark, sf_dir, control=None, passes=PASSES) -> dict[str, float]:
-    """Per query: MEDIAN over PASSES steady-state runs (round-7
-    verdict item 1). Ambient machine load has swung identical plans
-    ~1.6× between rounds (BENCH_r2 vs r3: even scan-bound TPC-H Q6
-    moved in lockstep with everything else). The median discards a
-    single ambient spike without understating the way min can — a
-    real slow creep raises every pass and therefore the median, while
-    min would keep reporting the one lucky pass and hide the creep
-    inside the ambient band.
-
-    Side channel: the max/min pass ratio of each query timed more than
-    once is recorded into ``_SPREADS`` — the per-run measured ambient
-    noise. The payload
-    summarizes it (``ambient_spread``) and every regression entry
-    carries its own query's ratio, so a reader can tell "flagged
-    inside the noise band" from "flagged well beyond it" without
-    re-running anything.
-
-    Calm protocol (round-8 verdict item 4): when ``control`` is
-    given, it is run once immediately before each query's timed
-    passes and recorded in ``_CONTROLS[name]`` — the machine-drift
-    reference taken AT the query's measurement time. The regression
-    gate then compares ratio-to-control across rounds, so a
-    machine-wide shift (which moves query and control in lockstep)
-    cancels instead of flagging every unchanged plan.
-
-    ``passes``: the headline section (the cross-round baseline
-    metric) keeps median-of-3; the trend sections run one pass to fit
-    the 570 s harness budget. The retime pass re-measures every
-    flagged query at median-of-3, so a noisy single pass cannot raise
-    a flag that does not reproduce."""
-    timings: dict[str, float] = {}
-    for name in names:
-        if control is not None:
-            _CONTROLS[name] = round(control(), 4)
-        runs = []
+def _timed_pass(spark, fns, sf_dir, passes=PASSES) -> dict[str, dict | None]:
+    """Time each of ``fns`` (id -> ``fn(spark, sf_dir)``): one untimed
+    warm-up, then ``passes`` traced executions, all through ``run_op``.
+    Returns id -> record (the median of each field over the passes), or
+    None for an id whose timed execution raised."""
+    out: dict[str, dict | None] = {}
+    for qid, fn in fns.items():
+        run.run_op(spark, fn, qid, sf_dir, run.Recorder())
+        rec = run.Recorder(Tracer(spark, f"bench{next(_TRACERS)}"))
+        samples = []
         for _ in range(passes):
-            t0 = time.perf_counter()
-            qs[name](spark, sf_dir).count()
-            runs.append(time.perf_counter() - t0)
-        runs.sort()
-        timings[name] = round(runs[len(runs) // 2], 3)
-        if len(runs) > 1 and runs[0] > 0:
-            _SPREADS[name] = round(runs[-1] / runs[0], 2)
-    return timings
+            first = len(rec.tracer.spans)
+            run.run_op(spark, fn, qid, sf_dir, rec)
+            if rec.failed:
+                break
+            samples.append(_layers(rec, qid, first))
+        out[qid] = None if rec.failed else {
+            k: round(statistics.median(s[k] for s in samples), 3) for k in RECORD_KEYS
+        }
+    return out
 
 
-# per-query max/min pass ratio from the most recent _timed_pass calls
-# (retime passes overwrite — the freshest measurement wins)
-_SPREADS: dict[str, float] = {}
-
-
-def _spread_summary() -> dict[str, float]:
-    """Distribution of within-run pass spreads: the measured noise
-    floor of THIS bench run. A ~1.1 median says passes are stable and
-    a 1.3× cross-round flag is signal; a ~1.5 median says the whole
-    run sits in ambient churn and flags need the retime record."""
-    if not _SPREADS:
-        return {}
-    vals = sorted(_SPREADS.values())
-    return {
-        "median": vals[len(vals) // 2],
-        "p90": vals[min(len(vals) - 1, int(len(vals) * 0.9))],
-        "max": vals[-1],
-    }
-
-
-def _bloom_bench(spark, sf_dir) -> dict[str, float]:
-    """Bloom semi-join reduction, measured: lineitem ⋈ (p_size=15
-    parts) as a plain broadcast join vs the same join behind
-    bloom_prefilter. Each timed pass re-runs the whole lifecycle, so
-    the bloom line carries the CONSTANT build cost (a second Spark job:
-    dim aggregate + ≤256-row collect, ~0.5 s of local job latency) on
-    top of the probe filter, which itself is ~free (xxhash64 +
-    literal-array element_at measured at scan speed). On local[32]
-    against a broadcast join there is no shuffle to avoid, so plain
-    wins; at 100 TB the build amortizes over the fact scan and the
-    prefilter pays as shuffle/IO avoided (probe side drops to ~the
-    match set before any exchange)."""
+def _bloom_fns(spark, sf_dir) -> dict:
+    """Bloom semi-join reduction: lineitem ⋈ (p_size=15 parts) as a
+    plain broadcast join vs the same join behind bloom_prefilter. Each
+    execution re-runs the whole lifecycle, so the bloom line carries
+    the CONSTANT build cost (a second Spark job: dim aggregate +
+    ≤256-row collect) on top of the ~free probe filter. Against a
+    local broadcast join there is no shuffle to avoid, so plain wins;
+    at 100 TB the build amortizes over the fact scan and the prefilter
+    pays as shuffle/IO avoided."""
     from pyspark.sql import functions as F
 
     from nyc_tlc_trip_data_pipelines_spark.catalog import load_table
@@ -308,12 +257,12 @@ def _bloom_bench(spark, sf_dir) -> dict[str, float]:
     li = load_table(spark, sf_dir, "lineitem")
     parts = load_table(spark, sf_dir, "part").filter(F.col("p_size") == 15)
 
-    def plain():
+    def plain(spark, sf_dir):
         return li.join(F.broadcast(parts), li.l_partkey == parts.p_partkey).groupBy(
             "l_returnflag"
         ).count()
 
-    def bloomed():
+    def bloomed(spark, sf_dir):
         # min_big_bytes=0: this line exists to MEASURE the bloom
         # lifecycle, so the production big-side floor (which would
         # skip it at bench SF) is disabled here
@@ -322,37 +271,24 @@ def _bloom_bench(spark, sf_dir) -> dict[str, float]:
             "l_returnflag"
         ).count()
 
-    out: dict[str, float] = {}
-    for name, fn in (("plain_join", plain), ("bloom_prefiltered", bloomed)):
-        fn().count()  # warmup
-        runs = []
-        for _ in range(PASSES):
-            t0 = time.perf_counter()
-            fn().count()
-            runs.append(time.perf_counter() - t0)
-        runs.sort()
-        out[name] = round(runs[len(runs) // 2], 3)
-    return out
+    return {"plain_join": plain, "bloom_prefiltered": bloomed}
 
 
-def _skew_bench(spark, sf_dir) -> dict[str, float]:
-    """Skew-join hardening proof (round-5 verdict item 6): one hot key
-    holds 50% of the fact rows (orders with even o_orderkey collapse to
-    key 0). Times the plain shuffle equi-join vs operators/skew
-    salted_join on the same fixture, with auto-broadcast and AQE
-    skew-splitting disabled so the comparison isolates the salting —
-    i.e. the regime where a 100 TB deployment reaches for salting
-    because the dim is too big to broadcast and AQE splitting isn't
-    enough.
+def _skew_bench(spark, sf_dir) -> dict:
+    """Skew-join hardening proof: one hot key holds 50% of the fact
+    rows (orders with even o_orderkey collapse to key 0). Times the
+    plain shuffle equi-join vs operators/skew salted_join on the same
+    fixture, with auto-broadcast and AQE skew-splitting disabled so the
+    comparison isolates the salting — i.e. the regime where a 100 TB
+    deployment reaches for salting because the dim is too big to
+    broadcast and AQE splitting isn't enough.
 
     READING THE NUMBERS: at bench SF the hot key is only ~10^4..10^5
     rows — one task absorbs it in well under a second, so PLAIN WINS
     and the salted line records salting's constant overhead (16×
     dim replication + extra hash). That is the honest small-scale
     result; the crossover needs a hot key that overwhelms a task
-    (10^7+ rows). What the line buys per round: (a) a regression
-    fence on the salted plan's overhead, (b) the plain/salted ratio
-    TREND if the driver ever benches a larger SF.
+    (10^7+ rows).
     """
     from pyspark.sql import functions as F
 
@@ -372,10 +308,10 @@ def _skew_bench(spark, sf_dir) -> dict[str, float]:
         .withColumn("payload", (F.col("k") % 25).cast("int"))
     )
 
-    def plain():
+    def plain(spark, sf_dir):
         return skewed.join(dim, "k").groupBy("payload").count()
 
-    def salted():
+    def salted(spark, sf_dir):
         return salted_join(skewed, dim, ["k"], salt_buckets=16).groupBy("payload").count()
 
     confs = {
@@ -386,223 +322,56 @@ def _skew_bench(spark, sf_dir) -> dict[str, float]:
     for k, v in confs.items():
         spark.conf.set(k, v)
     try:
-        out: dict[str, float] = {}
-        for name, fn in (("plain_hotkey", plain), ("salted_hotkey", salted)):
-            fn().count()  # warmup
-            runs = []
-            for _ in range(PASSES):
-                t0 = time.perf_counter()
-                fn().count()
-                runs.append(time.perf_counter() - t0)
-            runs.sort()
-            out[name] = round(runs[len(runs) // 2], 3)
-        return out
+        return _timed_pass(spark, {"plain_hotkey": plain, "salted_hotkey": salted}, sf_dir)
     finally:
         for k, v in prev.items():
             spark.conf.set(k, v)
 
 
-def _flat_timings(prev: dict) -> dict[str, float]:
-    """Per-query timings from a bench JSON object: every numeric value
-    inside any nested section dict (the driver wraps the real object
-    under "parsed")."""
-    if isinstance(prev.get("parsed"), dict):
-        prev = prev["parsed"]
-    flat: dict[str, float] = {}
-    for key, val in prev.items():
-        if key in ("controls", "retimes"):
-            continue  # calm references / audit records, not timings
-        if isinstance(val, dict):
-            for q, t in val.items():
-                if isinstance(t, (int, float)) and q.startswith("q_"):
-                    flat[q] = float(t)
-    return flat
+def measure(spark, qs, sf_dir, sections, joins=True) -> dict:
+    """Time ``sections`` ([(key, ids)], headline first) and, with
+    ``joins``, the skew and bloom join lines; returns the payload."""
+    t_start = time.perf_counter()
 
+    def _mark(label: str) -> None:
+        # section progress to stderr: stdout stays the one JSON line
+        print(f"bench: {label} at {time.perf_counter() - t_start:.0f}s",
+              file=sys.stderr, flush=True)
 
-def _flat_controls(prev: dict) -> tuple[dict[str, float], float | None]:
-    """Calm references from a bench payload: the per-query control
-    times (stored under ``controls`` with ``c:`` key prefixes, which
-    _flat_timings skips) and the run-level control median."""
-    if isinstance(prev.get("parsed"), dict):
-        prev = prev["parsed"]
-    per_q = {
-        k[2:]: float(v)
-        for k, v in (prev.get("controls") or {}).items()
-        if isinstance(v, (int, float)) and k.startswith("c:")
+    records = {}
+    for i, (key, names) in enumerate(sections):
+        fns = {q: qs[q] for q in names}
+        records[key] = _timed_pass(spark, fns, sf_dir, PASSES if i == 0 else 1)
+        _mark(key)
+    if joins:
+        records["skew_join"] = _skew_bench(spark, sf_dir)
+        records["bloom_join"] = _timed_pass(spark, _bloom_fns(spark, sf_dir), sf_dir)
+        _mark("skew_join+bloom_join")
+    headline = {q: r["wall_s"] for q, r in records[sections[0][0]].items() if r}
+    failed = sum(r is None for sec in records.values() for r in sec.values())
+    try:
+        sf_label = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
+    except ValueError:  # non-"sfX" dir names (e.g. the sf1 tier path)
+        sf_label = sf_dir
+    return {
+        "metric": "headline_queries_total_time",
+        "value": round(sum(headline.values()), 3),
+        "unit": "sec",
+        "queries": headline,
+        "sf": sf_label,
+        "failed": failed,
+        "passes": {"headline": PASSES, "sections": 1},
+        "records": records,
     }
-    run_level = prev.get("control_sec")
-    # Round-9 ADVICE: reject a zero/invalid control EXPLICITLY, not by
-    # truthiness — a pathologically fast control that rounds to 0.0 is
-    # unusable as a normalization reference and must read as missing.
-    if not isinstance(run_level, (int, float)) or run_level <= 0:
-        run_level = None
-    per_q = {q: t for q, t in per_q.items() if t > 0}
-    return per_q, (float(run_level) if run_level is not None else None)
 
 
-def _baseline() -> tuple[str | None, dict[str, float]]:
-    """Pick the regression baseline: $SPARK_GRAFT_BENCH_BASELINE if set
-    (explicit path — lets a same-round re-run compare against the
-    PRIOR round instead of its own output), else walk BENCH_r*.json
-    newest → oldest and take the first file that yields any per-query
-    timings. Never silently returns an empty baseline while naming a
-    file."""
-    import glob
-    import re
-
-    _BASELINE_CONTROLS.clear()
-
-    def _note_controls(prev: dict, qset) -> None:
-        per_q, run_level = _flat_controls(prev)
-        for q in qset:
-            c = per_q.get(q, run_level)
-            if c is not None and c > 0 and q not in _BASELINE_CONTROLS:
-                _BASELINE_CONTROLS[q] = c
-
-    override = os.environ.get("SPARK_GRAFT_BENCH_BASELINE")
-    if override:
-        try:
-            with open(override) as fh:
-                prev = json.load(fh)
-        except (OSError, ValueError):
-            prev = {}
-        flat = _flat_timings(prev)
-        if flat:
-            _note_controls(prev, flat)
-            return os.path.basename(override), flat
-        # unusable override (typo'd path, empty JSON) must not turn
-        # the gate off — print a loud stderr note and fall through to
-        # the BENCH_r*.json walk
-        print(
-            f"bench: SPARK_GRAFT_BENCH_BASELINE={override!r} yielded no "
-            "timings; falling back to the BENCH_r*.json walk",
-            file=sys.stderr,
-        )
-    here = os.path.dirname(os.path.abspath(__file__))
-    # pair each path with its round number FIRST — a stray
-    # BENCH_rX.json would match the glob but not the regex, and a
-    # .group(1) on None inside the sort key kills the whole bench run
-    numbered = []
-    # the committed BENCH_LOCAL.json is the FULL payload of the most
-    # recent bench run (every run rewrites it), so it outranks the
-    # driver wrappers, whose compact line holds only the headline
-    local = os.path.join(here, "BENCH_LOCAL.json")
-    if os.path.exists(local):
-        numbered.append((1 << 30, local))
-    for p in glob.glob(os.path.join(here, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)", p)
-        if m:
-            numbered.append((int(m.group(1)), p))
-    # union newest-wins: a driver wrapper covers only the headline
-    # section, so keep walking and fill gaps from older files — every
-    # query gets its MOST RECENT available baseline
-    merged: dict[str, float] = {}
-    names: list[str] = []
-    for _, path in sorted(numbered, reverse=True):
-        try:
-            with open(path) as fh:
-                prev = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        flat = _flat_timings(prev)
-        fresh = {q: t for q, t in flat.items() if q not in merged}
-        if fresh:
-            _note_controls(prev, fresh)
-            merged.update(fresh)
-            names.append(os.path.basename(path))
-    return ("+".join(names) if names else None), merged
-
-
-# q -> the control reference paired with that query's BASELINE timing
-# (same file, per-query when recorded, else that run's control_sec).
-# Filled by _baseline(); kept module-level so _baseline's public
-# 2-tuple signature — which tests and tools pin — stays unchanged.
-_BASELINE_CONTROLS: dict[str, float] = {}
-
-
-def _regressions(current: dict[str, float], threshold: float = 1.3):
-    """Machine-checkable regression gate (round-5 verdict item 8):
-    compare every per-query timing against the most recent usable
-    BENCH_r*.json in the repo root and list queries slower than
-    ``threshold``× their previous-round time. Returns (baseline_name,
-    [{query, prev, now, ratio}, ...]); empty when no prior bench
-    exists.
-
-    Calm normalization (round-8 verdict item 4): when BOTH sides have
-    a control reference — this run's adjacent control in ``_CONTROLS``
-    and the baseline's in ``_BASELINE_CONTROLS`` — the flag decision
-    uses the ratio of ratios-to-control,
-        (now/ctrl_now) / (prev/ctrl_prev),
-    so a machine-wide shift that moves query and control in lockstep
-    cancels, while a genuine plan regression (query moves, control
-    doesn't) still trips. Entries keep the RAW ratio for continuity
-    and add ``ratio_calm`` + ``basis``; raw-flagged-but-calm-cleared
-    queries land in ``_AMBIENT_DISMISSED`` for the payload, so the
-    cancellation is auditable, never silent."""
-    name, flat_prev = _baseline()
-    _AMBIENT_DISMISSED.clear()
-    out = []
-    for q, now in current.items():
-        p = flat_prev.get(q)
-        # sub-0.15 s timings are scheduler noise, not plans
-        if p is None or p < 0.15:
-            continue
-        raw = now / p
-        pc, nc = _BASELINE_CONTROLS.get(q), _CONTROLS.get(q)
-        calm_ok = (
-            pc is not None and pc > 0 and nc is not None and nc > 0
-        )
-        calm = (now / nc) / (p / pc) if calm_ok else None
-        # calm-basis flags also need raw > 1.1: residual control noise
-        # (a ±10-20% reference error on a 0.1 s control) can push an
-        # unchanged sub-0.5 s query's calm ratio past the threshold
-        # while its raw time barely moved — a true >=1.3x plan
-        # regression on a steady machine always moves raw well past
-        # 1.1, and a regression masked by a genuine machine-wide
-        # SPEEDUP surfaces next round against the refreshed baseline.
-        flagged = (
-            calm > threshold and raw > 1.1
-            if calm is not None
-            else raw > threshold
-        )
-        if flagged:
-            entry = {"query": q, "prev": p, "now": now, "ratio": round(raw, 2)}
-            if calm is not None:
-                entry["ratio_calm"] = round(calm, 2)
-                entry["basis"] = "normalized"
-            else:
-                entry["basis"] = "raw"
-            if q in _SPREADS:
-                # this run's own pass spread for the same query: the
-                # flag's measured noise context
-                entry["pass_spread"] = _SPREADS[q]
-            out.append(entry)
-        elif raw > threshold and calm is not None:
-            _AMBIENT_DISMISSED.append(
-                {"query": q, "ratio": round(raw, 2), "ratio_calm": round(calm, 2)}
-            )
-    out.sort(key=lambda r: -r["ratio"])
-    return name, out
-
-
-# raw-threshold crossers the calm normalization cleared this run —
-# published in the payload so drift cancellation is auditable
-_AMBIENT_DISMISSED: list[dict] = []
-
-
-def main() -> None:
+def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     import __spark_entry__ as E
     from nyc_tlc_trip_data_pipelines_spark.session import get_spark
 
     spark = get_spark("bench")
-    qs = E.queries()
-
-    # --headline-only: the quick calm-protocol loop (two consecutive
-    # runs' normalized_total agreeing within 5% is the stability
-    # criterion) — times ONLY the headline section, same JSON contract
     headline_only = "--headline-only" in sys.argv
-
     sections = [("queries", HEADLINE)] if headline_only else [
         ("queries", HEADLINE), ("extended", EXTENDED),
         ("versioned_io", VERSIONED_IO), ("corpus_ops", CORPUS_OPS),
@@ -610,134 +379,21 @@ def main() -> None:
         ("multimodal_ops", MULTIMODAL_OPS),
         ("curation_stats_ops", CURATION_STATS_OPS),
     ]
-
-    t_start = time.perf_counter()
-
-    def _mark(label: str) -> None:
-        # section progress to stderr: stdout stays the one JSON line,
-        # and a budget overrun is attributable to a section after the
-        # fact instead of a silent timeout
-        print(f"bench: {label} at {time.perf_counter() - t_start:.0f}s",
-              file=sys.stderr, flush=True)
-
-    # untimed warmup pass: codegen compile, JIT, parquet footers
-    for key, names in sections:
-        for name in names:
-            qs[name](spark, sf_dir).count()
-        _mark(f"warmup:{key}")
-
-    # calm-protocol control (round-8 verdict item 4): calibrate the
-    # scan-bound control, then re-run it adjacent to every query
-    control = _control_fn(spark, sf_dir)
-    control()  # warmup
-    control_runs = sorted(control() for _ in range(PASSES))
-    control_sec = round(control_runs[len(control_runs) // 2], 4)
-
-    _CONTROLS.clear()
-    section_timings = {}
-    for key, names in sections:
-        section_timings[key] = _timed_pass(
-            qs, names, spark, sf_dir, control=control,
-            passes=PASSES if key == "queries" else 1,
-        )
-        _mark(f"timed:{key}")
-    timings = section_timings["queries"]
-    _smooth_controls()
-    skew_join = {} if headline_only else _skew_bench(spark, sf_dir)
-    bloom_join = {} if headline_only else _bloom_bench(spark, sf_dir)
-    _mark("skew+bloom")
-    all_timings = {q: t for sec in section_timings.values() for q, t in sec.items()}
-    baseline_name, regressions = _regressions(all_timings)
-    retimes: dict[str, dict[str, float]] = {}
-    if regressions:
-        # Confirmation pass: ambient load swings identical sub-second
-        # plans ~1.5x between runs (the flagged set differs every run
-        # under load). Re-measure ONLY the flagged queries; a real
-        # plan regression reproduces, scheduler noise does not. Keep
-        # the better (min) of the two measurements per query, but
-        # record BOTH in the output (round-6 verdict item 7) so a
-        # human can audit what the gate dismissed — min() can only
-        # erase flags, never manufacture them.
-        names = [r["query"] for r in regressions]
-        # control=None: the flagged queries keep their SMOOTHED calm
-        # references from the main pass — a fresh single control run
-        # here would reintroduce exactly the variance _smooth_controls
-        # removed
-        retimed = _timed_pass(qs, names, spark, sf_dir)
-        for grp in section_timings.values():
-            for q in list(grp):
-                if q in retimed:
-                    retimes[q] = {"first": grp[q], "retimed": retimed[q]}
-                    if retimed[q] < grp[q]:
-                        grp[q] = retimed[q]
-        all_timings = {
-            q: t for sec in section_timings.values() for q, t in sec.items()
-        }
-        baseline_name, regressions = _regressions(all_timings)
-    total = round(sum(timings.values()), 3)
-    try:
-        sf_label = float(
-            os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
-        )
-    except ValueError:  # non-"sfX" dir names (e.g. the sf1 tier path)
-        sf_label = sf_dir
-    # normalized headline total: Σ t_q / ctrl_q — the drift-cancelled
-    # stability metric (two consecutive calm runs should agree ≤5%)
-    normalized_total = round(
-        sum(t / _CONTROLS[q] for q, t in timings.items() if _CONTROLS.get(q)), 3
-    )
-    payload = {
-                "metric": "headline_queries_total_time",
-                "value": total,
-                "unit": "sec",
-                "queries": timings,
-    }
-    for key, sec in section_timings.items():
-        if key == "queries":
-            continue
-        payload[key] = sec
-        payload[f"{key}_total"] = round(sum(sec.values()), 3)
-    payload.update({
-                "skew_join": skew_join,
-                "bloom_join": bloom_join,
-                "controls": {f"c:{q}": c for q, c in _CONTROLS.items()},
-                "regressions_vs": baseline_name,
-                "regressions": regressions,
-                "ambient_dismissed": list(_AMBIENT_DISMISSED),
-                "retimes": retimes,
-                "ambient_spread": _spread_summary(),
-                "passes": {"headline": PASSES, "sections": 1, "retime": PASSES},
-                "control_sec": control_sec,
-                "normalized_total": normalized_total,
-                "sf": sf_label,
-    })
-    # Stdout contract: the driver json-parses the LAST stdout line and
-    # keeps only a ~2000-char stdout tail, so that line is a COMPACT
-    # summary (metric/value/unit/headline queries/sf) while the full
-    # payload (trend sections, controls, regression gate, dismissals)
-    # goes to BENCH_LOCAL.json and to stderr.
-    compact = {
-        "metric": payload["metric"],
-        "value": payload["value"],
-        "unit": payload["unit"],
-        "queries": timings,
-        "control_sec": control_sec,
-        "normalized_total": normalized_total,
-        "sf": sf_label,
-    }
+    payload = measure(spark, E.queries(), sf_dir, sections, joins=not headline_only)
+    # callers json-parse the LAST stdout line and may keep only a short
+    # stdout tail, so that line is compact; the full payload goes to
+    # stderr and (full runs only) BENCH_LOCAL.json
     print(json.dumps(payload), file=sys.stderr)
-    # --headline-only runs never write BENCH_LOCAL.json: a 13-query
-    # quick loop must not replace the full-registry baseline the calm
-    # gate reads.
     if not headline_only:
         try:
-            here = os.path.dirname(os.path.abspath(__file__))
-            with open(os.path.join(here, "BENCH_LOCAL.json"), "w") as fh:
+            with open(os.path.join(HERE, "BENCH_LOCAL.json"), "w") as fh:
                 json.dump(payload, fh, indent=1)
         except OSError:
             pass  # read-only checkout must not break the stdout contract
-    print(json.dumps(compact))
+    keys = ("metric", "value", "unit", "queries", "sf", "failed")
+    print(json.dumps({k: payload[k] for k in keys}))
+    return 1 if payload["failed"] else 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

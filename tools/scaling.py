@@ -1,133 +1,184 @@
-"""Empirical scaling memo: time representative operators at every
-available SF and write SCALING.md with the observed growth factors.
+"""Empirical scaling memo: time representative registry ids at each
+scale tier and write both sections of SCALING.md.
+
+- small tier: sf0.001 -> sf0.01 -> sf0.1, growth = t(next) / t(prev);
+- sf1 tier: sf0.1 -> sf1 (``testdata_sf1/``, built offline by
+  ``tools/make_sf1.py``), exponent = log10(t_sf1 / t_sf0.1). Measured
+  only when that directory exists; otherwise the sf1 section already in
+  SCALING.md is kept as it is.
 
 The point is evidence, not benchmarking: a plan that is linear in input
-should show ~10× wall-clock growth per 10× SF step once fixed overheads
-(job launch, codegen, footer reads — ~0.1-0.3 s on local[32]) stop
-dominating; a quadratic candidate stage would show ~100×. The growth
-factor column is the thing to read — at small SF almost every query is
-overhead-bound, so sub-linear factors mean "fixed cost", not magic.
+should show ~10x growth per 10x SF step once fixed overheads (job
+launch, codegen, footer reads) stop dominating; a quadratic stage would
+show ~100x. Each cell is bench.py's timer (cold cache, ``noop`` write,
+median of ``bench.PASSES`` after one warm-up).
 
-Usage: python tools/scaling.py  (writes SCALING.md)
+Usage: python tools/scaling.py
 """
 
 from __future__ import annotations
 
+import math
 import os
 import sys
-import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
 SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1"]
+SF1 = os.path.join(ROOT, "testdata_sf1")
+S, L = "small", "sf1"  # the tiers a row runs at
+MARKER = "\n## sf1 tier"
 
-# one representative per cost family
+# one representative per cost family, plus the bench headline ids at sf1
 QUERIES = [
-    ("q_agg_basic", "scan + hash agg (linear)"),
-    ("q_sql_tpch_q3", "filter + broadcast joins + topk (linear)"),
-    ("q_window_rank", "one window exchange (n log n per key)"),
-    ("q_dedup_minhash", "LSH banding + verify (linear x bands)"),
-    ("q_dedup_ngram_jaccard", "PPJoin prefix postings (near-linear)"),
-    ("q_graph_components", "iterative min-label (rounds x |E|)"),
-    ("q_markov_transitions", "lag + states^2 agg (linear)"),
-    ("q_phrase_search", "position explode + filter (linear)"),
-    ("q_join_interval_bucket", "bucketed interval join (linear)"),
-    ("q_geo_radius_join", "grid radius join (linear in pairs)"),
-    ("q_train_shuffle", "hash shard + per-shard rank (linear)"),
-    ("q_assoc_rules", "basket pair mining (linear x basket-size^2)"),
-    ("q_simhash_hamming", "block-permutation candidates (linear x blocks)"),
-    ("q_minhash_accuracy", "LSH candidates + array-intersect verify"),
-    ("q_token_entropy", "two-level keyed agg (linear)"),
-    ("q_curation_pipeline", "staged dedup+filters+split composition (linear)"),
-    ("q_dedup_span", "gram postings + df join (linear)"),
-    ("q_dedup_semantic", "kmeans buckets + in-cluster pairs (n^2/k per cluster)"),
-    ("q_ann_pq", "fused subspace kmeans + ADC lookup (linear)"),
-    ("q_bitmap_rollup", "blocked bitmap OR rollup (linear)"),
-    ("q_ks_test", "distinct-value ECDF window (linear then sketch-sized)"),
-    ("q_dedup_semantic_scaled", "scale-k SemDeDup, Arrow int-matmul assignment (n^2/k per cluster)"),
-    ("q_dsir_select", "two corpus passes + broadcast vocab join (linear)"),
-    ("q_hard_negatives", "cluster-scoped directed pairs + per-anchor window (n^2/k)"),
-    ("q_stl_decompose", "hourly agg then time-range-sized windows (linear then sketch-sized)"),
-    ("q_nb_classify", "one tokenize pass + broadcast vocab-by-class model (linear)"),
-    ("q_bootstrap_ci", "B-fold explode folded by map-side partial agg (linear, shuffle = groups*B)"),
-    ("q_graph_labelprop", "per-round edge join + vote aggregate (linear in edges * rounds)"),
-    # round 8
-    ("q_survival_km", "subject agg then duration-cell windows (linear then grain-sized)"),
-    ("q_acf", "grain agg then lag-join over the series (linear then series-sized)"),
-    ("q_abtest_cuped", "one sufficient-stats pass + 2-row window (linear)"),
-    ("q_gini", "keyed agg + group rank window (n log n per group)"),
-    ("q_graph_kcore", "per-round degree agg + 2 semi-joins (rounds x |E|)"),
-    # round 8, second wave
-    ("q_seq_pairs", "first-occurrence agg + sorted-array pair expansion (2 shuffles)"),
-    ("q_path_mining", "entity collect + bounded-path agg (linear)"),
-    ("q_item_cf", "co-occurrence pairs + items^2 top-k window (linear)"),
-    ("q_ccf", "grain agg then +/-K lag join (linear then series-sized)"),
-    ("q_mannwhitney", "distinct-value cells + one ordered window (linear then sketch-sized)"),
-    ("q_survival_logrank", "KM cells, micro-quantized terms (linear then grain-sized)"),
-    ("q_spearman", "hour cells + doubled-midrank broadcast joins (linear then series-sized)"),
-    ("q_graph_jaccard", "wedge join on shared neighbor (sum deg^2, hub-cappable)"),
-    # round 13
-    ("q_versioned_zone_skip", "versioned append + ZORDER rewrite + zone-pruned read (linear, IO-bound)"),
+    ("q_agg_basic", "scan + hash agg (linear anchor)", (S, L)),
+    ("q_sql_tpch_q3", "filter + broadcast joins + topk (linear anchor)", (S, L)),
+    ("q_window_rank", "one window exchange (n log n per key)", (S, L)),
+    ("q_dedup_minhash", "LSH banding + verify (linear x bands)", (S, L)),
+    ("q_dedup_ngram_jaccard", "PPJoin prefix postings (near-linear)", (S, L)),
+    ("q_graph_components", "min-label + pointer jumping (log-diameter rounds)", (S, L)),
+    ("q_markov_transitions", "lag + states^2 agg (linear)", (S,)),
+    ("q_phrase_search", "position explode + filter (linear)", (S,)),
+    ("q_join_interval_bucket", "bucketed interval join (linear)", (S,)),
+    ("q_geo_radius_join", "grid radius join (OUTPUT-sensitive: fixed domain)", (S, L)),
+    ("q_train_shuffle", "hash shard + per-shard rank (linear)", (S,)),
+    ("q_assoc_rules", "basket pair mining (linear x basket-size^2)", (S, L)),
+    ("q_simhash_hamming", "block-permutation candidates (linear x blocks)", (S, L)),
+    ("q_minhash_accuracy", "LSH candidates + array-intersect verify", (S,)),
+    ("q_token_entropy", "two-level keyed agg (linear)", (S,)),
+    ("q_curation_pipeline", "staged dedup+filters+split composition (linear)", (S, L)),
+    ("q_dedup_span", "gram postings + df join (linear)", (S, L)),
+    ("q_dedup_semantic", "kmeans buckets + in-cluster pairs (n^2/k per cluster)", (S,)),
+    ("q_ann_pq", "fused subspace kmeans + ADC lookup (linear)", (S,)),
+    ("q_bitmap_rollup", "blocked bitmap OR rollup (linear)", (S,)),
+    ("q_ks_test", "distinct-value ECDF window (linear then sketch-sized)", (S,)),
+    ("q_dedup_semantic_scaled", "scale-k SemDeDup, n^2/k with k scaled to n", (S, L)),
+    ("q_dsir_select", "two corpus passes + broadcast vocab join (linear)", (S,)),
+    ("q_hard_negatives", "cluster-scoped directed pairs + per-anchor window (n^2/k)", (S,)),
+    ("q_stl_decompose", "hourly agg then time-range-sized windows (linear then sketch-sized)", (S,)),
+    ("q_nb_classify", "one tokenize pass + broadcast vocab-by-class model (linear)", (S,)),
+    ("q_bootstrap_ci", "B-fold explode folded by map-side partial agg (linear, groups x B)", (S, L)),
+    ("q_graph_labelprop", "per-round edge join + vote aggregate (rounds x |E|)", (S, L)),
+    ("q_survival_km", "subject agg then duration-cell windows (linear then grain-sized)", (S,)),
+    ("q_acf", "grain agg then lag-join over the series (linear then series-sized)", (S,)),
+    ("q_abtest_cuped", "one sufficient-stats pass + 2-row window (linear)", (S,)),
+    ("q_gini", "keyed agg + group rank window (n log n per group)", (S,)),
+    ("q_graph_kcore", "per-round degree agg + 2 semi-joins (rounds x |E|)", (S, L)),
+    ("q_seq_pairs", "first-occurrence agg + sorted-array pair expansion (2 shuffles)", (S,)),
+    ("q_path_mining", "entity collect + bounded-path agg (linear)", (S,)),
+    ("q_item_cf", "co-occurrence pairs + items^2 top-k window (linear)", (S, L)),
+    ("q_ccf", "grain agg then +/-K lag join (linear then series-sized)", (S,)),
+    ("q_mannwhitney", "distinct-value cells + one ordered window (linear then sketch-sized)", (S,)),
+    ("q_survival_logrank", "KM cells, micro-quantized terms (linear then grain-sized)", (S,)),
+    ("q_spearman", "hour cells + doubled-midrank broadcast joins (linear then series-sized)", (S,)),
+    ("q_graph_jaccard", "wedge join on shared neighbor (sum deg^2, hub-capped)", (S, L)),
+    ("q_versioned_zone_skip", "versioned append + ZORDER rewrite + zone-pruned read (IO-bound)", (S, L)),
+    ("q_ann_ivfpq", "IVF coarse cells + broadcast ADC LUT (train-dominated)", (L,)),
+    ("q_pagerank", "iterative rank joins (iters x |E|, checkpointed)", (L,)),
+    ("q_bm25_rank", "query-term posting join (linear x |terms|)", (L,)),
+    ("q_entity_resolve", "blocking-key candidate join (block-bounded)", (L,)),
+    ("q_knn_label_noise", "bucketed kNN over embeddings (n^2/buckets)", (L,)),
+    ("q_join_star", "multi-way star join, broadcast dims (linear)", (L,)),
+    ("q_join_broadcast", "broadcast hash join (linear)", (L,)),
+    ("q_window_avg_two_grains", "two-grain window avg, shared exchange (linear)", (L,)),
+    ("q_topk", "TakeOrderedAndProject top-k (linear, no global sort)", (L,)),
+    ("q_groupby_avg_orderby", "hash agg + order by (linear)", (L,)),
+    ("q_text_wordcount", "tokenize + explode + agg (linear x tokens)", (L,)),
+    ("q_similarity_topk", "brute-force cosine top-k (linear x dim)", (L,)),
+    ("q_sql_tpch_q6", "scan-heavy filter + agg (linear anchor)", (L,)),
+    ("q_versioned_sidecar", "sidecar-spilled zones: rewrite + marker-resolved pruned read (IO-bound)", (L,)),
 ]
 
-PASSES = 3
+
+def _ratio(a: float, b: float) -> float:
+    return b / a if a > 0 else float("nan")
+
+
+def small_section(t: dict, cores: int) -> str:
+    rows = [(q, fam, [t[q, sf] for sf in SFS]) for q, fam, at in QUERIES if S in at]
+    out = [
+        "# SCALING — empirical growth per 10x SF step (generated by tools/scaling.py)\n\n",
+        f"Cells are wall seconds of bench.py's timer on local[{cores}]: every run\n"
+        "starts from `clearCache()` and writes the result to the `noop` sink,\n"
+        "median of the timed passes after one warm-up. growth = t(sf+1)/t(sf).\n"
+        "Fixed overhead (job launch + codegen + footers) dominates the small\n"
+        "cells, so factors well under 10x mean 'fixed cost still dominates';\n"
+        "the signal to look for is a factor HEADING TOWARD ~100x, which would\n"
+        "flag a quadratic stage.\n\n",
+        "| query | cost family | sf0.001 | sf0.01 | sf0.1 | g1 | g2 |\n",
+        "|---|---|---|---|---|---|---|\n",
+    ]
+    for q, fam, (a, b, c) in rows:
+        out.append(f"| {q} | {fam} | {a:.3f} | {b:.3f} | {c:.3f} "
+                   f"| {_ratio(a, b):.1f}x | {_ratio(b, c):.1f}x |\n")
+    worst = max(rows, key=lambda r: _ratio(r[2][1], r[2][2]))
+    out.append(
+        f"\nReading: the largest sf0.01 → sf0.1 factor is "
+        f"{_ratio(worst[2][1], worst[2][2]):.1f}x ({worst[0]}),\n"
+        "far from the ~100x quadratic signature. q_geo_radius_join is\n"
+        "OUTPUT-sensitive: the synthetic coordinates live on a fixed 180x360\n"
+        "domain, so point density — and with it the true result pair count —\n"
+        "grows with SF, and a super-linear factor reflects a bigger ANSWER,\n"
+        "not a worse plan.\n"
+    )
+    return "".join(out)
+
+
+def sf1_section(t: dict, cores: int) -> str:
+    rows = []
+    for q, fam, at in QUERIES:
+        if L in at:
+            a, b = t[q, SFS[-1]], t[q, SF1]
+            r = _ratio(a, b)
+            rows.append((q, fam, a, b, r, math.log10(r) if r > 0 else float("nan")))
+    out = [
+        f"{MARKER} — measured sf0.1 → sf1 growth (generated by tools/scaling.py)\n\n",
+        "sf1 = 10 salted copies of sf0.1 (tools/make_sf1.py: key spaces offset,\n"
+        "document text bijectively char-rotated and embeddings\n"
+        "dimension-rotated per copy, so answer sizes scale ~10x and ratios\n"
+        f"measure the PLAN). Same timer as above, local[{cores}]. exponent =\n"
+        "log10(t_sf1/t_sf0.1): ~1.0 linear, ~2.0 quadratic; <1 = fixed\n"
+        "overhead still amortizing.\n\n",
+        "| query | cost family | sf0.1 | sf1 | ratio | exponent |\n",
+        "|---|---|---|---|---|---|\n",
+    ]
+    for q, fam, a, b, r, e in rows:
+        out.append(f"| {q} | {fam} | {a:.3f} | {b:.3f} | {r:.1f}x | {e:.2f} |\n")
+    worst = max(rows, key=lambda r: r[5])
+    out.append(f"\nReading: the worst measured exponent is {worst[5]:.2f} ({worst[0]}).\n")
+    return "".join(out)
 
 
 def main() -> None:
+    has_sf1 = os.path.isdir(SF1)
+    if has_sf1:  # sf1 partitions need more than the default 8g heap
+        os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "32g")
     import __spark_entry__ as E
+    import bench
     from nyc_tlc_trip_data_pipelines_spark.session import get_spark
 
     spark = get_spark("scaling")
     qs = E.queries()
-    rows = []
-    for name, family in QUERIES:
-        times = []
-        for sf in SFS:
-            qs[name](spark, sf).count()  # warmup: codegen + footers
-            best = float("inf")
-            for _ in range(PASSES):
-                t0 = time.perf_counter()
-                qs[name](spark, sf).count()
-                best = min(best, time.perf_counter() - t0)
-            times.append(best)
-        rows.append((name, family, times))
-        print(name, [round(t, 3) for t in times], flush=True)
+    tiers = {S: SFS, L: [SFS[-1], SF1] if has_sf1 else []}
+    t: dict[tuple[str, str], float] = {}
+    for q, _, at in QUERIES:
+        for sf in dict.fromkeys(sf for tier in at for sf in tiers[tier]):
+            rec = bench._timed_pass(spark, {q: qs[q]}, sf)[q]
+            t[q, sf] = rec["wall_s"] if rec else float("nan")
+        print(q, {os.path.basename(sf): v for (k, sf), v in t.items() if k == q}, flush=True)
 
-    with open(os.path.join(ROOT, "SCALING.md"), "w") as fh:
-        fh.write(
-            "# SCALING — empirical growth per 10x SF step "
-            "(generated by tools/scaling.py)\n\n"
-            "min-of-%d steady-state seconds on local[32]; growth = t(sf+1)/t(sf).\n"
-            "Fixed overhead (job launch + codegen + footers) is ~0.1-0.3 s, so\n"
-            "small-SF cells are overhead-bound and growth factors well under 10x\n"
-            "mean 'fixed cost still dominates' — the signal to look for is any\n"
-            "factor HEADING TOWARD ~100x, which would flag a quadratic stage.\n\n"
-            "| query | cost family | sf0.001 | sf0.01 | sf0.1 | g1 | g2 |\n"
-            "|---|---|---|---|---|---|---|\n" % PASSES
-        )
-        for name, family, t in rows:
-            g1 = t[1] / t[0] if t[0] else float("nan")
-            g2 = t[2] / t[1] if t[1] else float("nan")
-            fh.write(
-                f"| {name} | {family} | {t[0]:.3f} | {t[1]:.3f} | {t[2]:.3f} "
-                f"| {g1:.1f}x | {g2:.1f}x |\n"
-            )
-        fh.write(
-            "\nReading (round 5): every factor is far from the ~100x quadratic\n"
-            "signature; the heavier dedup/graph lines grow the fastest because\n"
-            "their real data-dependent stages (banded self-join, posting join,\n"
-            "label-propagation rounds) start to outweigh fixed overhead at\n"
-            "sf0.1 — the expected linear-cost emergence, consistent with the\n"
-            "per-operator plan audits in PLANS.md. q_geo_radius_join is\n"
-            "OUTPUT-sensitive: the synthetic coordinates live on a fixed\n"
-            "180x360 domain, so point density — and with it the true result\n"
-            "pair count — grows with SF and the super-linear factor reflects\n"
-            "a bigger ANSWER, not a worse plan (the candidate stage stays\n"
-            "linear in pairs; real workloads whose spatial extent grows with\n"
-            "data volume keep density, and cost-per-row, flat).\n"
-        )
-    print("wrote SCALING.md")
+    cores = spark.sparkContext.defaultParallelism
+    path = os.path.join(ROOT, "SCALING.md")
+    if has_sf1:
+        tail = sf1_section(t, cores)
+    else:
+        with open(path) as fh:
+            body = fh.read()
+        tail = body[body.index(MARKER):] if MARKER in body else ""
+    with open(path, "w") as fh:
+        fh.write(small_section(t, cores) + tail)
+    print("wrote SCALING.md" + ("" if has_sf1 else " (sf1 tier kept: no testdata_sf1/)"))
 
 
 if __name__ == "__main__":

@@ -1,7 +1,9 @@
 """Full-registry sf1 smoke: run EVERY queries() entry against the sf1
 fixtures (tools/make_sf1.py, 10x the driver's bench scale) and report
-ok/fail/timeout — the scale-robustness companion to the timing tier in
-tools/scaling_sf1.py.
+ok/fail/timeout — the scale-robustness companion to the sf1 timing tier
+in tools/scaling.py. Each id runs once through bench.py's timed action
+(cold cache, result written to the ``noop`` sink), so a query whose
+projected column raises reports FAIL, not OK.
 
 Correctness at sf1 is covered transitively (the operators are oracle-
 checked at sf0.01/sf0.1 and the sf1 fixtures are salted copies whose
@@ -13,9 +15,10 @@ cost curve bends quadratic (the per-query watchdog turns that into a
 TIMEOUT line instead of a hung run).
 
 Usage: python tools/sf1_smoke.py [timeout_sec_per_query=180]
-Round-9 result: 306 ok, 0 fail, 0 timeout (slowest q_dedup_semantic
-84.8 s — the documented fixed-k n^2/k demonstration; its scale-k
-production variant q_dedup_semantic_scaled runs 5.4 s).
+Round-9 result, under the former count() action: 306 ok, 0 fail,
+0 timeout (slowest q_dedup_semantic 84.8 s — the documented fixed-k
+n^2/k demonstration; its scale-k production variant
+q_dedup_semantic_scaled runs 5.4 s).
 """
 
 from __future__ import annotations
@@ -23,7 +26,6 @@ from __future__ import annotations
 import os
 import sys
 import threading
-import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
@@ -34,6 +36,7 @@ SF1 = os.path.join(ROOT, "testdata_sf1")
 
 def main() -> None:
     import __spark_entry__ as E
+    from bench import run
     from nyc_tlc_trip_data_pipelines_spark.session import get_spark
 
     if not os.path.isdir(SF1):
@@ -53,20 +56,21 @@ def main() -> None:
 
         watchdog = threading.Timer(per_query, cancel)
         watchdog.start()
-        t0 = time.time()
+        rec = run.Recorder()
         try:
-            n = fn(spark, SF1).count()
-            print(f"OK {name} {n} {time.time() - t0:.1f}s", flush=True)
-            ok += 1
-        except Exception as e:
-            if hit[0]:
-                print(f"TIMEOUT {name} >{per_query}s", flush=True)
-                timed += 1
-            else:
-                print(f"FAIL {name} {str(e).splitlines()[0][:160]}", flush=True)
-                fail += 1
+            # cold cache + noop write: every output column is evaluated
+            run.run_op(spark, fn, name, SF1, rec)
         finally:
             watchdog.cancel()
+        if hit[0]:
+            print(f"TIMEOUT {name} >{per_query}s", flush=True)
+            timed += 1
+        elif rec.failed:
+            print(f"FAIL {name} (error on stderr)", flush=True)
+            fail += 1
+        else:
+            print(f"OK {name} {rec.times[name][0]:.1f}s", flush=True)
+            ok += 1
     print(f"SUMMARY ok={ok} fail={fail} timeout={timed}", flush=True)
     sys.exit(1 if (fail or timed) else 0)
 
