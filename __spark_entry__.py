@@ -3949,7 +3949,7 @@ def q_dedup_semantic_scaled(spark: SparkSession, sf: str) -> DataFrame:
     k=32 exceeds the measured k≈16 fold/Arrow crossover, so
     semantic_dedup_pairs' tier=auto runs nearest-centroid assignment
     as one exact-int64 micro-unit matmul per Arrow batch
-    (operators/vectors.py _assign_micro_df) instead of k interpreted
+    (operators/vectors.py _micro_argmin) instead of k interpreted
     zip_with folds per row. The oracle replays the integer Lloyd
     chain exactly: micro-grid distances are associative integer sums,
     so not even a fold-order ulp can diverge the assignment."""
@@ -6893,7 +6893,7 @@ def _semantic_dedup_oracle() -> str:
 
 def _kmeans_micro_cte(k: int, iterations: int = 2, dim: int = 64) -> str:
     """Replay of the ARROW-tier Lloyd chain (vectors.py
-    _kmeans_train_micro): coordinates quantized to integer micro-units
+    _kmeans_fit_micro): coordinates quantized to integer micro-units
     with the engines' shared HALF_UP ROUND, distances as EXACT integer
     sums (associative — no fold-order caveat at all, unlike the 6-dp
     double chain), centroid means via the identical

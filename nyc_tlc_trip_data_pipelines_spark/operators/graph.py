@@ -231,17 +231,30 @@ def pagerank(
     plain SQL replay.
 
     Scale shape: the per-round rank table (one row per node) is
-    broadcast to the edge list while Catalyst's size estimate allows
-    (``size_gated_broadcast``), so the join is planned before the run
-    instead of AQE picking it as stages finish, which gave two runs of
-    one query different plans and generated code. Past the gate ranks
-    shuffle on node id each round — at 100 TB pre-partition the edge
-    list by src (bucketing) so every iteration's join is exchange-free
-    on the edge side. The iteration
+    broadcast to the edge list while N × its row width fits the gate of
+    ``size_gated_broadcast``. N is the observed node count, not
+    Catalyst's estimate: the checkpoint carries its input's lineage
+    statistics (orders⋈lineitem reads ~100 GB at sf0.01), so the
+    estimate never passed the gate, and AQE instead shuffled the edge
+    checkpoint by src and broadcast IT in every round. With the hint
+    the join is planned before the run and the edge side is read
+    exchange-free. Past the gate ranks shuffle on node id each round —
+    at 100 TB pre-partition the edge list by src (bucketing) so every
+    iteration's join is exchange-free on the edge side. The iteration
     count is fixed (no driver-side convergence collect), so the whole
     run is ``iterations`` chained stages Catalyst can see.
+
+    The dedupe runs after a ``repartition`` on src, so the distinct and
+    the out_deg window share that one exchange instead of two. It
+    loses the map-side partial distinct: on an input with more than
+    ~2× duplicate edges, shuffling every duplicate costs more than the
+    second exchange saved.
     """
-    e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")).distinct()
+    e = (
+        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+        .repartition("src")
+        .distinct()
+    )
     e_w = e.withColumn(
         "out_deg", F.count(F.lit(1)).over(Window.partitionBy("src"))
     ).localCheckpoint(storageLevel=StorageLevel.MEMORY_AND_DISK)
@@ -269,7 +282,9 @@ def pagerank(
                 (F.lit(base) + F.lit(damping) * F.coalesce("in_mass", F.lit(0.0))).alias("pr"),
             )
         )
-        src = e_w.join(size_gated_broadcast(ranks), e_w["src"] == ranks["node"])
+        src = e_w.join(
+            size_gated_broadcast(ranks, rows=n_nodes), e_w["src"] == ranks["node"]
+        )
     return ranks
 
 

@@ -82,7 +82,9 @@ def plan_size_estimate(df: DataFrame) -> int | None:
     return est
 
 
-def size_gated_broadcast(df: DataFrame, max_bytes: int = 64 << 20) -> DataFrame:
+def size_gated_broadcast(
+    df: DataFrame, max_bytes: int = 64 << 20, rows: int | None = None
+) -> DataFrame:
     """Broadcast hint gated on Catalyst's size estimate (round-8
     verdict item: entity-count tables such as per-node degrees or
     per-item counts are *input-cardinality-sized* — a forced
@@ -97,8 +99,17 @@ def size_gated_broadcast(df: DataFrame, max_bytes: int = 64 << 20) -> DataFrame:
     dim). Otherwise returns ``df`` unhinted so AQE / the
     autoBroadcastJoinThreshold decide at runtime with real sizes.
     Results are byte-identical either way — the hint only picks the
-    physical strategy."""
-    est = plan_size_estimate(df)
+    physical strategy.
+
+    ``rows``: an exact row count the caller already holds (e.g. from an
+    ``Observation``). The size is then ``rows`` × Catalyst's per-row
+    width for the schema (8 bytes of row overhead plus each column's
+    default size), not the plan estimate — which a checkpoint's lineage
+    can inflate by orders of magnitude."""
+    if rows is not None:
+        est = int(rows) * (8 + int(df._jdf.schema().defaultSize()))
+    else:
+        est = plan_size_estimate(df)
     if est is not None and est <= int(max_bytes):
         return F.broadcast(df)
     return df

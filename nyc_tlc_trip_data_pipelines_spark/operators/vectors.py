@@ -336,60 +336,109 @@ def _int_rows_df(spark, rows: Sequence[tuple], schema_ddl: str) -> DataFrame:
     )
 
 
-def _quantize_micro(df: DataFrame, vec_col: str, id_col: str) -> DataFrame:
-    """(id, vq): coordinates quantized to integer micro-units by an
-    ENGINE expression — ``round(x·10⁶)`` HALF_UP, the same
+def _quantize_micro(df: DataFrame, vec_col: str, id_col: str, *keep: Column) -> DataFrame:
+    """(id, vq, *keep): coordinates quantized to integer micro-units by
+    an ENGINE expression — ``round(x·10⁶)`` HALF_UP, the same
     cross-engine rounding contract every micro-unit operator uses —
     so the Python tier below never performs a rounding whose tie rule
-    could differ between engines."""
+    could differ between engines. ``keep`` columns ride along."""
     return df.select(
-        F.col(id_col).alias("id"),
+        F.col(id_col).cast("long").alias("id"),
         F.transform(
             F.col(vec_col),
             lambda x: F.round(x.cast("double") * F.lit(1000000.0), 0).cast("long"),
         ).alias("vq"),
+        *keep,
     )
 
 
-def _assign_micro_df(
-    emb_q: DataFrame, cents_q: Sequence[Sequence[int]]
-) -> DataFrame:
-    """Arrow-tier nearest-centroid assignment that IS oracle-replayable:
-    squared distance over integer micro-unit coordinates is an EXACT
-    int64 sum (⩽ 64·(4·10⁶)² ≈ 10¹⁵ « 2⁶³), and integer addition is
-    associative — so unlike the BLAS-double tier
-    (:func:`assign_nearest_arrow`), summation order cannot flip an
-    argmin and any SQL engine replays the identical assignment.
-    Per Arrow batch one (n×dim)·(dim×k) integer matmul; ‖x‖² is
-    rank-constant so argmin uses −2x·c + ‖c‖² only (exact ints: a tie
-    in d² is a tie in the score). Ties break on centroid id (argmin
-    first-minimum = ROW_NUMBER ORDER BY d2, cid).
-
-    Input (id, vq array<long>); returns (id, vq, cluster) — vq is
-    passed through so the training loop's mean aggregate needs no
-    rejoin shuffle."""
+def _micro_argmin(cents_q: Sequence[Sequence[int]]):
+    """Batch → (vq matrix, cluster ids) over integer micro-unit
+    coordinates. Squared distance is an EXACT int64 sum
+    (⩽ 64·(4·10⁶)² ≈ 10¹⁵ « 2⁶³) and integer addition is associative,
+    so unlike the BLAS-double tier (:func:`assign_nearest_arrow`)
+    summation order cannot flip an argmin and any SQL engine replays
+    the identical assignment. One (n×dim)·(dim×k) integer matmul per
+    Arrow batch; ‖x‖² is rank-constant so argmin uses −2x·c + ‖c‖²
+    only (exact ints: a tie in d² is a tie in the score). Ties break on
+    centroid id (argmin first-minimum = ROW_NUMBER ORDER BY d2, cid)."""
     import numpy as np
-    import pandas as pd
 
     cents = np.asarray([[int(x) for x in c] for c in cents_q], dtype="int64")
     cent_t = cents.T.copy()
     cent_sq = (cents * cents).sum(axis=1)
 
+    def assign(batch):
+        vq = batch.column("vq")
+        mat = vq.flatten().to_numpy(zero_copy_only=False).astype("int64")
+        mat = mat.reshape(len(vq), -1)
+        return mat, (mat @ cent_t * -2 + cent_sq).argmin(axis=1)
+
+    return assign
+
+
+def _assign_micro_df(emb_q: DataFrame, cents_q: Sequence[Sequence[int]]) -> DataFrame:
+    """Arrow-tier nearest-centroid assignment (:func:`_micro_argmin`)
+    that IS oracle-replayable. Input (id, vq[, more]); returns
+    (cluster, id[, more]) — the columns after vq pass through the
+    Arrow batch untouched, so a caller needing the vectors next to
+    their cluster reads them in this pass instead of joining back."""
+    import pyarrow as pa
+
+    assign = _micro_argmin(cents_q)
+    names = ["cluster"] + [c for c in emb_q.columns if c != "vq"]
+
     def batches(it):
-        for pdf in it:
-            if not len(pdf):  # mapInPandas can hand empty Arrow batches
+        for batch in it:
+            if batch.num_rows == 0:
                 continue
-            mat = np.vstack(pdf["vq"].to_numpy()).astype("int64")
-            scores = mat @ cent_t * -2 + cent_sq
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"],
-                    "vq": pdf["vq"],
-                    "cluster": scores.argmin(axis=1).astype("int32"),
-                }
+            _, cluster = assign(batch)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(cluster, pa.int32())] + [batch.column(c) for c in names[1:]],
+                names=names,
             )
 
-    return emb_q.mapInPandas(batches, "id long, vq array<bigint>, cluster int")
+    schema = ", ".join(
+        ["cluster int"] + [f"{f.name} {f.dataType.simpleString()}"
+                           for f in emb_q.schema.fields if f.name != "vq"]
+    )
+    return emb_q.mapInArrow(batches, schema)
+
+
+def _lloyd_partials_df(emb_q: DataFrame, cents_q: Sequence[Sequence[int]]) -> DataFrame:
+    """One Lloyd round's exact partial sums: per Arrow batch of (id, vq),
+    assign (:func:`_micro_argmin`) and emit one (cluster, dim, s, n)
+    row per live cluster and dimension — s the int64 sum of the
+    cluster's micro coordinates in that batch, n its row count. Integer
+    sums are associative, so summing the partials gives the very sum
+    and count of a row-level aggregate over every (cluster, dim, x)."""
+    import numpy as np
+    import pyarrow as pa
+
+    assign = _micro_argmin(cents_q)
+    k = len(cents_q)
+
+    def batches(it):
+        for batch in it:
+            if batch.num_rows == 0:
+                continue
+            mat, cluster = assign(batch)
+            dim = mat.shape[1]
+            sums = np.zeros((k, dim), dtype="int64")
+            np.add.at(sums, cluster, mat)
+            counts = np.bincount(cluster, minlength=k)
+            live = np.flatnonzero(counts)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(np.repeat(live, dim), pa.int32()),
+                    pa.array(np.tile(np.arange(dim), len(live)), pa.int32()),
+                    pa.array(sums[live].ravel(), pa.int64()),
+                    pa.array(np.repeat(counts[live], dim), pa.int64()),
+                ],
+                names=["cluster", "dim", "s", "n"],
+            )
+
+    return emb_q.select("id", "vq").mapInArrow(batches, "cluster int, dim int, s long, n long")
 
 
 def kmeans_train(
@@ -439,10 +488,10 @@ def kmeans_train(
 
     Returns (assignments DataFrame (id, cluster), centroids).
     """
-    if tier not in ("fold", "arrow", "auto"):
-        raise ValueError(f"tier must be fold|arrow|auto, got {tier!r}")
-    if tier == "arrow" or (tier == "auto" and k > _ARROW_TIER_K):
-        return _kmeans_train_micro(df, k, iterations, vec_col, id_col)
+    if _micro_tier(tier, k):
+        emb_q, cents_q = _kmeans_fit_micro(df, k, iterations, vec_col, id_col)
+        final = _assign_micro_df(emb_q, cents_q).select("id", "cluster")
+        return final, [[cq / 1000000.0 for cq in c] for c in cents_q]
     emb = df.select(
         F.col(id_col).alias("id"),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
@@ -474,31 +523,43 @@ def kmeans_train(
     return final, centroids
 
 
-def _kmeans_train_micro(
+def _micro_tier(tier: str, k: int) -> bool:
+    if tier not in ("fold", "arrow", "auto"):
+        raise ValueError(f"tier must be fold|arrow|auto, got {tier!r}")
+    return tier == "arrow" or (tier == "auto" and k > _ARROW_TIER_K)
+
+
+def _kmeans_fit_micro(
     df: DataFrame,
     k: int,
     iterations: int,
     vec_col: str,
     id_col: str,
-) -> tuple[DataFrame, list[list[float]]]:
+) -> tuple[DataFrame, list[list[int]]]:
     """Arrow-tier Lloyd loop: identical structure to the fold tier —
     init = the k smallest ids, exact integer micro-unit centroid means
     rounded to 6 dp, empty clusters keep their previous centroid —
     but both init and every distance live on the micro grid
     (engine-side ``round(x·10⁶)``), so assignment is
-    :func:`_assign_micro_df`'s exact int64 argmin. Centroid means are
+    :func:`_micro_argmin`'s exact int64 argmin. Centroid means are
     the SAME value as the fold tier's (micro = round(x·10⁶) either
     way); only the distance comparison differs. Quantizing a 6-dp
     mean back to micro is exact (m·10⁶ is integer-valued up to one
     double ulp, far from any rounding boundary).
 
+    Each round ships k·dim partial sums per Arrow batch
+    (:func:`_lloyd_partials_df`) to the (cluster, dim) aggregate, not
+    every (id, vq, cluster) row to a posexplode: the centroids are
+    bit-identical, since the sums are the same exact integers.
+
     The quantized input is materialized ONCE by an eager
-    ``localCheckpoint`` before the init collect: the init, every
-    Lloyd round and the final assignment read those blocks instead of
-    re-reading and re-quantizing the caller's plan each time. Blocks
-    are stored serialized (PySpark's MEMORY_AND_DISK), an order of
-    magnitude smaller than deserialized rows, and are freed when the
-    returned frames are garbage-collected."""
+    ``localCheckpoint`` before the init collect: the init and every
+    Lloyd round read those blocks instead of re-reading and
+    re-quantizing the caller's plan each time. Blocks are stored
+    serialized (PySpark's MEMORY_AND_DISK), an order of magnitude
+    smaller than deserialized rows, and are freed when the returned
+    frame is garbage-collected. Returns (that checkpoint, micro
+    centroids)."""
     emb_q = _quantize_micro(df, vec_col, id_col).localCheckpoint(
         storageLevel=StorageLevel.MEMORY_AND_DISK
     )
@@ -510,14 +571,11 @@ def _kmeans_train_micro(
     cents_q: list[list[int]] = [list(r.vq) for r in init_rows]
     dim = len(cents_q[0])
     for _ in range(iterations):
-        assigned = _assign_micro_df(emb_q, cents_q)
         mean_rows = (
-            assigned.select("cluster", F.posexplode("vq").alias("dim", "x"))
+            _lloyd_partials_df(emb_q, cents_q)
             .groupBy("cluster", "dim")
             .agg(
-                F.round(
-                    F.sum("x") / F.count(F.lit(1)) / F.lit(1000000.0), 6
-                ).alias("m")
+                F.round(F.sum("s") / F.sum("n") / F.lit(1000000.0), 6).alias("m")
             )
             .collect()
         )
@@ -528,9 +586,34 @@ def _kmeans_train_micro(
         for cid, dims in got.items():
             new_q[cid] = [int(round(dims[i] * 1000000.0)) for i in range(dim)]
         cents_q = new_q
-    final = _assign_micro_df(emb_q, cents_q).select("id", "cluster")
-    centroids = [[cq / 1000000.0 for cq in c] for c in cents_q]
-    return final, centroids
+    return emb_q, cents_q
+
+
+def _clustered_vectors(
+    df: DataFrame,
+    k: int,
+    iterations: int,
+    vec_col: str,
+    id_col: str,
+    tier: str,
+    label_col: str | None = None,
+) -> DataFrame:
+    """(id, v[, lbl], cluster) for the cluster-scoped pair scans. On
+    the Arrow tier the final assignment pass reads the caller's frame
+    and passes ``v`` (and ``lbl``) through its Arrow batches: no join
+    of the assignments back to the input. Rows with a NULL id are
+    dropped, as that join dropped them."""
+    cols = [F.col(vec_col).alias("v")]
+    if label_col is not None:
+        cols.append(F.col(label_col).alias("lbl"))
+    if not _micro_tier(tier, k):
+        assigned, _ = kmeans_train(
+            df, k=k, iterations=iterations, vec_col=vec_col, id_col=id_col, tier=tier
+        )
+        return df.select(F.col(id_col).alias("id"), *cols).join(assigned, "id")
+    _, cents_q = _kmeans_fit_micro(df, k, iterations, vec_col, id_col)
+    src = _quantize_micro(df.filter(F.col(id_col).isNotNull()), vec_col, id_col, *cols)
+    return _assign_micro_df(src, cents_q)
 
 
 # Per-block float64 budget for the _pair_scan_arrow Gram buffers:
@@ -548,7 +631,9 @@ def _pair_scan_arrow(
 ) -> DataFrame:
     """Within-cluster pairwise-cosine scan as ONE Arrow grouped-map pass
     (optimization r14, guide §4.2: hand whole batches to vectorized
-    native code instead of per-row interpreted expressions). Input
+    native code instead of per-row interpreted expressions). The cell
+    arrives as a ``pyarrow.Table`` (``applyInArrow``) and the pairs
+    leave as one: no pandas frame on either side. Input
     ``emb`` is (cluster, id, v[, lbl]); output is the same pair table
     the join formulation produced — (cluster, id_a, id_b, cosine_raw)
     undirected (id_a < id_b), or (anchor, [anchor_label, nlabel,]
@@ -590,7 +675,7 @@ def _pair_scan_arrow(
     order stays exactly the old row-major triangle/off-diagonal order.
     """
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     out_schema = (
         "anchor long, anchor_label int, nid long, nlabel int, cosine_raw double"
@@ -599,18 +684,21 @@ def _pair_scan_arrow(
         if directed
         else "cluster int, id_a long, id_b long, cosine_raw double"
     )
+    arrow_types = {"long": pa.int64(), "int": pa.int32(), "double": pa.float64()}
+    schema = pa.schema(
+        [(name, arrow_types[t]) for name, t in (c.split() for c in out_schema.split(", "))]
+    )
     block_floats = _PAIR_SCAN_BLOCK_FLOATS
 
-    def scan(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        pdf = pdf.sort_values("id")
-        ids = pdf["id"].to_numpy()
+    def scan(table):
+        n = table.num_rows
         if n < 2:
-            return pd.DataFrame(
-                {c.split()[0]: pd.Series([], dtype="float64")
-                 for c in out_schema.split(", ")}
-            )
-        A = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
+            return schema.empty_table()
+        ids = table.column("id").to_numpy()
+        order = np.argsort(ids, kind="stable")
+        ids = ids[order]
+        vecs = table.column("v").combine_chunks().flatten()
+        A = vecs.to_numpy(zero_copy_only=False).astype(np.float64).reshape(n, -1)[order]
         d = A.shape[1]
         # norms first: nrm2[j] accumulates x_j·x_j over dims 0..d−1 —
         # the identical per-entry sequence the full Gram's diagonal ran
@@ -621,7 +709,6 @@ def _pair_scan_arrow(
         nrm = np.sqrt(nrm2)
         rows_per_block = max(1, min(n, block_floats // n))
         col_idx = np.arange(n)
-        lbl = pdf["lbl"].to_numpy() if (directed and with_labels) else None
         parts_a, parts_b, parts_v, parts_z = [], [], [], []
         for lo in range(0, n, rows_per_block):
             hi = min(lo + rows_per_block, n)
@@ -641,33 +728,28 @@ def _pair_scan_arrow(
             parts_z.append((nrm[ia] == 0.0) | (nrm[ib] == 0.0))
         ia = np.concatenate(parts_a)
         ib = np.concatenate(parts_b)
-        vals = np.concatenate(parts_v)
+        # Zero-norm (all-zero) vectors: numpy's 0/0 is NaN, but the join
+        # tier's Spark Divide returns NULL on a zero divisor — and NaN
+        # compares GREATER than any threshold in Spark, so the tiers would
+        # diverge on every cosine>=t filter. Exactly the zero-norm pairs
+        # become NULL; a NaN from a NaN-valued input vector has a NaN
+        # (non-zero) norm and stays NaN in both tiers.
         zmask = np.concatenate(parts_z)
-        cols = {"anchor" if directed else "id_a": ids[ia]}
-        if lbl is not None:
-            cols["anchor_label"] = lbl[ia]
+        cosine = pa.array(np.concatenate(parts_v), mask=zmask)
         if not directed:
-            cols = {"cluster": np.full(len(ia), int(pdf["cluster"].iloc[0]), dtype="int32"), **cols}
-        cols["nid" if directed else "id_b"] = ids[ib]
-        if lbl is not None:
-            cols["nlabel"] = lbl[ib]
-        if zmask.any():
-            # Zero-norm (all-zero) vectors: numpy's 0/0 is NaN, but the
-            # join tier's Spark Divide returns NULL on a zero divisor —
-            # and NaN compares GREATER than any threshold in Spark, so
-            # the tiers would diverge on every cosine>=t filter (r15
-            # advisor fix). Mask exactly the zero-norm pairs to NULL via
-            # a pandas masked float array (Arrow converts mask -> null);
-            # a NaN from a NaN-valued input vector has a NaN (non-zero)
-            # norm and stays NaN in both tiers, so only zmask is masked.
-            vals = pd.arrays.FloatingArray(
-                np.where(zmask, 0.0, vals), zmask.copy()
-            )
-        cols["cosine_raw"] = vals
-        return pd.DataFrame(cols)
+            cluster = np.full(len(ia), table.column("cluster")[0].as_py(), dtype="int32")
+            cols = [cluster, ids[ia], ids[ib], cosine]
+        elif with_labels:
+            lbl = table.column("lbl").cast(pa.int32()).take(order)
+            cols = [ids[ia], lbl.take(ia), ids[ib], lbl.take(ib), cosine]
+        else:
+            cols = [ids[ia], ids[ib], cosine]
+        return pa.Table.from_arrays(
+            [pa.array(c) if isinstance(c, np.ndarray) else c for c in cols], schema=schema
+        )
 
     in_cols = ["cluster", "id", "v"] + (["lbl"] if with_labels else [])
-    return emb.select(*in_cols).groupBy("cluster").applyInPandas(scan, out_schema)
+    return emb.select(*in_cols).groupBy("cluster").applyInArrow(scan, out_schema)
 
 
 def semantic_dedup_pairs(
@@ -700,7 +782,10 @@ def semantic_dedup_pairs(
     id+cluster rows, the quadratic term is (n/k)² per cluster, which
     production SemDeDup keeps constant by scaling k with the corpus
     (the paper uses k ≈ n/5000). No all-pairs join ever; the plan is
-    the LSH-bucketed q_dedup_embedding plan with learned buckets.
+    the LSH-bucketed q_dedup_embedding plan with learned buckets. On
+    the Arrow k-means tier the assignment pass carries each vector
+    through its Arrow batch (:func:`_clustered_vectors`), so the input
+    is read once more and never joined back to its assignments.
 
     Measured k-scaling (sf0.1, warm): pair count follows n²/k
     exactly — k=4 → 499,768 pairs, k=16 → 124,806, k=64 → 31,046 —
@@ -722,12 +807,7 @@ def semantic_dedup_pairs(
 
     if pair_tier not in ("arrow", "join"):
         raise ValueError(f"pair_tier must be arrow|join, got {pair_tier!r}")
-    assigned, _ = kmeans_train(
-        df, k=k, iterations=iterations, vec_col=vec_col, id_col=id_col, tier=tier
-    )
-    emb = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")).join(
-        assigned, "id"
-    )
+    emb = _clustered_vectors(df, k, iterations, vec_col, id_col, tier)
     if pair_tier == "arrow":
         # One Arrow grouped-map pass per cluster cell replaces the
         # self-join + per-pair interpreted fold (r14 optimization —
@@ -1247,18 +1327,12 @@ def _cluster_scoped_directed_pairs(
 
     if pair_tier not in ("arrow", "join"):
         raise ValueError(f"pair_tier must be arrow|join, got {pair_tier!r}")
-    assigned, _ = kmeans_train(
-        df, k=k, iterations=iterations, vec_col=vec_col, id_col=id_col, tier=tier
-    )
-    cols = [F.col(id_col).alias("id"), F.col(vec_col).alias("v")]
-    if label_col is not None:
-        cols.append(F.col(label_col).alias("lbl"))
+    emb = _clustered_vectors(df, k, iterations, vec_col, id_col, tier, label_col)
     if pair_tier == "arrow":
         # Arrow grouped-map pair scan (r14 optimization): same
         # bit-identity contract and measured win as
         # semantic_dedup_pairs' arrow tier; single reference → the
         # join-tier persist is skipped.
-        emb = df.select(*cols).join(assigned, "id")
         pairs = _pair_scan_arrow(
             emb, directed=True, with_labels=label_col is not None
         ).withColumn("cosine", F.round("cosine_raw", 6))
@@ -1266,11 +1340,7 @@ def _cluster_scoped_directed_pairs(
         if label_col is not None:
             out[2:2] = ["anchor_label", "nlabel"]
         return pairs.select(*out)
-    emb = (
-        df.select(*cols)
-        .join(assigned, "id")
-        .withColumn("norm", array_norm(F.col("v")))
-    )
+    emb = emb.withColumn("norm", array_norm(F.col("v")))
     if persist:
         emb = emb.persist()
     a, b = emb.alias("a"), emb.alias("b")

@@ -23,6 +23,8 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+DAEMON_MODULE = "nyc_tlc_trip_data_pipelines_spark.worker_daemon"
 
 
 def get_spark(app_name: str = "nyc_tlc_trip_data_pipelines_spark") -> SparkSession:
@@ -59,9 +61,37 @@ def get_spark(app_name: str = "nyc_tlc_trip_data_pipelines_spark") -> SparkSessi
         .config("spark.sql.codegen.aggregate.map.twolevel.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
+    for key, value in worker_confs(master).items():
+        builder = builder.config(key, value)
     spark = builder.getOrCreate()
+    put_package_on_worker_path(spark)
     configure_session(spark)
     return spark
+
+
+def worker_confs(master: str) -> dict[str, str]:
+    """Python-worker confs for ``master``: on ``local[...]`` masters the
+    engine's worker daemon (``worker_daemon``: the per-task zip-directory
+    re-read paid once per process). Other masters keep the stock daemon:
+    their executors need not have this checkout."""
+    if not master.startswith("local"):
+        return {}
+    return {"spark.python.daemon.module": DAEMON_MODULE}
+
+
+def put_package_on_worker_path(spark: SparkSession) -> None:
+    """Merge the package root into the Python workers' ``PYTHONPATH`` when
+    the session runs ``worker_daemon``, so ``python -m`` finds it from any
+    working directory. The path goes into ``SparkContext.environment``,
+    which every Python function carries to its worker and which already
+    holds a submit-time ``spark.executorEnv.PYTHONPATH``; that value is
+    kept. Done after ``getOrCreate``: reading the submit-time conf before
+    it would start the JVM without the builder's confs (its heap size)."""
+    sc = spark.sparkContext
+    if sc.getConf().get("spark.python.daemon.module") != DAEMON_MODULE:
+        return
+    paths = [PACKAGE_ROOT] + [p for p in sc.environment.get("PYTHONPATH", "").split(os.pathsep) if p]
+    sc.environment["PYTHONPATH"] = os.pathsep.join(dict.fromkeys(paths))
 
 
 def configure_session(spark: SparkSession) -> SparkSession:

@@ -170,6 +170,35 @@ def test_pagerank_evaluates_edges_once(spark):
     assert seen.value == len(rows)
 
 
+def test_pagerank_broadcasts_ranks_not_edges(spark, sf_dir):
+    """In the final AQE plan the rank table is the build side of every
+    joined round (BuildRight) and the edge checkpoint is read with no
+    Exchange above it, although Catalyst's estimate for the rank table
+    (the checkpoint's orders⋈lineitem lineage) is far past the gate."""
+    import __spark_entry__ as E
+    from nyc_tlc_trip_data_pipelines_spark.plans import _tree_depth
+
+    out = E.queries()["q_pagerank"](spark, sf_dir)
+    out.collect()
+    final = out._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final
+    lines = final.splitlines()
+    depths = [_tree_depth(ln) for ln in lines]
+    joins = [ln for ln in lines if "HashJoin" in ln]
+    assert len(joins) == 2 and all("BroadcastHashJoin" in ln and "BuildRight" in ln for ln in joins)
+    edge_scans = [i for i, ln in enumerate(lines) if "Scan ExistingRDD[src" in ln]
+    assert len(edge_scans) == 3
+    for i in edge_scans:
+        d = depths[i]
+        for j in range(i - 1, -1, -1):  # ancestors, up to the first join/aggregate/union
+            if depths[j] >= d:
+                continue
+            d = depths[j]
+            assert "Exchange" not in lines[j] and "QueryStage" not in lines[j]
+            if any(op in lines[j] for op in ("Join", "Aggregate", "Union")):
+                break
+
+
 def test_repeated_pagerank_compiles_no_new_classes(spark):
     """A PageRank run again after other queries reuses every generated
     class: one run needs about 46 classes, and with Spark's default

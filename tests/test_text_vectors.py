@@ -801,11 +801,40 @@ def test_kmeans_arrow_evaluates_input_once(spark):
     assert seen.value == len(pts)
 
 
+def test_kmeans_arrow_partial_sums_match_row_aggregate(spark, sf_dir):
+    """Each Arrow batch ships exact int64 (cluster, dim, sum, n)
+    partials; with batches of 7 rows (many partials per cluster) the
+    centroids must equal, exactly, those of the row-level aggregate
+    that posexplodes every (cluster, vq) row."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    k, iterations = 20, 2
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        _, got = V.kmeans_train(emb, k=k, iterations=iterations, tier="arrow")
+        emb_q = V._quantize_micro(emb, "embedding", "vec_id")
+        cents = [list(r.vq) for r in emb_q.orderBy("id").limit(k).collect()]
+        for _ in range(iterations):
+            means = (
+                V._assign_micro_df(emb_q.select("id", "vq", F.col("vq").alias("x")), cents)
+                .select("cluster", F.posexplode("x").alias("dim", "x"))
+                .groupBy("cluster", "dim")
+                .agg(F.round(F.sum("x") / F.count(F.lit(1)) / F.lit(1e6), 6).alias("m"))
+                .collect()
+            )
+            for r in means:
+                cents[r.cluster][r.dim] = int(round(r.m * 1e6))
+    finally:
+        spark.conf.set(key, old)
+    assert got == [[c / 1e6 for c in cent] for cent in cents]
+
+
 def test_auto_tier_boundary_is_k16(spark):
     """auto keeps the codegen fold path through k=16 and switches to
     the Arrow micro tier at k=17 — pinned via the physical plan (the
-    Arrow tier plans a MapInPandas / ArrowEvalPython node; the fold
-    tier stays pure expression)."""
+    Arrow tier plans a MapInArrow node; the fold tier stays pure
+    expression)."""
     from nyc_tlc_trip_data_pipelines_spark.catalog import load_table
     from nyc_tlc_trip_data_pipelines_spark.operators import vectors as V
     from nyc_tlc_trip_data_pipelines_spark.plans import plan_string
@@ -815,8 +844,8 @@ def test_auto_tier_boundary_is_k16(spark):
     at17, _ = V.kmeans_train(emb, k=17, iterations=1)
     p16 = plan_string(at16, "simple")
     p17 = plan_string(at17, "simple")
-    assert "MapInPandas" not in p16 and "ArrowEval" not in p16
-    assert ("MapInPandas" in p17) or ("ArrowEval" in p17)
+    assert "MapIn" not in p16 and "ArrowEval" not in p16
+    assert "MapInArrow" in p17
 
 
 def test_pq_sample_trained_codebooks_encode_full_corpus(spark):
