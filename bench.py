@@ -195,11 +195,12 @@ CURATION_STATS_OPS = [
 ]
 PASSES = 3
 
-# per-id record: wall and engine-CPU seconds from run_op, phase seconds
-# from the spans, job and stage counters from the status store
+# per-id record: wall seconds from run_op, phase seconds from the spans,
+# job and stage counters (exec_cpu_ms is the CPU figure) from the status
+# store
 COUNTERS = ("jobs", "stages", "exec_run_ms", "exec_cpu_ms", "shuffle_read_mb",
             "shuffle_write_mb", "input_mb", "spill_mb")
-RECORD_KEYS = ("wall_s", "cpu_s", "build_s", "action_s", *COUNTERS, "persisted_mb")
+RECORD_KEYS = ("wall_s", "build_s", "action_s", *COUNTERS, "persisted_mb")
 # a tracer names its job groups by run id and span index, so each tracer
 # needs its own run id or its counters include earlier tracers' jobs
 _TRACERS = itertools.count()
@@ -209,7 +210,7 @@ def _layers(rec: run.Recorder, qid: str, first: int) -> dict[str, float]:
     """The record of ``qid``'s latest execution, whose spans start at
     ``first`` in the recorder's tracer."""
     out = dict.fromkeys(RECORD_KEYS, 0.0)
-    out["wall_s"], out["cpu_s"] = rec.times[qid][-1], rec.cpu[qid][-1]
+    out["wall_s"] = rec.times[qid][-1]
     for s in rec.tracer.spans[first + 1:]:
         out["build_s" if s.name == "registry.build" else "action_s"] += s.seconds
         for k in COUNTERS:

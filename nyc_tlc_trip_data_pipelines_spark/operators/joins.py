@@ -39,10 +39,6 @@ def left_join(left: DataFrame, right: DataFrame, on: JoinOn) -> DataFrame:
     return left.join(right, on=on, how="left")
 
 
-def full_join(left: DataFrame, right: DataFrame, on: JoinOn) -> DataFrame:
-    return left.join(right, on=on, how="full")
-
-
 def semi_join(left: DataFrame, right: DataFrame, on: JoinOn) -> DataFrame:
     """Rows of ``left`` with a match in ``right`` (no right columns).
 

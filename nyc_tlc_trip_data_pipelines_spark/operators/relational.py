@@ -57,16 +57,6 @@ def drop_columns(df: DataFrame, columns: Sequence[str]) -> DataFrame:
     return df.drop(*columns)
 
 
-def with_columns(df: DataFrame, derived: Mapping[str, Column]) -> DataFrame:
-    """Add derived columns in one pass (reference R10 generalized).
-
-    Uses a single ``withColumns`` call so Catalyst sees one Project node
-    instead of a chain (the reference's 19 chained ``withColumn`` casts at
-    ``main.py:170-172`` collapse anyway, but one node keeps analysis cheap).
-    """
-    return df.withColumns(dict(derived))
-
-
 def derive_year_month(df: DataFrame, ts_col: str, year_col: str = "pickup_year", month_col: str = "pickup_month") -> DataFrame:
     """Reference R10: partition-key derivation (``main.py:227-228``)."""
     return df.withColumns({year_col: F.year(ts_col), month_col: F.month(ts_col)})

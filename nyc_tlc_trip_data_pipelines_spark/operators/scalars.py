@@ -56,22 +56,8 @@ def date_truncate(ts: str | Column, unit: str) -> Column:
 # --- strings (E21) --------------------------------------------------------
 
 
-def normalize_text(c: str | Column) -> Column:
-    """lower + trim — common pre-tokenization normalization."""
-    return F.trim(F.lower(c))
-
-
 def regexp_extract(c: str | Column, pattern: str, group: int = 1) -> Column:
     return F.regexp_extract(c, pattern, group)
-
-
-# --- math (E23) -----------------------------------------------------------
-
-
-def round_to(c: Column, scale: int = 6) -> Column:
-    """Deterministic rounding — used on every aggregated double that is
-    hash-compared against the DuckDB oracle (SURVEY.md §7.3 float note)."""
-    return F.round(c, scale)
 
 
 # --- arrays / json (E24, E25) ---------------------------------------------

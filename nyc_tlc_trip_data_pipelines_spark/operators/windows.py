@@ -15,18 +15,8 @@ from __future__ import annotations
 
 from collections.abc import Mapping, Sequence
 
-from pyspark.sql import Column, DataFrame, Window, WindowSpec
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def partitioned_window(partition_by: Sequence[str | Column], order_by: Sequence[str | Column] = ()) -> WindowSpec:
-    w = Window.partitionBy(*partition_by)
-    return w.orderBy(*order_by) if order_by else w
-
-
-def with_window_columns(df: DataFrame, cols: Mapping[str, Column]) -> DataFrame:
-    """Add window-expression columns (alias → expr.over(spec)) in one Project."""
-    return df.withColumns(dict(cols))
 
 
 def window_avg_multi_grain(

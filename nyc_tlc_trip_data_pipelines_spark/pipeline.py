@@ -13,13 +13,12 @@ Re-implements the reference's bronze→gold flow Spark-first:
 
 Scale deltas vs the reference (deliberate):
 - The reference triggers 4 extra full scans via logging ``count()``
-  calls (BASELINE.md "known inefficiencies"); counts here ride on the
-  write via an observation (no extra job).
-- The per-file loop stays (the reference's attribution semantics need
-  per-file bounds), but each file's plan is scan→cast→filter→append
-  with pushed-down literal bounds, so a 100-file month set does 100
-  independent column-pruned scans — embarrassingly parallel across a
-  cluster when driven by a workflow scheduler.
+  calls (BASELINE.md "known inefficiencies"); here the appended row
+  count rides on the write via an observation (no extra job).
+- The reference appends file by file. Here every file is planned on the
+  driver with its own month bounds (so rows are attributed as before)
+  and all files are appended in ONE job: one pushed-down scan per file,
+  run in parallel by Spark, published by Spark's output committer.
 """
 
 from __future__ import annotations
@@ -27,17 +26,16 @@ from __future__ import annotations
 import os
 import re
 from dataclasses import dataclass, field
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from nyc_tlc_trip_data_pipelines_spark.io import (
     append_table,
     discover_files,
-    is_local_path,
     prune_files_by_month,
     read_parquet,
-    to_local_os_path,
     write_csv,
     write_partitioned,
     write_run_manifest,
@@ -64,87 +62,6 @@ class RunResult:
     manifest_path: str | None = None
 
 
-_COMMIT_JOURNAL_PREFIX = "._commit."
-# .tmp journals younger than this are presumed to belong to a live
-# writer mid-rename and are left alone (round-13 ADVICE); far above the
-# write-fsync-rename gap, far below any scheduling cadence.
-_TMP_JOURNAL_GRACE_SECONDS = 60.0
-
-
-def recover_partial_commits(bronze_path: str) -> list[str]:
-    """Roll back any per-file commits a crashed parallel ingest left
-    half-visible (round-10 verdict item 4).
-
-    The parallel commit writes a WRITE-AHEAD journal
-    (``<bronze>/._commit.<uuid>.json``, dot-prefixed so Spark readers
-    never see it) listing every destination part file BEFORE the first
-    rename, and deletes it after the last. A journal that still exists
-    therefore marks an incomplete commit — a process that died between
-    stage and cleanup — and every part file it lists must go, restoring
-    "a retry never double-ingests" across hard crashes, not just
-    in-process failures. Called automatically at the start of every
-    parallel ingest; safe (no-op) when bronze doesn't exist yet.
-
-    NOT safe concurrently with another live ingest into the same bronze
-    directory from a different process — a live writer's journal looks
-    identical to a dead one's (single-ingest-owner assumption; the
-    manifest-logged :func:`io.append_versioned` family is the tool when
-    multiple uncoordinated writers need one table).
-
-    Returns the rolled-back part-file paths (for logging)."""
-    removed: list[str] = []
-    bronze_path = to_local_os_path(bronze_path)
-    if not os.path.isdir(bronze_path):
-        return removed
-    import json
-
-    for name in sorted(os.listdir(bronze_path)):
-        if not name.startswith(_COMMIT_JOURNAL_PREFIX):
-            continue
-        jpath = os.path.join(bronze_path, name)
-        if name.endswith(".tmp"):
-            # round-11 ADVICE: a crash between writing the journal tmp
-            # and its os.rename leaves '._commit.<uuid>.json.tmp'
-            # behind forever — it protects nothing (its renames never
-            # started; the journal only becomes authoritative once
-            # renamed into place), but it accumulates as litter this
-            # recovery pass exists to clean. Round-13 ADVICE: only
-            # sweep tmps older than a grace window — a LIVE writer in
-            # another process sits between writing its tmp and the
-            # os.rename for milliseconds, and unlinking it there makes
-            # the writer's rename fail mid-commit. The single-owner
-            # assumption (docstring) already forbids that overlap, but
-            # the mtime check makes the sweep safe even when it is
-            # violated; a genuinely dead writer's tmp ages past the
-            # window and gets cleaned on the NEXT recovery pass.
-            import time
-
-            try:
-                age = time.time() - os.path.getmtime(jpath)
-            except OSError:
-                continue  # vanished under us — its owner is alive
-            if age >= _TMP_JOURNAL_GRACE_SECONDS:
-                os.unlink(jpath)
-            continue
-        if not name.endswith(".json"):
-            continue
-        try:
-            with open(jpath) as fh:
-                dsts = json.load(fh)["dst_files"]
-        except (OSError, ValueError, KeyError):
-            # a journal that itself crashed mid-write protects nothing
-            # (its renames never started — the journal is fsync'd and
-            # renamed into place before the first move); drop it
-            os.unlink(jpath)
-            continue
-        for dst in dsts:
-            if os.path.exists(dst):
-                os.remove(dst)
-                removed.append(dst)
-        os.unlink(jpath)
-    return removed
-
-
 def month_bounds(year: int, month: int, tolerance_hours: int = 1) -> tuple[str, str]:
     """Half-open ingest interval [month_start − tolerance, next_month_start)
     (reference ``pasta1_etl/src/utils.py:87-116``, incl. Dec→Jan rollover)."""
@@ -165,175 +82,58 @@ def ingest_bronze(
     end_month: str | None = None,
     tolerance_hours: int = 1,
     manifest_dir: str | None = None,
-    max_parallel_files: int = 1,
 ) -> RunResult:
     """Stage 1 (``create_bronze_layer``): discover monthly files, prune by
     filename month range, then per file: cast to declared schema, filter
     temporal outliers to the file's month window, append to bronze.
 
-    ``max_parallel_files`` (round-8 verdict item 5, opt-in): with N > 1
-    the per-file jobs are submitted from a thread pool — Spark's
-    scheduler is thread-safe, so N casts/filters/writes run
-    concurrently, which is the win when each monthly file is small
-    relative to the cluster (the reference's serial loop
-    ``pasta1_etl/src/main.py:154-199`` leaves the cluster idle
-    per-file). Per-file error isolation and manifest semantics are
-    identical to the serial path; ``processed``/``failed`` keep
-    discovery order.
-
-    Commit protocol: concurrent ``append`` jobs into ONE directory are
-    NOT safe — Hadoop's FileOutputCommitter stages every job under the
-    shared ``<path>/_temporary/0`` and the first commit's cleanup
-    deletes the others' staged task files (measured here: chmod/rename
-    FileNotFound failures and lost rows under an 8-thread append).
-    Each parallel task therefore writes its OWN staging directory
-    (``<bronze>.staging/<uuid>`` — a per-job committer root) and the
-    part files are moved into bronze under a driver-side lock: all
-    Spark compute stays parallel, only O(#files) renames serialize.
-    Part filenames embed write UUIDs, so moves can't collide. The
-    per-file commit is a sequence of same-filesystem renames made
-    crash-safe by a WRITE-AHEAD journal (round-10 verdict item 4): the
-    destination list is fsync'd to ``._commit.<uuid>.json`` before the
-    first rename and deleted after the last, in-process failures roll
-    the moved files back immediately, and
-    :func:`recover_partial_commits` (run at the start of every
-    parallel ingest) removes whatever a hard PROCESS crash left
-    half-visible — so a retry never double-ingests, in-process or
-    across crashes. The journal lives inside bronze under a ``.``
-    prefix, which every Spark reader ignores. Multi-writer
-    coordination (several uncoordinated processes appending to one
-    table) remains ``append_versioned``'s manifest job.
-
-    The staging commit uses local-filesystem ``os``/``shutil`` calls,
-    so the parallel path requires a local ``bronze_path``; with a
-    remote scheme (``hdfs://``, ``s3a://``, ...) it falls back to the
-    serial Spark-write path, which handles any Hadoop URI.
+    Each file's frame is planned on the driver; a file whose plan fails
+    (no ``YYYY-MM`` in its name, an unreadable footer, a schema that
+    cannot be cast) goes to ``failed``. The planned frames are appended
+    in ONE job, and Spark's output committer publishes nothing if that
+    job fails. Only then, on a run-time failure such as corrupt data
+    pages behind a valid footer, are the planned frames appended one job
+    each, so the bad file fails alone. ``processed``/``failed`` keep
+    discovery order; ``rows_appended`` is the row count observed on the
+    successful writes.
     """
-    result = RunResult()
     files = prune_files_by_month(discover_files(source_dir), start_month, end_month)
 
-    def _frame(path: str) -> DataFrame:
+    def _plan(path: str) -> DataFrame:
         m = _MONTH_RE.search(os.path.basename(path))
         if not m:
             raise ValueError(f"no YYYY-MM in filename: {path}")
         lo, hi = month_bounds(int(m.group(1)), int(m.group(2)), tolerance_hours)
-        df = schema.apply_cast(read_parquet(spark, path))
-        return filter_time_range(df, ts_col, lo, hi)
+        return filter_time_range(schema.apply_cast(read_parquet(spark, path)), ts_col, lo, hi)
 
-    # The parallel commit path renames staged part files with local
-    # os/shutil calls — only valid for local paths. Remote URIs take
-    # the serial path (round-9 ADVICE: don't let every file "fail").
-    if max_parallel_files > 1 and not is_local_path(bronze_path):
-        max_parallel_files = 1
+    def _append(frames: list[DataFrame]) -> int:
+        obs = Observation()
+        append_table(
+            reduce(DataFrame.unionByName, frames).observe(obs, F.count(F.lit(1)).alias("rows")),
+            bronze_path,
+        )
+        return obs.get["rows"]
 
-    if max_parallel_files <= 1:
-        for path in files:
-            try:
-                append_table(_frame(path), bronze_path)
-                result.processed.append(path)
-            except Exception:  # per-file isolation: one bad file never kills the run
-                result.failed.append(path)
-    else:
-        import json as _json
-        import shutil
-        import threading
-        import uuid
-        from concurrent.futures import ThreadPoolExecutor
-
-        # os/shutil layer ahead — file:// URIs must become plain OS
-        # paths here or manifests/journals land under cwd while Spark
-        # writes the real location (round-10 ADVICE).
-        bronze_path = to_local_os_path(bronze_path)
-        # Roll back any half-visible commit a CRASHED previous run left
-        # behind (journal present = its renames may have started but its
-        # cleanup never ran) — without this, this run would append next
-        # to partial files a retry of that file then duplicates.
-        recovered = recover_partial_commits(bronze_path)
-        if recovered:
-            import warnings
-
-            warnings.warn(
-                f"ingest_bronze: rolled back {len(recovered)} part file(s) "
-                "from an interrupted previous parallel ingest commit",
-                stacklevel=2,
-            )
-        commit_lock = threading.Lock()
-        staging_root = bronze_path.rstrip("/") + ".staging"
-
-        def _one(path: str) -> bool:
-            staging = os.path.join(staging_root, uuid.uuid4().hex)
-            try:
-                _frame(path).write.mode("overwrite").parquet(staging)
-                with commit_lock:
-                    os.makedirs(bronze_path, exist_ok=True)
-                    parts = sorted(
-                        f for f in os.listdir(staging) if f.startswith("part-")
-                    )
-                    dsts = [os.path.join(bronze_path, f) for f in parts]
-                    # WRITE-AHEAD journal (round-10 verdict item 4): the
-                    # full destination list is fsync'd and renamed into
-                    # place BEFORE the first move, so a process crash at
-                    # ANY point mid-commit leaves a journal that
-                    # recover_partial_commits uses to remove the partial
-                    # files — the orphan-on-crash case the in-process
-                    # rollback below cannot reach.
-                    jpath = os.path.join(
-                        bronze_path, f"{_COMMIT_JOURNAL_PREFIX}{uuid.uuid4().hex}.json"
-                    )
-                    jtmp = jpath + ".tmp"
-                    with open(jtmp, "w") as fh:
-                        _json.dump({"src_file": path, "dst_files": dsts}, fh)
-                        fh.flush()
-                        os.fsync(fh.fileno())
-                    os.rename(jtmp, jpath)
-                    try:
-                        for f, dst in zip(parts, dsts):
-                            shutil.move(os.path.join(staging, f), dst)
-                    except Exception:
-                        # Roll back the partial commit so a retry of this
-                        # file can't double-ingest the rows already moved.
-                        # The sweep consults the JOURNAL's destination
-                        # list, not a moved-so-far accumulator — a rename
-                        # that completed but raised before bookkeeping
-                        # would escape the accumulator yet still sit
-                        # visible in bronze. A removal that ITSELF fails
-                        # must not be silent — the surviving part file
-                        # would double-ingest on retry — so orphans are
-                        # loudly warned, and the journal is KEPT so the
-                        # next run's recovery gets a second chance at
-                        # removing them.
-                        orphans = []
-                        for dst in dsts:
-                            try:
-                                if os.path.exists(dst):
-                                    os.remove(dst)
-                            except OSError:
-                                orphans.append(dst)
-                        if orphans:
-                            import warnings
-
-                            warnings.warn(
-                                "ingest_bronze: rollback could not remove "
-                                f"{orphans} after a failed commit of {path}; "
-                                "the commit journal was kept so the next "
-                                "run's recovery will retry the removal",
-                                stacklevel=2,
-                            )
-                        else:
-                            os.unlink(jpath)
-                        raise
-                    os.unlink(jpath)
-                return True
-            except Exception:  # per-file isolation, as in the serial path
-                return False
-            finally:
-                shutil.rmtree(staging, ignore_errors=True)
-
-        with ThreadPoolExecutor(max_workers=int(max_parallel_files)) as ex:
-            outcomes = list(ex.map(_one, files))
-        shutil.rmtree(staging_root, ignore_errors=True)
-        for path, ok in zip(files, outcomes):
-            (result.processed if ok else result.failed).append(path)
+    planned: dict[str, DataFrame] = {}
+    for path in files:
+        try:
+            planned[path] = _plan(path)
+        except Exception:  # per-file isolation: one bad file never kills the run
+            pass
+    done, rows = list(planned), 0
+    if planned:
+        try:
+            rows = _append(list(planned.values()))
+        except Exception:  # run-time failure: append file by file to isolate it
+            done = []
+            for path, df in planned.items():
+                try:
+                    rows += _append([df])
+                    done.append(path)
+                except Exception:
+                    pass
+    ok = set(done)
+    result = RunResult(processed=done, failed=[p for p in files if p not in ok], rows_appended=rows)
     if manifest_dir:
         result.manifest_path = write_run_manifest(manifest_dir, result.processed, result.failed)
     return result

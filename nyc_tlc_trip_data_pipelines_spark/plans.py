@@ -12,10 +12,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def formatted_plan(df: DataFrame) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")  # type: ignore[attr-defined]
-
-
 def plan_string(df: DataFrame, mode: str = "formatted") -> str:
     """The explain output as a string (PySpark's .explain only prints)."""
     return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), mode)  # type: ignore[attr-defined]
@@ -46,15 +42,6 @@ def exchange_count(df: DataFrame) -> int:
         for line in s.splitlines()
         if "Exchange" in line and "BroadcastExchange" not in line and "Reused" not in line
     )
-
-
-def codegen_stage_count(df: DataFrame) -> int:
-    """Whole-stage-codegen stages (the ``*(n)`` markers in the simple
-    plan). Zero on an un-finalized AQE plan is normal — check after an
-    action or on subtrees."""
-    import re
-
-    return len(set(re.findall(r"\*\((\d+)\)", plan_string(df, "simple"))))
 
 
 def node_count(df: DataFrame, node: str) -> int:

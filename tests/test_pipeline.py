@@ -7,7 +7,6 @@ against a pandas recomputation.
 """
 
 import os
-import time
 from datetime import datetime, timedelta
 
 import pytest
@@ -90,6 +89,7 @@ def test_bronze_filters_outliers(spark, taxi_dirs):
     got = spark.read.parquet(bronze)
     # per month: 50 in-month + 1 within-tolerance kept; 3 outliers dropped
     assert got.count() == 2 * 51
+    assert res.rows_appended == 2 * 51
     jan = got.filter("tpep_pickup_datetime < timestamp'2023-02-01'")
     assert jan.filter("tpep_pickup_datetime < timestamp'2023-01-01'").count() == 1
     assert res.manifest_path and os.path.exists(res.manifest_path)
@@ -469,111 +469,6 @@ def test_table_changes_cdf_between_versions(spark, tmp_path):
     assert IO.table_changes(spark, path, 2, 2).count() == 0
 
 
-def test_parallel_ingest_matches_serial(spark, taxi_dirs, tmp_path):
-    """Round-9 (verdict item 5): max_parallel_files > 1 produces the
-    SAME RunResult and the same bronze rows as the serial path, with
-    per-file failure isolation preserved under concurrency (a corrupt
-    file fails alone while good files commit in parallel). Staging
-    dirs must not leak."""
-    src, _ = taxi_dirs
-    import shutil
-
-    bad_src = str(tmp_path / "src")
-    shutil.copytree(src, bad_src)
-    with open(os.path.join(bad_src, "yellow_tripdata_2023-03.parquet"), "w") as fh:
-        fh.write("not a parquet file")
-
-    b_serial = str(tmp_path / "bronze_serial")
-    b_par = str(tmp_path / "bronze_par")
-    res_s = ingest_bronze(spark, bad_src, b_serial, tolerance_hours=1)
-    res_p = ingest_bronze(
-        spark, bad_src, b_par, tolerance_hours=1, max_parallel_files=4
-    )
-    assert res_p.processed == res_s.processed
-    assert res_p.failed == res_s.failed and "2023-03" in res_p.failed[0]
-    a = sorted(map(tuple, spark.read.parquet(b_serial).collect()))
-    b = sorted(map(tuple, spark.read.parquet(b_par).collect()))
-    assert a == b
-    assert not os.path.exists(b_par + ".staging")
-
-
-def test_parallel_ingest_remote_scheme_falls_back_to_serial(
-    spark, taxi_dirs, tmp_path, monkeypatch
-):
-    """Round-9 ADVICE: the parallel commit path renames staged part
-    files with local os/shutil calls, so a remote bronze URI must NOT
-    take it (previously every file landed in `failed`). With a
-    non-local scheme and max_parallel_files > 1, ingest_bronze must
-    route through the serial append_table path."""
-    import nyc_tlc_trip_data_pipelines_spark.pipeline as P
-
-    src, _ = taxi_dirs
-    calls = []
-    real_append = P.append_table
-
-    def spy(df, path):
-        calls.append(path)
-        # redirect the fake remote URI to a real local dir so the
-        # serial path actually writes (we only assert routing)
-        return real_append(df, str(tmp_path / "bronze_remote"))
-
-    monkeypatch.setattr(P, "append_table", spy)
-    res = P.ingest_bronze(
-        spark, src, "hdfs://nameservice/bronze", max_parallel_files=4
-    )
-    assert calls and all(p == "hdfs://nameservice/bronze" for p in calls)
-    assert res.failed == []
-    assert len(res.processed) == len(calls)
-
-
-def test_parallel_ingest_commit_rolls_back_partial_moves(
-    spark, taxi_dirs, tmp_path, monkeypatch
-):
-    """Round-9 ADVICE: if a rename fails midway through a file's
-    multi-part commit, the already-moved part files are removed before
-    the file is recorded as failed — a retry cannot double-ingest."""
-    import shutil as _shutil
-
-    import nyc_tlc_trip_data_pipelines_spark.pipeline as P
-
-    src, _ = taxi_dirs
-    bronze = str(tmp_path / "bronze_rb")
-    real_move = _shutil.move
-    state = {"moves": 0}
-
-    def flaky_move(s, d):
-        state["moves"] += 1
-        if state["moves"] == 2:  # fail the SECOND rename of the run
-            raise OSError("simulated rename failure")
-        return real_move(s, d)
-
-    monkeypatch.setattr(_shutil, "move", flaky_move)
-    res = P.ingest_bronze(spark, src, bronze, max_parallel_files=2)
-    monkeypatch.undo()
-    assert len(res.failed) == 1  # exactly the file whose commit broke
-    # rows in bronze == rows of the files recorded as processed (no
-    # partial remains of the failed file's commit)
-    got_files = [f for f in os.listdir(bronze) if f.startswith("part-")]
-    assert got_files, "committed files survived"
-    got = spark.read.parquet(bronze).count()
-    # bronze row count excludes month-window outliers, so compare via
-    # re-running serially on just the processed files
-    serial = str(tmp_path / "bronze_serial_rb")
-    for path in res.processed:
-        P.append_table(
-            P.filter_time_range(
-                P.YELLOW_TRIP_BRONZE.apply_cast(spark.read.parquet(path)),
-                "tpep_pickup_datetime",
-                *P.month_bounds(
-                    int(os.path.basename(path)[16:20]),
-                    int(os.path.basename(path)[21:23]),
-                ),
-            ),
-            serial,
-        )
-    assert got == spark.read.parquet(serial).count()
-
-
 def test_versioned_family_remote_scheme_guards():
     """Loud-failure contracts for paths this environment can't serve:
     any versioned op on a scheme with no registered object store
@@ -661,109 +556,55 @@ def test_versioned_family_accepts_file_uris(spark, tmp_path):
     assert got == [(1, "a"), (2, "b")]
 
 
-def test_parallel_ingest_accepts_file_uri_bronze(spark, taxi_dirs, tmp_path):
-    """Round-10 ADVICE: a file:// bronze path took the parallel branch
-    (is_local_path says local) but every os-level rename then failed on
-    the unstripped URI, so every file landed in `failed`. The URI must
-    now work end-to-end and produce the same rows as a plain path."""
+def test_ingest_accepts_file_uri_bronze(spark, taxi_dirs, tmp_path):
+    """A file:// bronze URI ingests the same files and rows as the plain
+    path it names."""
     src, _ = taxi_dirs
     plain = str(tmp_path / "bronze_plain")
     via_uri = str(tmp_path / "bronze_uri")
-    res_plain = ingest_bronze(spark, src, plain, max_parallel_files=3)
-    res_uri = ingest_bronze(
-        spark, src, "file://" + via_uri, max_parallel_files=3
-    )
+    res_plain = ingest_bronze(spark, src, plain)
+    res_uri = ingest_bronze(spark, src, "file://" + via_uri)
     assert res_uri.failed == [] and res_uri.processed == res_plain.processed
     a = sorted(map(tuple, spark.read.parquet(plain).collect()))
     b = sorted(map(tuple, spark.read.parquet(via_uri).collect()))
     assert a == b
 
 
-def test_commit_journal_recovers_hard_crash(spark, taxi_dirs, tmp_path):
-    """Round-10 verdict item 4: a process crash mid-commit leaves a
-    write-ahead journal; the NEXT parallel ingest rolls the partial
-    part files back before appending, so the retry cannot
-    double-ingest. Simulated by planting the exact crash state — a
-    journal plus the partial files it lists — in a committed bronze."""
-    import json as _json
-    import shutil as _shutil
-    import warnings as _warnings
+def test_runtime_corrupt_file_fails_alone(spark, tmp_path):
+    """A file whose footer reads but whose data pages are corrupt plans
+    fine and only fails inside the single append job. That job then
+    publishes nothing, and the file-by-file retry lands every other file
+    exactly once."""
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    import nyc_tlc_trip_data_pipelines_spark.pipeline as P
-
-    src, _ = taxi_dirs
-    bronze = str(tmp_path / "bronze_crash")
-    # run 1: a clean single-file ingest (only 2023-01 via month range)
-    res1 = ingest_bronze(
-        spark, src, bronze, start_month="2023-01", end_month="2023-01",
-        max_parallel_files=2,
-    )
-    assert res1.failed == []
-    baseline = spark.read.parquet(bronze).count()
-    # plant the crash state: copy an existing part under two new names
-    # (a commit whose process died between the renames and the journal
-    # cleanup) plus the journal listing them
-    parts = [f for f in os.listdir(bronze) if f.startswith("part-")]
-    partials = []
-    for i in range(2):
-        dst = os.path.join(bronze, f"part-crash-{i}.snappy.parquet")
-        _shutil.copy(os.path.join(bronze, parts[0]), dst)
-        partials.append(dst)
-    with open(os.path.join(bronze, "._commit.deadbeef.json"), "w") as fh:
-        _json.dump({"src_file": "crashed.parquet", "dst_files": partials}, fh)
-    # the partials are visible to a raw reader right now (the crash
-    # window) — the next ingest must remove them BEFORE appending
-    assert spark.read.parquet(bronze).count() > baseline
-    with _warnings.catch_warnings(record=True) as w:
-        _warnings.simplefilter("always")
-        res2 = ingest_bronze(
-            spark, src, bronze, start_month="2023-02", end_month="2023-02",
-            max_parallel_files=2,
+    src = tmp_path / "src"
+    src.mkdir()
+    cols = list(YELLOW_TRIP_BRONZE.columns)
+    for month in (1, 2, 3):
+        rows = pd.DataFrame(_make_month_rows(2023, month, n=2000), columns=cols)
+        pq.write_table(
+            pa.Table.from_pandas(rows, preserve_index=False),
+            str(src / f"yellow_tripdata_2023-{month:02d}.parquet"),
+            compression="snappy",
+            coerce_timestamps="us",
         )
-    assert res2.failed == []
-    assert any("rolled back 2 part file" in str(x.message) for x in w)
-    assert not any(f.startswith("._commit.") for f in os.listdir(bronze))
-    assert not any("crash" in f for f in os.listdir(bronze))
-    # final rows == the two months ingested cleanly, no duplicates
-    serial = str(tmp_path / "bronze_serial_crash")
-    ingest_bronze(spark, src, serial, start_month="2023-01", end_month="2023-02")
-    assert spark.read.parquet(bronze).count() == spark.read.parquet(serial).count()
+    bad = src / "yellow_tripdata_2023-02.parquet"
+    data = bytearray(bad.read_bytes())
+    data[200:2000] = bytes(b ^ 0xFF for b in data[200:2000])
+    bad.write_bytes(bytes(data))
 
-
-def test_commit_rollback_sweeps_unrecorded_rename(spark, taxi_dirs, tmp_path, monkeypatch):
-    """The in-process rollback consults the journal's destination list,
-    not a moved-so-far accumulator: a rename that COMPLETED but raised
-    before bookkeeping (crash-between-rename-and-bookkeeping, the
-    round-9 docstring's residual case) must still be swept."""
-    import shutil as _shutil
-
-    import nyc_tlc_trip_data_pipelines_spark.pipeline as P
-
-    src, _ = taxi_dirs
-    bronze = str(tmp_path / "bronze_sneaky")
-    real_move = _shutil.move
-    state = {"n": 0}
-
-    def sneaky_move(s, d):
-        state["n"] += 1
-        real_move(s, d)  # the rename REALLY happens...
-        if state["n"] == 1:
-            raise OSError("simulated failure after rename, before bookkeeping")
-
-    monkeypatch.setattr(_shutil, "move", sneaky_move)
-    res = P.ingest_bronze(
-        spark, src, bronze, start_month="2023-01", end_month="2023-01",
-        max_parallel_files=2,
-    )
-    monkeypatch.undo()
-    assert len(res.failed) == 1
-    # the completed-but-unrecorded rename was swept: no part files and
-    # no journal remain visible
-    leftovers = [
-        f for f in (os.listdir(bronze) if os.path.isdir(bronze) else [])
-        if f.startswith(("part-", "._commit."))
+    bronze = str(tmp_path / "bronze")
+    res = ingest_bronze(spark, str(src), bronze)
+    assert res.failed == [str(bad)]
+    assert res.processed == [
+        str(src / "yellow_tripdata_2023-01.parquet"),
+        str(src / "yellow_tripdata_2023-03.parquet"),
     ]
-    assert leftovers == []
+    # 2000 in-month rows + 1 within tolerance per good file, each once
+    assert spark.read.parquet(bronze).count() == 2 * 2001
+    assert res.rows_appended == 2 * 2001
 
 
 def test_optimize_versioned_compacts_in_one_commit(spark, tmp_path):
@@ -834,41 +675,3 @@ def test_optimize_versioned_detects_concurrent_commit(spark, tmp_path, monkeypat
     monkeypatch.undo()
     # the rival's append survived; the table is still consistent
     assert sorted(r.k for r in IO.read_version(spark, path).collect()) == [0, 1, 7]
-
-
-def test_recover_sweeps_orphan_journal_tmp(tmp_path):
-    """Round-11 ADVICE: a crash between writing the journal tmp and its
-    os.rename leaves '._commit.<uuid>.json.tmp' in bronze forever —
-    harmless to readers (its renames never started) but litter the
-    recovery pass exists to clean. recover_partial_commits must unlink
-    it without treating it as an authoritative journal."""
-    from nyc_tlc_trip_data_pipelines_spark.pipeline import recover_partial_commits
-
-    bronze = tmp_path / "bronze"
-    bronze.mkdir()
-    tmp = bronze / "._commit.cafe.json.tmp"
-    tmp.write_text('{"dst_files": ["x"]}')
-    (bronze / "part-keep.snappy.parquet").write_text("data")
-    # age it past the round-13 grace window — an orphan, not a live writer
-    old = time.time() - 3600
-    os.utime(tmp, (old, old))
-    removed = recover_partial_commits(str(bronze))
-    assert removed == []  # the tmp protected nothing — no rollbacks
-    assert not tmp.exists()
-    assert (bronze / "part-keep.snappy.parquet").exists()
-
-
-def test_recover_spares_fresh_journal_tmp(tmp_path):
-    """Round-13 ADVICE: a .tmp journal YOUNGER than the grace window may
-    belong to a live writer between its tmp write and the os.rename —
-    unlinking it would make that rename fail mid-commit. The sweep must
-    leave it alone (it gets cleaned on a later pass once it has aged)."""
-    from nyc_tlc_trip_data_pipelines_spark.pipeline import recover_partial_commits
-
-    bronze = tmp_path / "bronze"
-    bronze.mkdir()
-    tmp = bronze / "._commit.beef.json.tmp"
-    tmp.write_text('{"dst_files": ["x"]}')
-    removed = recover_partial_commits(str(bronze))
-    assert removed == []
-    assert tmp.exists()  # fresh → presumed live → spared

@@ -909,41 +909,6 @@ def test_to_local_os_path_non_file_passthrough(head, rest):
         assert to_local_os_path(u) == u
 
 
-@given(
-    st.lists(st.sampled_from(["keep", "orphan"]), min_size=1, max_size=6),
-    st.integers(min_value=1, max_value=3),
-)
-@settings(max_examples=50, deadline=None)
-def test_recover_partial_commits_idempotent(kinds, runs):
-    """Recovery removes EXACTLY the journaled files and is idempotent:
-    any number of repeated runs leaves the same state — non-journaled
-    files untouched, journals gone."""
-    import json
-    import os
-    import tempfile
-
-    from nyc_tlc_trip_data_pipelines_spark.pipeline import recover_partial_commits
-
-    with tempfile.TemporaryDirectory() as bronze:
-        keep, orphan = [], []
-        for i, kind in enumerate(kinds):
-            f = os.path.join(bronze, f"part-{i:03d}.parquet")
-            with open(f, "w") as fh:
-                fh.write("x")
-            (keep if kind == "keep" else orphan).append(f)
-        if orphan:
-            with open(os.path.join(bronze, "._commit.j1.json"), "w") as fh:
-                json.dump({"src_file": "s", "dst_files": orphan}, fh)
-        removed = recover_partial_commits(bronze)
-        assert sorted(removed) == sorted(orphan)
-        for _ in range(runs):
-            assert recover_partial_commits(bronze) == []
-        left = sorted(
-            os.path.join(bronze, n) for n in os.listdir(bronze)
-        )
-        assert left == sorted(keep)
-
-
 _vop = st.one_of(
     st.tuples(st.just("append"), st.integers(0, 3), st.integers(1, 5)),
     st.tuples(st.just("retry"), st.integers(0, 3), st.integers(1, 5)),
