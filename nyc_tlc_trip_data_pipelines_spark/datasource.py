@@ -39,6 +39,8 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from nyc_tlc_trip_data_pipelines_spark.objectstore import to_local_os_path
+
 
 def _local_root(root: str | None) -> str | None:
     """Normalize a ``root`` option for the os-level walk/makedirs these
@@ -47,11 +49,7 @@ def _local_root(root: str | None) -> str | None:
     yields nothing / the sink writes under cwd — the exact half-working
     failure the versioned-IO family fixed in round 11. Driver-side (in
     ``__init__``), so executors pickle the already-normalized path."""
-    if not root:
-        return root
-    from nyc_tlc_trip_data_pipelines_spark.io import to_local_os_path
-
-    return to_local_os_path(root)
+    return to_local_os_path(root) if root else root
 
 
 class _ShardPartition(InputPartition):

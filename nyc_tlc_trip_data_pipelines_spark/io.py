@@ -14,11 +14,12 @@ log semantics are out of scope. The plain read/write surface
 (read_*/write_*/append_table/append_idempotent) works identically for
 local paths and ``s3a://`` URIs (Spark's Hadoop FS layer handles both);
 the VERSIONED family (append_versioned, delete_where, merge_versioned,
-optimize_versioned, read_version, table_changes, vacuum_versioned) is
-SCHEME-AWARE since round 11: its JSON manifests go through
-``_manifest_io`` — local ``os`` calls (write-fsync-link O_EXCL claim)
-on local paths, the :mod:`objectstore` layer (S3 conditional-PUT
-claim, batched deletes) on ``s3://``/``s3a://``; unknown schemes
+optimize_versioned, read_version, table_changes, vacuum_versioned)
+keeps its driver-side metadata — JSON manifests, zone-stat sidecars,
+vacuum deletes, run logs — in ONE path on every scheme: the
+:mod:`objectstore` store for the table path (write-fsync-link claim
+on a local path or ``file:`` URI, S3 conditional-PUT claim and
+batched deletes on ``s3://``/``s3a://``); unknown schemes
 (``hdfs://``) fail loudly in ``objectstore.get_store``. (The old
 ``compact_dir`` rename-swap path was deleted in round 13 — it was
 deprecated in round 12 with zero non-test callers and is strictly
@@ -48,6 +49,8 @@ from datetime import datetime, timezone
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 
+from nyc_tlc_trip_data_pipelines_spark import objectstore
+
 # --- sources ---------------------------------------------------------------
 
 _MONTH_RE = re.compile(r"(\d{4})-(\d{2})")
@@ -68,8 +71,6 @@ def discover_files(root: str, suffix: str = ".parquet", pattern: str = "*") -> l
         return sorted(
             p for p in _glob.glob(os.path.join(root, pattern)) if p.endswith(suffix)
         )
-    from nyc_tlc_trip_data_pipelines_spark import objectstore
-
     keys = [k for k in objectstore.list_objects(root) if k.endswith(suffix)]
     # R1 returns one flat sorted list of full paths; keys exclude nested
     # sink dirs the glob never matched, so keep only top-level keys.
@@ -194,123 +195,18 @@ def append_idempotent(
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
 
-def is_local_path(path: str) -> bool:
-    """True when ``path`` addresses the local filesystem. A path is
-    remote only when it carries an explicit ``scheme://`` (hdfs://,
-    s3a://, ...; ``file://`` counts as local) — a bare ``urlparse``
-    scheme check would misclassify a relative LOCAL path whose first
-    segment contains a colon (``runs:2024/table``), which os calls
-    handle fine. Shared by the versioned-IO guard and the parallel
-    ingest fallback so the classification can never diverge."""
-    if "://" not in path:
-        return True
-    from urllib.parse import urlparse
-
-    return urlparse(path).scheme in ("", "file")
-
-
-_FILE_URI_RE = re.compile(r"^file:(?://(?P<netloc>[^/]*))?(?P<path>/.*)$", re.IGNORECASE)
-
-
-def to_local_os_path(path: str) -> str:
-    """Normalize an explicit ``file:`` URI to the plain OS path the
-    ``os``/``shutil`` layer needs — both the RFC-8089 triple-slash form
-    (``file:///tmp/t``) and the single-slash Hadoop form
-    (``file:/tmp/t``, no ``://`` at all). Anything else passes through
-    unchanged.
-
-    Round-10 ADVICE: :func:`is_local_path` classifies ``file://`` URIs
-    as local (correct), but the consumers it gates ran raw os calls on
-    the UNSTRIPPED URI — ``os.path.join('file:///tmp/t', '_manifests')``
-    is a bogus relative path, so manifests landed under cwd while Spark
-    wrote parquet to the real location (the exact half-working class
-    this helper exists to prevent). Every ``is_local_path``-gated
-    os/shutil consumer must route through this helper first.
-
-    A ``file://host/p`` URI with a real (non-``localhost``) authority
-    is NOT this machine's filesystem — raise instead of silently
-    reading the wrong host's path."""
-    m = _FILE_URI_RE.match(path)
-    if not m:
-        return path
-    netloc = m.group("netloc") or ""
-    if netloc not in ("", "localhost"):
-        raise ValueError(
-            f"file: URI with non-local authority {netloc!r} cannot be "
-            f"accessed via local os calls: {path!r}"
-        )
-    return m.group("path")
-
-
-class _LocalManifestIO:
-    """Manifest storage for a LOCAL versioned table: JSON files under
-    ``<path>/_manifests`` with the write-fsync-link exclusive claim
-    (byte-identical to the original in-line implementation)."""
+class _ManifestIO:
+    """Manifest storage for a versioned table: JSON files under
+    ``<path>/_manifests/v{n}.json``, kept through the
+    :mod:`objectstore` store for the path's scheme. The atomic
+    exclusive claim is the store's ``put_text_if_absent`` — the
+    write-fsync-link claim on a local path, a conditional
+    ``If-None-Match: *`` PUT on S3 — so two concurrent committers
+    racing for ``v{N}.json`` resolve the same way on every backend:
+    one wins, the loser re-reads and claims N+1. Unknown schemes fail
+    loudly inside :func:`objectstore.get_store`."""
 
     def __init__(self, path: str):
-        self.mdir = os.path.join(path, "_manifests")
-
-    def list_versions(self) -> list[tuple[int, list[str]]]:
-        if not os.path.isdir(self.mdir):
-            return []
-        out = []
-        for name in os.listdir(self.mdir):
-            if name.startswith("v") and name.endswith(".json"):
-                with open(os.path.join(self.mdir, name)) as fh:
-                    m = json.load(fh)
-                out.append((int(m["version"]), list(m["job_ids"])))
-        return sorted(out)
-
-    def list_version_numbers(self) -> list[int]:
-        """Version numbers from manifest FILE NAMES only — no bodies
-        read. The commit hot path needs just the tip (round 12)."""
-        if not os.path.isdir(self.mdir):
-            return []
-        return sorted(
-            int(name[1:-5])
-            for name in os.listdir(self.mdir)
-            if name.startswith("v") and name.endswith(".json")
-            and name[1:-5].isdecimal()
-        )
-
-    def read_meta(self, n: int) -> dict:
-        with open(os.path.join(self.mdir, f"v{n}.json")) as fh:
-            return json.load(fh)
-
-    def try_commit(self, n: int, payload: dict) -> bool:
-        import uuid
-
-        os.makedirs(self.mdir, exist_ok=True)
-        target = os.path.join(self.mdir, f"v{n}.json")
-        # write-then-link: the final name never exists with partial
-        # content, and link() is the atomic exclusive claim
-        tmp = os.path.join(self.mdir, f".tmp.{uuid.uuid4().hex}")
-        with open(tmp, "w") as fh:
-            json.dump(payload, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        try:
-            os.link(tmp, target)
-            return True
-        except FileExistsError:
-            return False
-        finally:
-            os.unlink(tmp)
-
-
-class _StoreManifestIO:
-    """Manifest storage for a REMOTE versioned table over the
-    :mod:`objectstore` scheme layer (round-10 verdict item 3). The
-    atomic exclusive claim is the store's ``put_text_if_absent`` — on
-    S3, a conditional ``If-None-Match: *`` PUT — so two concurrent
-    committers racing for ``v{N}.json`` resolve exactly as the local
-    ``os.link`` claim does: one wins, the loser re-reads and claims
-    N+1. Manifest content and reader semantics are unchanged; only the
-    claim primitive differs, as the S3-boundary note always promised."""
-
-    def __init__(self, path: str):
-        from nyc_tlc_trip_data_pipelines_spark import objectstore
-
         self.store = objectstore.get_store(path)
 
     def list_versions(self) -> list[tuple[int, list[str]]]:
@@ -325,9 +221,10 @@ class _StoreManifestIO:
 
     def list_version_numbers(self) -> list[int]:
         """Version numbers from the LIST response alone — one paginated
-        LIST per 1000 versions, ZERO GETs. S3 listings are strongly
-        consistent (read-after-write since 2020), so the max is the
-        true tip. The commit hot path needs just this (round 12)."""
+        LIST per 1000 versions, ZERO GETs (a local listing walks only
+        ``_manifests``). S3 listings are strongly consistent
+        (read-after-write since 2020), so the max is the true tip. The
+        commit hot path needs just this (round 12)."""
         out = []
         for page in self.store.iter_pages("_manifests/v"):
             for key in page:
@@ -345,15 +242,8 @@ class _StoreManifestIO:
         )
 
 
-def _manifest_io(path: str):
-    """Route a versioned table's manifest IO by path scheme: local
-    paths (including ``file:`` URIs) keep the original os-level
-    implementation; remote schemes (``s3://``/``s3a://``) go through
-    the object store's conditional-write claim. Unknown schemes fail
-    loudly inside :func:`objectstore.get_store`."""
-    if is_local_path(path):
-        return _LocalManifestIO(to_local_os_path(path))
-    return _StoreManifestIO(path)
+def _manifest_io(path: str) -> _ManifestIO:
+    return _ManifestIO(path)
 
 
 _REWRITE_SUFFIX_RE = re.compile(r"(\.[dm]\d+)+$")
@@ -557,39 +447,15 @@ ZONE_SIDECAR_MIN_FILES = 512
 
 
 def _zone_sidecar_put(path: str, relkey: str, text: str) -> None:
-    """Write a sidecar under ``<path>/_manifests/<relkey>`` (local
-    tmp+rename; object-store put_text — idempotent, content-addressed
-    names make overwrites byte-identical)."""
-    if is_local_path(path):
-        import uuid as _uuid
-
-        base = os.path.join(to_local_os_path(path), "_manifests")
-        full = os.path.join(base, relkey)
-        os.makedirs(os.path.dirname(full), exist_ok=True)
-        # unique tmp per writer (round-14 review): two concurrent
-        # writers of the SAME content-addressed key share `full`, and
-        # a shared tmp name let the loser's os.replace race a path the
-        # winner already moved (FileNotFoundError on a commit that
-        # should have resolved as a harmless duplicate)
-        tmp = f"{full}.tmp.{_uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            fh.write(text)
-        os.replace(tmp, full)
-        return
-    from nyc_tlc_trip_data_pipelines_spark import objectstore
-
+    """Write a sidecar under ``<path>/_manifests/<relkey>``. The store's
+    put publishes whole objects (a local put renames a per-writer tmp
+    file), and content-addressed names make overwrites byte-identical."""
     objectstore.get_store(path).put_text(f"_manifests/{relkey}", text)
 
 
 def _zone_sidecar_get(path: str, relkey: str) -> str | None:
     """Read a sidecar; None when absent (callers degrade to unpruned)."""
     try:
-        if is_local_path(path):
-            full = os.path.join(to_local_os_path(path), "_manifests", relkey)
-            with open(full) as fh:
-                return fh.read()
-        from nyc_tlc_trip_data_pipelines_spark import objectstore
-
         return objectstore.get_store(path).get_text(f"_manifests/{relkey}")
     except Exception:
         return None
@@ -663,9 +529,10 @@ def append_versioned(
     underscore-prefixed paths, so manifests never pollute the scan).
     Semantics mirrored from the Delta log:
 
-    - **atomic commit**: the manifest is fully written (and fsync'd) to
-      a temp file, then LINKED to its final name — `os.link` fails with
-      EEXIST if version N is already claimed, and a reader can never
+    - **atomic commit**: the manifest is claimed with the store's
+      exclusive create — locally written (and fsync'd) to a temp file,
+      then LINKED to its final name, so `os.link` fails with EEXIST if
+      version N is already claimed, and a reader can never
       observe a partial manifest because the final name only ever
       points at completed bytes. Two concurrent writers cannot both
       claim version N; the loser re-reads and claims N+1 (optimistic
@@ -704,24 +571,19 @@ def append_versioned(
     concurrent writers to the SAME job_id, and VACUUM-safe readers —
     documented gap, not an analog failure.
 
-    **Object-store boundary (S3) — implemented (round-10 verdict item
-    3)**: on a local path the atomic exclusive claim is ``os.link``
-    (O_EXCL-style); on ``s3://``/``s3a://`` paths the claim routes
-    through :class:`objectstore.S3Store`'s conditional write
-    (``If-None-Match: *``, GA since 2024) — two writers racing for
-    ``v{N}.json`` resolve identically on both backends: one wins, the
-    loser re-reads and claims N+1. Manifest content and reader
-    semantics are byte-identical across backends; only the claim
-    primitive differs. The data write itself goes through Spark's
-    Hadoop FS layer either way. :func:`delete_where` and
-    :func:`merge_versioned` are scheme-aware the same way (their COW
-    rewrites WRITE new directories, never remove old ones);
-    :func:`vacuum_versioned` is scheme-aware too since round 11
-    (batched DeleteObjects on object stores, os/shutil locally).
-    See DESIGN.md "Versioned-commit S3 boundary".
+    **Object-store boundary (S3)**: every manifest operation goes
+    through :func:`_manifest_io`, one class over
+    :func:`objectstore.get_store`. On a local path the atomic exclusive
+    claim is ``os.link`` (O_EXCL-style); on ``s3://``/``s3a://`` it is
+    :class:`objectstore.S3Store`'s conditional write (``If-None-Match:
+    *``, GA since 2024) — two writers racing for ``v{N}.json`` resolve
+    identically on both backends: one wins, the loser re-reads and
+    claims N+1. Manifest content and reader semantics are
+    byte-identical across backends; only the claim primitive differs.
+    The data write itself goes through Spark's Hadoop FS layer either
+    way, which takes ``file:`` URIs as they are. See DESIGN.md
+    "Versioned-commit S3 boundary".
     """
-    if is_local_path(path):
-        path = to_local_os_path(path)
     _validate_user_job_id(job_id)
     mio = _manifest_io(path)
     # Retry dedup BEFORE the data write: a job_id committed in ANY
@@ -803,15 +665,13 @@ def delete_where(spark: SparkSession, path: str, condition: Column) -> int:
     Returns the new version number (or the current one if nothing
     matched — a no-op delete mints no version, like Delta).
 
-    Scheme-aware since round 11: data reads/rewrites go through
-    Spark's Hadoop FS layer and the manifest read/commit through
-    :func:`_manifest_io`, so COW DELETE works on ``s3://``/``s3a://``
-    tables too (old directories are left in place for time travel, so
-    no object deletion is needed — that remains
-    :func:`vacuum_versioned`'s local-only job).
+    Data reads/rewrites go through Spark's Hadoop FS layer and the
+    manifest read/commit through :func:`_manifest_io`, so COW DELETE
+    works the same on local and ``s3://``/``s3a://`` tables (old
+    directories are left in place for time travel, so no object
+    deletion is needed — reclaiming them is :func:`vacuum_versioned`'s
+    job).
     """
-    if is_local_path(path):
-        path = to_local_os_path(path)
     mio = _manifest_io(path)
     cur_v, jobs, _raw, _meta = _tip_state(mio)
     if cur_v is None:
@@ -898,9 +758,9 @@ def _commit_manifest(
     list is re-derived inside the claim loop, so retrying the next
     slot is safe.
 
-    Scheme-aware since round 11: the exclusive claim goes through
-    :func:`_manifest_io` (local ``os.link``; S3 conditional PUT), so
-    delete/merge commit on object storage with the same semantics.
+    The exclusive claim goes through :func:`_manifest_io` (local
+    ``os.link``; S3 conditional PUT), so delete/merge commit with the
+    same semantics on every backend.
 
     Round 13 (ADVICE): the payload embeds a per-writer ``writer`` nonce.
     The S3 claim's 412 self-claim detection compares bytes, and
@@ -984,8 +844,6 @@ def merge_versioned(
     partition directory would corrupt the older versions that still
     reference it.
     """
-    if is_local_path(path):
-        path = to_local_os_path(path)
     _validate_user_job_id(job_id)
     mio = _manifest_io(path)
     cur_v, jobs, raw, _meta = _tip_state(mio)
@@ -1059,9 +917,9 @@ def merge_versioned(
 
 
 def list_versions(path: str) -> list[tuple[int, list[str]]]:
-    """All committed versions of a versioned-append table, ascending.
-    Scheme-aware: local paths read the manifests with os calls,
-    ``s3://``/``s3a://`` paths list+get through the object store."""
+    """All committed versions of a versioned-append table, ascending:
+    one manifest listing plus one read per version, through the object
+    store for the path's scheme."""
     return _manifest_io(path).list_versions()
 
 
@@ -1256,8 +1114,6 @@ def read_version(
     instead of every part file in the version."""
     from pyspark.sql import functions as F
 
-    if is_local_path(path):
-        path = to_local_os_path(path)
     mio = _manifest_io(path)
     nums = mio.list_version_numbers()
     if not nums:
@@ -1343,8 +1199,6 @@ def zone_prune_stats(
     pruning — how many zone-covered files the manifest stats keep vs
     hold, without touching any data. Returns ``{"files_total",
     "files_kept", "has_zones"}``; reads ONE manifest."""
-    if is_local_path(path):
-        path = to_local_os_path(path)
     mio = _manifest_io(path)
     nums = mio.list_version_numbers()
     if not nums:
@@ -1404,12 +1258,13 @@ def vacuum_versioned(path: str, retain_last: int = 1) -> tuple[int, int]:
     directories gone) — schedule beyond the longest reader runtime.
     The latest version is always retained (``retain_last`` floors at 1).
 
-    Scheme-aware since round 11: on ``s3://``/``s3a://`` tables the
-    dropped manifests and unreferenced partition "directories" are
-    removed with batched ``DeleteObjects`` calls over the object
-    store's key listing (a bucket has no directories — a partition
-    dir is the set of keys under its prefix). Same return value,
-    counting distinct partition prefixes removed.
+    One path on every scheme: the dropped manifests and unreferenced
+    partition "directories" are removed with batched ``delete_keys``
+    calls over the object store's key listing (a bucket has no
+    directories — a partition dir is the set of keys under its
+    prefix; ``DeleteObjects`` on S3, file deletes plus empty-directory
+    pruning locally). The second count is the number of distinct
+    partition prefixes removed.
 
     Round 14: also sweeps orphaned zone-stat SIDECARS — zstats files
     no retained manifest references (vacuumed jobs, losing retries'
@@ -1447,46 +1302,18 @@ def vacuum_versioned(path: str, retain_last: int = 1) -> tuple[int, int]:
     # forever (one per rewrite). Referenced = named by ANY retained
     # manifest's marker; the content-addressed name means a marker
     # carried forward across manifests stays the same string, so the
-    # retained union is exact. A 60 s mtime grace (same window as the
-    # journal-tmp sweep) spares an in-flight writer between its
-    # sidecar PUT and its commit; a sidecar swept anyway because its
-    # writer stalled past the window degrades that job to an unpruned
-    # read — correct, just unskipped — per the documented
-    # missing-sidecar contract (_resolve_zmap).
+    # retained union is exact. A 60 s mtime grace spares an in-flight
+    # writer between its sidecar PUT and its commit; a sidecar swept
+    # anyway because its writer stalled past the window degrades that
+    # job to an unpruned read — correct, just unskipped — per the
+    # documented missing-sidecar contract (_resolve_zmap).
     referenced: set[str] = set()
     for v, _jobs in versions[-retain_last:]:
         m = mio.read_meta(v)
         for z in (m.get("zones") or {}).values():
             if isinstance(z, dict) and isinstance(z.get("sidecar"), str):
                 referenced.add(z["sidecar"])
-
-    if is_local_path(path):
-        import shutil
-
-        path = to_local_os_path(path)
-        for v, _jobs in dropped:
-            os.unlink(os.path.join(path, "_manifests", f"v{v}.json"))
-        n_dirs = 0
-        for name in os.listdir(path):
-            if name.startswith(prefix) and name[len(prefix):] not in retained_jobs:
-                shutil.rmtree(os.path.join(path, name))
-                n_dirs += 1
-        zdir = os.path.join(path, "_manifests", "zstats")
-        if os.path.isdir(zdir):
-            now = time.time()
-            for name in os.listdir(zdir):
-                full = os.path.join(zdir, name)
-                try:
-                    age = now - os.path.getmtime(full)
-                except FileNotFoundError:
-                    continue
-                if f"zstats/{name}" not in referenced and age >= 60:
-                    os.unlink(full)
-        return len(dropped), n_dirs
-
-    from nyc_tlc_trip_data_pipelines_spark import objectstore
-
-    store = objectstore.get_store(path)
+    store = mio.store
     store.delete_keys([f"_manifests/v{v}.json" for v, _jobs in dropped])
     doomed: list[str] = []
     doomed_dirs: set[str] = set()
@@ -1768,8 +1595,6 @@ def optimize_versioned(
 
     from pyspark.sql import functions as F
 
-    if is_local_path(path):
-        path = to_local_os_path(path)
     mio = _manifest_io(path)
     cur_v, jobs, _raw, _meta = _tip_state(mio)
     if cur_v is None:
@@ -1908,12 +1733,12 @@ def write_bucketed(
         # entry makes saveAsTable fail with LOCATION_ALREADY_EXISTS —
         # clear the orphaned location (local warehouses only)
         import shutil
-        from urllib.parse import urlparse
 
-        wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", ""))
-        if wh.scheme in ("", "file") and wh.path:
+        wh = spark.conf.get("spark.sql.warehouse.dir", "")
+        if wh and objectstore.is_local_path(wh):
             shutil.rmtree(
-                os.path.join(wh.path, table_name.lower()), ignore_errors=True
+                os.path.join(objectstore.to_local_os_path(wh), table_name.lower()),
+                ignore_errors=True,
             )
     w = df.write.bucketBy(num_buckets, *bucket_by)
     if sort_by:
@@ -1929,26 +1754,15 @@ def write_csv(df: DataFrame, path: str, mode: str = "overwrite", header: bool = 
 def write_run_manifest(path: str, processed: Sequence[str], failed: Sequence[str]) -> str:
     """Run-log sink (R22): the reference writes processed/failed file
     lists as dated text blobs to S3 (``pasta1_etl/src/main.py:253-267``,
-    ``utils.py:69-84``). A local path writes a JSON manifest directly;
-    a remote URL (s3://…) routes through :func:`objectstore.save_text`
-    (round-11 ADVICE: the docstring promised this but an s3:// path
-    actually fell through to ``os.makedirs('s3://…')`` and wrote the
-    run log to a bogus local ``s3:`` directory — the half-working
-    class the file:// audit fixed everywhere else)."""
+    ``utils.py:69-84``). Every scheme goes through
+    :func:`objectstore.save_text`, so a local path, a ``file:`` URI and
+    an ``s3://`` URL each get ``run_<stamp>.json`` under the named
+    location. Returns the path written."""
     stamp = datetime.now(timezone.utc).strftime("%Y%m%dT%H%M%SZ")
     body = json.dumps(
         {"processed": list(processed), "failed": list(failed)}, indent=2
     )
-    if not is_local_path(path):
-        from nyc_tlc_trip_data_pipelines_spark import objectstore
-
-        return objectstore.save_text(path, f"run_{stamp}.json", body)
-    path = to_local_os_path(path)
-    os.makedirs(path, exist_ok=True)
-    out = os.path.join(path, f"run_{stamp}.json")
-    with open(out, "w") as fh:
-        fh.write(body)
-    return out
+    return objectstore.save_text(path, f"run_{stamp}.json", body)
 
 
 # --- DDL (R13/R14) ----------------------------------------------------------

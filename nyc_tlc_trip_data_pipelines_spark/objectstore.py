@@ -30,10 +30,52 @@ same caveat.
 from __future__ import annotations
 
 import os
+import re
+import uuid
 from collections.abc import Iterator, Sequence
 from urllib.parse import urlparse
 
 PAGE_SIZE = 1000  # list_objects_v2 page cap
+
+
+def is_local_path(path: str) -> bool:
+    """True when ``path`` addresses the local filesystem. A path is
+    remote only when it carries an explicit ``scheme://`` (hdfs://,
+    s3a://, ...; ``file://`` counts as local) — a bare ``urlparse``
+    scheme check would misclassify a relative LOCAL path whose first
+    segment contains a colon (``runs:2024/table``), which os calls
+    handle fine. The one local-vs-remote classifier: :func:`get_store`,
+    ``datasource`` and ``io.write_bucketed`` all route through it."""
+    if "://" not in path:
+        return True
+    return urlparse(path).scheme in ("", "file")
+
+
+_FILE_URI_RE = re.compile(r"^file:(?://(?P<netloc>[^/]*))?(?P<path>/.*)$", re.IGNORECASE)
+
+
+def to_local_os_path(path: str) -> str:
+    """Normalize an explicit ``file:`` URI to the plain OS path the
+    ``os`` layer needs — both the RFC-8089 triple-slash form
+    (``file:///tmp/t``) and the single-slash Hadoop form
+    (``file:/tmp/t``, no ``://`` at all). Anything else passes through
+    unchanged. ``os.path.join('file:///tmp/t', '_manifests')`` is a
+    bogus relative path, so an unstripped URI would put metadata under
+    cwd while Spark writes the data to the real location.
+
+    A ``file://host/p`` URI with a real (non-``localhost``) authority
+    is NOT this machine's filesystem — raise instead of silently
+    reading the wrong host's path."""
+    m = _FILE_URI_RE.match(path)
+    if not m:
+        return path
+    netloc = m.group("netloc") or ""
+    if netloc not in ("", "localhost"):
+        raise ValueError(
+            f"file: URI with non-local authority {netloc!r} cannot be "
+            f"accessed via local os calls: {path!r}"
+        )
+    return m.group("path")
 
 
 class LocalStore:
@@ -48,14 +90,24 @@ class LocalStore:
         # ancestors ABOVE the store root.
         self.root = os.path.normpath(root)
 
+    def _path(self, key: str) -> str:
+        return os.path.join(self.root, *key.split("/"))
+
     def iter_pages(self, prefix: str = "", page_size: int = PAGE_SIZE) -> Iterator[list[str]]:
+        # Walk from the directory the prefix names (``_manifests/v`` →
+        # ``<root>/_manifests``) and descend only into subdirectories
+        # whose keys can still match, so a manifest listing never walks
+        # the table's data files.
+        head = prefix.rpartition("/")[0]
         keys = []
-        for dirpath, _dirs, files in os.walk(self.root):
+        for dirpath, dirs, files in os.walk(self._path(head) if head else self.root):
             rel = os.path.relpath(dirpath, self.root)
-            for f in files:
-                key = f if rel == "." else f"{rel.replace(os.sep, '/')}/{f}"
-                if key.startswith(prefix):
-                    keys.append(key)
+            base = "" if rel == "." else rel.replace(os.sep, "/") + "/"
+            dirs[:] = [
+                d for d in dirs
+                if (base + d + "/").startswith(prefix) or prefix.startswith(base + d + "/")
+            ]
+            keys.extend(base + f for f in files if (base + f).startswith(prefix))
         keys.sort()
         for i in range(0, len(keys), page_size):
             yield keys[i : i + page_size]
@@ -63,50 +115,68 @@ class LocalStore:
             yield []
 
     def put_text(self, key: str, content: str) -> str:
-        dest = os.path.join(self.root, *key.split("/"))
+        """Publish a whole object: write a per-writer unique tmp file,
+        then ``os.replace`` it over the key, so a reader never sees a
+        partial object and a failed write leaves the old content. Two
+        writers of one key each rename their own tmp (last one wins,
+        like an S3 PUT)."""
+        dest = self._path(key)
         os.makedirs(os.path.dirname(dest) or ".", exist_ok=True)
-        with open(dest, "w") as fh:
-            fh.write(content)
+        tmp = os.path.join(os.path.dirname(dest), f".tmp.{uuid.uuid4().hex}")
+        try:
+            with open(tmp, "w") as fh:
+                fh.write(content)
+            os.replace(tmp, dest)
+        except BaseException:
+            if os.path.exists(tmp):
+                os.unlink(tmp)
+            raise
         return dest
 
     def get_text(self, key: str) -> str:
-        with open(os.path.join(self.root, *key.split("/"))) as fh:
+        with open(self._path(key)) as fh:
             return fh.read()
 
     def mtime(self, key: str) -> float:
         """Last-modified epoch seconds — the age signal VACUUM's
         orphaned-sidecar sweep uses for its in-flight-writer grace
         window (io.py). Raises FileNotFoundError for absent keys."""
-        return os.path.getmtime(os.path.join(self.root, *key.split("/")))
+        return os.path.getmtime(self._path(key))
 
     def delete_keys(self, keys: Sequence[str]) -> int:
         """Delete keys (missing ones ignored, S3-style); empty parent
         directories are pruned so the tree mirrors a bucket where no
-        object under a prefix means the prefix is gone. Returns the
-        number of keys that existed and were removed."""
+        object under a prefix means the prefix is gone. Pruning runs
+        once per distinct parent, deepest first, after every delete —
+        not once per key, which re-listed a big directory per file.
+        Returns the number of keys that existed and were removed."""
         n = 0
+        parents: set[str] = set()
         for key in keys:
-            dest = os.path.join(self.root, *key.split("/"))
+            dest = self._path(key)
             try:
                 os.remove(dest)
-                n += 1
             except FileNotFoundError:
                 continue
-            d = os.path.dirname(dest)
-            while d and d != self.root and not os.listdir(d):
-                os.rmdir(d)
+            n += 1
+            parents.add(os.path.dirname(dest))
+        for d in sorted(parents, key=len, reverse=True):
+            while d and d != self.root:
+                try:
+                    os.rmdir(d)  # fails unless empty (or already gone)
+                except OSError:
+                    break
                 d = os.path.dirname(d)
         return n
 
     def put_text_if_absent(self, key: str, content: str) -> bool:
         """Atomic exclusive create — True when this call claimed the
         key, False when it already existed. Write-fsync-link, the same
-        POSIX O_EXCL primitive io.py's versioned commit uses: the final
-        name never exists with partial content, and ``os.link`` fails
-        with EEXIST if another writer claimed it first."""
-        import uuid
-
-        dest = os.path.join(self.root, *key.split("/"))
+        POSIX O_EXCL primitive: the final name never exists with
+        partial content, and ``os.link`` fails with EEXIST if another
+        writer claimed it first. This is the local manifest claim of
+        io.py's versioned commit."""
+        dest = self._path(key)
         os.makedirs(os.path.dirname(dest) or ".", exist_ok=True)
         tmp = os.path.join(os.path.dirname(dest), f".tmp.{uuid.uuid4().hex}")
         with open(tmp, "w") as fh:
@@ -278,14 +348,16 @@ class S3Store:
 
 def get_store(url: str):
     """Scheme registry (the analog of ``get_s3_client``,
-    ``utils.py:16-28``): ``/local/path`` or ``file:///...`` → LocalStore;
-    ``s3://`` / ``s3a://`` → :class:`S3Store` when boto3 is importable,
-    else a loud NotImplementedError so a mis-configured path fails
-    instead of writing somewhere odd. Unknown schemes always fail loudly.
+    ``utils.py:16-28``): a local path (:func:`is_local_path`, including
+    ``file:`` URIs, normalized by :func:`to_local_os_path`) →
+    LocalStore; ``s3://`` / ``s3a://`` → :class:`S3Store` when boto3 is
+    importable, else a loud NotImplementedError so a mis-configured
+    path fails instead of writing somewhere odd. Unknown schemes always
+    fail loudly, and a ``file://otherhost/...`` URI raises ValueError.
     """
+    if is_local_path(url):
+        return LocalStore(to_local_os_path(url))
     parsed = urlparse(url)
-    if parsed.scheme in ("", "file"):
-        return LocalStore(parsed.path or url)
     if parsed.scheme in ("s3", "s3a"):
         try:
             import boto3  # noqa: F401
@@ -325,8 +397,10 @@ __all__: Sequence[str] = (
     "LocalStore",
     "S3Store",
     "get_store",
+    "is_local_path",
     "list_objects",
     "list_parquet_files",
     "save_text",
+    "to_local_os_path",
     "PAGE_SIZE",
 )

@@ -78,11 +78,14 @@ def test_save_and_get_text(tmp_path):
 
 
 def test_unknown_scheme_rejected():
-    try:
+    with pytest.raises(NotImplementedError):
         obs.get_store("gs://bucket/prefix")
-        raise AssertionError("expected NotImplementedError")
-    except NotImplementedError:
-        pass
+    # another host's file: URI is not this machine's /tmp/t
+    with pytest.raises(ValueError, match="authority"):
+        obs.get_store("file://otherhost/tmp/t")
+    # a colon in a relative path's first segment is not a scheme
+    store = obs.get_store("runs:2024/table")
+    assert isinstance(store, obs.LocalStore) and store.root == "runs:2024/table"
 
 
 def test_discover_files_matches_s3_semantics(tmp_path, spark):
@@ -395,7 +398,7 @@ def test_append_versioned_s3_concurrent_committer_loses_cleanly(monkeypatch):
         url = "s3a://bkt/tbl"
         competitor = obs.S3Store("bkt", "tbl")
 
-        real_try = eio._StoreManifestIO.try_commit
+        real_try = eio._ManifestIO.try_commit
         state = {"injected": False}
 
         def racing_try(self, n, payload):
@@ -412,7 +415,7 @@ def test_append_versioned_s3_concurrent_committer_loses_cleanly(monkeypatch):
                 )
             return real_try(self, n, payload)
 
-        monkeypatch.setattr(eio._StoreManifestIO, "try_commit", racing_try)
+        monkeypatch.setattr(eio._ManifestIO, "try_commit", racing_try)
         writes = []
         v = eio.append_versioned(_FakeDF(writes), url, "mine")
         monkeypatch.undo()
@@ -509,7 +512,7 @@ def test_cow_commit_on_s3_detects_concurrent_writer(monkeypatch, spark, tmp_path
             spark.createDataFrame([(1, "a"), (2, "b")], "k long, s string"), url, "j1"
         )
         rival = obs.S3Store("bkt", "tbl2")
-        real_try = eio._StoreManifestIO.try_commit
+        real_try = eio._ManifestIO.try_commit
         state = {"hit": False}
 
         def racing_try(self, n, payload):
@@ -525,7 +528,7 @@ def test_cow_commit_on_s3_detects_concurrent_writer(monkeypatch, spark, tmp_path
                 )
             return real_try(self, n, payload)
 
-        monkeypatch.setattr(eio._StoreManifestIO, "try_commit", racing_try)
+        monkeypatch.setattr(eio._ManifestIO, "try_commit", racing_try)
         with _pytest.raises(eio.ConcurrentCommitError):
             eio.delete_where(spark, url, F.col("k") == 2)
 
@@ -570,7 +573,7 @@ def test_cow_commit_writer_nonce_defeats_byte_identical_rival(
             spark.createDataFrame([(1, "a"), (2, "b")], "k long, s string"), url, "j1"
         )
         rival = obs.S3Store("bkt", "tbl3")
-        real_try = eio._StoreManifestIO.try_commit
+        real_try = eio._ManifestIO.try_commit
         state = {"hit": False}
 
         def racing_try(self, n, payload):
@@ -584,7 +587,7 @@ def test_cow_commit_writer_nonce_defeats_byte_identical_rival(
                 )
             return real_try(self, n, payload)
 
-        monkeypatch.setattr(eio._StoreManifestIO, "try_commit", racing_try)
+        monkeypatch.setattr(eio._ManifestIO, "try_commit", racing_try)
         with _pytest.raises(eio.ConcurrentCommitError):
             eio.delete_where(spark, url, F.col("k") == 2)
         # the rival's commit is the surviving v1 — nothing was silently lost
@@ -759,6 +762,46 @@ def test_put_text_if_absent_s3_self_claim_on_412(monkeypatch):
         assert store.get_text("_manifests/v0.json") == "mine"
 
 
+def test_local_store_listing_walks_only_the_prefix_directory(tmp_path, monkeypatch):
+    """A ``_manifests/v`` listing walks ``_manifests`` and nothing else:
+    neither the sibling ``data/`` subtree nor ``_manifests/zstats``."""
+    store = obs.LocalStore(str(tmp_path))
+    for key in ("_manifests/v0.json", "_manifests/v1.json", "_manifests/zstats/a.json",
+                "data/part-0.parquet", "data/deep/part-1.parquet"):
+        store.put_text(key, "x")
+    real_walk = os.walk
+    roots, seen = [], []
+
+    def recording_walk(top, *args, **kwargs):
+        roots.append(top)
+        for entry in real_walk(top, *args, **kwargs):
+            seen.append(entry[0])
+            yield entry
+
+    monkeypatch.setattr(os, "walk", recording_walk)
+    assert list(store.iter_pages("_manifests/v")) == [
+        ["_manifests/v0.json", "_manifests/v1.json"]
+    ]
+    assert roots == [os.path.join(str(tmp_path), "_manifests")]
+    assert seen == roots  # no subdirectory can hold a "_manifests/v" key
+
+
+def test_local_store_put_text_keeps_old_content_when_rename_fails(tmp_path, monkeypatch):
+    """put_text publishes whole objects: a failed rename leaves the old
+    object as it was and no tmp file behind."""
+    store = obs.LocalStore(str(tmp_path))
+    store.put_text("d/k.json", "old")
+
+    def failing_replace(src, dst):
+        raise OSError("rename failed")
+
+    monkeypatch.setattr(os, "replace", failing_replace)
+    with pytest.raises(OSError, match="rename failed"):
+        store.put_text("d/k.json", "new")
+    assert store.get_text("d/k.json") == "old"
+    assert os.listdir(tmp_path / "d") == ["k.json"]
+
+
 def test_local_store_root_trailing_slash_prune_stops_at_root(tmp_path):
     """Round-11 ADVICE: delete_keys' empty-parent pruning compares the
     dirname chain against self.root; an unnormalized trailing-slash
@@ -886,7 +929,7 @@ def test_append_versioned_s3_crash_before_commit_recovers(monkeypatch):
         writes: list[str] = []
         eio.append_versioned(_FakeDF(writes), url, "base")
 
-        real_try = eio._StoreManifestIO.try_commit
+        real_try = eio._ManifestIO.try_commit
         state = {"crash": True}
 
         def crashing_try(self, n, payload):
@@ -895,7 +938,7 @@ def test_append_versioned_s3_crash_before_commit_recovers(monkeypatch):
                 raise OSError("process killed between data write and claim")
             return real_try(self, n, payload)
 
-        monkeypatch.setattr(eio._StoreManifestIO, "try_commit", crashing_try)
+        monkeypatch.setattr(eio._ManifestIO, "try_commit", crashing_try)
         import pytest as _pytest
 
         with _pytest.raises(OSError, match="process killed"):
@@ -1139,7 +1182,7 @@ def test_zone_pruning_on_s3_manifests(monkeypatch, spark, tmp_path):
     """Round-13 zone-map pruning must work when the MANIFESTS live on
     S3 (data mirrored locally, the established moto pattern): zones
     recorded through the conditional-PUT commit, zone_prune_stats and
-    read_version(prune=...) resolving through _StoreManifestIO, and a
+    read_version(prune=...) resolving through _ManifestIO, and a
     pruned read identical to the plain filtered read."""
     from pyspark.sql.readwriter import DataFrameReader, DataFrameWriter
 

@@ -491,7 +491,7 @@ def test_is_local_path_colon_segments():
     """Review finding: a relative LOCAL path whose first segment
     contains a colon (runs:2024/table) must not be misclassified as a
     remote scheme — only explicit scheme:// URIs are remote."""
-    from nyc_tlc_trip_data_pipelines_spark.io import is_local_path
+    from nyc_tlc_trip_data_pipelines_spark.objectstore import is_local_path
 
     assert is_local_path("runs:2024/table")
     assert is_local_path("/abs/plain")
@@ -507,7 +507,7 @@ def test_to_local_os_path_strips_file_uris():
     the RFC-8089 triple-slash and the single-slash Hadoop forms."""
     import pytest as _pytest
 
-    from nyc_tlc_trip_data_pipelines_spark.io import to_local_os_path
+    from nyc_tlc_trip_data_pipelines_spark.objectstore import to_local_os_path
 
     assert to_local_os_path("file:///tmp/t") == "/tmp/t"
     assert to_local_os_path("file:/tmp/t") == "/tmp/t"
@@ -523,37 +523,63 @@ def test_to_local_os_path_strips_file_uris():
         to_local_os_path("file://otherhost/tmp/t")
 
 
-def test_versioned_family_accepts_file_uris(spark, tmp_path):
-    """Round-10 ADVICE (the half-working class): append_versioned on a
-    file:// URI must put the JSON manifests next to the parquet at the
-    REAL location — not write parquet via Spark to /tmp while the
-    manifests land under cwd — and every reader must agree whichever
-    spelling it is handed."""
+def test_versioned_family_accepts_file_uris(spark, tmp_path, monkeypatch):
+    """Round-10 ADVICE (the half-working class): every versioned op on a
+    file:// or file: URI must keep its metadata (manifests, zone-stat
+    sidecars, vacuum deletes, run logs) next to the parquet at the REAL
+    location — not write parquet via Spark to /tmp while the metadata
+    lands under cwd — and every reader must agree whichever spelling it
+    is handed."""
     import os as _os
+
+    from pyspark.sql import functions as F
 
     from nyc_tlc_trip_data_pipelines_spark import io as IO
 
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)  # any metadata written to a bogus relative path lands here
+    monkeypatch.setattr(IO, "ZONE_SIDECAR_MIN_FILES", 1)  # OPTIMIZE's zones go to a sidecar
     real = str(tmp_path / "vt")
     uri = "file://" + real
-    v0 = IO.append_versioned(
-        spark.createDataFrame([(1, "a")], "k long, s string"), uri, "job0"
-    )
+    hadoop = "file:" + real
+    schema = "k long, s string"
+    v0 = IO.append_versioned(spark.createDataFrame([(1, "a")], schema), uri, "job0")
     assert v0 == 0
-    # manifests live at the real path, nothing landed under cwd
+    # manifests live at the real path
     assert _os.path.isdir(_os.path.join(real, "_manifests"))
-    assert not _os.path.exists(_os.path.join(_os.getcwd(), "file:"))
     # single-slash Hadoop form appends to the SAME table
-    v1 = IO.append_versioned(
-        spark.createDataFrame([(2, "b")], "k long, s string"), "file:" + real, "job1"
-    )
+    v1 = IO.append_versioned(spark.createDataFrame([(2, "b")], schema), hadoop, "job1")
     assert v1 == 1
     # all three spellings resolve to the same version history
     assert IO.list_versions(real) == IO.list_versions(uri)
-    assert IO.list_versions("file:" + real) == IO.list_versions(real)
-    got = sorted(
-        (r.k, r.s) for r in IO.read_version(spark, uri, 1).collect()
-    )
+    assert IO.list_versions(hadoop) == IO.list_versions(real)
+    got = sorted((r.k, r.s) for r in IO.read_version(spark, uri, 1).collect())
     assert got == [(1, "a"), (2, "b")]
+    # the rest of the family, alternating the two spellings
+    assert IO.delete_where(spark, uri, F.col("k") == 1) == 2
+    updates = spark.createDataFrame([(2, "B"), (3, "c")], schema)
+    assert IO.merge_versioned(spark, hadoop, updates, ["k"], "m0") == 3
+    assert IO.optimize_versioned(spark, uri, cluster_by=["k"]) == 4
+    assert IO.list_versions(real)[-1] == (4, ["optimize.o4"])
+    sidecars = _os.listdir(_os.path.join(real, "_manifests", "zstats"))
+    assert len(sidecars) == 1 and sidecars[0].startswith("optimize.o4.")
+    for spelling in (uri, hadoop):
+        pruned = IO.read_version(spark, spelling, prune=[("k", ">=", 3)])
+        assert [(r.k, r.s) for r in pruned.collect()] == [(3, "c")]
+        stats = IO.zone_prune_stats(spelling, prune=[("k", ">=", 3)])
+        assert stats["has_zones"] and stats["files_total"] >= 1
+    # v0..v3 dropped; job0, job1, job0.d2, job1.m3 and m0 reclaimed
+    assert IO.vacuum_versioned(hadoop) == (4, 5)
+    assert sorted(_os.listdir(real)) == ["__job_id=optimize.o4", "_manifests"]
+    assert IO.list_versions(uri) == [(4, ["optimize.o4"])]
+    got = sorted((r.k, r.s) for r in IO.read_version(spark, real).collect())
+    assert got == [(2, "B"), (3, "c")]
+    logs = str(tmp_path / "logs")
+    for spelling in ("file://" + logs, "file:" + logs):
+        out = IO.write_run_manifest(spelling, ["f.parquet"], [])
+        assert _os.path.dirname(out) == logs and _os.path.isfile(out)
+    assert _os.listdir(cwd) == []
 
 
 def test_ingest_accepts_file_uri_bronze(spark, taxi_dirs, tmp_path):

@@ -885,7 +885,7 @@ _path_segment = st.text(
 def test_to_local_os_path_file_uri_roundtrip(segments):
     """For any absolute OS path p: every file:-URI spelling of p must
     normalize to exactly p, and normalization must be idempotent."""
-    from nyc_tlc_trip_data_pipelines_spark.io import to_local_os_path
+    from nyc_tlc_trip_data_pipelines_spark.objectstore import to_local_os_path
 
     p = "/" + "/".join(segments)
     for uri in (f"file://{p}", f"file:{p}", f"file://localhost{p}"):
@@ -900,7 +900,7 @@ def test_to_local_os_path_non_file_passthrough(head, rest):
     """Anything that is not an explicit file: URI — relative paths,
     colon-bearing first segments, other schemes — passes through
     byte-identical (the is_local_path classification contract)."""
-    from nyc_tlc_trip_data_pipelines_spark.io import to_local_os_path
+    from nyc_tlc_trip_data_pipelines_spark.objectstore import to_local_os_path
 
     rel = "/".join([head] + rest)
     assert to_local_os_path(rel) == rel

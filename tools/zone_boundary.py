@@ -86,7 +86,7 @@ def bench_n(n_files: int) -> dict:
     t_cmp = time.perf_counter() - t0
 
     with tempfile.TemporaryDirectory() as d:
-        mio = eio._LocalManifestIO(d)
+        mio = eio._manifest_io(d)
         t0 = time.perf_counter()
         assert mio.try_commit(0, meta)
         t_commit = time.perf_counter() - t0
