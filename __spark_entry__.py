@@ -3915,9 +3915,10 @@ def q_kmeans(spark: SparkSession, sf: str) -> DataFrame:
     """ANN index training (round 5): Lloyd's k-means over the embedding
     corpus (operators/vectors.py kmeans_train, k=4, 2 iterations,
     deterministic init = the 4 smallest vec_ids) — the training step
-    that produces write_ivf_index's centroids. The oracle unrolls both
-    Lloyd iterations in SQL (cross-join assignment with rounded
-    distances + per-dimension rounded means) and must land on the
+    that produces write_ivf_index's centroids. Distances are exact
+    int64 sums over micro-unit coordinates, centroid means exact
+    integer micro-unit sums rounded to 6 dp. The oracle unrolls both
+    Lloyd iterations in SQL (_kmeans_micro_cte) and must land on the
     identical final assignment for every vector."""
     emb = load_table(spark, sf, "embeddings")
     assigned, _ = V.kmeans_train(emb, k=4, iterations=2)
@@ -3935,8 +3936,8 @@ def q_dedup_semantic(spark: SparkSession, sf: str) -> DataFrame:
     vectors with no true near-dups, so this returns the top-50
     most-similar within-cluster pairs — the same plan a real
     cosine ≥ τ dedup would run. The oracle replays the full chain:
-    both Lloyd iterations (shared CTE with q_kmeans's oracle) + the
-    within-cluster pair scan."""
+    both micro-grid Lloyd iterations (the CTE q_kmeans's oracle
+    uses) + the within-cluster pair scan."""
     emb = load_table(spark, sf, "embeddings")
     pairs = V.semantic_dedup_pairs(emb, k=4, iterations=2)
     return O.top_k(pairs, [F.col("cosine").desc(), F.col("id_a"), F.col("id_b")], 50)
@@ -3946,13 +3947,12 @@ def q_dedup_semantic_scaled(spark: SparkSession, sf: str) -> DataFrame:
     """North star (round 7): SemDeDup at SCALE-k — the configuration
     the 100 TB story depends on (the paper grows k with the corpus,
     k ≈ n/5000, to hold the (n/k)² per-cluster pair term constant).
-    k=32 exceeds the measured k≈16 fold/Arrow crossover, so
-    semantic_dedup_pairs' tier=auto runs nearest-centroid assignment
-    as one exact-int64 micro-unit matmul per Arrow batch
-    (operators/vectors.py _micro_argmin) instead of k interpreted
-    zip_with folds per row. The oracle replays the integer Lloyd
-    chain exactly: micro-grid distances are associative integer sums,
-    so not even a fold-order ulp can diverge the assignment."""
+    Nearest-centroid assignment is one exact-int64 micro-unit matmul
+    per Arrow batch (operators/vectors.py _micro_argmin), the same
+    contract as q_dedup_semantic at k=4, and flat in k over this
+    range. The oracle replays the integer Lloyd chain exactly:
+    micro-grid distances are associative integer sums, so not even a
+    fold-order ulp can diverge the assignment."""
     emb = load_table(spark, sf, "embeddings")
     pairs = V.semantic_dedup_pairs(emb, k=32, iterations=2)
     return O.top_k(pairs, [F.col("cosine").desc(), F.col("id_a"), F.col("id_b")], 50)
@@ -3994,8 +3994,8 @@ def q_hard_negatives(spark: SparkSession, sf: str) -> DataFrame:
     """Contrastive training-data mining (round 7): per-anchor hardest
     different-label neighbors (operators/vectors.py
     hard_negative_pairs; DPR/ANCE-style negative mining). Candidates
-    are cluster-scoped at SCALE-k (k=32, the Arrow micro-grid
-    assignment tier — the same configuration the 100 TB story uses:
+    are cluster-scoped at SCALE-k (k=32, the micro-grid k-means —
+    the same configuration the 100 TB story uses:
     the n²/k directed-pair term is 8× smaller than at k=4, measured
     9.4 s → ~2 s at sf0.1); the oracle replays the integer Lloyd
     chain plus the directed labeled pair scan."""
@@ -4009,7 +4009,7 @@ def q_knn_label_noise(spark: SparkSession, sf: str) -> DataFrame:
     nearest same-cluster neighbors vs the row's own label
     (operators/vectors.py knn_label_vote; the confident-learning
     signal for pruning annotation errors before training). Same
-    scale-k (k=32, Arrow tier) candidate discipline and replayed
+    scale-k (k=32) candidate discipline and replayed
     integer-Lloyd chain as q_hard_negatives."""
     emb = load_table(spark, sf, "embeddings")
     return O.sort(V.knn_label_vote(emb, k=32, iterations=2, n_neighbors=5), ["vec_id"])
@@ -5938,8 +5938,8 @@ def q_ann_pq(spark: SparkSession, sf: str) -> DataFrame:
     k-means (integer micro-unit means), vectors encoded to 4 code ids,
     and the query answered from an m×k lookup table summed in exact
     integer micro-units. Completes the ANN tier list: brute force →
-    LSH → IVF → PQ. The oracle replays each subspace's Lloyd chain
-    (the q_kmeans CTE, sliced) plus the ADC lookup."""
+    LSH → IVF → PQ. The oracle replays each subspace's fused 6-dp
+    Lloyd chain plus the ADC lookup."""
     emb = load_table(spark, sf, "embeddings")
     codes, books = V.pq_train_encode(emb, m=4, k=4, iterations=1)
     out = V.pq_adc_topk(codes, books, [1.0] * 64, k_top=10)
@@ -6795,111 +6795,25 @@ def _dedup_embedding_oracle() -> str:
     """
 
 
-_KMEANS_ASSIGN_CTE = """
-            WITH emb AS (
-                SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-            ), init AS (
-                SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cid, v AS c
-                FROM (SELECT vec_id, v FROM emb ORDER BY vec_id LIMIT 4)
-            ), d0 AS (
-                SELECT e.vec_id, i.cid,
-                       ROUND(LIST_SUM(LIST_TRANSFORM(GENERATE_SERIES(1, 64),
-                             j -> (e.v[j] - i.c[j]) * (e.v[j] - i.c[j]))), 6) AS d2
-                FROM emb e CROSS JOIN init i
-            ), a0 AS (
-                SELECT vec_id, cid AS cluster FROM (
-                    SELECT vec_id, cid,
-                           ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
-                    FROM d0
-                ) WHERE rn = 1
-            ), c1 AS (
-                -- exact integer micro-unit mean (partition-order-free,
-                -- mirrors kmeans_train); empty clusters KEEP the
-                -- previous centroid (LEFT JOIN + COALESCE)
-                SELECT i.cid, COALESCE(n.c, i.c) AS c
-                FROM init i LEFT JOIN (
-                    SELECT cluster AS cid, LIST(m ORDER BY dim) AS c FROM (
-                        SELECT a.cluster, gs.dim,
-                               ROUND(SUM(CAST(ROUND(e.v[gs.dim] * 1000000, 0) AS BIGINT))
-                                     / COUNT(*) / 1000000.0, 6) AS m
-                        FROM a0 a JOIN emb e USING (vec_id)
-                        CROSS JOIN GENERATE_SERIES(1, 64) gs(dim)
-                        GROUP BY a.cluster, gs.dim
-                    ) GROUP BY cluster
-                ) n USING (cid)
-            ), d1 AS (
-                SELECT e.vec_id, i.cid,
-                       ROUND(LIST_SUM(LIST_TRANSFORM(GENERATE_SERIES(1, 64),
-                             j -> (e.v[j] - i.c[j]) * (e.v[j] - i.c[j]))), 6) AS d2
-                FROM emb e CROSS JOIN c1 i
-            ), a1 AS (
-                SELECT vec_id, cid AS cluster FROM (
-                    SELECT vec_id, cid,
-                           ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
-                    FROM d1
-                ) WHERE rn = 1
-            ), c2 AS (
-                SELECT i.cid, COALESCE(n.c, i.c) AS c
-                FROM c1 i LEFT JOIN (
-                    SELECT cluster AS cid, LIST(m ORDER BY dim) AS c FROM (
-                        SELECT a.cluster, gs.dim,
-                               ROUND(SUM(CAST(ROUND(e.v[gs.dim] * 1000000, 0) AS BIGINT))
-                                     / COUNT(*) / 1000000.0, 6) AS m
-                        FROM a1 a JOIN emb e USING (vec_id)
-                        CROSS JOIN GENERATE_SERIES(1, 64) gs(dim)
-                        GROUP BY a.cluster, gs.dim
-                    ) GROUP BY cluster
-                ) n USING (cid)
-            ), df AS (
-                SELECT e.vec_id, i.cid,
-                       ROUND(LIST_SUM(LIST_TRANSFORM(GENERATE_SERIES(1, 64),
-                             j -> (e.v[j] - i.c[j]) * (e.v[j] - i.c[j]))), 6) AS d2
-                FROM emb e CROSS JOIN c2 i
-            ), af AS (
-                SELECT vec_id, CAST(cid AS INT) AS cluster FROM (
-                    SELECT vec_id, cid,
-                           ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
-                    FROM df
-                ) WHERE rn = 1
-            )
-"""
-
-
 def _kmeans_oracle() -> str:
-    """Both Lloyd iterations unrolled (distances and centroid means
-    rounded to 6 dp exactly as the Spark side); the shared CTE is the
-    ONE copy of the assignment replay — q_dedup_semantic builds its
-    within-cluster pair scan on the identical chain."""
-    return _KMEANS_ASSIGN_CTE + """
+    """q_kmeans replay: the micro-grid Lloyd chain at k=4, both
+    iterations, final assignment per vector."""
+    return _kmeans_micro_cte(4) + """
             SELECT vec_id, cluster FROM af ORDER BY vec_id
     """
 
 
-def _semantic_dedup_oracle() -> str:
-    """SemDeDup replay: the kmeans assignment chain (shared CTE), then
-    pairwise cosine WITHIN each cluster, global top-50 with the
-    (cosine desc, id_a, id_b) tie-break — the same cosine formulation
-    q_dedup_embedding's oracle uses."""
-    return _KMEANS_ASSIGN_CTE + """
-            SELECT fa.cluster, a.vec_id AS id_a, b.vec_id AS id_b,
-                   ROUND(LIST_DOT_PRODUCT(a.v, b.v) /
-                         (SQRT(LIST_DOT_PRODUCT(a.v, a.v)) * SQRT(LIST_DOT_PRODUCT(b.v, b.v))), 6) AS cosine
-            FROM af fa JOIN af fb ON fa.cluster = fb.cluster AND fa.vec_id < fb.vec_id
-            JOIN emb a ON a.vec_id = fa.vec_id
-            JOIN emb b ON b.vec_id = fb.vec_id
-            ORDER BY cosine DESC, id_a, id_b LIMIT 50
-    """
-
-
 def _kmeans_micro_cte(k: int, iterations: int = 2, dim: int = 64) -> str:
-    """Replay of the ARROW-tier Lloyd chain (vectors.py
+    """Replay of the k-means Lloyd chain (vectors.py
     _kmeans_fit_micro): coordinates quantized to integer micro-units
-    with the engines' shared HALF_UP ROUND, distances as EXACT integer
-    sums (associative — no fold-order caveat at all, unlike the 6-dp
-    double chain), centroid means via the identical
+    with the engines' shared HALF_UP ROUND, NULL ids dropped,
+    distances as EXACT integer sums (associative — no fold-order
+    caveat at all), centroid means via the identical
     double-division-then-6-dp-round, re-quantized to the micro grid
-    for the next pass. Generated per (k, iterations) so scale-k
-    contract queries share one copy of the replay."""
+    for the next pass. Generated per (k, iterations) so every k-means
+    contract query shares one copy of the replay; it defines the CTEs
+    emb, embq, c0…c{iterations}, d0/a0…, dfin and af (vec_id,
+    cluster)."""
     blocks = [
         f"""
             WITH emb AS (
@@ -6908,7 +6822,7 @@ def _kmeans_micro_cte(k: int, iterations: int = 2, dim: int = 64) -> str:
                 SELECT vec_id,
                        LIST_TRANSFORM(CAST(embedding AS DOUBLE[]),
                                       x -> CAST(ROUND(x * 1000000, 0) AS BIGINT)) AS vq
-                FROM embeddings
+                FROM embeddings WHERE vec_id IS NOT NULL
             ), c0 AS (
                 SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cid, vq AS cq
                 FROM (SELECT vec_id, vq FROM embq ORDER BY vec_id LIMIT {k})
@@ -6954,10 +6868,12 @@ def _kmeans_micro_cte(k: int, iterations: int = 2, dim: int = 64) -> str:
     return "".join(blocks)
 
 
-def _semantic_dedup_scaled_oracle(k: int = 32) -> str:
-    """q_dedup_semantic_scaled replay: the integer micro-grid Lloyd
-    chain at scale-k, then the identical within-cluster cosine top-50
-    as q_dedup_semantic (cosine on the original doubles)."""
+def _semantic_dedup_oracle(k: int = 4) -> str:
+    """SemDeDup replay (q_dedup_semantic at k=4,
+    q_dedup_semantic_scaled at k=32): the micro-grid Lloyd chain,
+    then pairwise cosine on the original doubles WITHIN each cluster,
+    global top-50 with the (cosine desc, id_a, id_b) tie-break — the
+    same cosine formulation q_dedup_embedding's oracle uses."""
     return _kmeans_micro_cte(k) + """
             SELECT fa.cluster, a.vec_id AS id_a, b.vec_id AS id_b,
                    ROUND(LIST_DOT_PRODUCT(a.v, b.v) /
@@ -6986,7 +6902,7 @@ _DIRECTED_PAIRS_CTE = """
 
 def _hard_negatives_oracle() -> str:
     """q_hard_negatives replay: scale-k integer Lloyd chain (k=32,
-    the Arrow tier's micro-grid contract) + DIRECTED labeled
+    kmeans_train's micro-grid contract) + DIRECTED labeled
     within-cluster pair scan, per-anchor rank over different-label
     neighbors (cosine DESC, nid tie-break), rank <= 3."""
     return _kmeans_micro_cte(32) + _DIRECTED_PAIRS_CTE + """
@@ -7055,8 +6971,8 @@ def _rp_oracle(d_out: int = 16, dim: int = 64, keep_dims: int = 4) -> str:
 
 
 def _pq_oracle(m: int = 4, k: int = 4, dim: int = 64) -> str:
-    """q_ann_pq replay: per subspace the 1-iteration Lloyd chain (the
-    q_kmeans CTE sliced to the subspace's dims — init from the first
+    """q_ann_pq replay: per subspace the 1-iteration Lloyd chain of
+    pq_train_encode's own contract (init from the first
     ``k`` ids, 6-dp distance argmin with cid tie-break, integer
     micro-unit centroid means, empty clusters keep the init centroid),
     then the ADC lookup table for the all-ones query and the exact
@@ -7138,61 +7054,23 @@ def _pq_oracle(m: int = 4, k: int = 4, dim: int = 64) -> str:
 def _ivfpq_oracle(
     kc: int = 4, n_probe: int = 2, m: int = 4, k: int = 4, dim: int = 64
 ) -> str:
-    """q_ann_ivfpq replay — the FULL composite in SQL: coarse Lloyd
-    chain (the q_kmeans shapes: init from the first kc ids, 6-dp
-    distance argmin with cid tie-break, integer micro-unit means,
-    empty cells keep init), 6-dp residuals, the _pq_oracle per-subspace
-    Lloyd chains over the RESIDUAL table, probe = top-n_probe cells by
-    6-dp distance to the all-ones query, per-(cell, sub, code) ADC
-    lookup, exact integer micro-unit distance sums."""
+    """q_ann_ivfpq replay — the FULL composite in SQL: the coarse
+    quantizer is the kmeans_train chain with one iteration
+    (_kmeans_micro_cte; centroids ``cu`` = micro-units / 10⁶, cells
+    from its final assignment), 6-dp residuals, the _pq_oracle
+    per-subspace Lloyd chains over the RESIDUAL table, probe =
+    top-n_probe cells by 6-dp distance to the all-ones query,
+    per-(cell, sub, code) ADC lookup, exact integer micro-unit
+    distance sums."""
     subdim = dim // m
+    coarse = _kmeans_micro_cte(kc, 1, dim)
     ctes = [
-        "emb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)"
+        """cu AS (
+            SELECT cid, LIST_TRANSFORM(cq, x -> CAST(x AS DOUBLE) / 1000000.0) AS c
+            FROM c1
+        )""",
+        "cellof AS (SELECT vec_id, cluster AS cell FROM af)",
     ]
-    # ---- coarse quantizer (one Lloyd iteration over the full vector)
-    ctes.append(f"""ci AS (
-            SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cid, v AS c
-            FROM (SELECT vec_id, v FROM emb ORDER BY vec_id LIMIT {kc})
-        )""")
-    ctes.append(f"""cd AS (
-            SELECT e.vec_id, i.cid,
-                   ROUND(LIST_SUM(LIST_TRANSFORM(GENERATE_SERIES(1, {dim}),
-                         j -> (e.v[j] - i.c[j]) * (e.v[j] - i.c[j]))), 6) AS d2
-            FROM emb e CROSS JOIN ci i
-        )""")
-    ctes.append("""ca AS (
-            SELECT vec_id, cid AS cluster FROM (
-                SELECT vec_id, cid,
-                       ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
-                FROM cd
-            ) WHERE rn = 1
-        )""")
-    ctes.append(f"""cu AS (
-            SELECT i.cid, COALESCE(n.c, i.c) AS c
-            FROM ci i LEFT JOIN (
-                SELECT cluster AS cid, LIST(mm ORDER BY dim) AS c FROM (
-                    SELECT a.cluster, gs.dim,
-                           ROUND(SUM(CAST(ROUND(e.v[gs.dim] * 1000000, 0) AS BIGINT))
-                                 / COUNT(*) / 1000000.0, 6) AS mm
-                    FROM ca a JOIN emb e USING (vec_id)
-                    CROSS JOIN GENERATE_SERIES(1, {dim}) gs(dim)
-                    GROUP BY a.cluster, gs.dim
-                ) GROUP BY cluster
-            ) n USING (cid)
-        )""")
-    ctes.append(f"""cf AS (
-            SELECT e.vec_id, i.cid,
-                   ROUND(LIST_SUM(LIST_TRANSFORM(GENERATE_SERIES(1, {dim}),
-                         j -> (e.v[j] - i.c[j]) * (e.v[j] - i.c[j]))), 6) AS d2
-            FROM emb e CROSS JOIN cu i
-        )""")
-    ctes.append("""cellof AS (
-            SELECT vec_id, cid AS cell FROM (
-                SELECT vec_id, cid,
-                       ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
-                FROM cf
-            ) WHERE rn = 1
-        )""")
     ctes.append(f"""probe AS (
             SELECT cid FROM (
                 SELECT cid,
@@ -7211,48 +7089,48 @@ def _ivfpq_oracle(
     # ---- per-subspace PQ Lloyd chains over the residual table
     for s in range(m):
         o = s * subdim
-        ctes.append(f"""i{s} AS (
+        ctes.append(f"""pi{s} AS (
                 SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cid,
                        v[{o + 1}:{o + subdim}] AS c
                 FROM (SELECT vec_id, v FROM res ORDER BY vec_id LIMIT {k})
             )""")
-        ctes.append(f"""d{s} AS (
+        ctes.append(f"""pd{s} AS (
                 SELECT e.vec_id, i.cid,
                        ROUND(LIST_SUM(LIST_TRANSFORM(GENERATE_SERIES(1, {subdim}),
                              j -> (e.v[{o} + j] - i.c[j]) * (e.v[{o} + j] - i.c[j]))), 6) AS d2
-                FROM res e CROSS JOIN i{s} i
+                FROM res e CROSS JOIN pi{s} i
             )""")
-        ctes.append(f"""a{s} AS (
+        ctes.append(f"""pa{s} AS (
                 SELECT vec_id, cid AS cluster FROM (
                     SELECT vec_id, cid,
                            ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
-                    FROM d{s}
+                    FROM pd{s}
                 ) WHERE rn = 1
             )""")
-        ctes.append(f"""u{s} AS (
+        ctes.append(f"""pu{s} AS (
                 SELECT i.cid, COALESCE(n.c, i.c) AS c
-                FROM i{s} i LEFT JOIN (
+                FROM pi{s} i LEFT JOIN (
                     SELECT cluster AS cid, LIST(mm ORDER BY dim) AS c FROM (
                         SELECT a.cluster, gs.dim,
                                ROUND(SUM(CAST(ROUND(e.v[{o} + gs.dim] * 1000000, 0) AS BIGINT))
                                      / COUNT(*) / 1000000.0, 6) AS mm
-                        FROM a{s} a JOIN res e USING (vec_id)
+                        FROM pa{s} a JOIN res e USING (vec_id)
                         CROSS JOIN GENERATE_SERIES(1, {subdim}) gs(dim)
                         GROUP BY a.cluster, gs.dim
                     ) GROUP BY cluster
                 ) n USING (cid)
             )""")
-        ctes.append(f"""f{s} AS (
+        ctes.append(f"""pf{s} AS (
                 SELECT e.vec_id, i.cid,
                        ROUND(LIST_SUM(LIST_TRANSFORM(GENERATE_SERIES(1, {subdim}),
                              j -> (e.v[{o} + j] - i.c[j]) * (e.v[{o} + j] - i.c[j]))), 6) AS d2
-                FROM res e CROSS JOIN u{s} i
+                FROM res e CROSS JOIN pu{s} i
             )""")
         ctes.append(f"""code{s} AS (
                 SELECT vec_id, CAST(cid AS INT) AS code FROM (
                     SELECT vec_id, cid,
                            ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
-                    FROM f{s}
+                    FROM pf{s}
                 ) WHERE rn = 1
             )""")
         ctes.append(f"""lut{s} AS (
@@ -7262,7 +7140,7 @@ def _ivfpq_oracle(
                                 j -> ((1.0 - cc.c[{o} + j]) - u.c[j])
                                      * ((1.0 - cc.c[{o} + j]) - u.c[j]))), 6)
                              * 1000000, 0) AS BIGINT) AS micro
-                FROM probe p JOIN cu cc ON cc.cid = p.cid CROSS JOIN u{s} u
+                FROM probe p JOIN cu cc ON cc.cid = p.cid CROSS JOIN pu{s} u
             )""")
     code_joins = " ".join(
         f"JOIN code{s} c{s} USING (vec_id)" for s in range(1, m)
@@ -7273,7 +7151,7 @@ def _ivfpq_oracle(
     )
     micro_sum = " + ".join(f"l{s}.micro" for s in range(m))
     return f"""
-        WITH {", ".join(ctes)}
+        {coarse}, {", ".join(ctes)}
         SELECT c0.vec_id, CAST(cl.cell AS INT) AS cell,
                ROUND(({micro_sum}) / 1000000.0, 6) AS adc_d2
         FROM code0 c0 {code_joins}
@@ -9742,7 +9620,7 @@ def oracle_sql() -> dict[str, str]:
         "q_nb_cross_validate": _nb_cv_oracle(5),
         "q_random_projection": _rp_oracle(),
         "q_dedup_semantic": _semantic_dedup_oracle(),
-        "q_dedup_semantic_scaled": _semantic_dedup_scaled_oracle(),
+        "q_dedup_semantic_scaled": _semantic_dedup_oracle(32),
         "q_hard_negatives": _hard_negatives_oracle(),
         "q_knn_label_noise": _knn_label_noise_oracle(),
         # round 7: STL-lite — every stage (hourly level, MA trend,

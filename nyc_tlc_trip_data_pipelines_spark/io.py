@@ -38,7 +38,6 @@ deployment can still point the same call sites at delta-spark
 
 from __future__ import annotations
 
-import glob as _glob
 import json
 import os
 import re
@@ -56,24 +55,20 @@ from nyc_tlc_trip_data_pipelines_spark import objectstore
 _MONTH_RE = re.compile(r"(\d{4})-(\d{2})")
 
 
-def discover_files(root: str, suffix: str = ".parquet", pattern: str = "*") -> list[str]:
+def discover_files(root: str, suffix: str = ".parquet") -> list[str]:
     """Source discovery (R1): enumerate + sort data files under a root.
 
     The reference pages an S3 listing and keeps ``*.parquet``
     (``pasta1_etl/src/utils.py:16-43,46-66``); here the listing goes
     through the :mod:`objectstore` scheme layer, which preserves the S3
     semantics (recursive keys, string prefix, lexicographic order,
-    pagination) over a local tree. ``pattern`` other than ``"*"`` keeps
-    the legacy glob path. On a real cluster, prefer a catalog/manifest
-    over raw listing (S3 LIST at 100 TB is itself a bottleneck).
+    pagination) over a local tree, a ``file:`` URI or a bucket. On a
+    real cluster, prefer a catalog/manifest over raw listing (S3 LIST
+    at 100 TB is itself a bottleneck).
     """
-    if pattern != "*":
-        return sorted(
-            p for p in _glob.glob(os.path.join(root, pattern)) if p.endswith(suffix)
-        )
     keys = [k for k in objectstore.list_objects(root) if k.endswith(suffix)]
-    # R1 returns one flat sorted list of full paths; keys exclude nested
-    # sink dirs the glob never matched, so keep only top-level keys.
+    # R1 returns one flat sorted list of full paths: nested sink dirs
+    # are not sources, so keep only top-level keys.
     return sorted(os.path.join(root, k) for k in keys if "/" not in k)
 
 

@@ -287,41 +287,6 @@ def ivf_probe_index(
     return cosine_topk(cand, query, vec_col, id_col, k)
 
 
-def _kmeans_assign_df(emb: DataFrame, centroids: Sequence[Sequence[float]]) -> DataFrame:
-    """Nearest-centroid assignment for :func:`kmeans_train`: squared
-    L2 distance to each centroid as one codegen expression per
-    centroid, rounded to 6 dp (so ulp-level fold differences between
-    engines can't flip an argmin), argmin via ``array_min`` over
-    (dist, cid) structs — ties break on centroid id."""
-    pairs = F.array(
-        *[
-            F.struct(
-                F.round(
-                    F.aggregate(
-                        F.zip_with(
-                            F.col("v"), _as_vec_lit(c), lambda x, y: (x - y) * (x - y)
-                        ),
-                        F.lit(0.0),
-                        lambda acc, t: acc + t,
-                    ),
-                    6,
-                ).alias("d"),
-                F.lit(j).cast("int").alias("c"),
-            )
-            for j, c in enumerate(centroids)
-        ]
-    )
-    return emb.select("id", "v", F.array_min(pairs)["c"].alias("cluster"))
-
-
-# Measured fold-vs-Arrow crossover for nearest-centroid assignment
-# (sf0.1, dim 64, warm end-to-end semantic scan): fold 8.6 s at k=32
-# and 17.0 s at k=64 vs Arrow 1.5 s FLAT at both — the integer matmul
-# is insensitive to k in this range while the fold path pays k
-# interpreted zip_with folds per row; tier="auto" switches past here.
-_ARROW_TIER_K = 16
-
-
 def _int_rows_df(spark, rows: Sequence[tuple], schema_ddl: str) -> DataFrame:
     """Tiny all-integer local table as an inline-VALUES LocalRelation —
     ONE SQL parse, no job. ``spark.createDataFrame`` routes small local
@@ -356,10 +321,10 @@ def _micro_argmin(cents_q: Sequence[Sequence[int]]):
     """Batch → (vq matrix, cluster ids) over integer micro-unit
     coordinates. Squared distance is an EXACT int64 sum
     (⩽ 64·(4·10⁶)² ≈ 10¹⁵ « 2⁶³) and integer addition is associative,
-    so unlike the BLAS-double tier (:func:`assign_nearest_arrow`)
-    summation order cannot flip an argmin and any SQL engine replays
-    the identical assignment. One (n×dim)·(dim×k) integer matmul per
-    Arrow batch; ‖x‖² is rank-constant so argmin uses −2x·c + ‖c‖²
+    so unlike a BLAS double matmul summation order cannot flip an
+    argmin and any SQL engine replays the identical assignment. One
+    (n×dim)·(dim×k) integer matmul per Arrow batch; ‖x‖² is
+    rank-constant so argmin uses −2x·c + ‖c‖²
     only (exact ints: a tie in d² is a tie in the score). Ties break on
     centroid id (argmin first-minimum = ROW_NUMBER ORDER BY d2, cid)."""
     import numpy as np
@@ -378,8 +343,8 @@ def _micro_argmin(cents_q: Sequence[Sequence[int]]):
 
 
 def _assign_micro_df(emb_q: DataFrame, cents_q: Sequence[Sequence[int]]) -> DataFrame:
-    """Arrow-tier nearest-centroid assignment (:func:`_micro_argmin`)
-    that IS oracle-replayable. Input (id, vq[, more]); returns
+    """The k-means nearest-centroid assignment (:func:`_micro_argmin`)
+    as one ``mapInArrow`` pass. Input (id, vq[, more]); returns
     (cluster, id[, more]) — the columns after vq pass through the
     Arrow batch untouched, so a caller needing the vectors next to
     their cluster reads them in this pass instead of joining back."""
@@ -447,86 +412,37 @@ def kmeans_train(
     iterations: int = 2,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    tier: str = "auto",
 ) -> tuple[DataFrame, list[list[float]]]:
     """Lloyd's k-means over an embedding column — the TRAINING step the
-    IVF index (:func:`write_ivf_index`) needs for its centroids,
-    implemented as the canonical iterative DataFrame loop (assignment
-    join + per-dimension mean aggregate per round).
+    IVF index (:func:`write_ivf_index`) needs for its centroids, and
+    the clustering under SemDeDup, hard-negative mining, kNN label vote
+    and IVF-PQ.
 
-    Deterministic end to end: init = the vectors of the ``k`` smallest
-    ids (no RNG), distances rounded to 6 dp before the argmin with
-    centroid-id tie-break, and updated centroid coordinates computed
-    from EXACT integer micro-unit sums (each coordinate quantized to
-    ``round(x·10⁶)`` as BIGINT before the SUM — integer addition is
-    associative, so the mean is independent of partition order, the
-    same micro-quantization contract as lm_perplexity / group_regress;
-    a bare ``round(avg(double))`` is partition-order-dependent in its
-    last ulp and can flip the 6-dp rounding). Empty clusters keep
-    their previous centroid.
+    Deterministic end to end, one contract at every k: coordinates
+    are quantized to integer micro-units (``round(x·10⁶)`` HALF_UP,
+    an engine expression), init = the vectors of the ``k`` smallest
+    non-NULL ids (no RNG), the nearest centroid is an EXACT int64
+    squared distance with centroid-id tie-break (:func:`_micro_argmin`,
+    one integer matmul per Arrow batch), and updated centroid
+    coordinates are the exact integer micro-unit means rounded to 6 dp
+    (integer addition is associative, so the mean is independent of
+    partition order — the same micro-quantization contract as
+    lm_perplexity / group_regress). Empty clusters keep their previous
+    centroid. Rows with a NULL id take no part and get no assignment.
+    Any SQL engine replays the whole chain bit-for-bit.
 
-    Scale shape: per iteration one posexplode shuffle keyed on
-    (cluster, dim) — k·dim cells regardless of corpus size — and a
-    k·dim driver readback (the model state, like MLlib's). The final
-    assignment pass is pure map-side codegen. At 100 TB train on a
-    sample (standard practice), then one assignment pass over the
-    corpus.
-
-    Tiers (round-6 verdict item 3): ``fold`` is the codegen
-    zip_with-fold assignment above — O(k) interpreted folds per row,
-    the right tier for small k and the one the k=4 oracles replay.
-    ``arrow`` runs assignment as one integer matmul per Arrow batch
-    over micro-unit-quantized coordinates (:func:`_assign_micro_df`) —
-    O(k) BLAS-shaped flops, ~10× at k=64, and still exactly
-    SQL-replayable because every rounding happens in engine
-    expressions and the distance sum is associative int64. ``auto``
-    (default) picks ``arrow`` past the measured k ≈ 16 crossover.
-    The tiers are distinct deterministic contracts: fold compares
-    6-dp-rounded double distances, arrow compares exact micro-grid
-    distances — a near-tie within quantization error may assign
-    differently, so an oracle must replay the tier the query pinned.
+    Scale shape: per iteration one Arrow pass emitting k·dim exact
+    partial sums per batch and a (cluster, dim) aggregate — k·dim
+    cells regardless of corpus size — plus a k·dim driver readback
+    (the model state, like MLlib's). The final assignment pass is
+    map-side. At 100 TB train on a sample (standard practice), then
+    one assignment pass over the corpus.
 
     Returns (assignments DataFrame (id, cluster), centroids).
     """
-    if _micro_tier(tier, k):
-        emb_q, cents_q = _kmeans_fit_micro(df, k, iterations, vec_col, id_col)
-        final = _assign_micro_df(emb_q, cents_q).select("id", "cluster")
-        return final, [[cq / 1000000.0 for cq in c] for c in cents_q]
-    emb = df.select(
-        F.col(id_col).alias("id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-    )
-    init_rows = emb.orderBy("id").limit(k).collect()
-    centroids: list[list[float]] = [list(r.v) for r in init_rows]
-    dim = len(centroids[0])
-    for _ in range(iterations):
-        assigned = _kmeans_assign_df(emb, centroids)
-        micro = F.round(F.col("x") * F.lit(1000000.0), 0).cast("long")
-        mean_rows = (
-            assigned.select("cluster", F.posexplode("v").alias("dim", "x"))
-            .groupBy("cluster", "dim")
-            .agg(
-                F.round(
-                    F.sum(micro) / F.count(F.lit(1)) / F.lit(1000000.0), 6
-                ).alias("m")
-            )
-            .collect()
-        )
-        new_c = [list(c) for c in centroids]
-        got: dict[int, dict[int, float]] = {}
-        for r in mean_rows:
-            got.setdefault(r.cluster, {})[r.dim] = r.m
-        for cid, dims in got.items():
-            new_c[cid] = [dims[i] for i in range(dim)]
-        centroids = new_c
-    final = _kmeans_assign_df(emb, centroids).select("id", "cluster")
-    return final, centroids
-
-
-def _micro_tier(tier: str, k: int) -> bool:
-    if tier not in ("fold", "arrow", "auto"):
-        raise ValueError(f"tier must be fold|arrow|auto, got {tier!r}")
-    return tier == "arrow" or (tier == "auto" and k > _ARROW_TIER_K)
+    emb_q, cents_q = _kmeans_fit_micro(df, k, iterations, vec_col, id_col)
+    final = _assign_micro_df(emb_q, cents_q).select("id", "cluster")
+    return final, [[cq / 1000000.0 for cq in c] for c in cents_q]
 
 
 def _kmeans_fit_micro(
@@ -536,16 +452,13 @@ def _kmeans_fit_micro(
     vec_col: str,
     id_col: str,
 ) -> tuple[DataFrame, list[list[int]]]:
-    """Arrow-tier Lloyd loop: identical structure to the fold tier —
-    init = the k smallest ids, exact integer micro-unit centroid means
-    rounded to 6 dp, empty clusters keep their previous centroid —
-    but both init and every distance live on the micro grid
-    (engine-side ``round(x·10⁶)``), so assignment is
-    :func:`_micro_argmin`'s exact int64 argmin. Centroid means are
-    the SAME value as the fold tier's (micro = round(x·10⁶) either
-    way); only the distance comparison differs. Quantizing a 6-dp
-    mean back to micro is exact (m·10⁶ is integer-valued up to one
-    double ulp, far from any rounding boundary).
+    """The Lloyd loop behind :func:`kmeans_train`: init = the k
+    smallest non-NULL ids, every distance on the micro grid
+    (engine-side ``round(x·10⁶)``) so assignment is
+    :func:`_micro_argmin`'s exact int64 argmin, and centroid means
+    from exact integer micro-unit sums rounded to 6 dp. Quantizing a
+    6-dp mean back to micro is exact (m·10⁶ is integer-valued up to
+    one double ulp, far from any rounding boundary).
 
     Each round ships k·dim partial sums per Arrow batch
     (:func:`_lloyd_partials_df`) to the (cluster, dim) aggregate, not
@@ -558,10 +471,15 @@ def _kmeans_fit_micro(
     re-quantizing the caller's plan each time. Blocks are stored
     serialized (PySpark's MEMORY_AND_DISK), an order of magnitude
     smaller than deserialized rows, and are freed when the returned
-    frame is garbage-collected. Returns (that checkpoint, micro
-    centroids)."""
-    emb_q = _quantize_micro(df, vec_col, id_col).localCheckpoint(
-        storageLevel=StorageLevel.MEMORY_AND_DISK
+    frame is garbage-collected. Rows with a NULL id are dropped after
+    the checkpoint (a filter on the source would be pushed below the
+    caller's projection and evaluate it twice): a NULL id must neither
+    seed a centroid (Spark sorts NULLs first) nor get an assignment.
+    Returns (the filtered checkpoint, micro centroids)."""
+    emb_q = (
+        _quantize_micro(df, vec_col, id_col)
+        .localCheckpoint(storageLevel=StorageLevel.MEMORY_AND_DISK)
+        .filter(F.col("id").isNotNull())
     )
     init_rows = emb_q.orderBy("id").limit(k).collect()
     if len(init_rows) < k:
@@ -595,22 +513,15 @@ def _clustered_vectors(
     iterations: int,
     vec_col: str,
     id_col: str,
-    tier: str,
     label_col: str | None = None,
 ) -> DataFrame:
-    """(id, v[, lbl], cluster) for the cluster-scoped pair scans. On
-    the Arrow tier the final assignment pass reads the caller's frame
-    and passes ``v`` (and ``lbl``) through its Arrow batches: no join
-    of the assignments back to the input. Rows with a NULL id are
-    dropped, as that join dropped them."""
+    """(cluster, id, v[, lbl]) for the cluster-scoped pair scans. The
+    final assignment pass reads the caller's frame and passes ``v``
+    (and ``lbl``) through its Arrow batches: no join of the
+    assignments back to the input. Rows with a NULL id are dropped."""
     cols = [F.col(vec_col).alias("v")]
     if label_col is not None:
         cols.append(F.col(label_col).alias("lbl"))
-    if not _micro_tier(tier, k):
-        assigned, _ = kmeans_train(
-            df, k=k, iterations=iterations, vec_col=vec_col, id_col=id_col, tier=tier
-        )
-        return df.select(F.col(id_col).alias("id"), *cols).join(assigned, "id")
     _, cents_q = _kmeans_fit_micro(df, k, iterations, vec_col, id_col)
     src = _quantize_micro(df.filter(F.col(id_col).isNotNull()), vec_col, id_col, *cols)
     return _assign_micro_df(src, cents_q)
@@ -758,8 +669,6 @@ def semantic_dedup_pairs(
     iterations: int = 2,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    persist: bool = True,
-    tier: str = "auto",
     pair_tier: str = "arrow",
 ) -> DataFrame:
     """SemDeDup-style semantic near-dup candidate scan (Abbas et al.
@@ -778,64 +687,41 @@ def semantic_dedup_pairs(
 
     Scale shape: one k-means training pass (sampled at 100 TB — the
     standard practice kmeans_train documents), one map-side assignment
-    pass, then a self-join keyed on the cluster id — shuffle is
-    id+cluster rows, the quadratic term is (n/k)² per cluster, which
-    production SemDeDup keeps constant by scaling k with the corpus
-    (the paper uses k ≈ n/5000). No all-pairs join ever; the plan is
-    the LSH-bucketed q_dedup_embedding plan with learned buckets. On
-    the Arrow k-means tier the assignment pass carries each vector
-    through its Arrow batch (:func:`_clustered_vectors`), so the input
-    is read once more and never joined back to its assignments.
+    pass that carries each vector through its Arrow batch
+    (:func:`_clustered_vectors`, so the input is never joined back to
+    its assignments), then the pair scan keyed on the cluster id — the
+    quadratic term is (n/k)² per cluster, which production SemDeDup
+    keeps constant by scaling k with the corpus (the paper uses
+    k ≈ n/5000). No all-pairs join ever; the plan is the LSH-bucketed
+    q_dedup_embedding plan with learned buckets.
 
     Measured k-scaling (sf0.1, warm): pair count follows n²/k
-    exactly — k=4 → 499,768 pairs, k=16 → 124,806, k=64 → 31,046 —
-    but on the FOLD tier local wall time INVERTS (2.2 s → 4.2 s →
-    13.5 s) because the nearest-centroid assignment is k interpreted
-    zip_with folds per row. ``tier="auto"`` (round-6 verdict item 3)
-    therefore switches assignment to the exact-integer Arrow matmul
-    (:func:`_assign_micro_df`) past k ≈ 16, which restores the
-    paper's scaling: measured warm at sf0.1, the full scan runs
-    1.5 s FLAT at k=32 and k=64 on the Arrow tier (vs 8.6/17.0 s
-    fold — 6–12×, and below even the k=4 fold time), with identical
-    pair counts. At 100 TB k grows with the corpus (paper uses
-    k ≈ n/5000) and the (n/k)² pair term dominates. The Arrow tier
-    stays oracle-replayable (micro-grid distances, engine-side
-    rounding); pass ``tier="fold"`` to replay the k=4 oracle contract
-    at any k.
-    """
-    from nyc_tlc_trip_data_pipelines_spark.operators.scalars import array_dot, array_norm
+    exactly — k=4 → 499,768 pairs, k=16 → 124,806, k=64 → 31,046. The
+    exact-int64 assignment matmul (:func:`_micro_argmin`) is flat in k
+    over this range (1.5 s at k=32 and at k=64 for the full scan), so
+    the (n/k)² pair term is what k buys down.
 
+    ``pair_tier="join"`` runs the pure-JVM self-join formulation, the
+    reference side of the Arrow pair scan's bit-identity fence.
+    """
     if pair_tier not in ("arrow", "join"):
         raise ValueError(f"pair_tier must be arrow|join, got {pair_tier!r}")
-    emb = _clustered_vectors(df, k, iterations, vec_col, id_col, tier)
+    emb = _clustered_vectors(df, k, iterations, vec_col, id_col)
     if pair_tier == "arrow":
         # One Arrow grouped-map pass per cluster cell replaces the
         # self-join + per-pair interpreted fold (r14 optimization —
         # measured 4.3 s → ~0.4 s for the 500k-pair scan at sf0.1,
-        # bit-identical values; see _pair_scan_arrow). ``emb`` is
-        # referenced once here, so the join-tier persist is pointless —
-        # skipped regardless of ``persist``.
+        # bit-identical values; see _pair_scan_arrow).
         return _pair_scan_arrow(emb, directed=False).withColumn(
             "cosine", F.round("cosine_raw", 6)
         ).select("cluster", "id_a", "id_b", "cosine")
-    # join tier (the pre-r14 formulation, kept as the pure-JVM fallback
-    # and the equivalence fence's reference side).
-    # Per-vector norms ONCE before the self-join (the pair scan would
-    # otherwise re-fold both 64-element norms for every pair — 3
-    # interpreted array folds per pair down to 1; measured 9.2 s →
-    # 4.4 s at sf0.1). The norm value is the identical expression on
-    # identical data, so round(dot/(na·nb), 6) is bit-unchanged.
-    # Persist: both join sides read the same assignment subtree —
-    # without it the k-means assignment pass runs twice. Caching
-    # contract: the block lives until the session evicts it under
-    # storage pressure (LRU); callers looping over MANY corpora in one
-    # session pass ``persist=False`` (recompute-twice, zero residue)
-    # or unpersist the previous result's lineage themselves — do NOT
-    # reach for catalog.clearCache(), which drops every cached frame
-    # in the session including unrelated ones.
+    # Join tier: per-vector norms ONCE before the self-join (the pair
+    # scan would otherwise re-fold both 64-element norms for every
+    # pair — 3 interpreted array folds per pair down to 1; measured
+    # 9.2 s → 4.4 s at sf0.1). The norm value is the identical
+    # expression on identical data, so round(dot/(na·nb), 6) is
+    # bit-unchanged. Both join sides re-run the assignment pass.
     emb = emb.withColumn("norm", array_norm(F.col("v")))
-    if persist:
-        emb = emb.persist()
     a = emb.alias("a")
     b = emb.alias("b")
     return a.join(
@@ -993,9 +879,9 @@ def pq_train_encode(
     """Product-quantization training + encoding (Jégou et al. 2011,
     "Product quantization for nearest neighbor search" — the FAISS
     IVF-PQ compression path): the vector is split into ``m`` equal
-    subvectors, each subspace gets its own k-means codebook
-    (:func:`kmeans_train` — deterministic init, 6-dp distance
-    boundaries, integer micro-unit centroid means), and every vector is
+    subvectors, each subspace gets its own deterministic k-means
+    codebook (init from the first k ids, 6-dp distance boundaries,
+    integer micro-unit centroid means), and every vector is
     encoded as its ``m`` nearest-centroid code ids — dim·4 bytes
     compress to m·log2(k) bits.
 
@@ -1029,11 +915,12 @@ def pq_train_encode(
     unchanged) and the sampled mode is exercised by its own test;
     the crossover is corpus size, not k.
 
-    The per-subspace math is IDENTICAL to running :func:`kmeans_train`
-    on each slice (same init-from-first-k ids, same 6-dp distance
-    argmin with code tie-break, same exact integer micro-unit means,
-    empty clusters keep their previous centroid) — the DuckDB replay
-    of the sliced Lloyd chain stays valid.
+    This is its own fused Lloyd contract, not :func:`kmeans_train`'s:
+    the argmin compares 6-dp-rounded DOUBLE distances with code
+    tie-break (kmeans_train compares exact micro-grid integers); the
+    init and the exact integer micro-unit means with empty clusters
+    keeping their previous centroid are shared. Its DuckDB replay is
+    the sliced 6-dp Lloyd chain.
     """
     head = df.select(F.size(vec_col).alias("d")).first()
     if head is None:
@@ -1247,59 +1134,6 @@ def random_projection(
     )
 
 
-def assign_nearest_arrow(
-    df: DataFrame,
-    centroids: Sequence[Sequence[float]],
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Scale-tier nearest-centroid assignment: one Arrow-batched numpy
-    matmul per partition instead of k interpreted zip_with folds per
-    row — the path :func:`semantic_dedup_pairs`'s k-scaling note
-    prescribes past k ≈ 16, where the fold-expression assignment's
-    O(k)-per-row interpretation dominates (measured, sf0.1 at k=64:
-    3.3 s fold-path vs 0.31 s Arrow warm — 10×; and the gap widens
-    linearly in k).
-
-    ‖x−c‖² = ‖x‖² − 2x·c + ‖c‖², computed as one (batch × dim) @
-    (dim × k) BLAS product per Arrow batch; ‖x‖² is rank-constant so
-    argmin uses −2x·c + ‖c‖² only. Ties break on centroid id
-    (argmin returns the first minimum, matching the fold path's
-    (d, cid) struct-min).
-
-    NOT oracle-replayable: BLAS sums in SIMD order, so distances can
-    differ from the in-order fold in the last ulp — use the fold path
-    (:func:`kmeans_train` / :func:`_kmeans_assign_df`) wherever a
-    6-dp-rounded boundary must replay in SQL, and this one where k is
-    large and recall, not bit-parity, is the contract (production
-    SemDeDup / IVF assignment at web scale).
-
-    Returns (id, cluster).
-    """
-    import numpy as np
-    import pandas as pd
-
-    cents = np.asarray([[float(x) for x in c] for c in centroids], dtype="float64")
-    cent_t = cents.T.copy()
-    cent_sq = (cents * cents).sum(axis=1)
-
-    def batches(it):
-        for pdf in it:
-            if not len(pdf):  # mapInPandas can hand empty Arrow batches
-                continue      # and np.vstack raises on zero rows
-            mat = np.vstack(pdf["v"].to_numpy())
-            scores = mat @ cent_t * -2.0 + cent_sq
-            yield pd.DataFrame(
-                {"id": pdf["id"], "cluster": scores.argmin(axis=1).astype("int32")}
-            )
-
-    base = df.select(
-        F.col(id_col).alias("id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-    )
-    return base.mapInPandas(batches, "id long, cluster int")
-
-
 def _cluster_scoped_directed_pairs(
     df: DataFrame,
     k: int,
@@ -1307,8 +1141,6 @@ def _cluster_scoped_directed_pairs(
     vec_col: str,
     id_col: str,
     label_col: str | None,
-    tier: str = "auto",
-    persist: bool = True,
     pair_tier: str = "arrow",
 ) -> DataFrame:
     """Directed within-cluster candidate pairs for the per-anchor
@@ -1317,22 +1149,15 @@ def _cluster_scoped_directed_pairs(
     like :func:`semantic_dedup_pairs` (learned buckets, (n/k)² per
     cell, k grown with the corpus at scale), but pairs are DIRECTED
     (a ≠ b, not a < b) because each vector is an anchor retrieving
-    its own neighbors. Norms hoisted before the self-join; cosine
-    rounded to 6 dp. Returns (anchor, nid, [anchor_label, nlabel,]
-    cosine). ``persist`` caches the shared assignment subtree both
-    join sides read (same contract and caller escape hatch as
-    :func:`semantic_dedup_pairs` — sessions looping over many corpora
-    pass False or unpersist the previous lineage themselves)."""
-    from nyc_tlc_trip_data_pipelines_spark.operators.scalars import array_dot, array_norm
-
+    its own neighbors. Cosine rounded to 6 dp. Returns (anchor, nid,
+    [anchor_label, nlabel,] cosine)."""
     if pair_tier not in ("arrow", "join"):
         raise ValueError(f"pair_tier must be arrow|join, got {pair_tier!r}")
-    emb = _clustered_vectors(df, k, iterations, vec_col, id_col, tier, label_col)
+    emb = _clustered_vectors(df, k, iterations, vec_col, id_col, label_col)
     if pair_tier == "arrow":
         # Arrow grouped-map pair scan (r14 optimization): same
         # bit-identity contract and measured win as
-        # semantic_dedup_pairs' arrow tier; single reference → the
-        # join-tier persist is skipped.
+        # semantic_dedup_pairs' arrow tier.
         pairs = _pair_scan_arrow(
             emb, directed=True, with_labels=label_col is not None
         ).withColumn("cosine", F.round("cosine_raw", 6))
@@ -1341,8 +1166,6 @@ def _cluster_scoped_directed_pairs(
             out[2:2] = ["anchor_label", "nlabel"]
         return pairs.select(*out)
     emb = emb.withColumn("norm", array_norm(F.col("v")))
-    if persist:
-        emb = emb.persist()
     a, b = emb.alias("a"), emb.alias("b")
     out_cols = [
         F.col("a.id").alias("anchor"),
@@ -1371,8 +1194,6 @@ def hard_negative_pairs(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     label_col: str = "label",
-    tier: str = "auto",
-    persist: bool = True,
 ) -> DataFrame:
     """Contrastive hard-negative mining — the embedding-training data
     prep step behind every dense retriever / contrastive encoder
@@ -1391,7 +1212,7 @@ def hard_negative_pairs(
     from pyspark.sql import Window
 
     pairs = _cluster_scoped_directed_pairs(
-        df, k, iterations, vec_col, id_col, label_col, tier, persist
+        df, k, iterations, vec_col, id_col, label_col
     ).filter(F.col("anchor_label") != F.col("nlabel"))
     w = Window.partitionBy("anchor").orderBy(F.desc("cosine"), F.asc("nid"))
     return (
@@ -1409,8 +1230,6 @@ def knn_label_vote(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     label_col: str = "label",
-    tier: str = "auto",
-    persist: bool = True,
 ) -> DataFrame:
     """kNN label-noise detection (the confident-learning-family signal,
     cf. Northcutt et al. 2021 "Confident Learning": a label whose
@@ -1429,7 +1248,7 @@ def knn_label_vote(
     from pyspark.sql import Window
 
     pairs = _cluster_scoped_directed_pairs(
-        df, k, iterations, vec_col, id_col, label_col, tier, persist
+        df, k, iterations, vec_col, id_col, label_col
     )
     w = Window.partitionBy("anchor").orderBy(F.desc("cosine"), F.asc("nid"))
     nn = pairs.withColumn("rank", F.row_number().over(w)).filter(
@@ -1474,9 +1293,10 @@ def ivfpq_topk(
     the same codebook budget quantizes them much more finely.
 
     Deterministic end to end: coarse quantizer = :func:`kmeans_train`
-    (fold tier — the k=4 oracle contract), residual components rounded
-    to 6 dp, sub-codebooks trained by the same fused Lloyd chain on the
-    residuals, probe cells picked by 6-dp-rounded L2 distance with cid
+    (one micro-grid Lloyd iteration; centroids are micro-units / 10⁶),
+    residual components rounded to 6 dp, sub-codebooks trained by
+    :func:`pq_train_encode`'s fused Lloyd chain on the residuals,
+    probe cells picked by 6-dp-rounded L2 distance with cid
     tie-break (python replay uses HALF_UP rounding and in-order
     accumulation — bit-identical to the SQL fold), and the per-cell
     ADC lookup quantizes to integer micro-units so every per-vector
@@ -1509,7 +1329,7 @@ def ivfpq_topk(
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
     )
     assign, coarse = kmeans_train(
-        df, k=kc, iterations=1, vec_col=vec_col, id_col=id_col, tier="fold"
+        df, k=kc, iterations=1, vec_col=vec_col, id_col=id_col
     )
     cents = F.array(*[_as_vec_lit(c) for c in coarse])
     res = (

@@ -245,7 +245,7 @@ def test_iterative_checkpoints_are_released_after_gc(spark):
     pts = spark.createDataFrame(
         [(i, [float(i), 0.0]) for i in range(6)], "vec_id long, embedding array<float>"
     )
-    assigned, _ = V.kmeans_train(pts, k=2, tier="arrow")
+    assigned, _ = V.kmeans_train(pts, k=2)
     assigned.collect()
     del edges, pts, assigned
     assert stored_ids() - before  # the checkpoints were stored

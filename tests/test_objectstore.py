@@ -99,6 +99,12 @@ def test_discover_files_matches_s3_semantics(tmp_path, spark):
         os.path.join(str(tmp_path), "a_2024-01.parquet"),
         os.path.join(str(tmp_path), "b_2024-02.parquet"),
     ]
+    # the file: URI spelling of the same root lists the same files
+    uri = "file://" + str(tmp_path)
+    assert eio.discover_files(uri) == [
+        uri + "/a_2024-01.parquet",
+        uri + "/b_2024-02.parquet",
+    ]
 
 
 def test_append_idempotent_retry_no_duplicates(tmp_path, spark):

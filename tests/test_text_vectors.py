@@ -407,19 +407,16 @@ def test_kmeans_separates_obvious_clusters():
 
 def test_kmeans_assignment_pass_is_shuffle_free():
     # the per-iteration model readback is k*dim rows; the FINAL
-    # assignment over the corpus must be pure map-side codegen
+    # assignment over the corpus must be a map-side Arrow pass
     from nyc_tlc_trip_data_pipelines_spark.catalog import load_table
     from nyc_tlc_trip_data_pipelines_spark.operators import vectors as V
     from nyc_tlc_trip_data_pipelines_spark.plans import exchange_count
     from nyc_tlc_trip_data_pipelines_spark.session import get_spark
-    from pyspark.sql import functions as F
 
     spark = get_spark("engine-tests")
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings").select(
-        F.col("vec_id").alias("id"),
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-    )
-    out = V._kmeans_assign_df(emb, [[0.0] * 64, [1.0] * 64])
+    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
+    emb_q = V._quantize_micro(emb, "embedding", "vec_id")
+    out = V._assign_micro_df(emb_q, [[0] * 64, [1000000] * 64])
     assert exchange_count(out) == 0
 
 
@@ -512,8 +509,7 @@ def test_pair_scan_arrow_tier_bit_identical(spark, sf_dir):
     """r14 optimization fence: the Arrow grouped-map pair scan must be
     BIT-identical to the join+fold formulation — same pair set, same
     6-dp cosine on every pair — for both the undirected (SemDeDup) and
-    the directed labeled (hard-negative/kNN) shapes, at fold (k=4) and
-    arrow (k=32) assignment tiers."""
+    the directed labeled (hard-negative/kNN) shapes, at k=4 and k=32."""
     from pyspark.sql import functions as F
 
     from nyc_tlc_trip_data_pipelines_spark.catalog import load_table
@@ -711,60 +707,13 @@ def test_pca_empty_input_and_unit_start_vector(spark):
     assert abs(out[0]["eigenvalue"] - 2.5) < 0.01
 
 
-def test_assign_nearest_arrow_agrees_with_fold_path(spark):
-    from pyspark.sql import functions as F
-
-    from nyc_tlc_trip_data_pipelines_spark.operators.vectors import (
-        _kmeans_assign_df,
-        assign_nearest_arrow,
-    )
-
-    import numpy as np
-
-    r = np.random.RandomState(3)
-    rows = [(i, [float(x) for x in r.randn(8)]) for i in range(200)]
-    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
-    cents = [rows[i][1] for i in range(6)]
-    base = df.select(
-        F.col("vec_id").alias("id"),
-        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("v"),
-    )
-    fold = {r["id"]: r["cluster"] for r in _kmeans_assign_df(base, cents).collect()}
-    arrow = {
-        r["id"]: r["cluster"] for r in assign_nearest_arrow(df, cents).collect()
-    }
-    # BLAS vs in-order folds differ only in last-ulp distances; on
-    # non-degenerate data the argmin agrees everywhere
-    assert fold == arrow
-
-
-def test_kmeans_arrow_tier_matches_fold_on_separated_blobs(spark):
-    """The two tiers are distinct contracts (6-dp double vs micro-grid
-    distances) that can only disagree on near-ties within quantization
-    error; on well-separated blobs they must produce the SAME
-    clustering and micro-grid-identical centroids."""
-    from nyc_tlc_trip_data_pipelines_spark.operators import vectors as V
-
-    pts = [(i, [0.0 + 0.01 * i, 0.0]) for i in range(5)] + [
-        (i, [10.0 + 0.01 * i, 10.0]) for i in range(5, 10)
-    ]
-    df = spark.createDataFrame(pts, "vec_id long, embedding array<float>")
-    fold_a, fold_c = V.kmeans_train(df, k=2, iterations=2, tier="fold")
-    arr_a, arr_c = V.kmeans_train(df, k=2, iterations=2, tier="arrow")
-    assert {r.id: r.cluster for r in fold_a.collect()} == {
-        r.id: r.cluster for r in arr_a.collect()
-    }
-    for cf, ca in zip(fold_c, arr_c):
-        assert all(abs(a - b) < 1e-6 for a, b in zip(cf, ca))
-
-
 def test_kmeans_arrow_tier_is_deterministic_and_auto_selects(spark):
     from nyc_tlc_trip_data_pipelines_spark.operators import vectors as V
     from nyc_tlc_trip_data_pipelines_spark.catalog import load_table
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    a1, c1 = V.kmeans_train(emb, k=20, iterations=1)  # auto -> arrow (k > 16)
-    a2, c2 = V.kmeans_train(emb, k=20, iterations=1, tier="arrow")
+    a1, c1 = V.kmeans_train(emb, k=20, iterations=1)
+    a2, c2 = V.kmeans_train(emb, k=20, iterations=1)
     assert c1 == c2
     assert {r.id: r.cluster for r in a1.collect()} == {
         r.id: r.cluster for r in a2.collect()
@@ -776,14 +725,14 @@ def test_kmeans_arrow_tier_is_deterministic_and_auto_selects(spark):
             assert abs(x * 1e6 - round(x * 1e6)) < 1e-6
     import pytest
 
-    with pytest.raises(ValueError):
-        V.kmeans_train(emb, k=4, tier="blas")
     with pytest.raises(ValueError, match="rows < k"):
-        V.kmeans_train(emb.limit(3), k=20)  # auto -> arrow, n < k
+        V.kmeans_train(emb.limit(3), k=20)
+    with pytest.raises(ValueError, match="rows < k"):
+        V.kmeans_train(emb.limit(3), k=4)
 
 
 def test_kmeans_arrow_evaluates_input_once(spark):
-    """The Arrow-tier Lloyd loop quantizes its input once: the init,
+    """The Lloyd loop quantizes its input once: the init,
     each round and the final assignment read the materialized copy."""
     seen = spark.sparkContext.accumulator(0)
 
@@ -796,7 +745,7 @@ def test_kmeans_arrow_evaluates_input_once(spark):
     df = spark.createDataFrame(pts, "vec_id long, embedding array<float>").select(
         counted("vec_id").alias("vec_id"), "embedding"
     )
-    assigned, _ = V.kmeans_train(df, k=3, iterations=2, tier="arrow")
+    assigned, _ = V.kmeans_train(df, k=3, iterations=2)
     assert len(assigned.collect()) == len(pts)
     assert seen.value == len(pts)
 
@@ -812,7 +761,7 @@ def test_kmeans_arrow_partial_sums_match_row_aggregate(spark, sf_dir):
     old = spark.conf.get(key)
     spark.conf.set(key, "7")
     try:
-        _, got = V.kmeans_train(emb, k=k, iterations=iterations, tier="arrow")
+        _, got = V.kmeans_train(emb, k=k, iterations=iterations)
         emb_q = V._quantize_micro(emb, "embedding", "vec_id")
         cents = [list(r.vq) for r in emb_q.orderBy("id").limit(k).collect()]
         for _ in range(iterations):
@@ -830,22 +779,42 @@ def test_kmeans_arrow_partial_sums_match_row_aggregate(spark, sf_dir):
     assert got == [[c / 1e6 for c in cent] for cent in cents]
 
 
-def test_auto_tier_boundary_is_k16(spark):
-    """auto keeps the codegen fold path through k=16 and switches to
-    the Arrow micro tier at k=17 — pinned via the physical plan (the
-    Arrow tier plans a MapInArrow node; the fold tier stays pure
-    expression)."""
+def test_kmeans_plans_map_in_arrow_at_every_k(spark):
+    """One k-means contract: below and above the old k=16 fold/Arrow
+    boundary the final assignment plans the same MapInArrow pass."""
     from nyc_tlc_trip_data_pipelines_spark.catalog import load_table
     from nyc_tlc_trip_data_pipelines_spark.operators import vectors as V
     from nyc_tlc_trip_data_pipelines_spark.plans import plan_string
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    at16, _ = V.kmeans_train(emb, k=16, iterations=1)
-    at17, _ = V.kmeans_train(emb, k=17, iterations=1)
-    p16 = plan_string(at16, "simple")
-    p17 = plan_string(at17, "simple")
-    assert "MapIn" not in p16 and "ArrowEval" not in p16
-    assert "MapInArrow" in p17
+    for k in (4, 17):
+        assigned, _ = V.kmeans_train(emb, k=k, iterations=1)
+        assert "MapInArrow" in plan_string(assigned, "simple")
+
+
+def test_kmeans_null_id_never_seeds_a_centroid(spark):
+    """Spark sorts NULLs first, so a NULL-id row used to become an
+    initial centroid and pull every real point into one cluster. NULL
+    ids take no part: two blobs stay two clusters, with no assignment
+    for the NULL row."""
+    from nyc_tlc_trip_data_pipelines_spark.operators import vectors as V
+
+    # even ids near (0, 0), odd ids near (10, 10): ids 0 and 1 seed
+    # one centroid in each blob
+    pts = [(i, [10.0 * (i % 2) + 0.01 * i, 10.0 * (i % 2)]) for i in range(10)]
+    df = spark.createDataFrame(
+        [(None, [100.0, 100.0])] + pts, "vec_id long, embedding array<double>"
+    )
+    assigned, cents = V.kmeans_train(df, k=2, iterations=2)
+    got = {r.id: r.cluster for r in assigned.collect()}
+    assert set(got) == set(range(10))
+    assert len({got[i] for i in range(0, 10, 2)}) == 1
+    assert len({got[i] for i in range(1, 10, 2)}) == 1
+    assert got[0] != got[1]
+    assert [100.0, 100.0] not in cents
+    pairs = V.semantic_dedup_pairs(df, k=2, iterations=2).collect()
+    assert len(pairs) == 2 * 10  # C(5, 2) within each blob
+    assert all(r.id_a is not None and r.id_b is not None for r in pairs)
 
 
 def test_pq_sample_trained_codebooks_encode_full_corpus(spark):

@@ -13,8 +13,9 @@ N file entries × 3 stat columns it records:
   fetched_bytes`),
 - local ``try_commit`` wall (write + fsync + link — the upper bound of
   the local claim; S3 adds one PUT round-trip of `size` bytes),
-- ``_zone_select`` planning time for a 3-conjunct predicate (the pure
-  driver-side Python loop every pruned read runs).
+- ``_zone_select`` planning time for a 3-conjunct predicate that
+  keeps about 1% of the files (the pure driver-side Python loop every
+  pruned read runs).
 
 Run: ``python tools/zone_boundary.py [N ...]`` (default 10k 30k 100k).
 Prints one aligned row per N; paste the table into DESIGN.md.
@@ -27,6 +28,7 @@ import os
 import sys
 import tempfile
 import time
+from datetime import datetime
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -36,8 +38,9 @@ from nyc_tlc_trip_data_pipelines_spark import io as eio  # noqa: E402
 def synth_meta(n_files: int, n_jobs: int = 1) -> dict:
     """A manifest shaped like a real OPTIMIZEd table at scale: n_files
     entries split over n_jobs jobs, 3 stat columns each (two numeric
-    z-order dims + one timestamp), bounds laid out so a 3-conjunct
-    rectangle keeps ~1% of files."""
+    z-order dims + one timestamp), bounds laid out so
+    :func:`select_conjuncts` keeps ~1% of files: file k spans
+    x ∈ [10k, 10k+9] and the day (k mod 28) + 1."""
     per = n_files // n_jobs
     zones: dict = {}
     job_ids = []
@@ -68,6 +71,16 @@ def synth_meta(n_files: int, n_jobs: int = 1) -> dict:
     }
 
 
+def select_conjuncts(n_files: int) -> list:
+    """A 10% x window (files 0.4·N … 0.5·N) and the first 3 of 28 days:
+    about 10% × 3/28 ≈ 1.1% of the files survive."""
+    return [
+        ("x", ">=", n_files * 4),
+        ("x", "<", n_files * 5),
+        ("ts", "<", datetime(2024, 1, 4)),
+    ]
+
+
 def bench_n(n_files: int) -> dict:
     meta = synth_meta(n_files)
 
@@ -91,13 +104,12 @@ def bench_n(n_files: int) -> dict:
         assert mio.try_commit(0, meta)
         t_commit = time.perf_counter() - t0
 
-    conj = eio._normalize_prune(
-        [("x", ">=", n_files * 5), ("x", "<", n_files * 5 + 500), ("y", "<", 5_000)]
-    )
+    conj = eio._normalize_prune(select_conjuncts(n_files))
     t0 = time.perf_counter()
     paths, kept, total = eio._zone_select("/tbl", meta, conj)
     t_select = time.perf_counter() - t0
     assert total == n_files and paths is not None
+    assert 0 < kept < total, f"predicate kept {kept} of {total} files"
 
     return {
         "n_files": n_files,
