@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from nyc_tlc_trip_data_pipelines_spark.catalog import load_table
+from nyc_tlc_trip_data_pipelines_spark.io import scratch_dir
 from nyc_tlc_trip_data_pipelines_spark.operators import aggregates as agg
 from nyc_tlc_trip_data_pipelines_spark.operators import corpus as CP
 from nyc_tlc_trip_data_pipelines_spark.operators import dq as DQ
@@ -1842,7 +1843,7 @@ def _replay_events(spark: SparkSession, sf: str, parts: int = 4):
     from nyc_tlc_trip_data_pipelines_spark.streaming import read_file_stream
 
     ev = load_table(spark, sf, "events")
-    d = tempfile.mkdtemp(prefix="events_replay_")
+    d = scratch_dir("events_replay_")
     path = os.path.join(d, "events")
     ev.repartition(parts).write.mode("overwrite").parquet(path)
     static = spark.read.parquet(path)
@@ -2417,13 +2418,13 @@ def q_zonemap_prune(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def q_versioned_zone_skip(spark: SparkSession, sf: str) -> DataFrame:
-    """Round-13 engine feature: manifest-level data skipping on
-    versioned tables. ``optimize_versioned(cluster_by=...)`` records
-    per-file min/max ``zones`` for the cluster columns in the manifest
-    it commits (the Delta-log ``add``-action stats analog), and
+    """Manifest-level data skipping on versioned tables.
+    ``optimize_versioned(cluster_by=...)`` records per-file min/max
+    ``zones`` for the cluster columns in the manifest it commits (the
+    Delta-log ``add``-action stats analog), and
     ``read_version(prune=...)`` drops files whose zone disproves a
     predicate BEFORE Spark opens a single footer — the read-path payoff
-    of the round-12 Z-ORDER layout. Events appended as one versioned
+    of the Z-ORDER layout. Events appended as one versioned
     job, z-order-optimized on (user_id, value); a 3-conjunct range read
     must return exactly the plain-filter rows (full DuckDB oracle).
     The file-skipping booleans follow the q_zonemap_prune SF-robust
@@ -2434,21 +2435,21 @@ def q_versioned_zone_skip(spark: SparkSession, sf: str) -> DataFrame:
     from nyc_tlc_trip_data_pipelines_spark.io import (
         append_versioned,
         optimize_versioned,
-        read_version_where,
+        read_version,
         zone_prune_stats,
     )
 
     ev = load_table(spark, sf, "events").select("event_id", "user_id", "value")
     # ONE conjunct list drives both the zone skip and the row filters
-    # (read_version_where, round-14 verdict item 2 — the predicate
-    # cannot diverge from its correctness-protecting residual)
+    # (the predicate cannot diverge from its correctness-protecting
+    # residual)
     P = [("user_id", ">=", 10), ("user_id", "<", 40), ("value", "<", 250.0)]
     with tempfile.TemporaryDirectory() as d:
         path = os.path.join(d, "versioned_z")
         append_versioned(ev.repartition(8), path, "batch0")
         optimize_versioned(spark, path, target_mb=1, cluster_by=["user_id", "value"])
         st = zone_prune_stats(path, prune=P)
-        row = read_version_where(spark, path, P).agg(
+        row = read_version(spark, path, prune=P).agg(
             F.count(F.lit(1)).alias("n_rows"),
             F.round(F.sum("value"), 4).alias("sum_value"),
             F.countDistinct("user_id").alias("n_users"),
@@ -2470,7 +2471,7 @@ def q_versioned_zone_skip(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def q_versioned_sidecar(spark: SparkSession, sf: str) -> DataFrame:
-    """Round-14 engine feature: zone-stat SIDECARS. Inline manifest
+    """Zone-stat SIDECARS. Inline manifest
     zones are measured-wrong past ~30k file entries (tools/
     zone_boundary.py: 16 MB re-uploaded AND byte-compared per commit
     at 100k files, 128 MB at a 100 TB table's 800k), so a per-job
@@ -2481,7 +2482,7 @@ def q_versioned_sidecar(spark: SparkSession, sf: str) -> DataFrame:
     OPTIMIZEs clustered so the rewrite records a sidecar-backed zone
     map, checks the manifest holds a MARKER exactly when the packing
     rule says so, and reads through the marker with
-    ``read_version_where`` — the rows must equal the plain filter
+    ``read_version(prune=...)`` — the rows must equal the plain filter
     (full DuckDB oracle). ``spill_rule_ok`` asserts marker-present ==
     (file count >= threshold) so the column is SF-robust (a tiny SF
     that compacts to one file legitimately stays inline); ``pruned``
@@ -2517,7 +2518,7 @@ def q_versioned_sidecar(spark: SparkSession, sf: str) -> DataFrame:
             marker = isinstance(z, dict) and isinstance(z.get("sidecar"), str)
             spill_rule_ok = marker == (n_files >= _io.ZONE_SIDECAR_MIN_FILES)
             st = _io.zone_prune_stats(path, prune=P)
-            row = _io.read_version_where(spark, path, P).agg(
+            row = _io.read_version(spark, path, prune=P).agg(
                 F.count(F.lit(1)).alias("n_rows"),
                 F.round(F.sum("value"), 4).alias("sum_value"),
                 F.countDistinct("user_id").alias("n_users"),
@@ -2657,7 +2658,7 @@ def q_stream_foreach_batch(spark: SparkSession, sf: str) -> DataFrame:
     from nyc_tlc_trip_data_pipelines_spark import streaming as ST
 
     stream = _replay_events(spark, sf)
-    d = tempfile.mkdtemp(prefix="fbsink_")
+    d = scratch_dir("fbsink_")
     q = ST.foreach_batch_parquet_sink(
         stream.select("event_id", "user_id", "value"),
         os.path.join(d, "out"),
@@ -2703,7 +2704,7 @@ def q_stream_cdc_apply(spark: SparkSession, sf: str) -> DataFrame:
         "c_custkey", "c_name", F.lit(0.0).alias("bal"),
         F.lit("D").alias("op"), F.lit(3).alias("seq"),
     )
-    d = tempfile.mkdtemp(prefix="cdc_stream_")
+    d = scratch_dir("cdc_stream_")
     src = os.path.join(d, "changelog")
     for batch in (ins, upd, dels):  # one file each → one micro-batch each
         batch.coalesce(1).write.mode("append").parquet(src)
@@ -2731,7 +2732,7 @@ def q_stream_quarantine(spark: SparkSession, sf: str) -> DataFrame:
     from nyc_tlc_trip_data_pipelines_spark import streaming as ST
 
     stream = _replay_events(spark, sf)
-    d = tempfile.mkdtemp(prefix="quarantine_")
+    d = scratch_dir("quarantine_")
     valid = (
         F.col("value").isNotNull()
         & (F.col("value") >= 0)
@@ -5547,7 +5548,9 @@ def q_stream_source_custom(spark: SparkSession, sf: str) -> DataFrame:
     from nyc_tlc_trip_data_pipelines_spark import datasource as DSRC
 
     DSRC.register(spark)
-    d = tempfile.mkdtemp(prefix="osls_q_")
+    base = scratch_dir("osls_q_")
+    d = os.path.join(base, "objects")
+    os.makedirs(d)
     for i in range(16):
         with open(os.path.join(d, f"obj_{i:02d}.bin"), "wb") as fh:
             fh.write(b"x" * (i * 10 + 3))
@@ -5571,7 +5574,7 @@ def q_stream_source_custom(spark: SparkSession, sf: str) -> DataFrame:
         .option("batch_size", "5")
         .load()
         .writeStream.foreachBatch(fb)
-        .option("checkpointLocation", d + "_ckpt")
+        .option("checkpointLocation", os.path.join(base, "ckpt"))
         .start()
     )
     t0 = _time.time()

@@ -12,7 +12,6 @@ and ``addPyFile`` it once per SparkContext.
 from __future__ import annotations
 
 import os
-import tempfile
 import zipfile
 
 from pyspark.sql import SparkSession
@@ -26,7 +25,9 @@ def ensure_package_on_executors(spark: SparkSession) -> None:
         return
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     root = os.path.dirname(pkg_dir)
-    zpath = os.path.join(tempfile.gettempdir(), f"nyc_tlc_pkg_{os.getpid()}.zip")
+    from nyc_tlc_trip_data_pipelines_spark.io import scratch_dir
+
+    zpath = os.path.join(scratch_dir("nyc_tlc_pkg_"), "nyc_tlc_pkg.zip")
     with zipfile.ZipFile(zpath, "w") as zf:
         for dirpath, _dirnames, filenames in os.walk(pkg_dir):
             if "__pycache__" in dirpath:

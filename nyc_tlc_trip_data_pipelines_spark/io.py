@@ -20,12 +20,7 @@ vacuum deletes, run logs — in ONE path on every scheme: the
 :mod:`objectstore` store for the table path (write-fsync-link claim
 on a local path or ``file:`` URI, S3 conditional-PUT claim and
 batched deletes on ``s3://``/``s3a://``); unknown schemes
-(``hdfs://``) fail loudly in ``objectstore.get_store``. (The old
-``compact_dir`` rename-swap path was deleted in round 13 — it was
-deprecated in round 12 with zero non-test callers and is strictly
-dominated by ``optimize_versioned``.) A real Delta
-deployment can still point the same call sites at delta-spark
-(deltastore.py, import-guarded).
+(``hdfs://``) fail loudly in ``objectstore.get_store``.
 
 100 TB notes:
 - Partitioned writes give dynamic partition pruning on read — a query
@@ -38,9 +33,12 @@ deployment can still point the same call sites at delta-spark
 
 from __future__ import annotations
 
+import atexit
 import json
 import os
 import re
+import shutil
+import tempfile
 import time
 from collections.abc import Sequence
 from datetime import datetime, timezone
@@ -49,6 +47,16 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 
 from nyc_tlc_trip_data_pipelines_spark import objectstore
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh local temp directory that is removed at interpreter exit
+    — for files a returned DataFrame still reads lazily, which therefore
+    cannot be deleted when the call returns."""
+    d = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, d, True)
+    return d
+
 
 # --- sources ---------------------------------------------------------------
 
@@ -202,6 +210,7 @@ class _ManifestIO:
     loudly inside :func:`objectstore.get_store`."""
 
     def __init__(self, path: str):
+        self.path = path
         self.store = objectstore.get_store(path)
 
     def list_versions(self) -> list[tuple[int, list[str]]]:
@@ -219,7 +228,7 @@ class _ManifestIO:
         LIST per 1000 versions, ZERO GETs (a local listing walks only
         ``_manifests``). S3 listings are strongly consistent
         (read-after-write since 2020), so the max is the true tip. The
-        commit hot path needs just this (round 12)."""
+        commit hot path needs just this."""
         out = []
         for page in self.store.iter_pages("_manifests/v"):
             for key in page:
@@ -275,32 +284,28 @@ def _with_bases(raw: set[str]) -> set[str]:
 def _tip_state(mio) -> tuple[int | None, list[str], set[str], dict]:
     """(tip version or None, tip job list, RAW ever-union of every
     job_id ever committed, tip manifest dict) — the commit hot path's
-    entire read. The meta dict rides along (round 13) so commit paths
-    can carry the cumulative ``zones`` file-stats forward without a
-    second GET; it is ``{}`` on an empty table.
+    entire read. The meta dict rides along so commit paths can carry
+    the cumulative ``zones`` file-stats forward without a second GET;
+    it is ``{}`` on an empty table.
 
-    Round 12: each manifest carries a cumulative ``ever`` field
-    (every job_id committed under any name up to that version), so
-    this is ONE name-only LIST plus ONE manifest GET regardless of
-    chain length — on S3 that turns an O(versions) GET storm per
-    append into O(1), the same scaling role as Delta's checkpoints.
-    It also makes retry dedup survive :func:`vacuum_versioned`:
-    vacuum deletes old manifests, and before ``ever`` the dedup union
-    forgot vacuumed job_ids — a crash-looped retry of an ancient job
-    could then re-append rows a DELETE had removed. The tip manifest
-    now remembers them forever. Pre-round-12 tables (no ``ever`` in
-    the tip) fall back to the full-chain scan once; their next commit
-    writes the field."""
+    Each manifest carries a cumulative ``ever`` field (every job_id
+    committed under any name up to that version), so this is ONE
+    name-only LIST plus ONE manifest GET regardless of chain length —
+    on S3 O(1) GETs per append, the scaling role of Delta's
+    checkpoints — and retry dedup survives :func:`vacuum_versioned`,
+    which deletes the old manifests. A tip without ``ever`` raises
+    ``ValueError``: its dedup history cannot be trusted."""
     nums = mio.list_version_numbers()
     if not nums:
         return None, [], set(), {}
     tip = max(nums)
     meta = mio.read_meta(tip)
-    jobs = list(meta["job_ids"])
-    if "ever" in meta:
-        return tip, jobs, set(meta["ever"]), meta
-    raw = {j for _v, js in mio.list_versions() for j in js}
-    return tip, jobs, raw, meta
+    if "ever" not in meta:
+        raise ValueError(
+            f"{mio.path}: tip manifest v{tip} has no 'ever' field; "
+            "retry dedup cannot be resolved"
+        )
+    return tip, list(meta["job_ids"]), set(meta["ever"]), meta
 
 
 def _zone_json(v):
@@ -542,7 +547,7 @@ def append_versioned(
       — or whose manifests were since reclaimed by
       :func:`vacuum_versioned` — does NOT resurrect the deleted rows:
       every manifest carries a cumulative ``ever`` field (all job ids
-      committed under any name up to that version, round 12), so the
+      committed under any name up to that version), so the
       dedup reads ONE manifest instead of the whole chain (O(1) GETs
       on S3 — the scaling role of Delta's checkpoints) and remembers
       vacuumed history forever.
@@ -623,10 +628,6 @@ def append_versioned(
         zones = _carry_zones(tip_meta, payload["job_ids"], new_zones)
         if zones:
             payload["zones"] = zones
-        if tip_meta.get("clustering"):
-            # carried like ever/zones — appends must not make the table
-            # forget it was clustered (round-14 verdict item 4)
-            payload["clustering"] = tip_meta["clustering"]
         if not mio.try_commit(n, payload):
             continue  # lost the race — re-read and claim the next version
         return n
@@ -739,7 +740,6 @@ def _commit_manifest(
     job_ids: list[str],
     base_version: int | None = None,
     new_zones: dict | None = None,
-    clustering: dict | None = None,
 ) -> int:
     """Atomically commit the next manifest version (write-fsync-link
     optimistic claim shared by append/delete/merge).
@@ -757,9 +757,9 @@ def _commit_manifest(
     ``os.link``; S3 conditional PUT), so delete/merge commit with the
     same semantics on every backend.
 
-    Round 13 (ADVICE): the payload embeds a per-writer ``writer`` nonce.
-    The S3 claim's 412 self-claim detection compares bytes, and
-    delete/optimize manifests are otherwise fully deterministic
+    The payload embeds a per-writer ``writer`` nonce. The S3 claim's
+    412 self-claim detection compares bytes, and delete/optimize
+    manifests are otherwise fully deterministic
     (rewrite names derive from base job names + version; json key
     order is stable) — two concurrent ``delete_where`` calls with
     DIFFERENT conditions from the same base could byte-collide, both
@@ -770,13 +770,6 @@ def _commit_manifest(
     self-claims the case it exists for: botocore's transport-level
     re-send of a lost response replays the SAME payload bytes, nonce
     included.
-
-    Round 14 (verdict item 4): ``clustering`` — the table's recorded
-    layout config (``{"cluster_by", "hash_strings", "zorder_bits"}``,
-    written by ``optimize_versioned(cluster_by=...)``) — is carried
-    forward from the tip like ``ever``/``zones`` when not explicitly
-    passed, so a later maintenance OPTIMIZE knows the table WAS
-    clustered and on what.
     """
     import uuid
 
@@ -800,9 +793,6 @@ def _commit_manifest(
         zones = _carry_zones(_meta, job_ids, new_zones)
         if zones:
             payload["zones"] = zones
-        clus = clustering if clustering is not None else _meta.get("clustering")
-        if clus:
-            payload["clustering"] = clus
         if mio.try_commit(n, payload):
             return n
         if base_version is not None:
@@ -1086,14 +1076,10 @@ def read_version(
     dropped by the default footer-on-faith schema (the exact trap
     :func:`read_parquet_merged`'s docstring warns about). At 100 TB
     scale cache the merged schema in a catalog rather than re-merging
-    footers per read.
+    footers per read. Resolves via a name-only manifest LIST plus ONE
+    manifest GET.
 
-    Round 12: resolves via a name-only manifest LIST plus ONE manifest
-    GET — the read analog of the ``ever`` commit-path fix; previously
-    every AS-OF read fetched EVERY manifest body just to look up one
-    version's job set.
-
-    ``prune`` (round 13): conjunctive simple predicates
+    ``prune``: conjunctive simple predicates
     ``[(col, op, value), ...]`` with op in ``=,==,<,<=,>,>=,in``
     (``in`` takes a non-empty scalar list — the point-set lookup a
     clustered key serves best). Each is
@@ -1131,10 +1117,10 @@ def read_version(
                         .parquet(*paths)
                     )
                 except AnalysisException:
-                    # Round-14 ADVICE: the manifest's zone file names can
-                    # go stale — a concurrent retry of the same job_id
-                    # may overwrite its directory (fresh part-file names)
-                    # between the committer's stats scan and its commit.
+                    # The manifest's zone file names can go stale — a
+                    # concurrent retry of the same job_id may overwrite
+                    # its directory (fresh part-file names) between the
+                    # committer's stats scan and its commit.
                     # A missing file must degrade to the UNPRUNED read
                     # (correct, just slower), never fail the query.
                     df = None
@@ -1164,27 +1150,6 @@ def read_version(
         else:
             out = out.filter(col >= F.lit(v))
     return out
-
-
-def read_version_where(
-    spark: SparkSession,
-    path: str,
-    conjuncts: Sequence[tuple],
-    version: int | None = None,
-) -> DataFrame:
-    """Single-source predicate read over a versioned table (round-14
-    verdict item 2): ONE conjunct list ``[(col, op, value), ...]``
-    (op in ``=,==,<,<=,>,>=,in``) drives BOTH the manifest zone-map
-    file skipping AND the row-level residual filters — the predicate
-    exists exactly once, so the pruning spec and the
-    correctness-protecting filter can never diverge. This is the
-    ergonomic front door for predicate reads; it shares its entire
-    implementation (and therefore the oracle invariant
-    ``read_version_where(..., P) ≡ read_version(...) + filters(P)``,
-    hypothesis-tested in tests/test_properties.py) with
-    ``read_version(prune=...)``. Pair with :func:`zone_prune_stats`
-    on the same conjunct list for planning-time skip diagnostics."""
-    return read_version(spark, path, version=version, prune=conjuncts)
 
 
 def zone_prune_stats(
@@ -1261,37 +1226,24 @@ def vacuum_versioned(path: str, retain_last: int = 1) -> tuple[int, int]:
     pruning locally). The second count is the number of distinct
     partition prefixes removed.
 
-    Round 14: also sweeps orphaned zone-stat SIDECARS — zstats files
-    no retained manifest references (vacuumed jobs, losing retries'
+    It also sweeps orphaned zone-stat SIDECARS — zstats files no
+    retained manifest references (vacuumed jobs, losing retries'
     never-referenced uploads), with a 60 s mtime grace for in-flight
-    writers between sidecar PUT and commit.
+    writers between sidecar PUT and commit. A tip manifest without
+    ``ever`` raises ``ValueError`` before anything is deleted: dropping
+    the old manifests would lose the retry-dedup history.
     """
     retain_last = max(1, retain_last)
     mio = _manifest_io(path)
-    versions = mio.list_versions()
-    if not versions:
+    tip, _jobs, _raw, tip_meta = _tip_state(mio)
+    if tip is None:
         raise ValueError(f"no versions committed under {path}")
-    tip_meta = mio.read_meta(versions[-1][0])
     job_col = tip_meta["job_col"]
-    if "ever" not in tip_meta:
-        # Round-13 ADVICE: a pre-round-12 tip has no cumulative ``ever``
-        # field, and this function is about to delete the old manifests
-        # that _tip_state's full-chain fallback would need — vacuuming
-        # first would permanently lose the retry-dedup history, so a
-        # crash-looped retry of a vacuumed job_id could re-append rows a
-        # DELETE removed. Checkpoint the full-chain union into a fresh
-        # tip manifest (same job set; _commit_manifest derives ``ever``
-        # from _tip_state, whose fallback scans the still-intact chain)
-        # before dropping anything.
-        _commit_manifest(
-            path, job_col, list(tip_meta["job_ids"]), base_version=versions[-1][0]
-        )
-        versions = mio.list_versions()
+    versions = mio.list_versions()
     dropped = versions[:-retain_last]
     retained_jobs = {j for _v, jobs in versions[-retain_last:] for j in jobs}
     prefix = f"{job_col}="
-    # Round-14 (sidecar follow-through): sweep orphaned zone-stat
-    # sidecars (`_manifests/zstats/<job>.<sha12>.json`, _pack_zones).
+    # Sweep orphaned zone-stat sidecars (`_manifests/zstats/<job>.<sha12>.json`, _pack_zones).
     # Vacuumed jobs — and the never-referenced sidecars of losing
     # same-job retries — leave orphans that would otherwise accumulate
     # forever (one per rewrite). Referenced = named by ANY retained
@@ -1337,9 +1289,7 @@ def vacuum_versioned(path: str, retain_last: int = 1) -> tuple[int, int]:
     return len(dropped), len(doomed_dirs)
 
 
-def _zorder_value(
-    df: DataFrame, cols: Sequence[str], bits: int = 6, hash_strings: bool = False
-):
+def _zorder_value(df: DataFrame, cols: Sequence[str], bits: int = 6):
     """Z-order (Morton) clustering key over ``cols`` — the expression
     behind ``optimize_versioned(cluster_by=...)``, the analog of Delta
     Lake's ``OPTIMIZE ... ZORDER BY`` (public OSS feature; same
@@ -1365,17 +1315,6 @@ def _zorder_value(
     Columns must be numeric/date/timestamp (cast to double for the
     sketch); NULLs sort into bucket 0. Returns a Column producing a
     ``bits * len(cols)``-bit integer.
-
-    ``hash_strings`` (round 13, opt-in): string columns map through
-    ``xxhash64`` — uniform by construction, so FIXED-WIDTH bucketing
-    (the hash's top ``bits`` bits) replaces the quantile sketch for
-    those dimensions; they cost no sketch pass at all. The trade-off
-    is documented, not hidden: a hash surrogate preserves EQUALITY
-    locality (all files holding key K share K's hash bucket → point
-    lookups skip files) but destroys ORDER, so range predicates on a
-    hashed string dimension prune nothing. Off by default so the loud
-    type error keeps telling users who expected range skipping why
-    strings differ.
     """
     from pyspark.sql import functions as F
 
@@ -1383,64 +1322,41 @@ def _zorder_value(
         raise ValueError("bits * len(cols) must fit a 60-bit z-value")
     n_buckets = 1 << bits
     qs = [i / n_buckets for i in range(1, n_buckets)]
-    plans: list[tuple[str, object]] = []  # ("sketch", numcol) | ("hash", name)
+    nums = []
     dtypes = dict(df.dtypes)
     for c in cols:
         dt = dtypes.get(c)
         if dt is None:
             raise ValueError(f"cluster_by column {c!r} not in DataFrame")
-        if dt == "string" and hash_strings:
-            plans.append(("hash", c))
-            continue
         if dt in ("string", "binary") or dt.startswith(("array", "map", "struct")):
-            hint = (
-                "pass hash_strings=True for xxhash64 surrogate bucketing "
-                "(point-lookup skipping only — hashing destroys range order)"
-                if dt == "string"
-                else "hash to a numeric surrogate first"
-            )
             raise ValueError(
                 f"cluster_by column {c!r} has type {dt}; z-order clustering "
-                f"needs a numeric/date/timestamp column ({hint})"
+                "needs a numeric/date/timestamp column (hash to a numeric "
+                "surrogate first)"
             )
         # Quantile bucketing only needs a MONOTONE numeric image of the
         # column, so temporal types map through their epoch counters
         # (DATE has no direct DOUBLE cast in Spark — unix_date instead;
         # TIMESTAMP_NTZ casts via TIMESTAMP, a monotone shift).
         if dt == "date":
-            plans.append(("sketch", F.unix_date(F.col(c)).cast("double")))
+            nums.append(F.unix_date(F.col(c)).cast("double"))
         elif dt == "timestamp_ntz":
-            plans.append(("sketch", F.col(c).cast("timestamp").cast("double")))
+            nums.append(F.col(c).cast("timestamp").cast("double"))
         else:
-            plans.append(("sketch", F.col(c).cast("double")))
-    # ONE sketch job for every sketched column (approxQuantile takes a
-    # column list and ignores NULLs itself) — k cluster columns cost one
-    # pass over the data, not k. Hash-bucketed strings need no pass.
-    nums = [p[1] for p in plans if p[0] == "sketch"]
-    bls = []
-    if nums:
-        probe = df.select(*[n.alias(f"__zq{i}") for i, n in enumerate(nums)])
-        bls = probe.stat.approxQuantile(
-            [f"__zq{i}" for i in range(len(nums))], qs, 1.0 / (4 * n_buckets)
-        )
+            nums.append(F.col(c).cast("double"))
+    # ONE sketch job for every column (approxQuantile takes a column
+    # list and ignores NULLs itself) — k cluster columns cost one pass
+    # over the data, not k.
+    probe = df.select(*[n.alias(f"__zq{i}") for i, n in enumerate(nums)])
+    bls = probe.stat.approxQuantile(
+        [f"__zq{i}" for i in range(len(nums))], qs, 1.0 / (4 * n_buckets)
+    )
     buckets = []
-    bl_iter = iter(bls)
-    for kind, spec in plans:
-        if kind == "hash":
-            # top `bits` bits of xxhash64 → uniform fixed-width buckets
-            # in [0, 2^bits); NULL keeps the bucket-0 convention (the
-            # hash of NULL would otherwise be a constant mid-range).
-            buckets.append(
-                F.when(F.col(spec).isNull(), F.lit(0))
-                .otherwise(F.shiftrightunsigned(F.xxhash64(F.col(spec)), 64 - bits))
-                .cast("long")
-            )
-            continue
-        num, bl = spec, next(bl_iter)
+    for num, bl in zip(nums, bls):
         if not bl:
             # approxQuantile returns no boundaries for an all-NULL
             # column — a zero-arg F.array() would be NullType and fail
-            # the lambda's analysis (round-13 ADVICE). Every row of
+            # the lambda's analysis. Every row of
             # this dimension belongs in bucket 0; emit the constant.
             buckets.append(F.lit(0).cast("long"))
             continue
@@ -1496,19 +1412,14 @@ def optimize_versioned(
     path: str,
     target_mb: int = 128,
     cluster_by: Sequence[str] | None = None,
-    zorder_bits: int | None = None,
     zone_stats: Sequence[str] | None = None,
-    hash_strings: bool | None = None,
-    only_small_mb: float | None = None,
 ) -> int:
     """Delta ``OPTIMIZE`` analog for versioned-append tables: rewrite
     the LATEST version's rows as one right-sized job partition and
-    commit a single manifest that swaps every current job for it — the
-    manifest-native compaction that — unlike a directory rename swap
-    (the round-12-deprecated, round-13-deleted ``compact_dir``) — is
-    ATOMIC (readers resolve manifests, so they see the
-    old file set or the new one, never a mix), works on object storage
-    (no renames — only a data write plus the conditional-PUT manifest
+    commit a single manifest that swaps every current job for it. The
+    swap is ATOMIC (readers resolve manifests, so they see the old file
+    set or the new one, never a mix), works on object storage (no
+    renames — only a data write plus the conditional-PUT manifest
     claim), and PRESERVES time travel (old versions still resolve to
     the original directories; :func:`vacuum_versioned` reclaims them
     later).
@@ -1527,64 +1438,33 @@ def optimize_versioned(
     pruned directories) — ~128 MB per scan task, one HDFS block / S3
     range request each. Returns the new version number.
 
-    ``cluster_by`` (round 12): the ``OPTIMIZE ... ZORDER BY`` analog.
-    Rows are range-repartitioned and sorted on a :func:`_zorder_value`
-    Morton key over the given columns before the rewrite, so every
-    output file covers a tight min/max rectangle in ALL the clustered
-    dimensions at once — parquet row-group stats (and any zone-map
-    layer above them) then prune multi-predicate scans that a
-    single-column sort could only prune on its leading column. At
-    100 TB this is the difference between "skip 99% of files on
-    (pickup_time, zone) predicates" and "full scan unless the filter
-    hits the sort prefix". One extra distributed sketch pass per
-    clustered column; the clustering shuffle replaces (not adds to)
-    the plain ``repartition``. A deterministic hash of the cluster
-    columns tie-breaks the range partitioner so constant/low-card
-    z-values still spread across ``n_out`` writers (never one giant
-    task). Re-running on an already-optimized table stays a no-op
-    regardless of ``cluster_by`` — vacuum + re-append to re-cluster
-    with a different key.
+    ``cluster_by``: the ``OPTIMIZE ... ZORDER BY`` analog (``None`` or
+    an empty list rewrites unclustered). Rows are range-repartitioned
+    and sorted on a 6-bit-per-column :func:`_zorder_value` Morton key
+    over the given columns before the rewrite, so every output file
+    covers a tight min/max rectangle in ALL the clustered dimensions
+    at once — parquet row-group stats (and any zone-map layer above
+    them) then prune multi-predicate scans that a single-column sort
+    could only prune on its leading column. At 100 TB this is the
+    difference between "skip 99% of files on (pickup_time, zone)
+    predicates" and "full scan unless the filter hits the sort
+    prefix". One distributed sketch pass covers every clustered
+    column; the clustering shuffle replaces (not adds to) the plain
+    ``repartition``. A deterministic hash of the cluster columns
+    tie-breaks the range partitioner so constant/low-card z-values
+    still spread across ``n_out`` writers (never one giant task).
+    Re-running on an already-optimized table stays a no-op regardless
+    of ``cluster_by`` — vacuum + re-append to re-cluster with a
+    different key.
 
-    Round 13: the rewrite also records per-file min/max ``zones`` for
-    the cluster columns (or an explicit ``zone_stats`` list) in the
-    manifest it commits — the Delta-log stats analog that
+    The rewrite also records per-file min/max ``zones`` for
+    ``zone_stats`` (default: the cluster columns) in the manifest it
+    commits — the Delta-log stats analog that
     ``read_version(prune=...)`` consumes to SKIP files whose zone
-    disproves a predicate, closing the loop from layout to read-path
-    data skipping. ``hash_strings=True`` opts string cluster columns
-    into xxhash64 surrogate bucketing (equality/point-lookup skipping
-    only — the hash destroys range order; see ``_zorder_value``).
-
-    ``only_small_mb`` (round 13): INCREMENTAL compaction — the move
-    that makes OPTIMIZE affordable at 100 TB, where "rewrite the whole
-    latest version" is a full-table rewrite every run. Only jobs whose
-    directory is smaller than this threshold are compacted (into one
-    ``optimize.o{N}`` job); right-sized jobs keep their directories
-    byte-identical and their manifest zones. Cost becomes proportional
-    to the SMALL-FILE TAIL, not the table — the same contract as
-    Delta's OPTIMIZE, which only rewrites files under its
-    min-file-size. Needs at least TWO sub-threshold jobs to mint a
-    version (compacting one buys nothing — no-op returns the current
-    version). Sizes come from Catalyst's per-directory scan statistics
-    (footer reads at planning time, scheme-agnostic). Converges: the
-    compacted job usually crosses the threshold, so a re-run no-ops
-    once the tail is gone.
-
-    Clustering memory (round 14, verdict item 4): a clustered OPTIMIZE
-    records ``{"cluster_by", "hash_strings", "zorder_bits"}`` in the
-    manifest, and append/delete/merge carry it forward like ``ever`` —
-    so a later maintenance run called with ``cluster_by=None`` (e.g. a
-    cron incremental compaction) DEFAULTS to the recorded layout
-    instead of silently folding the tail unclustered and zone-blind;
-    explicitly-passed ``zorder_bits``/``hash_strings`` still beat the
-    recorded values (recall fills only what the caller omitted).
-    Pass ``cluster_by=[]`` to explicitly rewrite unclustered — the
-    opt-out PERSISTS (an empty layout record replaces the old one, so
-    later default runs stay unclustered until a new ``cluster_by`` is
-    recorded). In the
-    same spirit (round-14 ADVICE), an incremental run with no stat
-    columns at all inherits the union of stat columns found in the
-    folded jobs' tip zones — compaction must never erode data-skipping
-    coverage the appends already paid for.
+    disproves a predicate. With neither given, the rewrite inherits the
+    union of stat columns found in the folded jobs' tip zones, so
+    compaction never erodes data-skipping coverage the appends already
+    paid for.
     """
     import math
 
@@ -1597,52 +1477,7 @@ def optimize_versioned(
     if len(jobs) == 1 and jobs[0].startswith("optimize.o"):
         return cur_v  # already compacted; re-run is a no-op
     job_col = _meta["job_col"]
-    recorded = _meta.get("clustering") or {}
-    explicit_unclustered = cluster_by is not None and not list(cluster_by)
-    if cluster_by is None and recorded.get("cluster_by"):
-        cluster_by = list(recorded["cluster_by"])
-        # recall fills only what the caller did NOT pass — an explicit
-        # zorder_bits/hash_strings beats the record (round-14 review:
-        # the record always carries both keys, so unconditional recall
-        # silently discarded explicit args)
-        if hash_strings is None:
-            hash_strings = bool(recorded.get("hash_strings", False))
-        if zorder_bits is None:
-            zorder_bits = int(recorded.get("zorder_bits", 6))
-    zorder_bits = 6 if zorder_bits is None else int(zorder_bits)
-    hash_strings = bool(hash_strings) if hash_strings is not None else False
-    clustering = (
-        {
-            "cluster_by": list(cluster_by),
-            "hash_strings": hash_strings,
-            "zorder_bits": zorder_bits,
-        }
-        if cluster_by
-        # an explicit [] must PERSIST the opt-out: record an empty
-        # layout (falsy cluster_by → never recalled) instead of None,
-        # which _commit_manifest reads as "carry the tip's record
-        # forward" — otherwise the old record survived the unclustered
-        # rewrite and the next default run silently re-clustered
-        # (round-14 review)
-        else ({"cluster_by": []} if explicit_unclustered else None)
-    )
-
-    def _dir_bytes(job: str) -> int:
-        d = spark.read.parquet(os.path.join(path, f"{job_col}={job}"))
-        return int(d._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-
-    keep_jobs: list[str] = []
-    if only_small_mb is not None:
-        cut = only_small_mb * 1024 * 1024
-        small = [j for j in jobs if _dir_bytes(j) < cut]
-        if len(small) < 2:
-            return cur_v  # no tail to fold — nothing to gain, mint nothing
-        keep_jobs = [j for j in jobs if j not in set(small)]
-        df = spark.read.option("mergeSchema", "true").parquet(
-            *[os.path.join(path, f"{job_col}={j}") for j in small]
-        )
-    else:
-        df = read_version(spark, path, cur_v)
+    df = read_version(spark, path, cur_v)
     size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     n_out = max(1, math.ceil(size / (target_mb * 1024 * 1024)))
     new_job = f"optimize.o{cur_v + 1}"
@@ -1650,12 +1485,7 @@ def optimize_versioned(
         zcol = "__zorder"
         tie = F.xxhash64(*[F.col(c) for c in cluster_by])
         out = (
-            df.withColumn(
-                zcol,
-                _zorder_value(
-                    df, cluster_by, bits=zorder_bits, hash_strings=hash_strings
-                ),
-            )
+            df.withColumn(zcol, _zorder_value(df, cluster_by))
             .repartitionByRange(n_out, F.col(zcol), tie)
             .sortWithinPartitions(zcol)
             .drop(zcol)
@@ -1664,22 +1494,11 @@ def optimize_versioned(
         out = df.repartition(n_out)
     job_dir = os.path.join(path, f"{job_col}={new_job}")
     out.write.mode("overwrite").parquet(job_dir)
-    # Record per-file min/max for the cluster columns (or an explicit
-    # list) in the manifest — the Delta-log-style stats that make the
-    # Z-ORDER layout pay off: read_version(prune=...) skips files whose
-    # zone disproves the predicate without opening a single footer.
-    stat_cols = list(zone_stats) if zone_stats else list(cluster_by or ())
+    stat_cols = list(zone_stats or cluster_by or ())
     if not stat_cols:
-        # Round-14 ADVICE (extended to full mode): folding
-        # zone-carrying jobs without any stat spec must not strip
-        # their data-skipping coverage — inherit the union of stat
-        # columns from the folded jobs' tip zones (mirrors the
-        # delete/merge inheritance). Incremental folds inherit from
-        # the small tail; a full rewrite from every folded job.
-        folded = small if only_small_mb is not None else jobs
         tip_zones = _meta.get("zones") or {}
         inherited: set[str] = set()
-        for j in folded:
+        for j in jobs:
             inherited |= _zone_stat_cols(path, tip_zones.get(j))
         stat_cols = sorted(inherited)
     new_zones = (
@@ -1687,16 +1506,8 @@ def optimize_versioned(
         if stat_cols
         else None
     )
-    # incremental mode keeps the right-sized jobs (their directories
-    # untouched; _carry_zones keeps their manifest stats); full mode
-    # swaps everything for the one compacted job
     return _commit_manifest(
-        path,
-        job_col,
-        keep_jobs + [new_job],
-        base_version=cur_v,
-        new_zones=new_zones,
-        clustering=clustering,
+        path, job_col, [new_job], base_version=cur_v, new_zones=new_zones
     )
 
 

@@ -730,7 +730,6 @@ def poisson_bootstrap_ci(
     n_boot: int = 40,
     seed: int = 17,
     level: float = 0.95,
-    hash_tier: str = "portable",
 ) -> DataFrame:
     """Per-group bootstrap confidence interval for the mean by the
     POISSON bootstrap (Chamandy, Muralidharan, Najmi & Naidu 2012,
@@ -795,14 +794,6 @@ def poisson_bootstrap_ci(
     rep_rows = fanout_repartition(rows, "__id").withColumn(
         "b", F.explode(F.sequence(F.lit(0), F.lit(int(n_boot) - 1)))
     )
-    # hash tiers (the simhash portable/xxhash pattern): "portable" is
-    # the md5-derived 60-bit draw every SQL engine replays (the oracle
-    # contract); "fast" swaps in xxhash64 masked to the same 60-bit
-    # range — same plan, measured 4.3x cheaper (6.56 s -> 1.53 s warm,
-    # events sf0.1, B=40) because md5-over-string dominates the
-    # exploded pass; for production runs with no cross-engine replay
-    if hash_tier not in ("portable", "fast"):
-        raise ValueError(f"hash_tier must be portable|fast, got {hash_tier!r}")
     draw_input = F.concat_ws(
         "\x1f", F.col("__id"), F.col("b").cast("string"), F.lit(str(seed))
     )
@@ -817,40 +808,30 @@ def poisson_bootstrap_ci(
     # the SAME IEEE-754 double ops the engine would run. And because
     # md5's 15-char slice is fixed-width lowercase hex, h ≥ h* is
     # exactly a lexicographic string comparison against hex15(h*). The
-    # portable tier therefore skips conv/cast entirely: per draw, one
+    # draw therefore skips conv/cast entirely: per draw, one
     # md5 + a short-circuiting CASE ladder over the 8 sorted flip
     # points. __w is bit-identical (the
     # fence test replays the old conv formulation pairwise); the
     # oracle twin still replays the documented hex→int→u→threshold
     # chain and matches because the WEIGHTS are equal, which is all
-    # that leaves this operator.
-    if hash_tier == "portable":
-        # Two more per-draw cuts, both value-preserving: (a) compare
-        # the FULL 32-char md5 against the 15-char boundary — for
-        # fixed-width lowercase hex, s ≥ b over the longer string
-        # decides on the first 15 chars and an equal prefix makes the
-        # longer string greater, exactly hex15 ≥ b — skipping a
-        # UTF8String substring alloc per draw; (b) the 8 independent
-        # ≥-comparisons collapse into one ascending CASE ladder
-        # (w = rank of the hash among the sorted flip points), which
-        # short-circuits after ~2 comparisons for Poisson(1) draws
-        # instead of always running all 8.
-        bounds = [format(_u_threshold_to_h(t), "015x") for t in thresholds]
-        drawn = rep_rows.select(
-            *keys, "__vm", "b", F.md5(draw_input).alias("__hx")
-        )
-        w = F.when(F.col("__hx") < bounds[0], 0)
-        for i in range(1, len(bounds)):
-            w = w.when(F.col("__hx") < bounds[i], i)
-        w = w.otherwise(len(bounds)).cast("long")
-    else:
-        h = F.xxhash64(draw_input).bitwiseAND(F.lit((1 << 60) - 1))
-        drawn = rep_rows.select(*keys, "__vm", "b", h.alias("__h"))
-        u = (F.col("__h").cast("double") + F.lit(0.5)) / F.lit(float(1 << 60))
-        w = None
-        for t in thresholds:
-            term = (u >= F.lit(t)).cast("long")
-            w = term if w is None else w + term
+    # that leaves this operator. Two more per-draw cuts, both
+    # value-preserving: (a) compare the FULL 32-char md5 against the
+    # 15-char boundary — for fixed-width lowercase hex, s ≥ b over the
+    # longer string decides on the first 15 chars and an equal prefix
+    # makes the longer string greater, exactly hex15 ≥ b — skipping a
+    # UTF8String substring alloc per draw; (b) the 8 independent
+    # ≥-comparisons collapse into one ascending CASE ladder (w = rank
+    # of the hash among the sorted flip points), which short-circuits
+    # after ~2 comparisons for Poisson(1) draws instead of always
+    # running all 8.
+    bounds = [format(_u_threshold_to_h(t), "015x") for t in thresholds]
+    drawn = rep_rows.select(
+        *keys, "__vm", "b", F.md5(draw_input).alias("__hx")
+    )
+    w = F.when(F.col("__hx") < bounds[0], 0)
+    for i in range(1, len(bounds)):
+        w = w.when(F.col("__hx") < bounds[i], i)
+    w = w.otherwise(len(bounds)).cast("long")
     cells = drawn.withColumn("__w", w).groupBy(*keys, "b").agg(
         F.sum("__w").alias("__n_b"),
         F.sum(F.col("__w") * F.col("__vm")).alias("__s_b"),

@@ -27,7 +27,7 @@ from pyspark.sql.types import StructType
 
 # The Spark-4 State API v2 (transformWithStateInPandas) speaks protobuf
 # to the JVM; without the protobuf package the driver worker crashes at
-# query start. Guard the surface (deltastore.py import-guard pattern).
+# query start, so the surface is guarded by an import probe.
 # find_spec on a submodule imports the parent package, so probe the
 # parent first (a bare find_spec("google.protobuf") raises when the
 # google namespace package is absent entirely)
@@ -461,12 +461,10 @@ def tws_running_totals(
     unbounded key spaces. Run via :func:`run_with_rocksdb_state`.
 
     Environment guard: the State API v2 wire protocol needs the
-    ``protobuf`` package (``pyspark.sql.streaming.proto``), which this
-    sandbox lacks and cannot install — the streaming path raises a
-    loud RuntimeError without it (the deltastore.py import-guard
-    pattern; the code path self-enables where protobuf exists, and
-    tests skipif on :data:`HAS_TWS_PROTO`). The batch twin always
-    works.
+    ``protobuf`` package (``pyspark.sql.streaming.proto``) — the
+    streaming path raises a loud RuntimeError without it (the code
+    path self-enables where protobuf exists, and tests skipif on
+    :data:`HAS_TWS_PROTO`). The batch twin always works.
     """
     import numpy as np
     from pyspark.sql.streaming.stateful_processor import (

@@ -416,7 +416,12 @@ def test_append_versioned_s3_concurrent_committer_loses_cleanly(monkeypatch):
                 assert competitor.put_text_if_absent(
                     f"_manifests/v{n}.json",
                     _json.dumps(
-                        {"version": n, "job_col": "__job_id", "job_ids": ["rival"]}
+                        {
+                            "version": n,
+                            "job_col": "__job_id",
+                            "job_ids": ["rival"],
+                            "ever": ["rival"],
+                        }
                     ),
                 )
             return real_try(self, n, payload)
@@ -529,7 +534,12 @@ def test_cow_commit_on_s3_detects_concurrent_writer(monkeypatch, spark, tmp_path
                 assert rival.put_text_if_absent(
                     f"_manifests/v{n}.json",
                     _json.dumps(
-                        {"version": n, "job_col": "__job_id", "job_ids": ["rival"]}
+                        {
+                            "version": n,
+                            "job_col": "__job_id",
+                            "job_ids": ["rival"],
+                            "ever": ["rival"],
+                        }
                     ),
                 )
             return real_try(self, n, payload)
@@ -624,34 +634,39 @@ def test_vacuum_versioned_on_s3(monkeypatch):
         url = "s3a://bkt/tbl"
         store = obs.S3Store("bkt", "tbl")
         # three committed versions; v2's delete-rewrite dropped job0
+        ever: set[str] = set()
         for n, jobs in [(0, ["j0"]), (1, ["j0", "j1"]), (2, ["j0.d2", "j1"])]:
+            ever |= set(jobs)
             store.put_text(
                 f"_manifests/v{n}.json",
-                _json.dumps({"version": n, "job_col": "__job_id", "job_ids": jobs}),
+                _json.dumps(
+                    {
+                        "version": n,
+                        "job_col": "__job_id",
+                        "job_ids": jobs,
+                        "ever": sorted(ever),
+                    }
+                ),
             )
         for job in ("j0", "j1", "j0.d2"):
             store.put_text(f"__job_id={job}/part-0.parquet", "data")
             store.put_text(f"__job_id={job}/part-1.parquet", "data")
         dropped, dirs = eio.vacuum_versioned(url, retain_last=1)
-        # these hand-written manifests have no `ever` field, so vacuum
-        # first checkpoints the full-chain union into a fresh v3 tip
-        # (round-13 ADVICE), then drops v0..v2 — j0's dir is still the
-        # only unreferenced one
-        assert (dropped, dirs) == (3, 1)
+        # v0 and v1 are dropped; j0's dir is the only unreferenced one
+        assert (dropped, dirs) == (2, 1)
         keys = obs.list_objects(url)
-        assert "_manifests/v3.json" in keys
+        assert "_manifests/v2.json" in keys
         assert not any(
-            k.startswith(("_manifests/v0", "_manifests/v1", "_manifests/v2"))
-            for k in keys
+            k.startswith(("_manifests/v0", "_manifests/v1")) for k in keys
         )
         # j0 (only referenced by vacuumed versions) is gone; the
         # retained manifest's jobs keep every object
         assert not any(k.startswith("__job_id=j0/") for k in keys)
         assert sum(k.startswith("__job_id=j0.d2/") for k in keys) == 2
         assert sum(k.startswith("__job_id=j1/") for k in keys) == 2
-        assert eio.list_versions(url) == [(3, ["j0.d2", "j1"])]
-        # the checkpoint tip remembers every job ever committed
-        tip_meta = _json.loads(store.get_text("_manifests/v3.json"))
+        assert eio.list_versions(url) == [(2, ["j0.d2", "j1"])]
+        # the retained tip still remembers every job ever committed
+        tip_meta = _json.loads(store.get_text("_manifests/v2.json"))
         assert set(tip_meta["ever"]) >= {"j0", "j1", "j0.d2"}
 
 
@@ -1015,43 +1030,6 @@ def test_retry_dedup_survives_vacuum(spark, tmp_path):
     assert back.filter(F.col("v") < 2).count() == 0  # delete not undone
 
 
-def test_vacuum_checkpoints_ever_on_pre_r12_tables(spark, tmp_path):
-    """Round-13 ADVICE: on a pre-round-12 table (no cumulative ``ever``
-    in the tip manifest), VACUUM used to delete the old manifests that
-    the dedup's full-chain fallback needed — permanently losing the
-    vacuumed job_ids, so a crash-looped retry of an ancient job could
-    re-append rows a DELETE removed. vacuum_versioned must now commit
-    a checkpoint manifest carrying the full-chain union BEFORE
-    dropping anything."""
-    import json as _json
-
-    t = str(tmp_path / "prevac")
-    df = spark.range(4).select(F.col("id").alias("v"))
-    eio.append_versioned(df, t, "ancient")
-    eio.append_versioned(df.withColumn("v", F.col("v") + 10), t, "recent")
-    eio.delete_where(spark, t, F.col("v") < 2)  # rewrites 'ancient'
-    # simulate a pre-round-12 chain: strip 'ever' from every manifest
-    mdir = os.path.join(t, "_manifests")
-    for name in os.listdir(mdir):
-        p = os.path.join(mdir, name)
-        with open(p) as fh:
-            m = _json.load(fh)
-        m.pop("ever", None)
-        m.pop("writer", None)
-        with open(p, "w") as fh:
-            _json.dump(m, fh)
-    eio.vacuum_versioned(t, retain_last=1)
-    tip_v, tip_jobs = eio.list_versions(t)[-1]
-    # the checkpoint tip must carry the reconstructed union
-    with open(os.path.join(mdir, f"v{tip_v}.json")) as fh:
-        tip_meta = _json.load(fh)
-    assert "ancient" in tip_meta["ever"]
-    # and the ancient retry stays a no-op — the delete is not undone
-    assert eio.append_versioned(df, t, "ancient") == tip_v
-    assert eio.list_versions(t)[-1] == (tip_v, tip_jobs)
-    assert eio.read_version(spark, t).filter(F.col("v") < 2).count() == 0
-
-
 @s3_deps
 def test_append_commit_is_o1_gets_on_s3(monkeypatch):
     """The commit hot path must read ONE manifest body regardless of
@@ -1083,30 +1061,45 @@ def test_append_commit_is_o1_gets_on_s3(monkeypatch):
         assert store.get_text  # silence unused warning paths
 
 
-def test_pre_round12_table_without_ever_still_works(spark, tmp_path):
-    """Back-compat: a table whose manifests predate `ever` (simulated
-    by stripping the field) must still dedup correctly via the
-    full-chain fallback, and its NEXT commit must write `ever`."""
+def test_tip_without_ever_raises_and_leaves_table_untouched(spark, tmp_path):
+    """A tip manifest without the cumulative ``ever`` field cannot say
+    which job_ids were ever committed, so append (fresh id or retry)
+    and VACUUM refuse it with a ValueError naming the table — before
+    writing a byte or deleting a manifest."""
     import json as _json
+    import re as _re
 
-    t = str(tmp_path / "old")
-    df = spark.range(3).select(F.col("id").alias("v"))
+    t = str(tmp_path / "noever")
+    df = spark.range(4).select(F.col("id").alias("v"))
     eio.append_versioned(df, t, "j0")
-    eio.append_versioned(df, t, "j1")
-    mdir = os.path.join(t, "_manifests")
-    for f in os.listdir(mdir):
-        p = os.path.join(mdir, f)
-        with open(p) as fh:
-            m = _json.load(fh)
-        m.pop("ever", None)
-        with open(p, "w") as fh:
-            _json.dump(m, fh)
-    # dedup falls back to the full-chain scan
-    assert eio.append_versioned(df, t, "j0") == 1
-    # a fresh commit reconstructs and persists ever
-    assert eio.append_versioned(df, t, "j2") == 2
-    with open(os.path.join(mdir, "v2.json")) as fh:
-        assert set(_json.load(fh)["ever"]) == {"j0", "j1", "j2"}
+    eio.append_versioned(df.withColumn("v", F.col("v") + 10), t, "j1")
+    tip_v = eio.delete_where(spark, t, F.col("v") < 2)  # rewrites 'j0'
+    tip_path = os.path.join(t, "_manifests", f"v{tip_v}.json")
+    with open(tip_path) as fh:
+        m = _json.load(fh)
+    m.pop("ever")
+    with open(tip_path, "w") as fh:
+        _json.dump(m, fh)
+
+    def snapshot() -> dict[str, bytes]:
+        out = {}
+        for root, _dirs, files in os.walk(t):
+            for f in files:
+                p = os.path.join(root, f)
+                with open(p, "rb") as fh:
+                    out[os.path.relpath(p, t)] = fh.read()
+        return out
+
+    before = snapshot()
+    named = _re.escape(t) + ".*'ever'"
+    with pytest.raises(ValueError, match=named):
+        eio.append_versioned(df, t, "j2")
+    with pytest.raises(ValueError, match=named):
+        eio.append_versioned(df, t, "j0")  # a retry of a rewritten job
+    with pytest.raises(ValueError, match=named):
+        eio.vacuum_versioned(t, retain_last=1)
+    assert snapshot() == before
+    assert eio.read_version(spark, t).filter(F.col("v") < 2).count() == 0
 
 
 @s3_deps
@@ -1242,53 +1235,3 @@ def test_zone_pruning_on_s3_manifests(monkeypatch, spark, tmp_path):
         store = obs.S3Store("bkt", "ztbl")
         tip = _json.loads(store.get_text("_manifests/v1.json"))
         assert set(tip["zones"]) == {"low", "high"}
-
-
-@s3_deps
-def test_optimize_incremental_on_s3(monkeypatch, spark, tmp_path):
-    """only_small_mb on an object-store table: the size probe is
-    Catalyst scan statistics (no filesystem walk), so the small-tail
-    selection must work through the mirrored reader; the kept job's
-    objects stay untouched, and the manifest swap is the same single
-    conditional PUT as full OPTIMIZE."""
-    from pyspark.sql import functions as F2
-    from pyspark.sql.readwriter import DataFrameReader, DataFrameWriter
-
-    url = "s3a://bkt/tblinc"
-    mirror = str(tmp_path / "mirror_inc")
-    real_r, real_w = DataFrameReader.parquet, DataFrameWriter.parquet
-    monkeypatch.setattr(
-        DataFrameReader,
-        "parquet",
-        lambda self, *ps: real_r(self, *[p.replace(url, mirror) for p in ps]),
-    )
-    monkeypatch.setattr(
-        DataFrameWriter,
-        "parquet",
-        lambda self, p: real_w(self, p.replace(url, mirror)),
-    )
-    _fake_aws(monkeypatch)
-    with mock_aws():
-        boto3.client("s3").create_bucket(Bucket="bkt")
-        bulk = spark.range(200_000).select(
-            F.col("id").alias("k"), F2.xxhash64("id").alias("pad")
-        )
-        eio.append_versioned(bulk.repartition(2), url, "bulk")
-        for i in range(2):
-            eio.append_versioned(
-                spark.createDataFrame([(10_000_000 + i, 0)], "k long, pad long"),
-                url,
-                f"tiny{i}",
-            )
-        import os as _os
-
-        bulk_files = sorted(_os.listdir(_os.path.join(mirror, "__job_id=bulk")))
-        v = eio.optimize_versioned(spark, url, only_small_mb=0.5)
-        assert v == 3
-        assert eio.list_versions(url)[-1] == (3, ["bulk", "optimize.o3"])
-        assert sorted(
-            _os.listdir(_os.path.join(mirror, "__job_id=bulk"))
-        ) == bulk_files  # kept job untouched on disk
-        got = eio.read_version(spark, url)
-        assert got.count() == 200_002
-        assert got.filter(F.col("k") >= 10_000_000).count() == 2

@@ -177,7 +177,15 @@ def test_versioned_append_loses_race_and_advances(spark, tmp_path):
     # and the O_EXCL create: pre-create v1 so the claim must advance
     mdir = os.path.join(path, "_manifests")
     with open(os.path.join(mdir, "v1.json"), "w") as fh:
-        json.dump({"version": 1, "job_col": "__job_id", "job_ids": ["job-a", "job-x"]}, fh)
+        json.dump(
+            {
+                "version": 1,
+                "job_col": "__job_id",
+                "job_ids": ["job-a", "job-x"],
+                "ever": ["job-a", "job-x"],
+            },
+            fh,
+        )
     v = IO.append_versioned(spark.range(2).withColumnRenamed("id", "v"), path, "job-b")
     assert v == 2
     assert IO.list_versions(path)[-1] == (2, ["job-a", "job-x", "job-b"])
@@ -345,7 +353,13 @@ def test_cow_commit_detects_concurrent_writer(spark, tmp_path):
         if not _os.path.exists(slot):
             with open(slot, "w") as fh:
                 _json.dump(
-                    {"version": 1, "job_col": job_col, "job_ids": ["b1", "b9"]}, fh
+                    {
+                        "version": 1,
+                        "job_col": job_col,
+                        "job_ids": ["b1", "b9"],
+                        "ever": ["b1", "b9"],
+                    },
+                    fh,
                 )
         return orig(p, job_col, job_ids, base_version, new_zones=new_zones)
 
@@ -685,9 +699,7 @@ def test_optimize_versioned_detects_concurrent_commit(spark, tmp_path, monkeypat
     state = {"hit": False}
 
     def racing_commit(p, job_col, job_ids, **kw):
-        # **kw: stay signature-compatible as _commit_manifest grows
-        # (new_zones round 13, clustering round 14 — each addition
-        # broke a pinned arg list here)
+        # **kw: pass keyword arguments through unchanged
         if not state["hit"]:
             state["hit"] = True
             IO.append_versioned(

@@ -915,7 +915,6 @@ _vop = st.one_of(
     st.tuples(st.just("delete"), st.integers(0, 40), st.just(0)),
     st.tuples(st.just("merge"), st.integers(0, 3), st.integers(1, 4)),
     st.tuples(st.just("optimize"), st.just(0), st.just(0)),
-    st.tuples(st.just("optimize_small"), st.just(0), st.just(0)),
     st.tuples(st.just("vacuum"), st.just(0), st.just(0)),
 )
 
@@ -923,9 +922,8 @@ _vop = st.one_of(
 @given(st.lists(_vop, min_size=2, max_size=6))
 @settings(max_examples=5, deadline=None)
 def test_versioned_lifecycle_matches_multiset_model(spark, tmp_path_factory, ops):
-    """Model-based property (round 12; incremental OPTIMIZE added
-    round 13): ANY interleaving of append / retried-append / DELETE /
-    MERGE / OPTIMIZE (full or small-tail) / VACUUM must
+    """Model-based property: ANY interleaving of append /
+    retried-append / DELETE / MERGE / OPTIMIZE / VACUUM must
     leave read_version(latest) equal to a pure-Python multiset model,
     with the tip's cumulative ever-union containing every job_id ever
     issued — the whole-protocol invariant behind retry dedup, COW
@@ -980,10 +978,6 @@ def test_versioned_lifecycle_matches_multiset_model(spark, tmp_path_factory, ops
             issued.add(j)
         elif kind == "optimize":
             IO.optimize_versioned(spark, path, target_mb=64)
-        elif kind == "optimize_small":
-            # round 13: incremental compaction — rows must be invariant
-            # whether it minted a version (folded a tail) or no-op'd
-            IO.optimize_versioned(spark, path, target_mb=64, only_small_mb=64.0)
         elif kind == "vacuum":
             IO.vacuum_versioned(path, retain_last=1)
         got = sorted((r.k, r.v) for r in IO.read_version(spark, path).collect())
@@ -1042,10 +1036,9 @@ def test_zone_prune_soundness_random_predicates(spark, zoned_table, conj):
     read must equal the plain read plus the same filters. Pruning may
     only ever skip files the zones PROVE empty for the predicate;
     hypothesis hunts the boundary mistakes (off-by-one at bucket
-    edges, NULL three-valued logic, lo==hi files). Round 14: pointed
-    at read_version_where, the single-source predicate API (one
-    conjunct list drives both the skip and the residual filters)."""
-    pruned = IO.read_version_where(spark, zoned_table, conj)
+    edges, NULL three-valued logic, lo==hi files). One conjunct list
+    drives both the skip and the residual filters."""
+    pruned = IO.read_version(spark, zoned_table, prune=conj)
     full = IO.read_version(spark, zoned_table)
     for c, op, v in conj:
         col = full[c]
@@ -1115,7 +1108,7 @@ def test_zone_prune_soundness_through_sidecars(spark, zoned_table_sidecar, conj)
     sidecar layer: every zone map is a marker the read path must
     resolve (one extra GET) before it can skip anything — pruned read
     ≡ plain read + filters must survive the indirection byte-exactly."""
-    pruned = IO.read_version_where(spark, zoned_table_sidecar, conj)
+    pruned = IO.read_version(spark, zoned_table_sidecar, prune=conj)
     full = IO.read_version(spark, zoned_table_sidecar)
     for c, op, v in conj:
         col = full[c]

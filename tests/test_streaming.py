@@ -137,20 +137,16 @@ def test_watermark_is_set(spark, replay_dir):
     assert wm.isStreaming
 
 
-def test_stream_stream_interval_join_equals_batch(spark, sf_dir):
+def test_stream_stream_interval_join_equals_batch(spark, sf_dir, tmp_path):
     """E35d: two replay streams, interval inner join — final drained
     result must equal the static interval join."""
-    import os
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from nyc_tlc_trip_data_pipelines_spark import streaming as ST
     from nyc_tlc_trip_data_pipelines_spark.catalog import load_table
 
     ev = load_table(spark, sf_dir, "events")
-    d = tempfile.mkdtemp(prefix="ssj_")
-    path = os.path.join(d, "events")
+    path = str(tmp_path / "events")
     ev.repartition(3).write.mode("overwrite").parquet(path)
     static = spark.read.parquet(path)
 
@@ -417,3 +413,37 @@ def test_tws_running_totals_stream_guard_or_run(spark, replay_dir):
     final = W.top_n_per_group(out, ["key"], [F.col("n_events").desc()], n=1)
     expect = ST.tws_running_totals(_batch_df(spark, replay_dir), "user_id", "value")
     assert sorted(map(tuple, final.collect())) == sorted(map(tuple, expect.collect()))
+
+
+def test_streaming_id_leaves_no_scratch_files(sf_dir, tmp_path):
+    """A registry streaming id writes its replay and sink files, and
+    the package zip shipped to executors, under the temp directory.
+    The returned DataFrame reads them lazily, so they are removed at
+    interpreter exit: a process that ran one leaves TMPDIR empty."""
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    scratch = tmp_path / "tmpdir"
+    scratch.mkdir()
+    code = f"""
+import sys
+sys.path.insert(0, {root!r})
+from pyspark.sql import SparkSession
+spark = (SparkSession.builder.master("local[2]")
+         .config("spark.sql.shuffle.partitions", "2")
+         .config("spark.ui.enabled", "false").getOrCreate())
+import __spark_entry__ as E
+assert E.queries()["q_stream_foreach_batch"](spark, {sf_dir!r}).collect()
+spark.stop()
+"""
+    r = subprocess.run(
+        [sys.executable, "-c", code],
+        env=dict(os.environ, TMPDIR=str(scratch)),
+        cwd=str(tmp_path),
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert r.returncode == 0, r.stderr[-3000:]
+    assert sorted(os.listdir(scratch)) == []

@@ -707,7 +707,7 @@ def test_pca_empty_input_and_unit_start_vector(spark):
     assert abs(out[0]["eigenvalue"] - 2.5) < 0.01
 
 
-def test_kmeans_arrow_tier_is_deterministic_and_auto_selects(spark):
+def test_kmeans_default_runs_agree_on_micro_grid_and_reject_rows_below_k(spark):
     from nyc_tlc_trip_data_pipelines_spark.operators import vectors as V
     from nyc_tlc_trip_data_pipelines_spark.catalog import load_table
 

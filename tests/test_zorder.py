@@ -173,7 +173,7 @@ def test_zorder_temporal_columns(spark):
         assert out.n == 200 and out.cells > 1, pair
 
 
-def test_zorder_rejects_unsupported_columns(spark):
+def test_zorder_rejects_unsupported_columns(spark, tmp_path):
     df = spark.range(10).select(
         F.col("id").alias("x"), F.lit("s").alias("name")
     )
@@ -183,6 +183,12 @@ def test_zorder_rejects_unsupported_columns(spark):
         eio._zorder_value(df, ["missing"])
     with pytest.raises(ValueError, match="60-bit"):
         eio._zorder_value(df, ["x"], bits=61)
+    # a string cluster column fails OPTIMIZE before it commits anything
+    t = str(tmp_path / "str")
+    eio.append_versioned(df, t, "b0")
+    with pytest.raises(ValueError, match="numeric/date/timestamp"):
+        eio.optimize_versioned(spark, t, cluster_by=["name", "x"])
+    assert eio.list_versions(t) == [(0, ["b0"])]
 
 
 def test_zorder_constant_column_still_fans_out(spark, tmp_path):
@@ -389,40 +395,6 @@ def test_zone_pruning_survives_merge(spark, tmp_path):
     assert n == eio.read_version(spark, t).filter(F.col("x") == 300).count()
 
 
-def test_zorder_hash_strings_point_lookup_skipping(spark, tmp_path):
-    """Round-13: string cluster keys via xxhash64 surrogate bucketing
-    (opt-in hash_strings=True). Equality locality holds — all rows of
-    one key land in few files, so zone stats on the RAW string column
-    prune point lookups — and the loud type error still fires without
-    the opt-in."""
-    df = spark.range(700_000).select(
-        F.concat(F.lit("user_"), (F.col("id") % 500).cast("string")).alias("uid"),
-        (F.col("id") % 1000).cast("long").alias("x"),
-        F.xxhash64("id").alias("pad"),
-    )
-    t = str(tmp_path / "hs")
-    eio.append_versioned(df.repartition(8), t, "b0")
-    with pytest.raises(ValueError, match="hash_strings"):
-        eio.optimize_versioned(spark, t, target_mb=1, cluster_by=["uid", "x"])
-    v = eio.optimize_versioned(
-        spark, t, target_mb=1, cluster_by=["uid", "x"],
-        hash_strings=True, zone_stats=["uid", "x"],
-    )
-    assert eio.read_version(spark, t, v).count() == 700_000
-    # numeric dimension keeps RANGE skipping
-    sr = eio.zone_prune_stats(t, prune=[("x", ">=", 0), ("x", "<", 50)])
-    assert sr["files_kept"] < sr["files_total"]
-    # string point lookups: rows for one uid concentrate in few files,
-    # verified end-to-end (pruned read == plain filtered read)
-    for uid in ("user_7", "user_432"):
-        n = eio.read_version(spark, t, prune=[("uid", "=", uid)]).count()
-        assert n == df.filter(F.col("uid") == uid).count()
-    # hash buckets are well-typed: z-value distributes rows over files
-    job_dir = os.path.join(t, f"__job_id=optimize.o{v}")
-    files = [f for f in os.listdir(job_dir) if f.endswith(".parquet")]
-    assert len(files) >= 4
-
-
 def test_zone_bounds_contain_file_stats_across_types(spark, tmp_path):
     """Soundness anchor for pruning: the manifest's recorded [lo, hi]
     per file must equal the file's true min/max under the canonical
@@ -495,54 +467,6 @@ def test_pruned_read_pushes_filters_to_parquet_scan(spark, tmp_path):
     assert "PythonUDF" not in plan and "BatchEvalPython" not in plan
 
 
-def test_optimize_incremental_compacts_only_small_tail(spark, tmp_path):
-    """only_small_mb (round 13): at 100 TB a full-version rewrite per
-    OPTIMIZE is untenable — incremental mode folds only the
-    sub-threshold jobs into one compacted job and must leave
-    right-sized jobs' directories byte-identical (same file set), keep
-    their manifest zones, preserve rows and time travel, and converge
-    to a no-op once the tail is gone."""
-    big = _mk(spark, n=400_000)  # ~several MB with the incompressible pad
-    t = str(tmp_path / "inc")
-    eio.append_versioned(big.repartition(4), t, "bulk", zone_stats=["x"])
-    for i in range(3):  # the small-file tail: three tiny appends
-        eio.append_versioned(
-            _mk(spark, n=2_000).withColumn("x", F.col("x") + i), t, f"tail{i}"
-        )
-    before = _checksum(eio.read_version(spark, t))
-    bulk_dir = os.path.join(t, "__job_id=bulk")
-    bulk_files = sorted(os.listdir(bulk_dir))
-    v = eio.optimize_versioned(spark, t, target_mb=64, only_small_mb=1.0)
-    assert v == 4  # a real commit happened
-    tip_v, tip_jobs = eio.list_versions(t)[-1]
-    assert tip_jobs == ["bulk", f"optimize.o{v}"]  # big job kept, tail folded
-    assert sorted(os.listdir(bulk_dir)) == bulk_files  # untouched on disk
-    assert _checksum(eio.read_version(spark, t)) == before  # rows identical
-    assert eio.read_version(spark, t, 0).count() == 400_000  # time travel
-    import json
-
-    with open(os.path.join(t, "_manifests", f"v{v}.json")) as fh:
-        zones = json.load(fh).get("zones") or {}
-    assert "bulk" in zones  # the kept job's stats carried forward
-    # pruning still exact across kept + compacted jobs
-    n = eio.read_version(spark, t, prune=[("x", "=", 7)]).count()
-    assert n == eio.read_version(spark, t).filter(F.col("x") == 7).count()
-    # convergence: the folded tail is one job; a re-run finds <2 small
-    # jobs (or none) and must NOT mint a version
-    assert eio.optimize_versioned(spark, t, target_mb=64, only_small_mb=1.0) == v
-
-
-def test_optimize_incremental_noop_without_tail(spark, tmp_path):
-    """Fewer than two sub-threshold jobs: compacting buys nothing —
-    no version minted, table untouched."""
-    t = str(tmp_path / "noop")
-    eio.append_versioned(_mk(spark, n=300_000).repartition(2), t, "a")
-    eio.append_versioned(_mk(spark, n=300_000).repartition(2), t, "b")
-    v0 = eio.list_versions(t)[-1][0]
-    assert eio.optimize_versioned(spark, t, only_small_mb=0.001) == v0
-    assert eio.list_versions(t)[-1][0] == v0
-
-
 def test_zone_prune_in_op_point_set_lookup(spark, tmp_path):
     """The 'in' prune op: a point-set lookup keeps exactly the files
     whose span covers ANY member; rows equal the plain isin filter;
@@ -559,8 +483,7 @@ def test_zone_prune_in_op_point_set_lookup(spark, tmp_path):
     with pytest.raises(ValueError, match="non-empty"):
         eio.read_version(spark, t, prune=[("x", "in", [])])
 
-# --- round 14: NaN / temporal soundness, stale-file tolerance, -------------
-# --- clustering memory (verdict item 4 + all four ADVICE items) ------------
+# --- NaN / temporal soundness, stale-file tolerance, zone inheritance -----
 
 
 def test_zone_stats_omit_nan_bounds_and_prune_keeps_nan_rows(spark, tmp_path):
@@ -681,62 +604,28 @@ def test_pruned_read_tolerates_stale_zone_file_names(spark, tmp_path):
     assert pruned.count() == plain.count() > 0
 
 
-def test_optimize_remembers_clustering_for_incremental_runs(spark, tmp_path):
-    """Round-14 verdict item 4: OPTIMIZE records its clustering config
-    in the manifest; appends carry it forward; a later incremental run
-    with NO layout args folds the tail WITH the recorded clustering —
-    the folded job carries zones on the recorded columns and pruning
-    stays exact. A maintenance cron can't silently erode the layout."""
-    df = _mk(spark, n=400_000)
-    t = str(tmp_path / "clus")
-    eio.append_versioned(df.repartition(4), t, "b0")
-    eio.optimize_versioned(spark, t, target_mb=1, cluster_by=["x", "y"])
-    # small-file tail appended AFTER the clustered optimize
-    eio.append_versioned(df.limit(2_000), t, "late1")
-    eio.append_versioned(df.limit(2_000).withColumn("x", F.col("x") + 1), t, "late2")
-    v = eio.optimize_versioned(spark, t, target_mb=1, only_small_mb=1.0)
-    mio = eio._manifest_io(t)
-    meta = mio.read_meta(v)
-    assert meta["clustering"] == {
-        "cluster_by": ["x", "y"], "hash_strings": False, "zorder_bits": 6,
-    }
-    folded = [j for j in meta["job_ids"] if j == f"optimize.o{v}"]
-    assert folded and meta["zones"].get(folded[0])  # fold carries zones
-    assert all(
-        set(e) >= {"rows", "x", "y"} for e in meta["zones"][folded[0]].values()
-    )
-    # pruning stays exact across kept + folded jobs
-    P = [("x", ">=", 100), ("x", "<", 120)]
-    pruned = eio.read_version(spark, t, prune=P)
-    plain = eio.read_version(spark, t).filter(
-        (F.col("x") >= 100) & (F.col("x") < 120)
-    )
-    assert pruned.count() == plain.count() > 0
-
-
-def test_incremental_optimize_inherits_folded_zone_columns(spark, tmp_path):
-    """Round-14 ADVICE: a table never clustered, but whose appends paid
-    for zone stats, must not lose data-skipping coverage when the tail
-    is folded — the fold inherits the union of the folded jobs' stat
-    columns."""
+def test_optimize_inherits_folded_zone_columns(spark, tmp_path):
+    """A table never clustered, but whose appends paid for zone stats,
+    must not lose data-skipping coverage when OPTIMIZE rewrites it —
+    the rewrite inherits the union of the folded jobs' stat columns."""
     df = _mk(spark, n=50_000)
     t = str(tmp_path / "inh")
     eio.append_versioned(df.filter(F.col("x") < 500), t, "a0", zone_stats=["x"])
     eio.append_versioned(df.filter(F.col("x") >= 500), t, "a1", zone_stats=["y"])
-    v = eio.optimize_versioned(spark, t, only_small_mb=64.0)
+    v = eio.optimize_versioned(spark, t)
     mio = eio._manifest_io(t)
     meta = mio.read_meta(v)
     zmap = meta["zones"][f"optimize.o{v}"]
+    assert meta["job_ids"] == [f"optimize.o{v}"]
     assert zmap and all(set(e) >= {"rows", "x", "y"} for e in zmap.values())
     n1 = eio.read_version(spark, t, prune=[("x", "=", 700)]).count()
     assert n1 == df.filter(F.col("x") == 700).count() > 0
 
 
-def test_read_version_where_is_single_source(spark, tmp_path):
-    """Round-14 verdict item 2: one conjunct list drives both the zone
-    skip and the residual filters — read_version_where(P) must equal
-    the plain read plus P's filters, and must actually skip files on a
-    clustered table."""
+def test_read_version_prune_is_single_source(spark, tmp_path):
+    """One conjunct list drives both the zone skip and the residual
+    filters — read_version(prune=P) must equal the plain read plus P's
+    filters, and must actually skip files on a clustered table."""
     df = _mk(spark)
     t = str(tmp_path / "rvw")
     eio.append_versioned(df.repartition(4), t, "b0")
@@ -744,7 +633,7 @@ def test_read_version_where_is_single_source(spark, tmp_path):
     P = [("x", ">=", 200), ("x", "<", 260), ("y", "in", [5, 700])]
     st = eio.zone_prune_stats(t, prune=P)
     assert st["has_zones"] and st["files_kept"] < st["files_total"]
-    got = _checksum(eio.read_version_where(spark, t, P))
+    got = _checksum(eio.read_version(spark, t, prune=P))
     want = _checksum(
         eio.read_version(spark, t).filter(
             (F.col("x") >= 200) & (F.col("x") < 260) & F.col("y").isin([5, 700])
@@ -788,7 +677,7 @@ def test_zone_sidecar_spills_resolves_and_degrades(spark, tmp_path, monkeypatch)
     st = eio.zone_prune_stats(t, prune=P)
     assert st["has_zones"] and 0 < st["files_kept"] < st["files_total"]
     assert st["files_total"] == marker["files"]
-    pruned = _checksum(eio.read_version_where(spark, t, P))
+    pruned = _checksum(eio.read_version(spark, t, prune=P))
     full = _checksum(
         eio.read_version(spark, t).filter((F.col("x") >= 100) & (F.col("x") < 120))
     )
@@ -802,7 +691,7 @@ def test_zone_sidecar_spills_resolves_and_degrades(spark, tmp_path, monkeypatch)
     os.unlink(side)
     st2 = eio.zone_prune_stats(t, version=1, prune=P)
     assert st2["files_total"] == 0  # job now counts as unzoned
-    p2 = eio.read_version_where(spark, t, P, version=1)
+    p2 = eio.read_version(spark, t, version=1, prune=P)
     assert _checksum(p2) == full
 
 
@@ -858,7 +747,7 @@ def test_zone_sidecar_on_s3_manifest_stays_small(spark, tmp_path, monkeypatch):
         assert marker["cols"] == ["x"]
         zmap = json.loads(store.get_text(f"_manifests/{marker['sidecar']}"))
         assert len(zmap) == 3 and all("x" in e for e in zmap.values())
-        n1 = eio.read_version_where(spark, url, [("x", "<", 100)]).count()
+        n1 = eio.read_version(spark, url, prune=[("x", "<", 100)]).count()
         n2 = eio.read_version(spark, url).filter(F.col("x") < 100).count()
         assert n1 == n2 > 0
 
@@ -898,7 +787,7 @@ def test_vacuum_sweeps_orphaned_sidecars_with_grace(spark, tmp_path, monkeypatch
     # the swept table still prunes and reads correctly
     st = eio.zone_prune_stats(t, prune=[("x", "<", 100)])
     assert st["has_zones"]
-    n1 = eio.read_version_where(spark, t, [("x", "<", 100)]).count()
+    n1 = eio.read_version(spark, t, prune=[("x", "<", 100)]).count()
     n2 = eio.read_version(spark, t).filter(F.col("x") < 100).count()
     assert n1 == n2 > 0
 
@@ -968,39 +857,31 @@ def test_vacuum_sweeps_orphaned_sidecars_on_s3(spark, tmp_path, monkeypatch):
         )
         assert after == [f"_manifests/{live}"]
         # the surviving table still prunes through its sidecar
-        n1 = eio.read_version_where(spark, url, [("x", "<", 100)]).count()
+        n1 = eio.read_version(spark, url, prune=[("x", "<", 100)]).count()
         n2 = eio.read_version(spark, url).filter(F.col("x") < 100).count()
         assert n1 == n2 > 0
 
 
-def test_optimize_cluster_optout_persists_and_explicit_args_win(spark, tmp_path):
-    """Round-14 review fixes on the clustering record: (a) an explicit
-    ``cluster_by=[]`` PERSISTS — it replaces the record with an empty
-    layout, so a later default (cron) run stays unclustered instead of
-    silently re-clustering on the removed layout; (b) recall fills
-    only what the caller omitted — an explicit zorder_bits beats the
-    recorded value while the recorded columns are still recalled."""
-    df = _mk(spark, n=200_000)
-    t = str(tmp_path / "opt_out")
+def test_optimize_default_rewrite_is_unclustered(spark, tmp_path):
+    """``cluster_by=None`` rewrites unclustered even after a clustered
+    OPTIMIZE: manifests record no layout, the rewrite still inherits
+    the zone columns, and with round-robin files every file spans the
+    whole x domain, so an x-range prune keeps them all."""
+    df = _mk(spark)  # 1M rows: enough files for a strict skip below
+    t = str(tmp_path / "unclus")
     eio.append_versioned(df.repartition(4), t, "b0")
-    v1 = eio.optimize_versioned(spark, t, target_mb=1, cluster_by=["x", "y"])
-    mio = eio._manifest_io(t)
-    assert mio.read_meta(v1)["clustering"]["cluster_by"] == ["x", "y"]
-    # (b) explicit zorder_bits with cluster_by=None: columns recalled,
-    # bits taken from the call, and the new config re-recorded
-    eio.append_versioned(df.limit(2_000), t, "mid")
-    v2 = eio.optimize_versioned(spark, t, target_mb=1, zorder_bits=4)
-    rec = mio.read_meta(v2)["clustering"]
-    assert rec == {"cluster_by": ["x", "y"], "hash_strings": False, "zorder_bits": 4}
-    # (a) explicit [] clears: empty layout recorded, and a later
-    # default run does NOT re-cluster (its manifest keeps the empty
-    # record rather than resurrecting x,y)
+    eio.optimize_versioned(spark, t, target_mb=1, cluster_by=["x", "y"])
+    P = [("x", "<", 100)]
+    st = eio.zone_prune_stats(t, prune=P)
+    assert 0 < st["files_kept"] < st["files_total"]
     eio.append_versioned(df.limit(2_000), t, "late")
-    v3 = eio.optimize_versioned(spark, t, target_mb=1, cluster_by=[])
-    assert mio.read_meta(v3)["clustering"] == {"cluster_by": []}
-    eio.append_versioned(df.limit(2_000), t, "later")
-    v4 = eio.optimize_versioned(spark, t, target_mb=1)
-    meta4 = mio.read_meta(v4)
-    assert meta4["clustering"] == {"cluster_by": []}
-    # rows survive every rewrite
-    assert eio.read_version(spark, t).count() == 206_000
+    v = eio.optimize_versioned(spark, t, target_mb=1)
+    meta = eio._manifest_io(t).read_meta(v)
+    assert meta["job_ids"] == [f"optimize.o{v}"]
+    assert set(meta) == {"version", "job_col", "job_ids", "ever", "writer", "zones"}
+    st = eio.zone_prune_stats(t, prune=P)
+    assert st["has_zones"] and st["files_total"] >= 2
+    assert st["files_kept"] == st["files_total"]
+    pruned = _checksum(eio.read_version(spark, t, prune=P))
+    assert pruned == _checksum(eio.read_version(spark, t).filter(F.col("x") < 100))
+    assert eio.read_version(spark, t).count() == 1_002_000

@@ -1,6 +1,8 @@
-"""Generate COVERAGE.md: one row per contract query — oracle status +
-one-line description (from the query docstring). The judge-facing
-line-by-line map from SURVEY.md §2's inventory to the implementation.
+"""Generate COVERAGE.md: one row per contract query, sorted by id —
+oracle status + one-line description (from the query docstring). The
+judge-facing line-by-line map from SURVEY.md §2's inventory to the
+implementation. Sorting keeps a regeneration's diff to the rows whose
+docstring or oracle changed.
 
 Usage: python tools/coverage.py
 """
@@ -31,7 +33,7 @@ def main() -> None:
         "| query | oracle | what it covers |",
         "|---|---|---|",
     ]
-    for name, fn in qs.items():
+    for name, fn in sorted(qs.items()):
         doc = (fn.__doc__ or "").strip().splitlines()
         first = doc[0].strip() if doc else ""
         # fold continuation lines until a sentence end for a fuller summary
