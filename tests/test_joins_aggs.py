@@ -656,6 +656,37 @@ def test_sprt_daily_walk_boundaries_and_exactness(spark):
     assert arm1[-1]["decision"] == "accept_h0"
 
 
+def test_poisson_bootstrap_fast_tier_same_contract(spark):
+    """There is one weight draw: the output contract the former xxhash
+    fast tier was held to (exact point estimate, degenerate-constant
+    CI, sane spread bounds) holds on it, and a caller still passing the
+    removed ``hash_tier`` keyword fails loudly instead of silently
+    getting a different draw."""
+    import pytest
+
+    from nyc_tlc_trip_data_pipelines_spark.operators.aggregates import (
+        poisson_bootstrap_ci,
+    )
+
+    rows = [(i, "c", 7.5) for i in range(200)]
+    rows += [(1000 + i, "s", float(i % 100)) for i in range(400)]
+    df = spark.createDataFrame(rows, "event_id bigint, k string, value double")
+    out = {
+        r["k"]: r
+        for r in poisson_bootstrap_ci(
+            df, ["k"], F.col("value"), "event_id"
+        ).collect()
+    }
+    c = out["c"]
+    assert c["mean"] == 7.5 and c["se_boot"] == 0.0 and c["ci_lo"] == 7.5
+    s = out["s"]
+    assert s["ci_lo"] <= s["mean"] <= s["ci_hi"] and 0.5 < s["se_boot"] < 3.0
+    with pytest.raises(TypeError, match="hash_tier"):
+        poisson_bootstrap_ci(
+            df, ["k"], F.col("value"), "event_id", hash_tier="fast"
+        )
+
+
 def test_cuped_adjust_variance_reduction_and_parity(spark):
     """Perfectly correlated X,Y -> rho2 == 1 and both arms' adjusted
     means collapse to the same value; theta equals the OLS slope."""
