@@ -13,6 +13,7 @@ computed column is aliased identically on both sides.
 
 from __future__ import annotations
 
+import functools
 import glob
 import json
 import os
@@ -6365,8 +6366,24 @@ def _stalest_first(keys, root: str = _HERE) -> list[str]:
     return sorted(keys, key=lambda k: (latest.get(k, 0), k))
 
 
+def _prepared(
+    fn: Callable[[SparkSession, str], DataFrame],
+) -> Callable[[SparkSession, str], DataFrame]:
+    """``fn`` on a session ``configure_session`` has prepared: ids that
+    build their input without ``load_table`` (the media generators)
+    still find the package on the Python workers of a session that
+    nothing else prepared."""
+
+    @functools.wraps(fn)
+    def run(spark: SparkSession, sf: str) -> DataFrame:
+        return fn(configure_session(spark), sf)
+
+    return run
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Registry id -> query, stalest driver evidence first."""
+    """Registry id -> query, stalest ``CORRECTNESS_r*.json`` evidence
+    first; every query prepares its session (``_prepared``)."""
     base = {
         "q_scd2_merge": q_scd2_merge,
         "q_json_flatten": q_json_flatten,
@@ -6677,7 +6694,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_abtest_srm": q_abtest_srm,
         "q_abtest_did": q_abtest_did,
     }
-    return {k: base[k] for k in _stalest_first(base)}
+    return {k: _prepared(base[k]) for k in _stalest_first(base)}
 
 
 def _sql_vec(v) -> str:

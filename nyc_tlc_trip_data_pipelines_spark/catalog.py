@@ -13,6 +13,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nyc_tlc_trip_data_pipelines_spark.session import configure_session
+
 TABLES = (
     "region",
     "nation",
@@ -39,57 +41,31 @@ def table_path(sf_dir: str, name: str) -> str:
 NANOS_TS_COLS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
 
 
-def _ensure_compat(spark: SparkSession) -> None:
-    """Session confs required for correctness parity, applied even when
-    the caller (e.g. the driver harness) built its own SparkSession and
-    never went through ``session.get_spark``: non-ANSI casts (reference
-    R4 NULL-coercion), UTC session tz (tz-naive oracle parity), and the
-    nanos-as-long parquet shim."""
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    from nyc_tlc_trip_data_pipelines_spark.deploy import ensure_package_on_executors
+def _memo(spark: SparkSession) -> dict:
+    """The catalog memo of one session, held on the session object: it
+    lives as long as the session and is never seen by another one
+    (DataFrame handles and temp views are per session).
 
-    ensure_package_on_executors(spark)
-
-
-# Analyzed-DataFrame handle memo, keyed per SESSION (r15 advisor fix:
-# DataFrame handles and temp views are per-SparkSession, and one
-# SparkContext/applicationId can host several sessions via
-# newSession() — an applicationId key would hand session B a DataFrame
-# bound to session A and silently no-op B's register_views. id(spark)
-# is paired with the applicationId so a recycled id() of a collected
-# session object can never alias a live entry from another app).
-# Metadata-only reuse (optimization r14, guide §1.5/§6 planning overhead):
-# ``spark.read.parquet`` launches a footer schema-inference job on EVERY
-# call (~0.1-0.16 s of job latency at local[32]), so a workload invoking
-# N queries pays N redundant footer jobs per table. The driver fixture
-# tables are immutable for the life of a run, and a DataFrame handle is
-# an immutable logical plan — reusing it re-executes the scan from the
-# parquet bytes every action, so NO result or data caching is involved
-# (the file listing itself is snapshotted per handle, same as any
-# long-lived table handle in a real deployment's catalog).
-_TABLE_MEMO: dict[tuple[str, str, str], DataFrame] = {}
-
-# register_views memo: session -> the sf_dir its views CURRENTLY point
-# at. Re-registering the same dir is a no-op; a different dir always
-# re-points (sessions alternating scale factors stay correct). Keyed
-# per session like _TABLE_MEMO (temp views are session-scoped).
-_VIEWS_MEMO: dict[tuple[int, str], str] = {}
+    Keys ``(abs sf_dir, table)`` hold analyzed DataFrame handles:
+    ``spark.read.parquet`` launches a footer schema-inference job on
+    every call (~0.1-0.16 s of job latency at local[32]), so a workload
+    invoking N queries would pay N footer jobs per table. The fixture
+    tables are immutable for the life of a run, and a handle is an
+    immutable logical plan that re-executes the scan from the parquet
+    bytes on every action: no result or data is cached (the file
+    listing is snapshotted per handle, as in any long-lived catalog
+    handle). Key ``"views"`` holds the sf_dir the session's temp views
+    point at."""
+    return spark.__dict__.setdefault("_catalog_memo", {})
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Columnar parquet scan of one driver table (reference R3)."""
-    _ensure_compat(spark)
-    key = (
-        id(spark),
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        name,
-    )
-    memo = _TABLE_MEMO.get(key)
-    if memo is not None:
-        return memo
+    configure_session(spark)
+    memo = _memo(spark)
+    key = (os.path.abspath(sf_dir), name)
+    if key in memo:
+        return memo[key]
     df = spark.read.parquet(table_path(sf_dir, name))
     for c in NANOS_TS_COLS.get(name, ()):
         if dict(df.dtypes).get(c) == "bigint":
@@ -101,23 +77,24 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # pandas/arrow µs) surface as TIMESTAMP_NTZ under Spark 4's default
     # inferTimestampNTZ, which forbids CAST-to-BIGINT and diverges from
     # the tz-naive DuckDB oracle's TIMESTAMP arithmetic. With session tz
-    # pinned UTC (``_ensure_compat``) the NTZ→LTZ cast is instant-
+    # pinned UTC (``configure_session``) the NTZ→LTZ cast is instant-
     # preserving, so normalize every NTZ column at the load boundary and
     # keep the whole engine on a single timestamp type.
     ntz_cols = [c for c, t in df.dtypes if t == "timestamp_ntz"]
     for c in ntz_cols:
         df = df.withColumn(c, F.col(c).cast("timestamp"))
-    _TABLE_MEMO[key] = df
+    memo[key] = df
     return df
 
 
-def register_views(spark: SparkSession, sf_dir: str, tables=TABLES) -> None:
-    """Register each table as a temp view for the SQL surface."""
-    skey = (id(spark), spark.sparkContext.applicationId)
+def register_views(spark: SparkSession, sf_dir: str) -> None:
+    """Register each table as a temp view for the SQL surface.
+    Re-registering the directory the views already point at is a no-op;
+    another directory re-points them."""
+    memo = _memo(spark)
     cur = os.path.abspath(sf_dir)
-    if tables is TABLES and _VIEWS_MEMO.get(skey) == cur:
+    if memo.get("views") == cur:
         return
-    for name in tables:
+    for name in TABLES:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-    if tables is TABLES:
-        _VIEWS_MEMO[skey] = cur
+    memo["views"] = cur

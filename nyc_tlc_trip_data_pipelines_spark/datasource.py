@@ -119,22 +119,14 @@ class ObjectStoreListingSource(DataSource):
 def register(spark) -> None:
     """Register the listing source and enable Python-source filter
     pushdown (off by default; a reader that implements ``pushFilters``
-    refuses to initialize without it). Ships the package to Python
-    workers first: DataSource classes pickle BY REFERENCE, so a session
-    whose workers can't import this module (any external/vanilla
-    session) fails at plan time with ModuleNotFoundError otherwise —
-    found by a fresh-session rehearsal of the stream source."""
+    refuses to initialize without it). This module pickles BY VALUE:
+    the STREAMING planner spawns a separate "initialize source" Python
+    worker, so the DataSource classes must unpickle without importing
+    the package (the module source rides inside the pickle; this file
+    deliberately has no package-level imports from the rest of the
+    repo)."""
     import sys as _sys
 
-    from nyc_tlc_trip_data_pipelines_spark.deploy import ensure_package_on_executors
-
-    ensure_package_on_executors(spark)
-    # addPyFile covers executor task workers, but the STREAMING planner
-    # spawns a separate "initialize source" Python worker that does not
-    # see SparkContext pyFiles — serialize this module BY VALUE so the
-    # DataSource classes unpickle anywhere (module source rides inside
-    # the pickle; this file deliberately has no package-level imports
-    # from the rest of the repo).
     from pyspark import cloudpickle as _cp
 
     _cp.register_pickle_by_value(_sys.modules[__name__])

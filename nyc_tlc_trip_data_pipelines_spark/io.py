@@ -11,7 +11,7 @@ Here the same capabilities are re-expressed storage-agnostically over
 plain Parquet (delta-spark is absent in this environment — SURVEY.md §7.3
 "Delta gap"): append + partitioned layout semantics are preserved, ACID
 log semantics are out of scope. The plain read/write surface
-(read_*/write_*/append_table/append_idempotent) works identically for
+(read_*/write_*/append_table) works identically for
 local paths and ``s3a://`` URIs (Spark's Hadoop FS layer handles both);
 the VERSIONED family (append_versioned, delete_where, merge_versioned,
 optimize_versioned, read_version, table_changes, vacuum_versioned)
@@ -160,42 +160,6 @@ def append_table(df: DataFrame, path: str, max_records_per_file: int | None = No
     if max_records_per_file:
         w = w.option("maxRecordsPerFile", max_records_per_file)
     w.parquet(path)
-
-
-def append_idempotent(
-    df: DataFrame, path: str, job_id: str, job_col: str = "__job_id"
-) -> None:
-    """Idempotent append — the plain-parquet approximation of the
-    reference's Delta transactional append (``pasta1_etl/src/main.py:191-194``,
-    where a failed-then-retried month can't double-write because Delta's
-    commit log is atomic).
-
-    Without a commit log, a naive ``mode("append")`` retry duplicates
-    every row of the failed attempt. The Spark-native fix: stamp each
-    batch with its ``job_id`` as a PARTITION column and write with
-    dynamic partition overwrite — a retry replaces exactly its own
-    partition directory and nothing else (the same idea as Delta's
-    ``txnAppId``/``replaceWhere`` dedup, expressed in layout). Readers
-    ``spark.read.parquet(path)`` as usual and may drop ``job_col``.
-
-    100 TB note: one directory per ingest batch also gives free
-    batch-level pruning/rollback (delete one directory), at the cost of
-    a growing partition count — compact periodically.
-    """
-    from pyspark.sql import functions as F
-
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            df.withColumn(job_col, F.lit(job_id))
-            .write.partitionBy(job_col)
-            .mode("overwrite")
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
 
 class _ManifestIO:
@@ -482,16 +446,13 @@ def _pack_zones(path: str, job: str, zmap: dict) -> dict:
     }
 
 
-def _zone_stat_cols(path: str, z) -> set[str]:
-    """Stat-column names of a manifest ``zones`` value. Markers answer
-    from their embedded ``cols`` list without touching the sidecar
-    (pre-round-14-review markers lack it — those fall back to one
-    resolve); inline maps scan their entries."""
+def _zone_stat_cols(z) -> set[str]:
+    """Stat-column names of a manifest ``zones`` value. A sidecar marker
+    answers from the ``cols`` list :func:`_pack_zones` embeds, without
+    touching the sidecar; an inline map scans its entries."""
     if isinstance(z, dict) and isinstance(z.get("sidecar"), str):
-        cols = z.get("cols")
-        if isinstance(cols, list):
-            return {c for c in cols if isinstance(c, str)}
-    zmap = _resolve_zmap(path, z) or {}
+        return set(z["cols"])
+    zmap = z if isinstance(z, dict) else {}
     return {c for f in zmap.values() for c in f if c != "rows"}
 
 
@@ -519,8 +480,9 @@ def append_versioned(
     job_col: str = "__job_id",
     zone_stats: Sequence[str] | None = None,
 ) -> int:
-    """Time-travel-lite: :func:`append_idempotent` plus a version-stamped
-    commit manifest — the plain-parquet analog of the reference's Delta
+    """Time-travel-lite idempotent append: each ``job_id`` is written to
+    its own partition directory and committed in a version-stamped
+    manifest — the plain-parquet analog of the reference's Delta
     transaction log (``pasta1_etl/src/main.py:191-194``), as far as a
     log-less format allows.
 
@@ -555,16 +517,16 @@ def append_versioned(
       job set and reads exactly those partition directories (partition
       pruning makes the filter a directory selection, not a row scan).
 
-    Unlike :func:`append_idempotent` (dynamic partition overwrite, which
-    stages every concurrent job under the shared ``<path>/_temporary``
-    and lets the first commit delete the second's staging), the data
-    write here goes DIRECTLY to the job's own partition directory
+    The data write goes DIRECTLY to the job's own partition directory
     ``<path>/{job_col}={job_id}`` — each job gets a private committer
     staging area, so concurrent appends of DIFFERENT job_ids are safe
-    end-to-end. A crashed write leaves a partial partition directory,
-    but versioned readers never see it: only manifest-committed job_ids
-    are selected. Requires a filesystem-safe ``job_id``
-    (alphanumerics, ``-``, ``_``, ``.``).
+    end-to-end (a dynamic partition overwrite of the table root would
+    stage every concurrent job under the shared ``<path>/_temporary``,
+    and the first commit would delete the second's staging). A crashed
+    write leaves a partial partition directory, but versioned readers
+    never see it: only manifest-committed job_ids are selected.
+    Requires a filesystem-safe ``job_id`` (alphanumerics, ``-``, ``_``,
+    ``.``).
 
     Returns the committed (or reused) version number. What this does
     NOT give vs real Delta: file-level conflict detection between
@@ -716,7 +678,7 @@ def delete_where(spark: SparkSession, path: str, condition: Column) -> int:
         # rewritten job's zones — losing read-path data skipping on
         # exactly the jobs big enough to have been OPTIMIZEd. One
         # extra file-stats scan of the directory just written.
-        zcols = sorted(_zone_stat_cols(path, tip_zones.get(job)))
+        zcols = sorted(_zone_stat_cols(tip_zones.get(job)))
         if zcols:
             new_zones[new_job] = _pack_zones(
                 path, new_job, _collect_zone_stats(spark, new_dir, zcols)
@@ -886,7 +848,7 @@ def merge_versioned(
         # rewritten jobs inherit their base's zone-stat columns — same
         # rationale as delete_where (round 13): MERGE must not erode
         # the table's data-skipping coverage
-        zcols = sorted(_zone_stat_cols(path, tip_zones.get(job)))
+        zcols = sorted(_zone_stat_cols(tip_zones.get(job)))
         if zcols:
             new_zones[new_job] = _pack_zones(
                 path, new_job, _collect_zone_stats(spark, new_dir, zcols)
@@ -1239,9 +1201,12 @@ def vacuum_versioned(path: str, retain_last: int = 1) -> tuple[int, int]:
     if tip is None:
         raise ValueError(f"no versions committed under {path}")
     job_col = tip_meta["job_col"]
-    versions = mio.list_versions()
-    dropped = versions[:-retain_last]
-    retained_jobs = {j for _v, jobs in versions[-retain_last:] for j in jobs}
+    # Only the retained manifests are read (the tip's already is): the
+    # dropped ones are deleted by name, from the listing alone.
+    nums = mio.list_version_numbers()
+    dropped = nums[:-retain_last]
+    retained = [tip_meta] + [mio.read_meta(v) for v in nums[-retain_last:] if v != tip]
+    retained_jobs = {j for m in retained for j in m["job_ids"]}
     prefix = f"{job_col}="
     # Sweep orphaned zone-stat sidecars (`_manifests/zstats/<job>.<sha12>.json`, _pack_zones).
     # Vacuumed jobs — and the never-referenced sidecars of losing
@@ -1255,13 +1220,12 @@ def vacuum_versioned(path: str, retain_last: int = 1) -> tuple[int, int]:
     # job to an unpruned read — correct, just unskipped — per the
     # documented missing-sidecar contract (_resolve_zmap).
     referenced: set[str] = set()
-    for v, _jobs in versions[-retain_last:]:
-        m = mio.read_meta(v)
+    for m in retained:
         for z in (m.get("zones") or {}).values():
             if isinstance(z, dict) and isinstance(z.get("sidecar"), str):
                 referenced.add(z["sidecar"])
     store = mio.store
-    store.delete_keys([f"_manifests/v{v}.json" for v, _jobs in dropped])
+    store.delete_keys([f"_manifests/v{v}.json" for v in dropped])
     doomed: list[str] = []
     doomed_dirs: set[str] = set()
     for page in store.iter_pages(prefix):
@@ -1499,7 +1463,7 @@ def optimize_versioned(
         tip_zones = _meta.get("zones") or {}
         inherited: set[str] = set()
         for j in jobs:
-            inherited |= _zone_stat_cols(path, tip_zones.get(j))
+            inherited |= _zone_stat_cols(tip_zones.get(j))
         stat_cols = sorted(inherited)
     new_zones = (
         {new_job: _pack_zones(path, new_job, _collect_zone_stats(spark, job_dir, stat_cols))}

@@ -209,7 +209,6 @@ def stable_split(
     id_col: str = "doc_id",
     holdout_pct: int = 10,
     salt: str = "v1",
-    portable: bool = True,
     split_col: str = "split",
 ) -> DataFrame:
     """Deterministic hash-based train/holdout split — the reproducible-
@@ -221,17 +220,15 @@ def stable_split(
     Draw = ``hash(salt || id) mod 100 < holdout_pct``. Unlike the
     id-modulo draw in :func:`weighted_mix`, a hash draw stays uniform
     when ids are sequential or clustered per source — the situation at
-    100 TB where id ranges encode provenance. ``portable=True`` uses
-    the 60-bit md5 hash (bit-identical in any engine — oracle-
-    replayable, same trick as the portable simhash); ``False`` uses
-    xxhash64 (JVM-intrinsic, faster, engine-specific). Pure filter
-    expression: embarrassingly parallel, no RNG state, no shuffle.
+    100 TB where id ranges encode provenance. The hash is the 60-bit md5
+    one (bit-identical in any engine — oracle-replayable, same trick as
+    the portable simhash). Pure filter expression: embarrassingly
+    parallel, no RNG state, no shuffle.
     """
     from .text import portable_hash60
 
     key = F.concat(F.lit(salt + ":"), F.col(id_col).cast("string"))
-    h = portable_hash60(key) if portable else F.xxhash64(key)
-    draw = F.pmod(h, F.lit(100))
+    draw = F.pmod(portable_hash60(key), F.lit(100))
     return df.withColumn(
         split_col,
         F.when(draw < F.lit(int(holdout_pct)), F.lit("holdout")).otherwise(F.lit("train")),
@@ -244,7 +241,6 @@ def sample_per_group(
     id_col: str = "doc_id",
     k: int = 100,
     salt: str = "v1",
-    portable: bool = True,
 ) -> DataFrame:
     """Deterministic k-per-group sampling — "take exactly k docs per
     language/source", the corpus-balancing op: rank rows inside each
@@ -257,16 +253,15 @@ def sample_per_group(
     ``stable_split`` fraction first so the window sorts k·ε rows, not
     the whole group.
 
-    ``portable=True`` draws from the 60-bit md5 hash so a SQL oracle
-    replays the EXACT sample membership; ``False`` uses xxhash64.
+    The draw is the 60-bit md5 hash, so a SQL oracle replays the EXACT
+    sample membership.
     """
     from pyspark.sql import Window
 
     from .text import portable_hash60
 
     key = F.concat(F.lit(salt + ":"), F.col(id_col).cast("string"))
-    h = portable_hash60(key) if portable else F.xxhash64(key)
-    w = Window.partitionBy(group_col).orderBy(h.asc(), F.col(id_col).asc())
+    w = Window.partitionBy(group_col).orderBy(portable_hash60(key).asc(), F.col(id_col).asc())
     return (
         df.withColumn("__rk", F.row_number().over(w))
         .filter(F.col("__rk") <= k)
@@ -280,7 +275,6 @@ def weighted_sample_without_replacement(
     k: int,
     id_col: str = "doc_id",
     salt: str = "v1",
-    portable: bool = True,
 ) -> DataFrame:
     """Weighted sampling WITHOUT replacement via the Efraimidis–Spirakis
     exponential-keys scheme (A-ES, "Weighted random sampling with a
@@ -294,18 +288,17 @@ def weighted_sample_without_replacement(
     a pure rowwise expression and the global top-k is
     TakeOrderedAndProject (per-partition heaps + k-row driver merge, no
     global sort) — one pass at any scale. Rows with ``weight <= 0`` or
-    NULL are excluded, as in the original scheme. ``portable=True``
-    draws from the 60-bit md5 hash so a SQL oracle replays exact
-    membership; the float ln/divide is IEEE double on both engines,
-    and the selection key stays OUT of the returned columns so an
+    NULL are excluded, as in the original scheme. The draw is the 60-bit
+    md5 hash, so a SQL oracle replays exact membership; the float
+    ln/divide is IEEE double on both engines, and the selection key
+    stays OUT of the returned columns so an
     ulp-level divergence could only ever flip membership at the exact
     rank-k boundary, not hash comparison of values.
     """
     from .text import portable_hash60
 
     hkey = F.concat(F.lit(salt + ":"), F.col(id_col).cast("string"))
-    h = portable_hash60(hkey) if portable else F.pmod(F.xxhash64(hkey), F.lit(1 << 60))
-    u = (h.cast("double") + F.lit(0.5)) / F.lit(float(1 << 60))
+    u = (portable_hash60(hkey).cast("double") + F.lit(0.5)) / F.lit(float(1 << 60))
     return (
         df.withColumn("__w", weight.cast("double"))
         .filter(F.col("__w") > 0)
@@ -528,7 +521,6 @@ def stable_shuffle(
     id_col: str = "doc_id",
     n_shards: int = 8,
     salt: str = "v1",
-    portable: bool = True,
 ) -> DataFrame:
     """Deterministic training-export shuffle: every row gets a
     ``shard`` and a ``shard_pos`` that are stable across runs, engines,
@@ -538,7 +530,7 @@ def stable_shuffle(
     whole permutation (a new epoch order without rewriting data).
 
     Both outputs derive from one seeded hash draw (the portable 60-bit
-    md5 by default, :func:`stable_split`'s contract): shard =
+    md5, :func:`stable_split`'s contract): shard =
     ``hash mod n_shards`` (balanced by hash uniformity, never by a
     round-robin that depends on row order), position = rank of
     ``(hash, id)`` within the shard — the id tiebreak keeps the
@@ -554,8 +546,7 @@ def stable_shuffle(
     from .text import portable_hash60
 
     key = F.concat(F.lit(salt + ":"), F.col(id_col).cast("string"))
-    h = portable_hash60(key) if portable else F.xxhash64(key)
-    out = df.withColumn("__h", h).withColumn(
+    out = df.withColumn("__h", portable_hash60(key)).withColumn(
         "shard", F.pmod(F.col("__h"), F.lit(int(n_shards))).cast("int")
     )
     w = _W.partitionBy("shard").orderBy(F.col("__h"), F.col(id_col))

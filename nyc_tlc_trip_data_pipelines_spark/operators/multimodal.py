@@ -143,9 +143,6 @@ AUDIO_DECODE_SCHEMA = StructType(
 def decode_audio_features(df: DataFrame) -> DataFrame:
     """WAV feature extraction via Arrow-batched ``mapInPandas`` — bytes
     cross to Python once per batch; the payload never survives the map."""
-    from nyc_tlc_trip_data_pipelines_spark.deploy import ensure_package_on_executors
-
-    ensure_package_on_executors(df.sparkSession)
 
     def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -229,9 +226,6 @@ def decode_bmp(payload: bytes) -> tuple[int, int, float, float, float]:
 
 def decode_image_features(df: DataFrame) -> DataFrame:
     """BMP feature extraction via Arrow-batched ``mapInPandas``."""
-    from nyc_tlc_trip_data_pipelines_spark.deploy import ensure_package_on_executors
-
-    ensure_package_on_executors(df.sparkSession)
 
     def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -303,9 +297,6 @@ def resize_bmp(payload: bytes, factor: int = 2) -> bytes:
 def resize_bmp_images(df: DataFrame, factor: int = 2) -> DataFrame:
     """Real BMP box-downsample via Arrow ``mapInPandas``; emits the
     re-encoded payload so downstream decode proves the round trip."""
-    from nyc_tlc_trip_data_pipelines_spark.deploy import ensure_package_on_executors
-
-    ensure_package_on_executors(df.sparkSession)
 
     def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -454,9 +445,6 @@ def decode_video_features(df: DataFrame) -> DataFrame:
     """Y4M feature extraction via Arrow-batched ``mapInPandas`` — same
     boundary discipline as the audio/image kernels (bytes cross once per
     batch, payload never survives the map)."""
-    from nyc_tlc_trip_data_pipelines_spark.deploy import ensure_package_on_executors
-
-    ensure_package_on_executors(df.sparkSession)
 
     def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -492,9 +480,6 @@ def sample_y4m_frames(df: DataFrame, every_n: int = 2) -> DataFrame:
     its luma mean — the decode-then-explode shape real frame extraction
     uses at scale. One mapInPandas pass; a 100 TB deployment would
     partition by media_id ranges sized on payload bytes first."""
-    from nyc_tlc_trip_data_pipelines_spark.deploy import ensure_package_on_executors
-
-    ensure_package_on_executors(df.sparkSession)
 
     def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
@@ -534,9 +519,6 @@ def extract_image_features(df: DataFrame) -> DataFrame:
     entry integer-exact or an exact integer ratio, so the whole vector
     is SQL-provable from the fixture formula. Arrow-batched, payload
     dropped at the boundary."""
-    from nyc_tlc_trip_data_pipelines_spark.deploy import ensure_package_on_executors
-
-    ensure_package_on_executors(df.sparkSession)
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
@@ -594,9 +576,6 @@ def resample_wav(payload: bytes, factor: int = 2) -> bytes:
 def resample_wav_media(df: DataFrame, factor: int = 2) -> DataFrame:
     """Decimate WAV rows by ``factor`` via Arrow ``mapInPandas``; emits
     re-encoded payloads with updated duration metadata."""
-    from nyc_tlc_trip_data_pipelines_spark.deploy import ensure_package_on_executors
-
-    ensure_package_on_executors(df.sparkSession)
 
     def _resample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -643,9 +622,6 @@ def detect_scene_changes(df: DataFrame, threshold: float = 20.0) -> DataFrame:
     by media_id ranges sized on payload bytes; a real codec swaps into
     the same UDF body.
     """
-    from nyc_tlc_trip_data_pipelines_spark.deploy import ensure_package_on_executors
-
-    ensure_package_on_executors(df.sparkSession)
 
     def _detect(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
@@ -701,9 +677,6 @@ def segment_silence(
     payload: no window, no shuffle, one Arrow ``mapInPandas`` decode
     pass; the final frame may be partial). All-silent files report
     NULL trim points rather than sentinel indices."""
-    from nyc_tlc_trip_data_pipelines_spark.deploy import ensure_package_on_executors
-
-    ensure_package_on_executors(df.sparkSession)
 
     def _segment(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import io
@@ -795,9 +768,6 @@ def ahash_images(df: DataFrame, block: int = 2) -> DataFrame:
     100 TB: decode + hash are row-local in the scan stage; everything
     downstream (bucket groupBy, keep-best, diff against an index) moves
     8-byte keys."""
-    from nyc_tlc_trip_data_pipelines_spark.deploy import ensure_package_on_executors
-
-    ensure_package_on_executors(df.sparkSession)
 
     def _hash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -860,9 +830,6 @@ def ehash_audio(df: DataFrame, n_frames: int = 8, frame_len: int = 50) -> DataFr
     (text: minhash/simhash, image: aHash, audio: eHash). The decode +
     hash are row-local in the scan stage; only (media_id, 8-byte key)
     rows ever shuffle."""
-    from nyc_tlc_trip_data_pipelines_spark.deploy import ensure_package_on_executors
-
-    ensure_package_on_executors(df.sparkSession)
 
     def _hash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

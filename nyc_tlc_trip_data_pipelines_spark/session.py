@@ -64,7 +64,6 @@ def get_spark(app_name: str = "nyc_tlc_trip_data_pipelines_spark") -> SparkSessi
     for key, value in worker_confs(master).items():
         builder = builder.config(key, value)
     spark = builder.getOrCreate()
-    put_package_on_worker_path(spark)
     configure_session(spark)
     return spark
 
@@ -79,26 +78,22 @@ def worker_confs(master: str) -> dict[str, str]:
     return {"spark.python.daemon.module": DAEMON_MODULE}
 
 
-def put_package_on_worker_path(spark: SparkSession) -> None:
-    """Merge the package root into the Python workers' ``PYTHONPATH`` when
-    the session runs ``worker_daemon``, so ``python -m`` finds it from any
+def configure_session(spark: SparkSession) -> SparkSession:
+    """Prepare ``spark`` for this engine, whoever built it: ``get_spark``,
+    ``__spark_entry__.entry``, every ``__spark_entry__.queries()`` id and
+    every ``catalog.load_table`` call it, so a session from a plain
+    builder behaves like one from ``get_spark``.
+
+    Sets the runtime SQL confs correctness depends on — never JVM-startup
+    confs. On ``local[...]`` masters it also merges the package root into
+    the Python workers' ``PYTHONPATH``: functions defined in this package
+    pickle by reference, so a worker must import the package from any
     working directory. The path goes into ``SparkContext.environment``,
     which every Python function carries to its worker and which already
     holds a submit-time ``spark.executorEnv.PYTHONPATH``; that value is
-    kept. Done after ``getOrCreate``: reading the submit-time conf before
-    it would start the JVM without the builder's confs (its heap size)."""
-    sc = spark.sparkContext
-    if sc.getConf().get("spark.python.daemon.module") != DAEMON_MODULE:
-        return
-    paths = [PACKAGE_ROOT] + [p for p in sc.environment.get("PYTHONPATH", "").split(os.pathsep) if p]
-    sc.environment["PYTHONPATH"] = os.pathsep.join(dict.fromkeys(paths))
-
-
-def configure_session(spark: SparkSession) -> SparkSession:
-    """Apply the session-level confs required for correctness parity.
-
-    Safe on an externally-created session: only touches runtime-mutable
-    SQL confs (cast semantics, timezone, AQE) — never JVM-startup confs.
+    kept. The gate reads ``sc.master``, a Python attribute, not the
+    submit-time conf, which is copied over py4j on every read. Other
+    masters ship the package with ``spark-submit --py-files``.
     """
     spark.conf.set("spark.sql.ansi.enabled", "false")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
@@ -109,5 +104,9 @@ def configure_session(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
     spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    spark.sparkContext.setLogLevel("WARN")
+    sc = spark.sparkContext
+    if sc.master.startswith("local"):
+        paths = [PACKAGE_ROOT] + [p for p in sc.environment.get("PYTHONPATH", "").split(os.pathsep) if p]
+        sc.environment["PYTHONPATH"] = os.pathsep.join(dict.fromkeys(paths))
+    sc.setLogLevel("WARN")
     return spark

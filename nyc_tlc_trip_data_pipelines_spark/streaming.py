@@ -18,24 +18,10 @@ key — same skew rules as batch groupBy.
 
 from __future__ import annotations
 
-import importlib.util
-
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
-
-# The Spark-4 State API v2 (transformWithStateInPandas) speaks protobuf
-# to the JVM; without the protobuf package the driver worker crashes at
-# query start, so the surface is guarded by an import probe.
-# find_spec on a submodule imports the parent package, so probe the
-# parent first (a bare find_spec("google.protobuf") raises when the
-# google namespace package is absent entirely)
-HAS_TWS_PROTO = (
-    importlib.util.find_spec("google") is not None
-    and importlib.util.find_spec("google.protobuf") is not None
-)
-
 
 def read_file_stream(
     spark: SparkSession,
@@ -188,9 +174,6 @@ def stateful_running_totals(
         yield pd.DataFrame({"key": [key[0]], "n_events": [n], "sum_value": [round(s, 6)]})
 
     if df.isStreaming:
-        from nyc_tlc_trip_data_pipelines_spark.deploy import ensure_package_on_executors
-
-        ensure_package_on_executors(df.sparkSession)
         return df.groupBy(key_col).applyInPandasWithState(
             update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
         )
@@ -398,133 +381,4 @@ def quarantine_sink(
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
-    )
-
-
-def run_with_rocksdb_state(
-    stream_df: DataFrame, query_name: str, output_mode: str = "update"
-) -> DataFrame:
-    """:func:`run_to_memory_sink` with the RocksDB state store provider
-    scoped to the query — ``transformWithStateInPandas`` (the Spark-4
-    State API v2) requires RocksDB; HDFS-backed state (the default)
-    stays in force for every other query. The conf is read at query
-    START, so set-run-restore is race-free under this module's
-    one-query-at-a-time harness usage."""
-    spark = stream_df.sparkSession
-    key = "spark.sql.streaming.stateStore.providerClass"
-    try:
-        prev = spark.conf.get(key)
-    except Exception:
-        prev = None
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        return run_to_memory_sink(stream_df, query_name, output_mode=output_mode)
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-
-
-def tws_running_totals(
-    df: DataFrame,
-    key_col: str = "user_id",
-    value_col: str = "value",
-) -> DataFrame:
-    """Per-key running totals on the Spark-4 **State API v2**
-    (``transformWithStateInPandas``, SPARK-49564) — the successor to
-    :func:`stateful_running_totals`'s ``applyInPandasWithState``: the
-    processor owns named, independently-evolvable state variables
-    (ValueState/ListState/MapState with optional TTL and timers)
-    instead of one monolithic state tuple, which is what production
-    pipelines need for schema evolution of long-lived state.
-
-    State here is one ValueState ``(n BIGINT, s BIGINT)`` per key with
-    the sum in integer MICRO-UNITS: each value quantizes to
-    HALF_UP ``round(v·1e6)`` per row before an int64 sum (the same
-    rounding F.round applies in the batch twin), so the running total
-    is EXACT and independent of micro-batch boundaries and Arrow batch
-    order — the streamed final equals the batch aggregate bit-for-bit
-    (the q_domain_mixture rule, applied across micro-batches).
-
-    Emits one update row per key per micro-batch it appears in:
-    (key, n_events, sum_value). Last update per key == the batch
-    ``groupBy`` twin (returned on a non-streaming input).
-
-    Scale: state is 16 bytes per key in RocksDB (bounded by key
-    cardinality, spillable to disk — the reason the v2 API is
-    RocksDB-only); add ``ttlDurationMs`` to the ValueState for
-    unbounded key spaces. Run via :func:`run_with_rocksdb_state`.
-
-    Environment guard: the State API v2 wire protocol needs the
-    ``protobuf`` package (``pyspark.sql.streaming.proto``) — the
-    streaming path raises a loud RuntimeError without it (the code
-    path self-enables where protobuf exists, and tests skipif on
-    :data:`HAS_TWS_PROTO`). The batch twin always works.
-    """
-    import numpy as np
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema = "key bigint, n_events bigint, sum_value double"
-
-    class _RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState("totals", "n BIGINT, s BIGINT")
-
-        def handleInputRows(self, key, rows, timer_values):
-            n, s = self._totals.get() or (0, 0)
-            for pdf in rows:
-                n += len(pdf)
-                # The micro-unit quantization happens JVM-SIDE in the
-                # plan (the __micro column below, the SAME F.round
-                # BigDecimal-HALF_UP expression the batch twin uses) —
-                # a Python-side floor(x+0.5) emulation can carry
-                # just-below-midpoint floats up (0.49999999999999994 +
-                # 0.5 == 1.0) and break the bit-for-bit parity claim
-                # (round-7 advice). Here only the int64 sum remains.
-                # NULL values drop from the sum (F.sum semantics) while
-                # still counting in n_events (F.count(lit(1)) semantics).
-                x = pdf["__micro"].to_numpy(dtype="float64")
-                s += int(x[~np.isnan(x)].astype("int64").sum())
-            self._totals.update((n, s))
-            yield pd.DataFrame(
-                {"key": [key[0]], "n_events": [n], "sum_value": [s / 1e6]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    if df.isStreaming:
-        if not HAS_TWS_PROTO:
-            raise RuntimeError(
-                "transformWithStateInPandas needs the protobuf package "
-                "(pyspark.sql.streaming.proto) — unavailable in this "
-                "environment; use stateful_running_totals "
-                "(applyInPandasWithState) instead"
-            )
-        from nyc_tlc_trip_data_pipelines_spark.deploy import (
-            ensure_package_on_executors,
-        )
-
-        ensure_package_on_executors(df.sparkSession)
-        # quantize in the PLAN, not in Python: the same JVM F.round
-        # (BigDecimal HALF_UP) expression as the batch twin computes
-        # __micro, so stream/batch parity is exact by construction
-        micro = df.withColumn(
-            "__micro", F.round(F.col(value_col) * 1e6, 0).cast("long")
-        )
-        return micro.groupBy(key_col).transformWithStateInPandas(
-            _RunningTotals(), out_schema, "update", "none"
-        )
-    vm = F.round(F.col(value_col) * 1e6, 0).cast("long")
-    return df.groupBy(F.col(key_col).alias("key")).agg(
-        F.count(F.lit(1)).alias("n_events"),
-        (F.sum(vm) / 1e6).alias("sum_value"),
     )

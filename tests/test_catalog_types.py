@@ -52,3 +52,26 @@ def test_events_ts_matches_duckdb_naive_wallclock(spark, sf_dir):
         F.date_format(F.max("ts"), "yyyy-MM-dd HH:mm:ss").alias("hi"),
     ).collect()[0]
     assert s.lo == d_lo[:19] and s.hi == d_hi[:19]
+
+
+def test_catalog_memo_is_per_session(spark, sf_dir):
+    """Two sessions of one SparkContext: ``load_table`` on a new session
+    returns a handle bound to that session and prepares that session's
+    confs, and ``register_views`` there creates its own views although
+    the other session already registered the same directory."""
+    from nyc_tlc_trip_data_pipelines_spark.catalog import register_views
+
+    register_views(spark, sf_dir)
+    other = spark.newSession()
+    assert other.conf.get("spark.sql.legacy.parquet.nanosAsLong") != "true"
+    assert not other.catalog.tableExists("region")
+
+    df = load_table(other, sf_dir, "events")
+    assert df.sparkSession is other
+    assert load_table(other, sf_dir, "events") is df
+    assert other.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
+    assert dict(df.dtypes)["ts"] == "timestamp"
+
+    register_views(other, sf_dir)
+    n = other.sql("SELECT COUNT(*) AS n FROM region").collect()[0].n
+    assert n == spark.sql("SELECT COUNT(*) AS n FROM region").collect()[0].n > 0

@@ -1,6 +1,7 @@
 """Corpus-curation operator tests (decontamination, repetition, quality,
 vocab, mixture sampling, containment)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from nyc_tlc_trip_data_pipelines_spark.operators import corpus as CP
@@ -111,10 +112,9 @@ def test_stable_split_properties(spark):
     # salt re-rolls assignments
     s3 = {r.doc_id: r.split for r in CP.stable_split(df, holdout_pct=10, salt="v2").collect()}
     assert s3 != s1
-    # portable and xxhash64 paths are both valid splits, not identical
-    s4 = {r.doc_id: r.split for r in CP.stable_split(df, holdout_pct=10, portable=False).collect()}
-    frac4 = sum(1 for v in s4.values() if v == "holdout") / len(s4)
-    assert 0.06 < frac4 < 0.14
+    # the draw is always the portable hash: there is no option to pick another
+    with pytest.raises(TypeError):
+        CP.stable_split(df, holdout_pct=10, portable=False)
 
 
 def test_sample_per_group_exact_k_and_stable(spark):

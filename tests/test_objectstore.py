@@ -108,30 +108,30 @@ def test_discover_files_matches_s3_semantics(tmp_path, spark):
 
 
 def test_append_idempotent_retry_no_duplicates(tmp_path, spark):
-    """Delta-gap hardening: a retried batch replaces its own partition
-    (dynamic partition overwrite keyed on job id) instead of appending a
-    second copy — the plain-parquet analog of the reference's
-    transactional Delta append (pasta1_etl/src/main.py:191-194)."""
+    """Delta-gap hardening: a retried batch is a no-op instead of a
+    second copy of its rows — the plain-parquet analog of the
+    reference's transactional Delta append
+    (pasta1_etl/src/main.py:191-194)."""
     dest = str(tmp_path / "bronze")
     jan = spark.range(100).withColumn("month", F.lit("2024-01"))
     feb = spark.range(30).withColumn("month", F.lit("2024-02"))
 
-    eio.append_idempotent(jan, dest, job_id="2024-01")
-    eio.append_idempotent(feb, dest, job_id="2024-02")
-    assert spark.read.parquet(dest).count() == 130
+    eio.append_versioned(jan, dest, job_id="2024-01")
+    v = eio.append_versioned(feb, dest, job_id="2024-02")
+    assert eio.read_version(spark, dest).count() == 130
 
-    # retry January (e.g. the first attempt "failed" after writing)
-    eio.append_idempotent(jan, dest, job_id="2024-01")
+    # retry January (e.g. the first attempt "failed" after committing)
+    assert eio.append_versioned(jan, dest, job_id="2024-01") == v
     got = spark.read.parquet(dest)
     assert got.count() == 130  # not 230
     assert got.filter(F.col("__job_id") == "2024-01").count() == 100
-    # other partitions untouched by the dynamic overwrite
+    # February untouched by the retry
     assert got.filter(F.col("__job_id") == "2024-02").count() == 30
 
 
 def test_append_idempotent_reader_drops_job_col(tmp_path, spark):
     dest = str(tmp_path / "t")
-    eio.append_idempotent(spark.range(5), dest, job_id="j1")
+    eio.append_versioned(spark.range(5), dest, job_id="j1")
     df = spark.read.parquet(dest).drop("__job_id")
     assert df.columns == ["id"] and df.count() == 5
 
@@ -429,7 +429,6 @@ def test_append_versioned_s3_concurrent_committer_loses_cleanly(monkeypatch):
         monkeypatch.setattr(eio._ManifestIO, "try_commit", racing_try)
         writes = []
         v = eio.append_versioned(_FakeDF(writes), url, "mine")
-        monkeypatch.undo()
         # our committer lost v0, re-read, and committed v1 with the
         # union of job sets; exactly one data write happened
         assert v == 1
@@ -971,7 +970,6 @@ def test_append_versioned_s3_crash_before_commit_recovers(monkeypatch):
         # retry (same job_id, as the journal/driver would): overwrites
         # the orphan directory and commits exactly one new version
         v = eio.append_versioned(_FakeDF(writes), url, "job1")
-        monkeypatch.undo()
         assert v == 1
         assert writes[-1] == f"{url}/__job_id=job1"  # mode=overwrite rewrite
         assert eio.list_versions(url) == [(0, ["base"]), (1, ["base", "job1"])]
@@ -1059,6 +1057,33 @@ def test_append_commit_is_o1_gets_on_s3(monkeypatch):
         assert eio.append_versioned(_FakeDF(writes), url, "job3") == 12  # dedup
         assert calls["get"] <= 2
         assert store.get_text  # silence unused warning paths
+
+
+@s3_deps
+def test_vacuum_reads_only_retained_manifests_on_s3(monkeypatch):
+    """VACUUM deletes the dropped manifests by name from the listing: on
+    a 6-version chain with ``retain_last=1`` it reads at most 2 manifest
+    bodies, not one per version."""
+    _fake_aws(monkeypatch)
+    with mock_aws():
+        boto3.client("s3").create_bucket(Bucket="bkt")
+        url = "s3a://bkt/tbl"
+        writes: list[str] = []
+        for i in range(6):
+            eio.append_versioned(_FakeDF(writes), url, f"job{i}")
+        mio = eio._manifest_io(url)
+        real_get = type(mio.store).get_text
+        manifests: list[str] = []
+
+        def counting_get(self, key):
+            if key.startswith("_manifests/v"):
+                manifests.append(key)
+            return real_get(self, key)
+
+        monkeypatch.setattr(type(mio.store), "get_text", counting_get)
+        assert eio.vacuum_versioned(url, retain_last=1) == (5, 0)
+        assert len(manifests) <= 2, f"vacuum read {manifests}"
+        assert eio.list_versions(url) == [(5, [f"job{i}" for i in range(6)])]
 
 
 def test_tip_without_ever_raises_and_leaves_table_untouched(spark, tmp_path):

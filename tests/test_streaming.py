@@ -380,46 +380,41 @@ def test_listing_stream_reader_key_cursor_not_positional(tmp_path):
 
 
 def test_tws_running_totals_batch_twin(spark):
-    """The State-API-v2 operator's batch twin: exact micro-unit sums."""
-    from nyc_tlc_trip_data_pipelines_spark import streaming as ST
-
+    """``stateful_running_totals`` on a batch input: one row per key
+    with its count and its sum rounded to 6 dp."""
     rows = [(i, i % 3, float(i) + 0.25) for i in range(60)]
     df = spark.createDataFrame(rows, "event_id bigint, user_id bigint, value double")
-    out = {r["key"]: r for r in ST.tws_running_totals(df, "user_id", "value").collect()}
+    out = {r["key"]: r for r in ST.stateful_running_totals(df, "user_id", "value").collect()}
     assert out[0]["n_events"] == 20
     # sum over 0,3,...,57 (+0.25 each) = 570 + 5 = 575.0 exactly
     assert out[0]["sum_value"] == 575.0
 
 
 def test_tws_running_totals_stream_guard_or_run(spark, replay_dir):
-    """Without protobuf the streaming path must fail LOUDLY (not crash
-    the query mid-flight); with protobuf it must match the batch twin."""
-    import pytest
+    """The streamed running totals, two files per micro-batch: the last
+    update per key equals the batch result."""
+    from pyspark.sql import functions as F
 
-    from nyc_tlc_trip_data_pipelines_spark import streaming as ST
+    from nyc_tlc_trip_data_pipelines_spark.operators import windows as W
 
     stream = ST.read_file_stream(
         spark, replay_dir, _batch_df(spark, replay_dir).schema, max_files_per_trigger=2
     )
-    if not ST.HAS_TWS_PROTO:
-        with pytest.raises(RuntimeError, match="protobuf"):
-            ST.tws_running_totals(stream, "user_id", "value")
-        return
-    updates = ST.tws_running_totals(stream, "user_id", "value")
-    out = ST.run_with_rocksdb_state(updates, "tws_v2_sink", output_mode="update")
-    from nyc_tlc_trip_data_pipelines_spark.operators import windows as W
-    from pyspark.sql import functions as F
-
+    updates = ST.stateful_running_totals(stream, "user_id", "value")
+    out = ST.run_to_memory_sink(updates, "running_totals_2", output_mode="update")
     final = W.top_n_per_group(out, ["key"], [F.col("n_events").desc()], n=1)
-    expect = ST.tws_running_totals(_batch_df(spark, replay_dir), "user_id", "value")
+    expect = ST.stateful_running_totals(_batch_df(spark, replay_dir), "user_id", "value")
     assert sorted(map(tuple, final.collect())) == sorted(map(tuple, expect.collect()))
 
 
 def test_streaming_id_leaves_no_scratch_files(sf_dir, tmp_path):
-    """A registry streaming id writes its replay and sink files, and
-    the package zip shipped to executors, under the temp directory.
-    The returned DataFrame reads them lazily, so they are removed at
-    interpreter exit: a process that ran one leaves TMPDIR empty."""
+    """A session from a plain builder (no repo confs, working directory
+    outside the checkout, no ``PYTHONPATH``) runs registry ids whose
+    Python workers import this package: the package reaches them through
+    the workers' ``PYTHONPATH``, with no file shipped to the context.
+    A streaming id writes its replay and sink files under the temp
+    directory; the returned DataFrame reads them lazily, so they are
+    removed at interpreter exit: the process leaves TMPDIR empty."""
     import subprocess
     import sys
 
@@ -434,12 +429,15 @@ spark = (SparkSession.builder.master("local[2]")
          .config("spark.sql.shuffle.partitions", "2")
          .config("spark.ui.enabled", "false").getOrCreate())
 import __spark_entry__ as E
-assert E.queries()["q_stream_foreach_batch"](spark, {sf_dir!r}).collect()
+for q in ("q_udf_scalar", "q_multimodal_audio_decode", "q_stream_foreach_batch"):
+    assert E.queries()[q](spark, {sf_dir!r}).collect(), q
+    assert spark.sparkContext.listFiles == [], (q, spark.sparkContext.listFiles)
 spark.stop()
 """
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     r = subprocess.run(
         [sys.executable, "-c", code],
-        env=dict(os.environ, TMPDIR=str(scratch)),
+        env=dict(env, TMPDIR=str(scratch)),
         cwd=str(tmp_path),
         capture_output=True,
         text=True,

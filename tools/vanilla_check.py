@@ -2,12 +2,13 @@
 SparkSession, the way the driver does.
 
 The driver builds its own generic session — NOT ``session.get_spark`` —
-so none of our correctness confs (ANSI off, UTC timezone, nanos shim,
-Arrow) are pre-applied at the session level. That is exactly how the
-round-3 NTZ cast crash slipped a green local gate: queries depended on a
-conf only ``get_spark`` set. ``catalog.load_table`` must (re)apply every
-correctness-relevant conf per load, and every query must work from a
-cold generic session.
+so none of our correctness confs (ANSI off, UTC timezone, nanos shim)
+and no worker ``PYTHONPATH`` are pre-applied at the session level. That
+is exactly how the round-3 NTZ cast crash slipped a green local gate:
+queries depended on a conf only ``get_spark`` set.
+``session.configure_session``, which every ``queries()`` id and every
+``catalog.load_table`` call runs, must prepare the session, and every
+query must work from a cold generic session.
 
 This script spawns the comparison in THIS process but builds the session
 with zero repo-specific configs (master + a small shuffle-partition
