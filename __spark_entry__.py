@@ -1491,7 +1491,7 @@ def q_dedup_minhash(spark: SparkSession, sf: str) -> DataFrame:
     candidates (the production dedup shape: LSH prunes, exact verify
     decides). Deterministic output — oracle is the all-pairs exact
     char-5-shingle Jaccard ≥ 0.8 in DuckDB; LSH recall loss is bounded
-    at ~3e-8 per true pair (see ``minhash_verified_pairs``)."""
+    at ~2e-6 per true pair (see ``minhash_verified_pairs``)."""
     docs = load_table(spark, sf, "documents")
     return O.sort(TX.minhash_verified_pairs(docs, threshold=0.8), ["id_a", "id_b"])
 
@@ -1566,12 +1566,12 @@ def q_dedup_pipeline(spark: SparkSession, sf: str) -> DataFrame:
     """North star: staged dedup pipeline — exact fingerprint dedup, then
     MinHash-LSH + exact-Jaccard verify on unique texts, one-step group
     assignment. Scales with unique content, not corpus size (measured
-    20× at 10× duplication). With ``verified=True`` the whole output is
-    deterministic, so the DuckDB oracle replays the full pipeline
-    (group-by-text reps → exact pair jaccard ≥ 0.8 → min-neighbor
-    groups → copy-weighted group sizes)."""
+    20× at 10× duplication). The whole output is deterministic, so the
+    DuckDB oracle replays the full pipeline (group-by-text reps → exact
+    pair jaccard ≥ 0.8 → min-neighbor groups → copy-weighted group
+    sizes)."""
     docs = load_table(spark, sf, "documents")
-    groups = TX.near_duplicate_groups(docs, jaccard_threshold=0.8, verified=True)
+    groups = TX.near_duplicate_groups(docs, jaccard_threshold=0.8)
     out = groups.groupBy("group_id").agg(F.count(F.lit(1)).alias("n_docs"))
     return O.sort(out.filter(F.col("n_docs") >= 2), ["group_id"])
 
@@ -1933,10 +1933,9 @@ def q_dedup_simhash(spark: SparkSession, sf: str) -> DataFrame:
     the contract query runs the PORTABLE 60-bit hash (first 15 md5 hex
     chars — bit-identical in any engine), so the DuckDB twin replays the
     ENTIRE computation: tokenize → hash → per-bit sign votes → packed
-    signature → bucket groups. Production keeps the xxhash64 default
-    (same pipeline, ~3× faster hash)."""
+    signature → bucket groups."""
     docs = load_table(spark, sf, "documents")
-    sigs = TX.simhash_signatures(docs, bits=60, portable=True)
+    sigs = TX.simhash_signatures(docs)
     groups = sigs.groupBy("simhash").agg(
         F.count(F.lit(1)).alias("n_docs"), F.min("doc_id").alias("first_doc")
     )
@@ -5467,9 +5466,7 @@ def q_simhash_hamming(spark: SparkSession, sf: str) -> DataFrame:
     ≤ 3 by pigeonhole; verification is one codegen XOR + popcount. The
     portable 60-bit hash lets the oracle replay the full pipeline."""
     d = load_table(spark, sf, "documents")
-    out = TX.simhash_hamming_pairs(
-        d, bits=60, n_blocks=4, max_hamming=3, portable=True
-    )
+    out = TX.simhash_hamming_pairs(d, bits=60, n_blocks=4, max_hamming=3)
     return O.sort(out, ["id_a", "id_b"])
 
 

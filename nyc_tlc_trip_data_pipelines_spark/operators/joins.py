@@ -169,45 +169,6 @@ def cross_join(left: DataFrame, right: DataFrame) -> DataFrame:
     return left.crossJoin(right)
 
 
-def as_of_join(
-    left: DataFrame,
-    right: DataFrame,
-    ts_left: str,
-    ts_right: str,
-    by: Sequence[str] = (),
-    direction: str = "backward",
-) -> DataFrame:
-    """As-of join: for each left row, the latest right row at-or-before
-    its timestamp (``backward``) or earliest at-or-after (``forward``),
-    optionally within ``by`` equality groups.
-
-    Spark has no native as-of join; this composes range-join + window
-    top-1 — fully shuffle-based, no driver loop, scales with the key
-    cardinality. (Composition strategy per SURVEY.md §4.3.)
-
-    Scale note: the join inflates to |left|×|right| rows per ``by``
-    group before the top-1 filter, so hot keys go quadratic. For large
-    same-key histories prefer ``operators.timeseries.asof_join`` — the
-    union-merge window formulation is O(n log n) with one shuffle
-    (backward/inclusive semantics only).
-    """
-    from pyspark.sql import Window
-
-    lcols = [F.col(c) for c in left.columns]
-    l = left.withColumn("__asof_id", F.monotonically_increasing_id())
-    cond = [l[c] == right[c] for c in by]
-    if direction == "backward":
-        cond.append(l[ts_left] >= right[ts_right])
-        order = F.col(ts_right).desc()
-    else:
-        cond.append(l[ts_left] <= right[ts_right])
-        order = F.col(ts_right).asc()
-    joined = l.join(right, on=cond if cond else None, how="left")
-    w = Window.partitionBy("__asof_id").orderBy(order)
-    ranked = joined.withColumn("__asof_rn", F.row_number().over(w))
-    return ranked.filter(F.col("__asof_rn") == 1).drop("__asof_rn", "__asof_id")
-
-
 def bloom_bit_positions(key: Column, n_bits: int, n_hashes: int) -> list[Column]:
     """The shared hash contract for :func:`bloom_prefilter`: positions
     are disjoint bit-ranges of ONE ``xxhash64`` of the key

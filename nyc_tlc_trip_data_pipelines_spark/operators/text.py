@@ -6,12 +6,13 @@ SimHash, n-gram Jaccard). All hot paths are built-in column expressions
 (JVM-side, whole-stage codegen); nothing here drops to per-row Python.
 
 100 TB notes:
-- MinHash signatures are computed per-document with higher-order array
-  functions (transform/aggregate) — embarrassingly parallel, no shuffle.
-- LSH banding turns near-dup search from O(n²) pairs into a groupBy on
+- MinHash signatures are one shingle hash per position and a MIN
+  aggregate per permutation — map-side partial aggregation, one row per
+  document through the shuffle.
+- LSH banding turns near-dup search from O(n²) pairs into a join on
   band keys: shuffle volume = n_docs × n_bands rows, then candidate
-  pairs only within buckets. This is the published MinHash-LSH scheme
-  (Broder; Leskovec et al., "Mining of Massive Datasets" ch.3).
+  pairs only within buckets. One band index serves both the batch
+  self-join and the incremental probe of a stored index.
 - Exact-dup first (cheap hash groupBy) shrinks the near-dup input.
 """
 
@@ -162,9 +163,9 @@ def char_shingle_rows(
     hash ``substring(text, p, k)`` — scalar whole-stage-codegen
     expressions, never an interpreted ``transform`` lambda building a
     per-row array (measured 7× slower in :func:`minhash_signatures`).
-    Hash values equal ``xxhash64(shingle)`` over
-    :func:`char_shingles` output, so count-based set arithmetic on
-    these rows matches array_intersect over the array formulation.
+    Hash values equal :func:`shingle_hashes` with ``mod_prime=False``
+    (xxhash64, seed 42), so count-based set arithmetic on these rows
+    matches the array_intersect of the MinHash verify step.
     ``extra_cols`` are doc-level columns carried through (e.g. a block
     key). Documents shorter than ``k`` produce no rows."""
     lc = df.select(F.col(id_col), *[F.col(c) for c in extra_cols], F.lower(F.col(text_col)).alias("__t")).filter(
@@ -182,19 +183,6 @@ def char_shingle_rows(
     return pos.select(
         id_col, *extra_cols, F.xxhash64(F.expr(f"substring(__t, __p, {int(k)})")).alias(alias)
     ).distinct()
-
-
-def char_shingles(text: str | Column, k: int = 5) -> Column:
-    """Character k-shingles of a (lowercased) document. Documents shorter
-    than k yield an empty array (see ngrams note on sequence direction)."""
-    c = F.lower(F.col(text) if isinstance(text, str) else text)
-    return F.when(
-        F.length(c) >= k,
-        F.transform(
-            F.sequence(F.lit(1), F.length(c) - k + 1),
-            lambda i: F.substring(c, i, k),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
 
 
 def token_count(text: str | Column, bpe_like: bool = False) -> Column:
@@ -304,7 +292,7 @@ def language_id(df: DataFrame, text_col: str = "text", alias: str = "lang_pred")
     return df.withColumn(alias, best["lang"]).withColumn(f"{alias}_score", F.round(best["score"], 6))
 
 
-def fingerprint(text: str | Column, window: int = 8) -> Column:
+def fingerprint(text: str | Column) -> Column:
     """Document fingerprint: 64-bit hash of the document (xxhash64) —
     stable across runs; used for exact-dup detection at scale where
     comparing full text would shuffle the corpus."""
@@ -384,21 +372,6 @@ def minhash_perm_aggs(num_hashes: int) -> list[Column]:
     ]
 
 
-def minhash_signature(tokens_or_shingles: Column, num_hashes: int = 32) -> Column:
-    """MinHash signature as array<bigint>, computed with higher-order
-    functions: sig[i] = min over shingles of (a_i * h(s) + b_i) mod P.
-
-    Deterministic (fixed a/b tables, xxhash64 seed 42). No UDF, no
-    shuffle — per-row expression work only.
-    """
-    hashes = F.transform(tokens_or_shingles, lambda s: F.pmod(F.xxhash64(s, F.lit(42)), F.lit(_MINHASH_PRIME)))
-    sigs = [
-        F.array_min(F.transform(hashes, lambda h: F.pmod(h * F.lit(_MINHASH_A[i]) + F.lit(_MINHASH_B[i]), F.lit(_MINHASH_PRIME))))
-        for i in range(num_hashes)
-    ]
-    return F.array(*sigs)
-
-
 def minhash_signatures(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -406,28 +379,21 @@ def minhash_signatures(
     num_hashes: int = 32,
     shingle_k: int = 5,
     with_size: bool = False,
-    portable: bool = False,
 ) -> DataFrame:
     """MinHash signatures via the aggregation formulation: explode
-    shingle positions, hash each shingle ONCE, then
-    ``groupBy(id).agg(min(perm_i))`` per permutation.
-
-    ``portable=True`` swaps the xxhash64 shingle hash for
-    :func:`portable_hash60` (mod the Mersenne prime) so a SQL oracle
-    can replay the full signature computation bit-for-bit — same
-    contract as the portable simhash. xxhash64 stays the production
-    default (JVM-intrinsic, ~3× faster). The affine permutations
-    ``(a_i·h + b_i) mod p`` are identical in both modes (p prime and
-    a_i coprime ⇒ each permutation is a bijection of Z_p, so equal
-    min values imply a genuinely shared shingle hash, not an affine
-    coincidence).
+    shingle positions, hash each shingle ONCE (xxhash64 seed 42 mod the
+    Mersenne prime, :func:`shingle_hashes`), then
+    ``groupBy(id).agg(min(perm_i))`` per permutation. The affine
+    permutations ``(a_i·h + b_i) mod p`` are bijections of Z_p (p prime,
+    a_i coprime), so equal min values imply a genuinely shared shingle
+    hash, not an affine coincidence.
 
     This is the 100 TB shape: each permutation is a trivial agg
     expression over one shared hash column, partial aggregation
     combines map-side (shuffle = one row per doc per partition), and no
-    giant per-row expression tree is ever built (the array-expression
-    variant :func:`minhash_signature` duplicates the shingle pipeline
-    per hash — fine for a handful, pathological for 32+).
+    giant per-row expression tree is ever built (an array-expression
+    signature duplicates the shingle pipeline per hash — fine for a
+    handful, pathological for 32+).
 
     Shingles are produced by exploding a POSITION sequence and slicing
     with ``substring(t, p, k)`` — a codegen'd scalar expression — rather
@@ -448,7 +414,7 @@ def minhash_signatures(
     swapping in a higher-variance estimator (empty-bucket
     densification) under an exact-output oracle.
     """
-    h = shingle_hashes(df, id_col, text_col, shingle_k, portable=portable)
+    h = shingle_hashes(df, id_col, text_col, shingle_k)
     if with_size:
         # exact |distinct shingles| rides along as COUNT(1) over an
         # explicit (id, h) pre-dedup — NOT count_distinct, whose
@@ -466,93 +432,153 @@ def minhash_signatures(
     return h.groupBy(id_col).agg(*aggs).select(*out_cols)
 
 
-def minhash_near_duplicates(
+def minhash_band_index(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     num_hashes: int = 32,
-    bands: int = 8,
+    bands: int = 16,
     shingle_k: int = 5,
-    jaccard_threshold: float = 0.5,
-    persist_signatures: bool = True,
-    min_band_collisions: int = 1,
-    size_ratio: float | None = None,
 ) -> DataFrame:
-    """MinHash + LSH near-dup pairs (E29): shingle → signature → band →
-    bucket-join → verify estimated Jaccard.
+    """The MinHash-LSH band index AS A TABLE: (id, sig, n_sh, band,
+    bucket) rows, one per document and band — the ONE place signatures
+    become LSH buckets. :func:`minhash_verified_pairs` self-joins it;
+    written out (``partitionBy("band")``) it is the stored index later
+    ingest batches probe with :func:`probe_band_index` — the
+    incremental-ingestion mode a 100 TB corpus actually runs:
+    signatures+banding are computed ONCE per document ever; each new
+    batch probes the stored index instead of re-LSH-ing the corpus
+    (same lifecycle as ``write_ivf_index`` for vectors). ``n_sh`` is
+    the exact distinct-shingle count the size-ratio prefilter reads.
 
-    ``min_band_collisions`` > 1 keeps only pairs colliding in that many
-    bands (the collision-counting trick): on template-heavy corpora
-    where a third of all pairs share SOME band, requiring 2 of 16 bands
-    cuts the candidate set ~4× while the recall loss at J ≥ 0.8 stays
-    ~1e-6 (P(≤1 collision), per-band p = J^rows).
-
-    ``size_ratio=t`` adds the EXACT length prefilter inside the bucket
-    join (PPJoin-style): Jaccard(A,B) ≥ t forces min|·|/max|·| ≥ t, so
-    size-incompatible pairs die before the pair shuffle (measured 2.6×
-    fewer banded-join rows at sf0.1 with t=0.8). Zero recall loss for
-    any downstream filter at threshold ≥ t; the set size rides along as
-    one extra COUNT in the signature aggregation.
-
-    Returns (id_a, id_b, est_jaccard) with id_a < id_b. The band
-    groupBy-join is the scale path: candidate generation is linear in
-    corpus size × bands, never O(n²).
-
-    ``persist_signatures`` materializes the signature table before the
-    LSH self-join — otherwise both join sides recompute the full
-    shingle-explode-aggregate pipeline (measured 7.5× slower at sf0.1).
-    At 100 TB the equivalent is writing signatures to a table once and
-    joining from that.
-    """
+    Banding is the published MinHash-LSH scheme (Broder; Leskovec et
+    al., "Mining of Massive Datasets" ch.3): candidate generation is a
+    join on (band, bucket), linear in corpus size × bands, never
+    O(n²)."""
     rows_per_band = num_hashes // bands
-    sig = minhash_signatures(
-        df, id_col, text_col, num_hashes, shingle_k, with_size=size_ratio is not None
-    )
-    if persist_signatures:
-        sig = sig.persist()
+    sig = minhash_signatures(df, id_col, text_col, num_hashes, shingle_k, with_size=True)
     # One `sig` reference per output row: explode band ids, slice the
     # signature dynamically. (Building per-band struct literals instead
     # makes Catalyst's projection collapse inline the signature expression
     # once PER BAND — a codegen blow-up measured in minutes at 500 docs.)
-    size_cols = ["n_sh"] if size_ratio is not None else []
-    banded = (
-        sig.select(id_col, "sig", *size_cols, F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("band"))
-        .withColumn("bucket", F.xxhash64(F.slice("sig", F.col("band") * rows_per_band + 1, rows_per_band)))
-    )
-    a = banded.alias("a")
-    b = banded.alias("b")
-    # The bucket self-join emits ONLY the id pair — the pair-dedup
-    # exchange then shuffles 16-byte rows instead of dragging two
-    # 32-long signature arrays through it (a ~17× row-width cut; the
-    # signatures are re-attached afterwards from the persisted `sig`
-    # table, which is small enough to hash-join or auto-broadcast).
-    join_cond = [
-        F.col(f"a.band") == F.col("b.band"),
-        F.col("a.bucket") == F.col("b.bucket"),
-        F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
-    ]
-    if size_ratio is not None:
-        join_cond.append(
-            F.least("a.n_sh", "b.n_sh").cast("double")
-            >= F.lit(size_ratio) * F.greatest("a.n_sh", "b.n_sh") - F.lit(_FILTER_EPS)
+    return (
+        sig.select(
+            id_col, "sig", "n_sh",
+            F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("band"),
         )
+        .withColumn(
+            "bucket",
+            F.xxhash64(F.slice("sig", F.col("band") * rows_per_band + 1, rows_per_band)),
+        )
+    )
+
+
+def _lsh_candidates(
+    a: DataFrame,
+    b: DataFrame,
+    id_cond: Column,
+    names: tuple[str, str],
+    id_col: str,
+    threshold: float,
+    est_margin: float,
+) -> DataFrame:
+    """Candidate pairs between two :func:`minhash_band_index` tables,
+    aliased ``a`` and ``b`` inside ``id_cond``: the (band, bucket) join
+    keeps pairs that
+    - collide in at least 2 bands (collision counting: on
+      template-heavy corpora where a third of all pairs share SOME
+      band, 2 of 16 cuts the candidates ~4× while the recall loss at
+      J ≥ 0.8 stays ~2e-6, P(≤1 collision) with per-band p = J^rows);
+    - pass the EXACT size-ratio prefilter (PPJoin-style: Jaccard ≥ t
+      forces min|·|/max|·| ≥ t; measured 2.6× fewer banded-join rows at
+      sf0.1 with t = 0.8, zero recall loss);
+    - have a rounded signature estimate ≥ ``threshold − est_margin``.
+
+    Returns the persisted id pairs, columns ``names``. The join emits
+    ONLY the id pair — the pair-dedup exchange then shuffles 16-byte
+    rows instead of two 32-long signature arrays (a ~17× row-width
+    cut); the signatures are re-attached afterwards from band 0 of
+    each side. Persisted: the candidates are ~the true near-dup pairs,
+    a tiny table the verify step reads three times."""
+    x, y = names
     pairs = (
-        a.join(b, on=join_cond)
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .groupBy("id_a", "id_b")
+        a.alias("a")
+        .join(
+            b.alias("b"),
+            on=[
+                F.col("a.band") == F.col("b.band"),
+                F.col("a.bucket") == F.col("b.bucket"),
+                id_cond,
+                F.least("a.n_sh", "b.n_sh").cast("double")
+                >= F.lit(threshold) * F.greatest("a.n_sh", "b.n_sh") - F.lit(_FILTER_EPS),
+            ],
+        )
+        .select(F.col(f"a.{id_col}").alias(x), F.col(f"b.{id_col}").alias(y))
+        .groupBy(x, y)
         .agg(F.count(F.lit(1)).alias("__n_bands"))
-        .filter(F.col("__n_bands") >= min_band_collisions)
+        .filter(F.col("__n_bands") >= 2)
         .drop("__n_bands")
     )
-    sa = sig.select(F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a"))
-    sb = sig.select(F.col(id_col).alias("id_b"), F.col("sig").alias("sig_b"))
-    est = F.size(F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")), lambda v: v == 1)).cast("double") / F.lit(num_hashes)
+    sig_a = a.filter(F.col("band") == 0).select(F.col(id_col).alias(x), F.col("sig").alias("sig_a"))
+    sig_b = b.filter(F.col("band") == 0).select(F.col(id_col).alias(y), F.col("sig").alias("sig_b"))
+    matches = F.size(F.filter(F.zip_with("sig_a", "sig_b", lambda u, v: u == v), lambda m: m))
+    est = matches.cast("double") / F.size("sig_a")
     return (
-        pairs.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("est_jaccard", F.round(est, 6))
-        .filter(F.col("est_jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b", "est_jaccard")
+        pairs.join(sig_a, x)
+        .join(sig_b, y)
+        .filter(F.round(est, 6) >= F.lit(max(0.0, threshold - est_margin)))
+        .select(x, y)
+        .persist()
+    )
+
+
+def _verify_exact(
+    cand: DataFrame,
+    corpus: DataFrame,
+    id_col: str,
+    text_col: str,
+    shingle_k: int,
+    threshold: float,
+) -> DataFrame:
+    """Exact char-shingle Jaccard of the :func:`_lsh_candidates` pairs
+    ``cand`` — (x, y, jaccard) rows with jaccard ≥ ``threshold``,
+    rounded to 6 dp. Exact shingle sets are built ONLY for documents
+    in a candidate pair: a broadcast semi-join prunes ``corpus`` first
+    (measured 4.5× on the whole operator at sf0.1), so the shingle
+    table is scanned once and never shuffled.
+
+    Per-pair ``array_intersect`` beats the count-based posting-join
+    verify of :func:`jaccard_ngram_pairs` HERE, because LSH candidates
+    on a template-heavy corpus are many (23k at sf0.1) and char-5
+    shingle sets are large (~|doc| entries): the posting expansion is
+    |pairs|·|doc| join rows through an exchange, while the array
+    intersect runs hash-set-local inside one codegen stage — measured
+    2.4 s vs 3.3 s end-to-end at sf0.1. The sets come from the codegen
+    explode path (:func:`shingle_hashes`, raw 64-bit hashes so distinct
+    shingles do not collide) + a hash-distinct + collect_list, not an
+    interpreted per-row ``transform`` over a shingle array: measured
+    21% faster on the whole operator at sf0.1 (5.39 s vs 6.84 s)."""
+    x, y = cand.columns
+    cand_ids = cand.select(F.col(x).alias(id_col)).union(cand.select(F.col(y).alias(id_col))).distinct()
+    docs_c = corpus.join(size_gated_broadcast(cand_ids), id_col, "left_semi")
+    # persisted: read once per pair side
+    shset = (
+        shingle_hashes(docs_c, id_col, text_col, shingle_k, mod_prime=False, spread=False)
+        .distinct()
+        .groupBy(id_col)
+        .agg(F.collect_list("h").alias("shset"))
+        .persist()
+    )
+    sa = shset.select(F.col(id_col).alias(x), F.col("shset").alias("sh_a"))
+    sb = shset.select(F.col(id_col).alias(y), F.col("shset").alias("sh_b"))
+    common = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
+    jac = common / (F.size("sh_a") + F.size("sh_b") - common)
+    return (
+        cand.join(sa, x)
+        .join(sb, y)
+        .withColumn("jaccard", F.round(jac, 6))
+        .filter(F.col("jaccard") >= threshold)
+        .select(x, y, "jaccard")
     )
 
 
@@ -566,89 +592,60 @@ def minhash_verified_pairs(
     threshold: float = 0.8,
     est_margin: float = 0.3,
 ) -> DataFrame:
-    """Production near-dup shape: MinHash-LSH candidate generation, then
-    EXACT Jaccard verification of the (few) candidates. Output
-    (id_a, id_b, jaccard) is deterministic — unlike raw ``est_jaccard``
-    — so it is oracle-checkable against an all-pairs exact computation.
+    """Near-duplicate pairs (id_a, id_b, jaccard), id_a < id_b, with
+    EXACT char-shingle Jaccard ≥ ``threshold``: the
+    :func:`minhash_band_index` of ``df`` self-joined for candidates,
+    then exact verification. The output is deterministic, so it is
+    oracle-checkable against an all-pairs exact computation.
 
-    Recall: a true pair at exact Jaccard J is missed only if (a) no LSH
-    band collides — P = (1 − J^r)^b ≈ 3e-8 at J = 0.8 with r = 2,
-    b = 16 — or (b) its 32-hash estimate falls below
+    Recall: a true pair at exact Jaccard J is missed only if (a) fewer
+    than 2 LSH bands collide — P ≈ 16·J^r·(1 − J^r)^15 at r = 2,
+    b = 16, ~2e-6 at J = 0.8 — or (b) its 32-hash estimate falls below
     ``threshold − est_margin`` (≥ 4σ). Precision is exact: every
-    candidate is verified against the true shingle sets.
+    candidate is verified against the true shingle sets."""
+    # persisted: read by both join sides and both signature re-attaches
+    # — otherwise the shingle-explode-aggregate pipeline recomputes per
+    # reference (measured 7.5× slower at sf0.1)
+    index = minhash_band_index(df, id_col, text_col, num_hashes, bands, shingle_k).persist()
+    cand = _lsh_candidates(
+        index, index, F.col(f"a.{id_col}") < F.col(f"b.{id_col}"), ("id_a", "id_b"),
+        id_col, threshold, est_margin,
+    )
+    return _verify_exact(cand, df, id_col, text_col, shingle_k, threshold)
 
-    Scale shape: candidates after the estimate pre-filter are ~the true
-    near-dup pairs, a tiny table; joining it back to the hashed shingle
-    sets broadcasts the candidate ids, so the shingle table is scanned
-    once and never shuffled. 64-bit hashed shingles keep the arrays
-    fixed-width (collision odds ~n²/2⁶⁵ per doc — negligible).
 
-    Verify formulation note: per-pair ``array_intersect`` beats the
-    count-based posting-join verify of :func:`jaccard_ngram_pairs`
-    HERE, because LSH candidates on a template-heavy corpus are many
-    (23k at sf0.1) and char-5 shingle sets are large (~|doc| entries):
-    the posting expansion is |pairs|·|doc| join rows through an
-    exchange, while the array intersect runs hash-set-local inside one
-    codegen stage over the (broadcast-pruned) candidate docs — measured
-    2.4 s vs 3.3 s end-to-end at sf0.1. The array build itself uses the
-    interpreted ``transform`` path but only over candidate docs.
-    """
-    # Persist the candidate set: it is tiny (~true near-dup pairs) and
-    # referenced three times below — without this the whole LSH pipeline
-    # recomputes per reference (same rationale as persist_signatures).
-    cand = (
-        minhash_near_duplicates(
-            df,
-            id_col=id_col,
-            text_col=text_col,
-            num_hashes=num_hashes,
-            bands=bands,
-            shingle_k=shingle_k,
-            jaccard_threshold=max(0.0, threshold - est_margin),
-            min_band_collisions=2,
-            size_ratio=threshold,
-        )
-        .select("id_a", "id_b")
-        .persist()
+def probe_band_index(
+    index: DataFrame,
+    batch: DataFrame,
+    corpus: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    num_hashes: int = 32,
+    bands: int = 16,
+    shingle_k: int = 5,
+    threshold: float = 0.8,
+    est_margin: float = 0.3,
+) -> DataFrame:
+    """Probe a stored :func:`minhash_band_index` with a NEW ingest
+    batch: band the batch with the same function, join it against the
+    index, and run the candidate and exact-verify steps of
+    :func:`minhash_verified_pairs` — (new_id, idx_id, jaccard) with the
+    same recall and precision.
+
+    Scale shape: the batch (≪ corpus) is signature-hashed once; the
+    index join shuffles only (band, bucket, id) pairs; ``corpus`` is
+    touched ONLY through the broadcast-semi-join prune to the candidate
+    ids for verification — the full corpus is never re-shingled.
+    ``corpus`` must contain the text of both sides (indexes store
+    signatures, not text — by design: the index stays kilobytes per
+    document)."""
+    # persisted: read by the index join and the signature re-attach
+    new = minhash_band_index(batch, id_col, text_col, num_hashes, bands, shingle_k).persist()
+    cand = _lsh_candidates(
+        new, index, F.col(f"a.{id_col}") != F.col(f"b.{id_col}"), ("new_id", "idx_id"),
+        id_col, threshold, est_margin,
     )
-    # Build exact shingle sets ONLY for docs that appear in a candidate
-    # pair — a broadcast semi-join prunes the corpus before the expensive
-    # array construction (measured 4.5× on the whole operator at sf0.1;
-    # without it every doc pays array-build cost for a verify stage that
-    # touches a handful).
-    cand_ids = cand.select(F.col("id_a").alias(id_col)).union(
-        cand.select(F.col("id_b").alias(id_col))
-    ).distinct()
-    docs_c = df.join(size_gated_broadcast(cand_ids), id_col, "left_semi")
-    # persisted: referenced once per pair side — without it the shingle
-    # set build runs twice over the candidate docs, which dominates the
-    # verify stage on template-heavy corpora where the candidate set is
-    # large (23k pairs at sf0.1). Built from the codegen explode path
-    # (:func:`shingle_hashes` — substring in the scan stage) + a
-    # hash-distinct + collect_list, NOT an interpreted per-row
-    # ``transform`` over the shingle array: measured 21% faster on the
-    # whole operator at sf0.1 (5.39 s vs 6.84 s uncached), and it reuses
-    # the one shingle-hash contract every MinHash consumer shares.
-    shset = (
-        shingle_hashes(
-            docs_c, id_col, text_col, shingle_k, mod_prime=False, spread=False
-        )
-        .distinct()
-        .groupBy(id_col)
-        .agg(F.collect_list("h").alias("shset"))
-        .persist()
-    )
-    a = shset.select(F.col(id_col).alias("id_a"), F.col("shset").alias("sh_a"))
-    b = shset.select(F.col(id_col).alias("id_b"), F.col("shset").alias("sh_b"))
-    common = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    jac = common / (F.size("sh_a") + F.size("sh_b") - common)
-    return (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn("jaccard", F.round(jac, 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _verify_exact(cand, corpus, id_col, text_col, shingle_k, threshold)
 
 
 def near_duplicate_groups(
@@ -656,15 +653,16 @@ def near_duplicate_groups(
     id_col: str = "doc_id",
     text_col: str = "text",
     num_hashes: int = 32,
-    bands: int = 8,
     shingle_k: int = 5,
     jaccard_threshold: float = 0.5,
-    transitive: bool = False,
-    verified: bool = False,
 ) -> DataFrame:
-    """Production dedup pipeline: exact-dedup FIRST, then MinHash-LSH on
-    unique texts only. Returns (doc_id, group_id) where group_id is the
-    minimum doc_id reachable via exact duplication or a near-dup pair.
+    """Production dedup pipeline: exact-dedup FIRST, then verified
+    MinHash-LSH (:func:`minhash_verified_pairs`) on unique texts only.
+    Returns (doc_id, group_id) where group_id is the minimum doc_id
+    among the document's representative and that representative's
+    direct near-dup neighbours (one resolution step;
+    ``operators.graph.connected_components`` over the verified pairs
+    gives full transitive groups). Deterministic and oracle-checkable.
 
     Why staged: on duplicate-heavy corpora (the common web-scale case)
     LSH candidate pairs grow QUADRATICALLY with the duplication factor —
@@ -673,54 +671,25 @@ def near_duplicate_groups(
     fingerprint groupBy — 8-byte shuffle keys) makes the near-dup stage
     scale with UNIQUE content size, which is the quantity that actually
     grows at 100 TB.
-
-    Near-dup links are resolved one level (group = min over direct
-    neighbors) by default; pass ``transitive=True`` for full connected
-    components (iterative min-label propagation,
-    ``operators.graph.connected_components``).
-
-    ``verified=True`` swaps the probabilistic est-Jaccard pair stage for
-    :func:`minhash_verified_pairs` (LSH candidates + exact verify) —
-    the whole pipeline output then becomes deterministic and
-    oracle-checkable, at the cost of the verify joins.
     """
     fp = df.select(F.col(id_col), F.col(text_col), fingerprint(text_col).alias("__fp"))
     reps = fp.groupBy("__fp").agg(
         F.min(id_col).alias("rep_id"), F.first(text_col).alias(text_col)
     )
     rep_docs = reps.select(F.col("rep_id").alias(id_col), text_col)
-    if verified:
-        pairs = minhash_verified_pairs(
-            rep_docs,
-            id_col=id_col,
-            text_col=text_col,
-            num_hashes=num_hashes,
-            shingle_k=shingle_k,
-            threshold=jaccard_threshold,
-        )
-    else:
-        pairs = minhash_near_duplicates(
-            rep_docs,
-            id_col=id_col,
-            text_col=text_col,
-            num_hashes=num_hashes,
-            bands=bands,
-            shingle_k=shingle_k,
-            jaccard_threshold=jaccard_threshold,
-        )
-    if transitive:
-        from nyc_tlc_trip_data_pipelines_spark.operators.graph import connected_components
-
-        comp = connected_components(pairs, src="id_a", dst="id_b")
-        rep_group = reps.select("__fp", "rep_id").join(
-            comp, reps.rep_id == comp.node, "left"
-        ).select("__fp", "rep_id", F.coalesce("component", "rep_id").alias("group_id"))
-    else:
-        # representative -> smallest linked representative (one resolution step)
-        links = pairs.select(F.col("id_b").alias("rep_id"), F.col("id_a").alias("linked"))
-        rep_group = reps.select("__fp", "rep_id").join(links, on="rep_id", how="left").groupBy(
-            "__fp", "rep_id"
-        ).agg(F.least(F.min("linked"), F.first("rep_id")).alias("group_id"))
+    pairs = minhash_verified_pairs(
+        rep_docs,
+        id_col=id_col,
+        text_col=text_col,
+        num_hashes=num_hashes,
+        shingle_k=shingle_k,
+        threshold=jaccard_threshold,
+    )
+    # representative -> smallest linked representative (one resolution step)
+    links = pairs.select(F.col("id_b").alias("rep_id"), F.col("id_a").alias("linked"))
+    rep_group = reps.select("__fp", "rep_id").join(links, on="rep_id", how="left").groupBy(
+        "__fp", "rep_id"
+    ).agg(F.least(F.min("linked"), F.first("rep_id")).alias("group_id"))
     return fp.join(rep_group, on="__fp").select(id_col, "group_id")
 
 
@@ -728,8 +697,7 @@ def simhash_signatures(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    bits: int = 64,
-    portable: bool = False,
+    bits: int = 60,
 ) -> DataFrame:
     """SimHash per document (Charikar 2002): sign-sum of per-token hash
     bits, packed into one long. Documents with small Hamming distance
@@ -738,26 +706,17 @@ def simhash_signatures(
     Aggregation formulation (same scale rationale as
     :func:`minhash_signatures`): explode tokens, hash each once, then
     one tiny SUM per bit position with map-side partial aggregation.
-
-    ``portable=True`` swaps xxhash64 for a 60-bit token hash every SQL
-    engine can reproduce bit-for-bit — the first 15 hex chars of
-    ``md5(token)`` parsed as an integer (requires ``bits <= 60``; always
-    non-negative, so ``>>`` is portable too). xxhash64 stays the
-    production default (~3× faster, JVM-intrinsic); the portable path
-    exists so the contract query's full simhash computation can be
-    replayed by the DuckDB oracle instead of settling for a rows-only
-    check.
+    Tokens hash with :func:`portable_hash60`, which every SQL engine
+    reproduces bit-for-bit, so an oracle replays the full signature —
+    hence ``bits <= 60``.
     """
+    assert bits <= 60, "portable_hash60 provides 60 bits"
     # r15 note: a fanout_repartition before this explode was measured
     # and REVERTED — the token fan-out is small (~50 tokens/doc) and
     # the extra exchange + 32-task stages cost 1.4 s against a ~0.15 s
     # serial map stage at sf0.1 (fresh-process A/B, median of 3).
     tok = df.select(F.col(id_col), F.explode(tokenize(text_col)).alias("tok"))
-    if portable:
-        assert bits <= 60, "portable hash provides 60 bits"
-        h = tok.select(id_col, portable_hash60(F.col("tok")).alias("h"))
-    else:
-        h = tok.select(id_col, F.xxhash64("tok").alias("h"))
+    h = tok.select(id_col, portable_hash60(F.col("tok")).alias("h"))
     # One SQL-parsed expression per vote / one for the packer (r15):
     # the Column-builder loops cost ~8 py4j round trips per bit — with
     # this sandbox's ~1-3 ms gateway RTT, ~1.4 s of plan construction
@@ -1104,140 +1063,6 @@ def phrase_count(
     )
 
 
-def minhash_band_index(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 32,
-    bands: int = 16,
-    shingle_k: int = 5,
-) -> DataFrame:
-    """The MinHash-LSH index AS A TABLE: (band, bucket, id, sig, n_sh)
-    rows ready to be written out (``partitionBy("band")``) and probed
-    by later ingest batches — the incremental-ingestion mode a 100 TB
-    corpus actually runs: signatures+banding are computed ONCE per
-    document ever; each new batch probes the stored index instead of
-    re-LSH-ing the corpus (same lifecycle as ``write_ivf_index`` for
-    vectors). Bucket hashing, band slicing and the exact-size column
-    (``n_sh``, for the PPJoin ratio prefilter) all match
-    :func:`minhash_near_duplicates`, so probe semantics are identical
-    to the batch self-join."""
-    rows_per_band = num_hashes // bands
-    sig = minhash_signatures(df, id_col, text_col, num_hashes, shingle_k, with_size=True)
-    return (
-        sig.select(
-            id_col, "sig", "n_sh",
-            F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("band"),
-        )
-        .withColumn(
-            "bucket",
-            F.xxhash64(F.slice("sig", F.col("band") * rows_per_band + 1, rows_per_band)),
-        )
-    )
-
-
-def probe_band_index(
-    index: DataFrame,
-    batch: DataFrame,
-    corpus: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 32,
-    bands: int = 16,
-    shingle_k: int = 5,
-    threshold: float = 0.8,
-    est_margin: float = 0.3,
-) -> DataFrame:
-    """Probe a stored :func:`minhash_band_index` with a NEW ingest
-    batch: band the batch identically, join on (band, bucket) against
-    the index, keep pairs colliding in ≥2 bands that pass the exact
-    size-ratio prefilter and the signature estimate, then verify exact
-    Jaccard against the true shingle sets — (new_id, idx_id, jaccard)
-    with the same recall/precision guarantees as
-    :func:`minhash_verified_pairs` (miss ≈ (1−J^r)^b + estimate tail;
-    precision exact).
-
-    Scale shape: the batch (≪ corpus) is signatures-hashed once; the
-    index join shuffles only (band, bucket, id) pairs; ``corpus`` is
-    touched a second time ONLY through the broadcast-semi-join prune
-    to the candidate ids for verification — the full corpus is never
-    re-shingled. ``corpus`` must contain the text of both sides
-    (indexes store signatures, not text — by design: the index stays
-    kilobytes per document)."""
-    rows_per_band = num_hashes // bands
-    sig_b = minhash_signatures(batch, id_col, text_col, num_hashes, shingle_k, with_size=True).persist()
-    banded_b = (
-        sig_b.select(
-            id_col, "n_sh",
-            F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("band"),
-            "sig",
-        )
-        .withColumn(
-            "bucket",
-            F.xxhash64(F.slice("sig", F.col("band") * rows_per_band + 1, rows_per_band)),
-        )
-    )
-    a = banded_b.alias("a")
-    b = index.alias("b")
-    pairs = (
-        a.join(
-            b,
-            on=[
-                F.col("a.band") == F.col("b.band"),
-                F.col("a.bucket") == F.col("b.bucket"),
-                F.col(f"a.{id_col}") != F.col(f"b.{id_col}"),
-                F.least("a.n_sh", "b.n_sh").cast("double")
-                >= F.lit(threshold) * F.greatest("a.n_sh", "b.n_sh") - F.lit(_FILTER_EPS),
-            ],
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("new_id"), F.col(f"b.{id_col}").alias("idx_id")
-        )
-        .groupBy("new_id", "idx_id")
-        .agg(F.count(F.lit(1)).alias("__n_bands"))
-        .filter(F.col("__n_bands") >= 2)
-        .drop("__n_bands")
-    )
-    sa = sig_b.select(F.col(id_col).alias("new_id"), F.col("sig").alias("sig_a"))
-    sb = index.select(F.col(id_col).alias("idx_id"), "sig").distinct().withColumnRenamed("sig", "sig_b")
-    est = (
-        F.size(
-            F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")), lambda v: v == 1)
-        ).cast("double")
-        / F.lit(num_hashes)
-    )
-    cand = (
-        pairs.join(sa, "new_id")
-        .join(sb, "idx_id")
-        .filter(F.round(est, 6) >= F.lit(max(0.0, threshold - est_margin)))
-        .select("new_id", "idx_id")
-        .persist()
-    )
-    cand_ids = (
-        cand.select(F.col("new_id").alias(id_col))
-        .union(cand.select(F.col("idx_id").alias(id_col)))
-        .distinct()
-    )
-    docs_c = corpus.join(size_gated_broadcast(cand_ids), id_col, "left_semi")
-    shset = docs_c.select(
-        F.col(id_col),
-        F.array_distinct(
-            F.transform(char_shingles(text_col, shingle_k), lambda s: F.xxhash64(s))
-        ).alias("shset"),
-    ).persist()
-    va = shset.select(F.col(id_col).alias("new_id"), F.col("shset").alias("sh_a"))
-    vb = shset.select(F.col(id_col).alias("idx_id"), F.col("shset").alias("sh_b"))
-    common = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    jac = common / (F.size("sh_a") + F.size("sh_b") - common)
-    return (
-        cand.join(va, "new_id")
-        .join(vb, "idx_id")
-        .withColumn("jaccard", F.round(jac, 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("new_id", "idx_id", "jaccard")
-    )
-
-
 def simhash_hamming_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -1245,7 +1070,6 @@ def simhash_hamming_pairs(
     bits: int = 60,
     n_blocks: int = 4,
     max_hamming: int = 3,
-    portable: bool = False,
 ) -> DataFrame:
     """Near-duplicate pairs by SimHash Hamming distance ≤ ``max_hamming``
     via block permutation (Manku/Jain/Sarma, WWW'07 — the web-scale
@@ -1260,10 +1084,10 @@ def simhash_hamming_pairs(
     grouping (Hamming 0) to the tolerance real corpora need.
 
     100 TB: ``n_blocks`` hash self-joins each keyed on a 15-bit block
-    value — the same banded-join shape as MinHash-LSH (text.py
-    minhash_lsh_pairs), shuffling only (block, id, signature) rows;
-    candidates concentrate only if many documents share a block, which
-    for sign-random simhash bits means they ARE near-duplicates. The
+    value — the same banded-join shape as :func:`minhash_band_index`,
+    shuffling only (block, id, signature) rows; candidates concentrate
+    only if many documents share a block, which for sign-random simhash
+    bits means they ARE near-duplicates. The
     verify step is one integer XOR+popcount per candidate, fully
     codegen."""
     assert max_hamming <= n_blocks - 1, "pigeonhole recall needs max_hamming < n_blocks"
@@ -1273,7 +1097,7 @@ def simhash_hamming_pairs(
     # sides of every per-block join — persist it or it runs 2·n_blocks
     # times (measured 3.6 s → 1.3 s at sf0.1; at 100 TB the signatures
     # would be written to a table once, same as MinHash)
-    sigs = simhash_signatures(df, id_col, text_col, bits=bits, portable=portable).persist()
+    sigs = simhash_signatures(df, id_col, text_col, bits=bits).persist()
     cands = None
     for k in range(n_blocks):
         blk = F.shiftright(F.col("simhash"), k * block_bits).bitwiseAND(F.lit(mask))
@@ -1668,7 +1492,6 @@ def dedup_savings_report(
         id_col=id_col,
         text_col=text_col,
         jaccard_threshold=jaccard_threshold,
-        verified=True,
     )
     # persist: sized's lineage embeds the whole LSH+verify grouping and
     # is read by BOTH the per-group aggregate and the keep pick (the

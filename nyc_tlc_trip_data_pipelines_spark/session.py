@@ -31,19 +31,14 @@ def get_spark(app_name: str = "nyc_tlc_trip_data_pipelines_spark") -> SparkSessi
     """Return a configured SparkSession (creates one if absent).
 
     If a session already exists (e.g. the driver harness passes one in),
-    ``getOrCreate`` returns it; session-level SQL confs that matter for
-    correctness are then (re)applied so semantics hold either way.
+    ``getOrCreate`` returns it; the SQL confs that matter for
+    correctness are set by :func:`configure_session` either way.
     """
     master = os.environ.get("SPARK_GRAFT_MASTER", "local[%s]" % os.environ.get("SPARK_GRAFT_CPUS", "*"))
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", DEFAULT_SHUFFLE_PARTITIONS)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.ansi.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")

@@ -70,6 +70,10 @@ def test_catalog_memo_is_per_session(spark, sf_dir):
     assert df.sparkSession is other
     assert load_table(other, sf_dir, "events") is df
     assert other.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
+    assert other.conf.get("spark.sql.ansi.enabled") == "false"
+    assert other.conf.get("spark.sql.session.timeZone") == "UTC"
+    for aqe in ("enabled", "coalescePartitions.enabled", "skewJoin.enabled"):
+        assert other.conf.get(f"spark.sql.adaptive.{aqe}") == "true"
     assert dict(df.dtypes)["ts"] == "timestamp"
 
     register_views(other, sf_dir)

@@ -46,7 +46,7 @@ def test_minhash_on_empty_and_blank_docs(spark):
     sigs = TX.minhash_signatures(df, num_hashes=8)
     ids = {r.doc_id for r in sigs.collect()}
     assert 3 in ids and 1 not in ids
-    pairs = TX.minhash_near_duplicates(df, num_hashes=8, bands=4, jaccard_threshold=0.1)
+    pairs = TX.minhash_verified_pairs(df, num_hashes=8, bands=4, threshold=0.1)
     assert pairs.count() == 0
 
 

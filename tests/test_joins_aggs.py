@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 from nyc_tlc_trip_data_pipelines_spark.catalog import load_table
 from nyc_tlc_trip_data_pipelines_spark.operators import joins as J
 from nyc_tlc_trip_data_pipelines_spark.operators import sorts as O
+from nyc_tlc_trip_data_pipelines_spark.operators import timeseries as TS
 from nyc_tlc_trip_data_pipelines_spark.operators import windows as W
 from nyc_tlc_trip_data_pipelines_spark.plans import node_count, plan_string, uses_broadcast_join
 
@@ -41,9 +42,9 @@ def test_as_of_join_backward(spark):
     trades = spark.createDataFrame(
         [("A", 4), ("A", 6), ("B", 2), ("B", 9)], "sym string, t long"
     )
-    out = J.as_of_join(trades, quotes.withColumnRenamed("t", "qt"), "t", "qt", by=["sym"])
-    got = {(r.sym, r.t): r.px for r in out.collect()}
-    assert got == {("A", 4): 10.0, ("A", 6): 11.0, ("B", 2): None, ("B", 9): 20.0}
+    out = TS.asof_join(trades, quotes.withColumnRenamed("t", "qt"), "sym", "t", "qt")
+    got = {(r.sym, r.t): r.asof_ts for r in out.collect()}
+    assert got == {("A", 4): 1, ("A", 6): 5, ("B", 2): None, ("B", 9): 3}
 
 
 def test_top_n_per_group(spark, sf_dir):

@@ -177,29 +177,30 @@ def test_triangle_count_no_nested_loop_join(spark, sf_dir):
 
 
 def test_dedup_pipeline_exchange_ceiling(spark, sf_dir):
-    """VERDICT r1 #8: regression fence for the staged dedup pipeline —
-    PLANS.md recorded 10 exchanges in round 1; a regression (e.g. losing
-    the persisted-signature reuse or a join reshuffle) shows up here as
-    a count blowout long before it shows up as a 100 TB incident."""
+    """VERDICT r1 #8: regression fence for the staged dedup pipeline — a
+    regression (e.g. losing the persisted band-index reuse or a join
+    reshuffle) shows up here as a count blowout long before it shows up
+    as a 100 TB incident."""
     from nyc_tlc_trip_data_pipelines_spark.operators import text as TX
 
     docs = load_table(spark, sf_dir, "documents")
     out = TX.near_duplicate_groups(docs, jaccard_threshold=0.4)
-    # 12 as of round 2 (sig-join refactor added two cheap id joins); the
-    # displayed count includes the persisted signature subtree once per
-    # reference, so a blowout here means a lost persist or a new shuffle
-    assert exchange_count(out) <= 12
+    # 54 measured for the verified pipeline; the displayed count includes
+    # each persisted subtree (band index, candidates, shingle sets) once
+    # per reference, so a blowout here means a lost persist or a new
+    # shuffle
+    assert exchange_count(out) <= 54
 
 
 def test_minhash_core_exchange_ceiling(spark, sf_dir):
-    # the un-persisted LSH core is where exchange counting is honest
-    # (persisted plans re-display cached subtrees per reference): shingle
-    # agg + band bucket self-join + pair groupBy + 2 sig re-joins
+    # band-index self-join + pair groupBy + 2 signature re-joins, then
+    # the candidate semi-join prune + shingle-set build + 2 set re-joins;
+    # 37 measured (persisted subtrees re-display once per reference)
     from nyc_tlc_trip_data_pipelines_spark.operators import text as TX
 
     docs = load_table(spark, sf_dir, "documents")
-    out = TX.minhash_near_duplicates(docs, persist_signatures=False)
-    assert exchange_count(out) <= 8
+    out = TX.minhash_verified_pairs(docs, threshold=0.8)
+    assert exchange_count(out) <= 37
 
 
 def test_tpch_q19_or_of_ands_pushes_scan_filters(spark):

@@ -30,16 +30,16 @@ def test_minhash_detects_duplicates(spark):
     df = spark.createDataFrame(
         [(1, base), (2, near), (3, other)], "doc_id long, text string"
     )
-    pairs = {(r.id_a, r.id_b) for r in TX.minhash_near_duplicates(df, jaccard_threshold=0.5).collect()}
-    assert (1, 2) in pairs
-    assert (1, 3) not in pairs and (2, 3) not in pairs
+    # exact char-5 Jaccard: 1~2 0.692, 1~3 and 2~3 0.0
+    pairs = {(r.id_a, r.id_b): r.jaccard for r in TX.minhash_verified_pairs(df, threshold=0.5).collect()}
+    assert pairs == {(1, 2): 0.692308}
 
 
 def test_minhash_deterministic(spark):
     df = spark.createDataFrame([(1, "abcdefghij klmnop qrstuv"),], "doc_id long, text string")
-    s1 = df.select(TX.minhash_signature(TX.char_shingles("text"), 8).alias("s")).collect()[0].s
-    s2 = df.select(TX.minhash_signature(TX.char_shingles("text"), 8).alias("s")).collect()[0].s
-    assert s1 == s2
+    s1 = TX.minhash_signatures(df, num_hashes=8).collect()[0].sig
+    s2 = TX.minhash_signatures(df, num_hashes=8).collect()[0].sig
+    assert s1 == s2 and len(s1) == 8
 
 
 def test_simhash_close_for_near_dups(spark):
@@ -108,17 +108,22 @@ def test_connected_components_log_rounds_on_long_chain(spark):
 
 
 def test_near_duplicate_groups_transitive(spark):
-    # measured est_jaccard: a~b 0.75, b~c 0.78, a~c 0.656 — threshold 0.7
-    # gives the chain a-b-c with no direct a-c edge
+    from nyc_tlc_trip_data_pipelines_spark.operators.graph import connected_components
+
+    # exact char-5 Jaccard: a~b 0.836, b~c 0.836, a~c 0.697 — threshold
+    # 0.8 gives the chain a-b-c with no direct a-c edge
     base = "alpha beta gamma delta epsilon zeta kappa theta iota mu "
     a = base * 4
     b = (base.replace("beta", "bXta")) * 4
     c = (base.replace("beta", "bXta").replace("kappa", "kXppa")) * 4
     df = spark.createDataFrame([(1, a), (2, b), (3, c)], "doc_id long, text string")
-    flat = {r.doc_id: r.group_id for r in TX.near_duplicate_groups(df, jaccard_threshold=0.7).collect()}
-    trans = {r.doc_id: r.group_id for r in TX.near_duplicate_groups(df, jaccard_threshold=0.7, transitive=True).collect()}
-    assert trans[1] == trans[2] == trans[3] == 1
-    assert len(flat) == 3  # flat mode still assigns everyone
+    # groups resolve one step: c links to b only, not through b to a
+    flat = {r.doc_id: r.group_id for r in TX.near_duplicate_groups(df, jaccard_threshold=0.8).collect()}
+    assert flat == {1: 1, 2: 1, 3: 2}
+    pairs = TX.minhash_verified_pairs(df, threshold=0.8)
+    assert {(r.id_a, r.id_b) for r in pairs.collect()} == {(1, 2), (2, 3)}
+    comp = {r.node: r.component for r in connected_components(pairs, src="id_a", dst="id_b").collect()}
+    assert comp == {1: 1, 2: 1, 3: 1}
 
 
 def test_jaccard_ngram_pairs_exact(spark):
@@ -472,6 +477,61 @@ def test_band_index_probe_finds_cross_batch_dups(spark, tmp_path):
            TX.probe_band_index(idx, batch, docs, threshold=0.8).collect()}
     assert (10, 1) in got and got[(10, 1)] == 1.0
     assert all(k == (10, 1) for k in got)
+
+
+def _exact_char5_jaccard_pairs(docs, threshold):
+    """All-pairs exact char-5-shingle Jaccard ≥ threshold over lowercased
+    text, rounded to 6 dp — the plain-Python replay of the verify step."""
+    sets = {
+        i: {t.lower()[p : p + 5] for p in range(len(t) - 4)} for i, t in docs.items()
+    }
+    out = {}
+    for i in sorted(sets):
+        for j in sorted(sets):
+            if i < j and sets[i] and sets[j]:
+                jac = round(len(sets[i] & sets[j]) / len(sets[i] | sets[j]), 6)
+                if jac >= threshold:
+                    out[(i, j)] = jac
+    return out
+
+
+def test_verified_pairs_and_probe_match_exact_jaccard_replay(spark):
+    """The shared candidate + exact-verify steps, pinned from both
+    callers: the batch self-join equals the all-pairs replay, and the
+    probe of an id split equals its cross-batch subset. The fixture has
+    exact copies (incl. case-only), near copies just above 0.8 and
+    candidates below it (3~4 at 0.761), and blank / sub-shingle docs."""
+    a = "the quick brown fox jumps over the lazy dog while the farmer watches from the old red barn near the river"
+    b = "spark shuffles partitions across executors and writes parquet files that the next stage reads back in order"
+    c = "Tokenizers Split Text Into Pieces Before Counting Them For Training Budgets"
+    docs = {
+        1: a,
+        2: a,
+        3: a.replace("lazy", "sleepy"),
+        4: a.replace("lazy", "sleepy").replace("farmer", "butcher").replace("river", "creek"),
+        5: b,
+        6: b.replace("next", "following"),
+        7: b.replace("next", "later").replace("parquet", "orc").replace("order", "bulk"),
+        8: "",
+        9: "   ",
+        10: " \t \n  \t ",
+        11: c,
+        12: c.upper(),
+    }
+    want = _exact_char5_jaccard_pairs(docs, 0.8)
+    assert want == {(1, 2): 1.0, (1, 3): 0.849057, (2, 3): 0.849057, (5, 6): 0.815789, (11, 12): 1.0}
+    df = spark.createDataFrame(sorted(docs.items()), "doc_id long, text string")
+
+    got = {(r.id_a, r.id_b): r.jaccard for r in TX.minhash_verified_pairs(df, threshold=0.8).collect()}
+    assert got == want
+
+    batch = df.filter(F.col("doc_id") % 2 == 0)
+    existing = df.filter(F.col("doc_id") % 2 == 1)
+    probed = TX.probe_band_index(TX.minhash_band_index(existing), batch, df, threshold=0.8)
+    got = {(r.new_id, r.idx_id): r.jaccard for r in probed.collect()}
+    assert got == {
+        (j, i) if j % 2 == 0 else (i, j): v for (i, j), v in want.items() if (i + j) % 2 == 1
+    }
 
 
 def test_semantic_dedup_pairs_cluster_scoped(spark):
