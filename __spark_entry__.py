@@ -4905,9 +4905,8 @@ def q_dedup_index_probe(spark: SparkSession, sf: str) -> DataFrame:
         # repartition by the partition column first: one file per band
         # (16) instead of tasks × bands small files (512 measured) —
         # the same layout rule write_ivf_index applies
-        TX.minhash_band_index(existing).repartition("band").write.partitionBy(
-            "band"
-        ).parquet(path)
+        index = TX.minhash_band_index(TX.minhash_signatures(existing))
+        index.repartition("band").write.partitionBy("band").parquet(path)
         idx = spark.read.parquet(path)
         rows = [
             (r.new_id, r.idx_id, r.jaccard)
@@ -5466,7 +5465,7 @@ def q_simhash_hamming(spark: SparkSession, sf: str) -> DataFrame:
     ≤ 3 by pigeonhole; verification is one codegen XOR + popcount. The
     portable 60-bit hash lets the oracle replay the full pipeline."""
     d = load_table(spark, sf, "documents")
-    out = TX.simhash_hamming_pairs(d, bits=60, n_blocks=4, max_hamming=3)
+    out = TX.simhash_hamming_pairs(d, n_blocks=4, max_hamming=3)
     return O.sort(out, ["id_a", "id_b"])
 
 

@@ -163,9 +163,10 @@ def char_shingle_rows(
     hash ``substring(text, p, k)`` — scalar whole-stage-codegen
     expressions, never an interpreted ``transform`` lambda building a
     per-row array (measured 7× slower in :func:`minhash_signatures`).
-    Hash values equal :func:`shingle_hashes` with ``mod_prime=False``
-    (xxhash64, seed 42), so count-based set arithmetic on these rows
-    matches the array_intersect of the MinHash verify step.
+    Like :func:`shingle_hashes` with ``mod_prime=False`` it hashes the
+    same lowercased char-k shingles to 64 bits with xxhash64, so set
+    arithmetic on these rows gives the same Jaccard as the MinHash
+    verify step (up to 64-bit collisions).
     ``extra_cols`` are doc-level columns carried through (e.g. a block
     key). Documents shorter than ``k`` produce no rows."""
     lc = df.select(F.col(id_col), *[F.col(c) for c in extra_cols], F.lower(F.col(text_col)).alias("__t")).filter(
@@ -313,10 +314,10 @@ def shingle_hashes(
     on (:func:`minhash_signatures`, :func:`minhash_accuracy`): a change
     to the hash or the modulus propagates to all of them and to exactly
     one SQL-oracle twin. ``portable=True`` uses the 60-bit md5 hash
-    (bit-identical in any engine); the default is xxhash64 seed 42
-    (JVM-intrinsic, ~3× faster). Emits multiplicity (no dedup) — MIN
-    aggregation is multiset-safe; callers needing set semantics call
-    ``.distinct()``. ``mod_prime=False`` skips the Mersenne reduction
+    (bit-identical in any engine); the default is xxhash64 over the
+    shingle and the literal 42 (JVM-intrinsic, ~3× faster). Emits
+    multiplicity (no dedup) — MIN aggregation is multiset-safe; callers
+    needing set semantics call ``.distinct()``. ``mod_prime=False`` skips the Mersenne reduction
     and returns the raw 64-bit hash — REQUIRED wherever the hashes
     stand in for the shingle SETS themselves (exact-Jaccard verify):
     in the 31-bit residue space two distinct shingles collide with
@@ -378,11 +379,10 @@ def minhash_signatures(
     text_col: str = "text",
     num_hashes: int = 32,
     shingle_k: int = 5,
-    with_size: bool = False,
 ) -> DataFrame:
-    """MinHash signatures via the aggregation formulation: explode
-    shingle positions, hash each shingle ONCE (xxhash64 seed 42 mod the
-    Mersenne prime, :func:`shingle_hashes`), then
+    """(id, sig, n_sh) rows: MinHash signatures via the aggregation
+    formulation: explode shingle positions, hash each shingle ONCE
+    (:func:`shingle_hashes`, mod the Mersenne prime), then
     ``groupBy(id).agg(min(perm_i))`` per permutation. The affine
     permutations ``(a_i·h + b_i) mod p`` are bijections of Z_p (p prime,
     a_i coprime), so equal min values imply a genuinely shared shingle
@@ -402,7 +402,8 @@ def minhash_signatures(
     7× slower at sf0.1 (2.8 s → 0.4 s for the full signature build).
     Duplicate shingles are NOT removed before the aggregation — MIN over
     a multiset equals MIN over its set, so the min-aggs are unaffected,
-    and the distinct set size (``with_size``) comes from an exact
+    and the distinct set size ``n_sh`` (read by the size-ratio
+    prefilter of :func:`_lsh_candidates`) comes from an exact
     COUNT(DISTINCT h) in the same aggregate instead.
 
     One-permutation hashing was evaluated and rejected: this
@@ -414,37 +415,26 @@ def minhash_signatures(
     swapping in a higher-variance estimator (empty-bucket
     densification) under an exact-output oracle.
     """
-    h = shingle_hashes(df, id_col, text_col, shingle_k)
-    if with_size:
-        # exact |distinct shingles| rides along as COUNT(1) over an
-        # explicit (id, h) pre-dedup — NOT count_distinct, whose
-        # rewrite adds an Expand doubling the exploded rows (measured
-        # +1.4 s vs +0.2 s for the pre-dedup at sf0.1). Catalyst pushes
-        # the min-aggs partially into the dedup aggregate, so the extra
-        # groupBy costs almost nothing.
-        h = h.distinct()
-    aggs = minhash_perm_aggs(num_hashes)
-    if with_size:
-        aggs.append(F.count(F.lit(1)).cast("int").alias("n_sh"))
-    out_cols = [id_col, F.array(*[f"mh_{i}" for i in range(num_hashes)]).alias("sig")]
-    if with_size:
-        out_cols.append(F.col("n_sh"))
-    return h.groupBy(id_col).agg(*aggs).select(*out_cols)
+    # exact |distinct shingles| rides along as COUNT(1) over an
+    # explicit (id, h) pre-dedup — NOT count_distinct, whose rewrite
+    # adds an Expand doubling the exploded rows (measured +1.4 s vs
+    # +0.2 s for the pre-dedup at sf0.1). Catalyst pushes the min-aggs
+    # partially into the dedup aggregate, so the extra groupBy costs
+    # almost nothing.
+    h = shingle_hashes(df, id_col, text_col, shingle_k).distinct()
+    aggs = [*minhash_perm_aggs(num_hashes), F.count(F.lit(1)).cast("int").alias("n_sh")]
+    sig = F.array(*[f"mh_{i}" for i in range(num_hashes)]).alias("sig")
+    return h.groupBy(id_col).agg(*aggs).select(id_col, sig, "n_sh")
 
 
-def minhash_band_index(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 32,
-    bands: int = 16,
-    shingle_k: int = 5,
-) -> DataFrame:
-    """The MinHash-LSH band index AS A TABLE: (id, sig, n_sh, band,
-    bucket) rows, one per document and band — the ONE place signatures
-    become LSH buckets. :func:`minhash_verified_pairs` self-joins it;
-    written out (``partitionBy("band")``) it is the stored index later
-    ingest batches probe with :func:`probe_band_index` — the
+def minhash_band_index(sig: DataFrame, id_col: str = "doc_id", bands: int = 16) -> DataFrame:
+    """The MinHash-LSH band index of a :func:`minhash_signatures` table
+    AS A TABLE: (id, sig, n_sh, band, bucket) rows, one per document and
+    band (``size(sig) / bands`` signature values per band) — the ONE
+    place signatures become LSH buckets. :func:`minhash_verified_pairs`
+    self-joins it; written out (``partitionBy("band")``) it is the
+    stored index later ingest batches probe with
+    :func:`probe_band_index` — the
     incremental-ingestion mode a 100 TB corpus actually runs:
     signatures+banding are computed ONCE per document ever; each new
     batch probes the stored index instead of re-LSH-ing the corpus
@@ -455,8 +445,7 @@ def minhash_band_index(
     al., "Mining of Massive Datasets" ch.3): candidate generation is a
     join on (band, bucket), linear in corpus size × bands, never
     O(n²)."""
-    rows_per_band = num_hashes // bands
-    sig = minhash_signatures(df, id_col, text_col, num_hashes, shingle_k, with_size=True)
+    rows_per_band = (F.size("sig") / F.lit(bands)).cast("int")
     # One `sig` reference per output row: explode band ids, slice the
     # signature dynamically. (Building per-band struct literals instead
     # makes Catalyst's projection collapse inline the signature expression
@@ -480,7 +469,6 @@ def _lsh_candidates(
     names: tuple[str, str],
     id_col: str,
     threshold: float,
-    est_margin: float,
 ) -> DataFrame:
     """Candidate pairs between two :func:`minhash_band_index` tables,
     aliased ``a`` and ``b`` inside ``id_cond``: the (band, bucket) join
@@ -492,7 +480,8 @@ def _lsh_candidates(
     - pass the EXACT size-ratio prefilter (PPJoin-style: Jaccard ≥ t
       forces min|·|/max|·| ≥ t; measured 2.6× fewer banded-join rows at
       sf0.1 with t = 0.8, zero recall loss);
-    - have a rounded signature estimate ≥ ``threshold − est_margin``.
+    - have a rounded signature estimate ≥ ``threshold − 0.3`` (≥ 4σ
+      below the threshold for a 32-hash estimate).
 
     Returns the persisted id pairs, columns ``names``. The join emits
     ONLY the id pair — the pair-dedup exchange then shuffles 16-byte
@@ -526,7 +515,7 @@ def _lsh_candidates(
     return (
         pairs.join(sig_a, x)
         .join(sig_b, y)
-        .filter(F.round(est, 6) >= F.lit(max(0.0, threshold - est_margin)))
+        .filter(F.round(est, 6) >= F.lit(max(0.0, threshold - 0.3)))
         .select(x, y)
         .persist()
     )
@@ -590,7 +579,6 @@ def minhash_verified_pairs(
     bands: int = 16,
     shingle_k: int = 5,
     threshold: float = 0.8,
-    est_margin: float = 0.3,
 ) -> DataFrame:
     """Near-duplicate pairs (id_a, id_b, jaccard), id_a < id_b, with
     EXACT char-shingle Jaccard ≥ ``threshold``: the
@@ -601,15 +589,17 @@ def minhash_verified_pairs(
     Recall: a true pair at exact Jaccard J is missed only if (a) fewer
     than 2 LSH bands collide — P ≈ 16·J^r·(1 − J^r)^15 at r = 2,
     b = 16, ~2e-6 at J = 0.8 — or (b) its 32-hash estimate falls below
-    ``threshold − est_margin`` (≥ 4σ). Precision is exact: every
+    ``threshold − 0.3`` (≥ 4σ). Precision is exact: every
     candidate is verified against the true shingle sets."""
     # persisted: read by both join sides and both signature re-attaches
     # — otherwise the shingle-explode-aggregate pipeline recomputes per
-    # reference (measured 7.5× slower at sf0.1)
-    index = minhash_band_index(df, id_col, text_col, num_hashes, bands, shingle_k).persist()
+    # reference (measured 7.5× slower at sf0.1). One row per document;
+    # the band rows are a cheap explode over it.
+    sig = minhash_signatures(df, id_col, text_col, num_hashes, shingle_k).persist()
+    index = minhash_band_index(sig, id_col, bands)
     cand = _lsh_candidates(
         index, index, F.col(f"a.{id_col}") < F.col(f"b.{id_col}"), ("id_a", "id_b"),
-        id_col, threshold, est_margin,
+        id_col, threshold,
     )
     return _verify_exact(cand, df, id_col, text_col, shingle_k, threshold)
 
@@ -624,7 +614,6 @@ def probe_band_index(
     bands: int = 16,
     shingle_k: int = 5,
     threshold: float = 0.8,
-    est_margin: float = 0.3,
 ) -> DataFrame:
     """Probe a stored :func:`minhash_band_index` with a NEW ingest
     batch: band the batch with the same function, join it against the
@@ -640,10 +629,11 @@ def probe_band_index(
     signatures, not text — by design: the index stays kilobytes per
     document)."""
     # persisted: read by the index join and the signature re-attach
-    new = minhash_band_index(batch, id_col, text_col, num_hashes, bands, shingle_k).persist()
+    sig = minhash_signatures(batch, id_col, text_col, num_hashes, shingle_k).persist()
+    new = minhash_band_index(sig, id_col, bands)
     cand = _lsh_candidates(
         new, index, F.col(f"a.{id_col}") != F.col(f"b.{id_col}"), ("new_id", "idx_id"),
-        id_col, threshold, est_margin,
+        id_col, threshold,
     )
     return _verify_exact(cand, corpus, id_col, text_col, shingle_k, threshold)
 
@@ -697,20 +687,18 @@ def simhash_signatures(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    bits: int = 60,
 ) -> DataFrame:
     """SimHash per document (Charikar 2002): sign-sum of per-token hash
-    bits, packed into one long. Documents with small Hamming distance
-    are near-duplicates.
+    bits, 60 of them packed into one long. Documents with small Hamming
+    distance are near-duplicates.
 
     Aggregation formulation (same scale rationale as
     :func:`minhash_signatures`): explode tokens, hash each once, then
     one tiny SUM per bit position with map-side partial aggregation.
     Tokens hash with :func:`portable_hash60`, which every SQL engine
     reproduces bit-for-bit, so an oracle replays the full signature —
-    hence ``bits <= 60``.
+    hence its 60 bits.
     """
-    assert bits <= 60, "portable_hash60 provides 60 bits"
     # r15 note: a fanout_repartition before this explode was measured
     # and REVERTED — the token fan-out is small (~50 tokens/doc) and
     # the extra exchange + 32-task stages cost 1.4 s against a ~0.15 s
@@ -720,7 +708,7 @@ def simhash_signatures(
     # One SQL-parsed expression per vote / one for the packer (r15):
     # the Column-builder loops cost ~8 py4j round trips per bit — with
     # this sandbox's ~1-3 ms gateway RTT, ~1.4 s of plan construction
-    # per invocation at bits=60. Parsed trees are identical (same
+    # per invocation. Parsed trees are identical (same
     # functions, same literal types: CASE THEN 1 ELSE -1 are the int32
     # literals F.lit produced; CAST(x AS BIGINT) matches .cast("long");
     # `^` parses to the same left-associative bitwiseXOR chain).
@@ -729,13 +717,13 @@ def simhash_signatures(
             f"sum(CASE WHEN (shiftright(h, {i}) & 1) = 1 "
             f"THEN 1 ELSE -1 END) AS v_{i}"
         )
-        for i in range(bits)
+        for i in range(60)
     ]
     agged = h.groupBy(id_col).agg(*votes)
     packed = " ^ ".join(
         f"(CASE WHEN v_{i} > 0 THEN shiftleft(CAST(1 AS BIGINT), {i}) "
         f"ELSE CAST(0 AS BIGINT) END)"
-        for i in range(bits)
+        for i in range(60)
     )
     return agged.select(id_col, F.expr(f"({packed}) AS simhash"))
 
@@ -1067,13 +1055,12 @@ def simhash_hamming_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    bits: int = 60,
     n_blocks: int = 4,
     max_hamming: int = 3,
 ) -> DataFrame:
     """Near-duplicate pairs by SimHash Hamming distance ≤ ``max_hamming``
     via block permutation (Manku/Jain/Sarma, WWW'07 — the web-scale
-    simhash dedup design): split each ``bits``-bit signature into
+    simhash dedup design): split each 60-bit signature into
     ``n_blocks`` contiguous blocks; by pigeonhole, any pair within
     Hamming distance ``n_blocks - 1`` agrees EXACTLY on at least one
     block, so equality self-joins on each block find every qualifying
@@ -1091,13 +1078,13 @@ def simhash_hamming_pairs(
     verify step is one integer XOR+popcount per candidate, fully
     codegen."""
     assert max_hamming <= n_blocks - 1, "pigeonhole recall needs max_hamming < n_blocks"
-    block_bits = bits // n_blocks
+    block_bits = 60 // n_blocks
     mask = (1 << block_bits) - 1
     # the signature build (tokenize + 60 bit-vote sums) feeds both
     # sides of every per-block join — persist it or it runs 2·n_blocks
     # times (measured 3.6 s → 1.3 s at sf0.1; at 100 TB the signatures
     # would be written to a table once, same as MinHash)
-    sigs = simhash_signatures(df, id_col, text_col, bits=bits).persist()
+    sigs = simhash_signatures(df, id_col, text_col).persist()
     cands = None
     for k in range(n_blocks):
         blk = F.shiftright(F.col("simhash"), k * block_bits).bitwiseAND(F.lit(mask))

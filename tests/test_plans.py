@@ -303,13 +303,13 @@ def test_quality_filter_no_expand_rewrite(spark, sf_dir):
 
 
 def test_minhash_signatures_no_expand_and_codegen_shingles(spark, sf_dir):
-    # with_size must use the explicit pre-dedup (no Expand), and the
+    # the n_sh size must use the explicit pre-dedup (no Expand), and the
     # shingle pipeline must be the codegen substring path (a Generate
     # over a sequence, not a higher-order transform over an array build)
     from nyc_tlc_trip_data_pipelines_spark.operators import text as TX
 
     docs = load_table(spark, sf_dir, "documents")
-    out = TX.minhash_signatures(docs, with_size=True)
+    out = TX.minhash_signatures(docs)
     p = plan_string(out)
     assert node_count(out, "Expand") == 0
     assert "substring(" in p and "sequence(1" in p

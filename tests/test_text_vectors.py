@@ -471,7 +471,7 @@ def test_band_index_probe_finds_cross_batch_dups(spark, tmp_path):
     existing = docs.filter(F.col("doc_id") < 10)
     batch = docs.filter(F.col("doc_id") >= 10)
     path = str(tmp_path / "lsh")
-    TX.minhash_band_index(existing).write.partitionBy("band").parquet(path)
+    TX.minhash_band_index(TX.minhash_signatures(existing)).write.partitionBy("band").parquet(path)
     idx = spark.read.parquet(path)
     got = {(r.new_id, r.idx_id): r.jaccard for r in
            TX.probe_band_index(idx, batch, docs, threshold=0.8).collect()}
@@ -527,7 +527,8 @@ def test_verified_pairs_and_probe_match_exact_jaccard_replay(spark):
 
     batch = df.filter(F.col("doc_id") % 2 == 0)
     existing = df.filter(F.col("doc_id") % 2 == 1)
-    probed = TX.probe_band_index(TX.minhash_band_index(existing), batch, df, threshold=0.8)
+    index = TX.minhash_band_index(TX.minhash_signatures(existing))
+    probed = TX.probe_band_index(index, batch, df, threshold=0.8)
     got = {(r.new_id, r.idx_id): r.jaccard for r in probed.collect()}
     assert got == {
         (j, i) if j % 2 == 0 else (i, j): v for (i, j), v in want.items() if (i + j) % 2 == 1
