@@ -3916,7 +3916,7 @@ def q_kmeans(spark: SparkSession, sf: str) -> DataFrame:
     """ANN index training (round 5): Lloyd's k-means over the embedding
     corpus (operators/vectors.py kmeans_train, k=4, 2 iterations,
     deterministic init = the 4 smallest vec_ids) — the training step
-    that produces write_ivf_index's centroids. Distances are exact
+    that produces ivf_topk's centroids. Distances are exact
     int64 sums over micro-unit coordinates, centroid means exact
     integer micro-unit sums rounded to 6 dp. The oracle unrolls both
     Lloyd iterations in SQL (_kmeans_micro_cte) and must land on the
@@ -4444,8 +4444,9 @@ def q_lm_perplexity(spark: SparkSession, sf: str) -> DataFrame:
     # codegen shingling (token_ngram_rows), NOT the interpreted
     # higher-order ngrams lambda — measured 4× on this exact stream
     # (big.count at sf0.1: 3.5 s interpreted vs codegen sub-second),
-    # and the bigram stream is materialized twice (model + scoring)
-    big = TX.token_ngram_rows(docs, "doc_id", "text", 2, gram_alias="bg").persist()
+    # and the bigram stream is checkpointed: the model and the scoring
+    # both read it
+    big = TX.token_ngram_rows(docs, "doc_id", "text", 2, gram_alias="bg").localCheckpoint()
     bgc = big.groupBy("bg").agg(F.count(F.lit(1)).alias("cb"))
     scored = (
         big.join(F.broadcast(bgc), "bg")
@@ -4903,8 +4904,7 @@ def q_dedup_index_probe(spark: SparkSession, sf: str) -> DataFrame:
     with tempfile.TemporaryDirectory() as d:
         path = os.path.join(d, "lsh_index")
         # repartition by the partition column first: one file per band
-        # (16) instead of tasks × bands small files (512 measured) —
-        # the same layout rule write_ivf_index applies
+        # (16) instead of tasks × bands small files (512 measured)
         index = TX.minhash_band_index(TX.minhash_signatures(existing))
         index.repartition("band").write.partitionBy("band").parquet(path)
         idx = spark.read.parquet(path)

@@ -480,7 +480,7 @@ def binned_quantile_rollup(
     w = Window.partitionBy(*coarse_keys).orderBy("bin")
     wk = Window.partitionBy(*coarse_keys)
     # the cumulative table is read 2× per quantile (target-bin lookup +
-    # interpolation); persist it so the scan→fine→coarse→window chain
+    # interpolation); checkpoint it so the scan→fine→coarse→window chain
     # runs once — this |coarse_keys|×n_bins table IS the mergeable
     # sketch a deployment would store
     cum = coarse.select(
@@ -489,7 +489,7 @@ def binned_quantile_rollup(
         "n",
         F.sum("n").over(w).alias("cum_n"),
         F.sum("n").over(wk).alias("total_n"),
-    ).persist()
+    ).localCheckpoint()
     outs = []
     for q in quantiles:
         target = F.col("total_n") * F.lit(q)

@@ -48,7 +48,7 @@ def train_test_overlap(
     — the join is gram-keyed and linear in corpus size, never
     doc×doc. The train side is deduped to one row per distinct gram
     BEFORE the join (at 100 TB that table is the "contamination index";
-    persist it once and reuse it across test sets). Grams are short
+    write it out once and reuse it across test sets). Grams are short
     strings; for very large indexes join on ``xxhash64(gram)`` instead
     — same plan, 8-byte keys (not used here so the DuckDB oracle can
     replay the join exactly).
@@ -357,7 +357,7 @@ def containment_pairs(
         extra_cols=("__blk",),
     )
     sizes = g.groupBy(id_col).agg(F.count(F.lit(1)).cast("double").alias("n_sh"))
-    posts = g.join(sizes, id_col).select(id_col, "__blk", "n_sh", "shingle").persist()
+    posts = g.join(sizes, id_col).select(id_col, "__blk", "n_sh", "shingle").localCheckpoint()
     a, b = posts.alias("a"), posts.alias("b")
     common = (
         a.join(

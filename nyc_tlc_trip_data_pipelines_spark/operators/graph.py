@@ -38,6 +38,15 @@ from pyspark.sql import functions as F
 from .joins import size_gated_broadcast
 
 
+def _undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """The distinct (u, v) pairs of ``edges`` in both directions."""
+    return (
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
+        .distinct()
+    )
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -54,11 +63,9 @@ def connected_components(
     # re-executes the caller's (possibly expensive) edge-producing chain
     # a second time (measured on q_graph_components, whose edges are the
     # full LSH+verify dedup pipeline).
-    sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).union(
-        edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-    ).distinct().localCheckpoint()
+    sym = _undirected(edges, src, dst).localCheckpoint()
     labels = (
-        sym.select(F.col("a").alias("node"))
+        sym.select(F.col("u").alias("node"))
         .distinct()
         .withColumn("component", F.col("node"))
         .localCheckpoint()
@@ -66,15 +73,15 @@ def connected_components(
 
     for _ in range(max_iterations):
         neighbor_min = (
-            sym.join(labels, sym.b == labels.node)
-            .groupBy("a")
+            sym.join(labels, sym.v == labels.node)
+            .groupBy("u")
             .agg(F.min("component").alias("nmin"))
         )
         # Checkpointed: the jump self-join references `prop` twice, and
         # without materialization Catalyst would execute the |edges|
         # neighbor-min join once PER reference.
         prop = (
-            labels.join(neighbor_min, labels.node == neighbor_min.a, "left")
+            labels.join(neighbor_min, labels.node == neighbor_min.u, "left")
             .select(
                 "node",
                 F.least(
@@ -140,8 +147,8 @@ def triangle_count(
     id-ordered endpoint pair against the canonical edge set — NEVER an
     OR-condition join, which Spark can only plan as a nested-loop),
     one explode, one aggregate; no iteration, no driver-side state.
-    ``canon``/``oriented`` are persisted: each is referenced by
-    multiple joins, and without the persist Catalyst would recompute
+    ``canon``/``oriented`` are checkpointed: each is referenced by
+    multiple joins, and without the checkpoint Catalyst would recompute
     the degree join per reference. Returns (node, n_triangles) for
     every node in at least one triangle.
     """
@@ -152,7 +159,7 @@ def triangle_count(
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .persist()
+        .localCheckpoint()
     )
     deg = (
         canon.select(F.col("a").alias("node"))
@@ -174,7 +181,7 @@ def triangle_count(
             .alias("e")
         )
         .select("e.u", "e.v")
-        .persist()
+        .localCheckpoint()
     )
     o1 = oriented.alias("o1")
     o2 = oriented.alias("o2")
@@ -310,7 +317,8 @@ def bfs_hops(
     Scale shape: per round one shuffle of |frontier ⋈ edges| plus one
     anti-join against visited; lineage is cut per round with
     ``localCheckpoint`` (same pattern as ``connected_components``).
-    The early-exit count is a driver scalar, not data. At 100 TB
+    The early-exit count is a driver scalar observed on that
+    checkpoint's job, not a separate action. At 100 TB
     pre-partition edges by ``src`` (bucketing) so every expansion
     joins exchange-free on the edge side, and keep ``visited``
     hash-partitioned on node so the anti-join reuses the layout.
@@ -348,15 +356,18 @@ def bfs_hops(
         # 3.42 s → 4.59 s (ratio_calm 1.5, reproduced on retime): the
         # per-hop probe and next-hop expansion then re-scan the FULL
         # visited block set instead of a tiny dedicated nxt
-        # checkpoint, which outweighs the action saved.
+        # checkpoint, which outweighs the action saved. The emptiness
+        # probe is an Observation on the nxt checkpoint's own job.
+        obs = Observation()
         nxt = (
             frontier.join(e, frontier.node == e.u)
             .select(F.col("v").alias("node"))
             .distinct()
             .join(visited.select("node"), "node", "left_anti")
+            .observe(obs, F.count(F.lit(1)).alias("n"))
             .localCheckpoint()
         )
-        if nxt.limit(1).count() == 0:
+        if obs.get["n"] == 0:
             break
         visited = visited.union(nxt.withColumn("hops", F.lit(h).cast("int"))).localCheckpoint()
         frontier = nxt
@@ -395,12 +406,7 @@ def label_propagation(
     oracle unrolls them as CTEs); at 100 TB, diameter-deep spreading
     reuses the same loop with a convergence check.
     """
-    sym = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .distinct()
-        .localCheckpoint()
-    )
+    sym = _undirected(edges, src, dst).localCheckpoint()
     # one label per seed node, deterministically: duplicate seed rows
     # would inflate neighbor vote counts and conflicting labels would
     # emit two rows for one node (round-7 advice) — collapse with the
@@ -486,12 +492,7 @@ def k_core(
     cost for callers peeling past the default bound (r15, advisor
     item). Undirected: edges are symmetrized and deduped first.
     """
-    sym = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .distinct()
-        .localCheckpoint()
-    )
+    sym = _undirected(edges, src, dst).localCheckpoint()
     alive = sym
     for r in range(rounds):
         # Bound the lazy loop's ~3^rounds logical-plan growth: fine at
@@ -558,11 +559,7 @@ def node_jaccard(
     graph a forced broadcast of the degree table would OOM the
     driver. Results are byte-identical either way.
     """
-    sym = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .distinct()
-    )
+    sym = _undirected(edges, src, dst)
     if max_degree is not None:
         keep = (
             sym.groupBy("u")
@@ -573,7 +570,7 @@ def node_jaccard(
         sym = sym.join(keep, "u", "left_semi").join(
             keep.withColumnRenamed("u", "v"), "v", "left_semi"
         ).select("u", "v")
-    sym = sym.persist()
+    sym = sym.localCheckpoint()
     deg = sym.groupBy("u").agg(F.count(F.lit(1)).cast("long").alias("deg"))
     a = sym.select(F.col("v").alias("pivot"), F.col("u").alias("a"))
     b = sym.select(F.col("v").alias("pivot"), F.col("u").alias("b"))

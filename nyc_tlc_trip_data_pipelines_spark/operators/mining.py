@@ -63,22 +63,17 @@ def assoc_rules(
     exchange is the dominant cost. Baskets are entity-sized (items
     per basket bounded), so the grouped arrays stay small."""
     # the per-basket item-set table feeds THREE consumers (basket
-    # count, item counts, pair expansion); persist it so the
+    # count, item counts, pair expansion); checkpoint it so the
     # scan+group runs once — at 100 TB this is the table you'd write
-    # out before mining (same persist rationale as minhash signatures).
-    # Caching contract: the cache backs the RETURNED lazy plan, so it is
-    # not unpersisted here; it ages out under Spark's LRU block manager,
-    # or callers can `spark.catalog.clearCache()` after their action.
+    # out before mining (same rationale as minhash signatures).
     sets = (
         df.select(F.col(basket_col).alias("basket"), F.col(item_col).alias("item"))
         .groupBy("basket")
         .agg(F.array_sort(F.collect_set("item")).alias("items"))
-        .persist()
+        .localCheckpoint()
     )
-    # basket total as a broadcast 1-row aggregate, NOT an eager .count()
-    # baked into the plan as a literal — keeps the whole operator lazy
-    # (nothing runs at construction time; the denominator is consistent
-    # with whatever snapshot the terminal action reads)
+    # basket total as a broadcast 1-row aggregate over the checkpoint,
+    # NOT a separate .count() action baked into the plan as a literal
     nb = sets.select(F.count(F.lit(1)).alias("n_baskets"))
     item_counts = (
         sets.select(F.explode("items").alias("item"))
@@ -150,17 +145,15 @@ def collocations_pmi(
     keeps the self-join fanout vocab-bounded at corpus scale), and only
     pairs with ``df_ab >= min_pair_df`` are emitted."""
     # (doc, token) presence is tokenize+explode+dedup over the corpus —
-    # persist it (vocab build + prune read it) and persist the pruned
-    # table too (BOTH self-join sides read it); without these the
+    # checkpoint it (vocab build + prune read it) and checkpoint the
+    # pruned table too (BOTH self-join sides read it); without these the
     # corpus text is re-tokenized four times
-    # (same caching contract as assoc_rules: caches back the returned
-    # lazy plan, LRU-evicted or caller-cleared after the action)
     dt = (
         df.select(F.col(id_col).alias("doc"), F.explode(tokenize(text_col)).alias("tok"))
         .distinct()
-        .persist()
+        .localCheckpoint()
     )
-    # corpus size as a broadcast 1-row aggregate — lazy, not an eager
+    # corpus size as a broadcast 1-row aggregate, not a separate
     # .count() literal (same rationale as assoc_rules)
     nd = df.select(F.countDistinct(id_col).cast("double").alias("n_docs"))
     vocab = dt.groupBy("tok").agg(F.count(F.lit(1)).alias("df")).where(
@@ -168,7 +161,7 @@ def collocations_pmi(
     )
     # vocab is min_df-pruned but still vocabulary-sized: size-gate
     # the hints (round-9) so a 100M-term vocab cannot force-OOM
-    pruned = dt.join(size_gated_broadcast(vocab.select("tok")), "tok", "semi").persist()
+    pruned = dt.join(size_gated_broadcast(vocab.select("tok")), "tok", "semi").localCheckpoint()
     a = pruned.alias("a")
     b = pruned.alias("b")
     pair_df = (
@@ -287,12 +280,11 @@ def classifier_eval(
     a = F.col(actual_col)
     p = F.col(predicted_col)
     # |classes|²-row table, but its LINEAGE is the caller's full preds
-    # plan — persist so the five metric derivations below compute the
-    # corpus pass once (the assoc_rules caching contract: backs the
-    # returned lazy plan, LRU-evicted or caller-cleared after action)
+    # plan — checkpoint it so the five metric derivations below compute
+    # the corpus pass once
     cm = preds.groupBy(a.alias("a"), p.alias("p")).agg(
         F.count(F.lit(1)).cast("long").alias("n")
-    ).persist()
+    ).localCheckpoint()
     cls_list = (
         cm.select(F.col("a").alias("cls"))
         .union(cm.select(F.col("p").alias("cls")))
@@ -480,7 +472,7 @@ def sequential_pairs(
                 )
             ).alias("seq")
         )
-        .persist()
+        .localCheckpoint()
     )
     tot = seqs.select(F.count(F.lit(1)).alias("n_total"))
     pair_arr = F.flatten(
@@ -588,7 +580,7 @@ def item_cf_neighbors(
         df.select(F.col(basket_col).alias("basket"), F.col(item_col).alias("item"))
         .groupBy("basket")
         .agg(F.array_sort(F.collect_set("item")).alias("items"))
-        .persist()
+        .localCheckpoint()
     )
     item_counts = (
         sets.select(F.explode("items").alias("item"))

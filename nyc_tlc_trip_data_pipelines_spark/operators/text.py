@@ -438,7 +438,7 @@ def minhash_band_index(sig: DataFrame, id_col: str = "doc_id", bands: int = 16) 
     incremental-ingestion mode a 100 TB corpus actually runs:
     signatures+banding are computed ONCE per document ever; each new
     batch probes the stored index instead of re-LSH-ing the corpus
-    (same lifecycle as ``write_ivf_index`` for vectors). ``n_sh`` is
+    (same lifecycle as ``write_lsh_index`` for vectors). ``n_sh`` is
     the exact distinct-shingle count the size-ratio prefilter reads.
 
     Banding is the published MinHash-LSH scheme (Broder; Leskovec et
@@ -483,12 +483,12 @@ def _lsh_candidates(
     - have a rounded signature estimate ≥ ``threshold − 0.3`` (≥ 4σ
       below the threshold for a 32-hash estimate).
 
-    Returns the persisted id pairs, columns ``names``. The join emits
+    Returns the checkpointed id pairs, columns ``names``. The join emits
     ONLY the id pair — the pair-dedup exchange then shuffles 16-byte
     rows instead of two 32-long signature arrays (a ~17× row-width
     cut); the signatures are re-attached afterwards from band 0 of
-    each side. Persisted: the candidates are ~the true near-dup pairs,
-    a tiny table the verify step reads three times."""
+    each side. Checkpointed: the candidates are ~the true near-dup
+    pairs, a tiny table the verify step reads three times."""
     x, y = names
     pairs = (
         a.alias("a")
@@ -517,7 +517,7 @@ def _lsh_candidates(
         .join(sig_b, y)
         .filter(F.round(est, 6) >= F.lit(max(0.0, threshold - 0.3)))
         .select(x, y)
-        .persist()
+        .localCheckpoint()
     )
 
 
@@ -550,13 +550,13 @@ def _verify_exact(
     x, y = cand.columns
     cand_ids = cand.select(F.col(x).alias(id_col)).union(cand.select(F.col(y).alias(id_col))).distinct()
     docs_c = corpus.join(size_gated_broadcast(cand_ids), id_col, "left_semi")
-    # persisted: read once per pair side
+    # checkpointed: read once per pair side
     shset = (
         shingle_hashes(docs_c, id_col, text_col, shingle_k, mod_prime=False, spread=False)
         .distinct()
         .groupBy(id_col)
         .agg(F.collect_list("h").alias("shset"))
-        .persist()
+        .localCheckpoint()
     )
     sa = shset.select(F.col(id_col).alias(x), F.col("shset").alias("sh_a"))
     sb = shset.select(F.col(id_col).alias(y), F.col("shset").alias("sh_b"))
@@ -591,11 +591,11 @@ def minhash_verified_pairs(
     b = 16, ~2e-6 at J = 0.8 — or (b) its 32-hash estimate falls below
     ``threshold − 0.3`` (≥ 4σ). Precision is exact: every
     candidate is verified against the true shingle sets."""
-    # persisted: read by both join sides and both signature re-attaches
-    # — otherwise the shingle-explode-aggregate pipeline recomputes per
-    # reference (measured 7.5× slower at sf0.1). One row per document;
-    # the band rows are a cheap explode over it.
-    sig = minhash_signatures(df, id_col, text_col, num_hashes, shingle_k).persist()
+    # checkpointed: read by both join sides and both signature
+    # re-attaches — otherwise the shingle-explode-aggregate pipeline
+    # recomputes per reference (measured 7.5× slower at sf0.1). One row
+    # per document; the band rows are a cheap explode over it.
+    sig = minhash_signatures(df, id_col, text_col, num_hashes, shingle_k).localCheckpoint()
     index = minhash_band_index(sig, id_col, bands)
     cand = _lsh_candidates(
         index, index, F.col(f"a.{id_col}") < F.col(f"b.{id_col}"), ("id_a", "id_b"),
@@ -628,8 +628,8 @@ def probe_band_index(
     ``corpus`` must contain the text of both sides (indexes store
     signatures, not text — by design: the index stays kilobytes per
     document)."""
-    # persisted: read by the index join and the signature re-attach
-    sig = minhash_signatures(batch, id_col, text_col, num_hashes, shingle_k).persist()
+    # checkpointed: read by the index join and the signature re-attach
+    sig = minhash_signatures(batch, id_col, text_col, num_hashes, shingle_k).localCheckpoint()
     new = minhash_band_index(sig, id_col, bands)
     cand = _lsh_candidates(
         new, index, F.col(f"a.{id_col}") != F.col(f"b.{id_col}"), ("new_id", "idx_id"),
@@ -811,7 +811,7 @@ def jaccard_ngram_pairs(
     Three exact prunings (standard set-similarity-join techniques —
     AllPairs, Bayardo et al. 2007; PPJoin, Xiao et al. 2008; the
     MapReduce formulation is Vernica et al. 2010):
-    - postings are persisted before the joins (both sides otherwise
+    - postings are checkpointed before the joins (both sides otherwise
       recompute shingling);
     - length filter inside the candidate join — Jaccard(A,B) ≥ t forces
       t·|B| ≤ |A| (for |A| ≤ |B|), so size-incompatible pairs never
@@ -847,7 +847,7 @@ def jaccard_ngram_pairs(
         .distinct()
     )
     sizes = g.groupBy(id_col).agg(F.count(F.lit(1)).cast("int").alias("n_sh"))
-    posts = g.join(sizes, id_col).select(id_col, "n_sh", "shingle").persist()
+    posts = g.join(sizes, id_col).select(id_col, "n_sh", "shingle").localCheckpoint()
     # global canonical order: rare shingles first; row_number (not rank)
     # so prefix lengths are exact under ties
     freq = posts.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
@@ -877,7 +877,7 @@ def jaccard_ngram_pairs(
         )
         .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
         .distinct()
-        .persist()
+        .localCheckpoint()
     )
     # exact verify from posting counts: broadcast the (tiny) candidate
     # pair table onto A's postings, equi-join on (id_b, shingle)
@@ -1081,10 +1081,10 @@ def simhash_hamming_pairs(
     block_bits = 60 // n_blocks
     mask = (1 << block_bits) - 1
     # the signature build (tokenize + 60 bit-vote sums) feeds both
-    # sides of every per-block join — persist it or it runs 2·n_blocks
-    # times (measured 3.6 s → 1.3 s at sf0.1; at 100 TB the signatures
-    # would be written to a table once, same as MinHash)
-    sigs = simhash_signatures(df, id_col, text_col).persist()
+    # sides of every per-block join — checkpoint it or it runs
+    # 2·n_blocks times (measured 3.6 s → 1.3 s at sf0.1; at 100 TB the
+    # signatures would be written to a table once, same as MinHash)
+    sigs = simhash_signatures(df, id_col, text_col).localCheckpoint()
     cands = None
     for k in range(n_blocks):
         blk = F.shiftright(F.col("simhash"), k * block_bits).bitwiseAND(F.lit(mask))
@@ -1137,16 +1137,24 @@ def minhash_accuracy(
     for candidate pairs, so its cost is candidate-bounded, never
     corpus².
 
-    100 TB: signatures and shingle sets are each computed once
-    (persisted here; written to tables in a deployment); every join
-    after that carries ids + fixed-width numbers only."""
+    100 TB: signatures and shingle sets are computed once, by one
+    per-document aggregate over the distinct (id, hash) rows,
+    checkpointed here (written to a table in a deployment); the band
+    joins and the estimate carry ids + fixed-width numbers only.
+
+    The checkpoint's statistics are its lineage's estimate, which
+    sizes a shingle-hash array at one element: unhinted, the planner
+    broadcasts the whole-corpus shingle sets to both exact-stage
+    joins (measured 8.5 s vs 3.6 s at sf0.1), so those joins are
+    hinted ``merge``."""
     rows_per_band = num_hashes // bands
-    sh = (
+    sig = (
         shingle_hashes(df, id_col, text_col, shingle_k, portable=True)
         .distinct()
-        .persist()
+        .groupBy(id_col)
+        .agg(*minhash_perm_aggs(num_hashes), F.collect_list("h").alias("shs"))
+        .localCheckpoint()
     )
-    sig = sh.groupBy(id_col).agg(*minhash_perm_aggs(num_hashes)).persist()
     cands = None
     for k in range(bands):
         cols = [f"mh_{i}" for i in range(k * rows_per_band, (k + 1) * rows_per_band)]
@@ -1172,11 +1180,10 @@ def minhash_accuracy(
     # against the posting expansion: exploding candidate pairs × doc
     # shingles shuffles |pairs|·|doc| rows (53M at sf0.1, 7.7 s),
     # while the array intersect is hash-set-local per pair (~1 s).
-    # Arrays aggregate straight off the already-persisted distinct
-    # (id, h) rows, so no second tokenize pass either.
-    shset = sh.groupBy(id_col).agg(F.collect_list("h").alias("shs"))
-    aa = shset.select(F.col(id_col).alias("id_a"), F.col("shs").alias("sh_a"))
-    bb = shset.select(F.col(id_col).alias("id_b"), F.col("shs").alias("sh_b"))
+    # The arrays come from the same checkpointed aggregate as the
+    # signatures, so no second tokenize pass either.
+    aa = sig.select(F.col(id_col).alias("id_a"), F.col("shs").alias("sh_a")).hint("merge")
+    bb = sig.select(F.col(id_col).alias("id_b"), F.col("shs").alias("sh_b")).hint("merge")
     common = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
     exact = F.round(
         common / (F.size("sh_a") + F.size("sh_b") - common),
@@ -1393,7 +1400,7 @@ def retrieval_eval(
         )
     )
     wr = _W.partitionBy("term").orderBy(F.desc("score"), F.asc(id_col))
-    ranked = scored.withColumn("rank", F.row_number().over(wr)).persist()
+    ranked = scored.withColumn("rank", F.row_number().over(wr)).localCheckpoint()
     rel = ranked.filter(F.col("tf") >= rel_tf)
     n_rel = rel.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("n_rel"))
     disc = lambda r: F.round(  # noqa: E731
@@ -1480,9 +1487,8 @@ def dedup_savings_report(
         text_col=text_col,
         jaccard_threshold=jaccard_threshold,
     )
-    # persist: sized's lineage embeds the whole LSH+verify grouping and
-    # is read by BOTH the per-group aggregate and the keep pick (the
-    # assoc_rules caching contract)
+    # checkpointed: sized's lineage embeds the whole LSH+verify grouping
+    # and is read by BOTH the per-group aggregate and the keep pick
     sized = (
         groups.join(
             df.select(
@@ -1491,7 +1497,7 @@ def dedup_savings_report(
             F.col(id_col) == F.col("__id"),
         )
         .select(id_col, "group_id", "len")
-        .persist()
+        .localCheckpoint()
     )
     per_group = (
         sized.groupBy("group_id")

@@ -1172,7 +1172,7 @@ def autocorrelation(
         )
         .groupBy("i")
         .agg(F.sum("vm").alias("v"))
-        .persist()
+        .localCheckpoint()
     )
     dec = lambda c: c.cast("decimal(38,0)")
     glob = series.agg(
@@ -1253,7 +1253,7 @@ def cross_correlation(
         )
         .groupBy("i")
         .agg(F.sum("xm").alias("x"), F.sum("ym").alias("y"))
-        .persist()
+        .localCheckpoint()
     )
     dec = lambda c: c.cast("decimal(38,0)")
     gstats = series.agg(

@@ -240,50 +240,10 @@ def ivf_topk(
     codegen pass), probe the ``n_probe`` centroids nearest the query.
 
     Centroids come from a driver-side k-means over a sample (caller's
-    choice; deterministic seed). At scale, persist the assignment
-    partitioned by centroid id (:func:`write_ivf_index`) → probing =
-    partition pruning.
+    choice; deterministic seed).
     """
     probe = _ivf_probe_set(query, centroids, n_probe)
     cand = _ivf_assigned(df, centroids, vec_col).filter(F.col("__cent").isin(*probe))
-    return cosine_topk(cand, query, vec_col, id_col, k)
-
-
-def write_ivf_index(
-    df: DataFrame,
-    path: str,
-    centroids: Sequence[Sequence[float]],
-    vec_col: str = "embedding",
-) -> None:
-    """Materialize the IVF index: corpus written ONCE partitioned by
-    nearest-centroid cell, so probes become directory pruning — a
-    probe of n_probe/n_cells touches exactly that fraction of the
-    files. Rebuild (or re-cluster) when centroid drift degrades recall;
-    the write is a single pass over the corpus."""
-    (
-        _ivf_assigned(df, centroids, vec_col)
-        .write.partitionBy("__cent")
-        .mode("overwrite")
-        .parquet(path)
-    )
-
-
-def ivf_probe_index(
-    spark,
-    path: str,
-    query: Sequence[float],
-    centroids: Sequence[Sequence[float]],
-    n_probe: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 10,
-) -> DataFrame:
-    """Probe a materialized IVF index: the ``__cent IN (...)`` filter
-    lands on the partition column → PartitionFilters, only the probed
-    cell directories are listed/read. Result is identical to
-    :func:`ivf_topk` over the same corpus and centroids."""
-    probe = _ivf_probe_set(query, centroids, n_probe)
-    cand = spark.read.parquet(path).filter(F.col("__cent").isin(*probe))
     return cosine_topk(cand, query, vec_col, id_col, k)
 
 
@@ -413,10 +373,9 @@ def kmeans_train(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> tuple[DataFrame, list[list[float]]]:
-    """Lloyd's k-means over an embedding column — the TRAINING step the
-    IVF index (:func:`write_ivf_index`) needs for its centroids, and
-    the clustering under SemDeDup, hard-negative mining, kNN label vote
-    and IVF-PQ.
+    """Lloyd's k-means over an embedding column — the TRAINING step
+    :func:`ivf_topk` needs for its centroids, and the clustering under
+    SemDeDup, hard-negative mining, kNN label vote and IVF-PQ.
 
     Deterministic end to end, one contract at every k: coordinates
     are quantized to integer micro-units (``round(x·10⁶)`` HALF_UP,
@@ -817,52 +776,43 @@ def pca_top_component(
     # would mis-scale the first Rayleigh estimate for other dims)
     v = [1.0 / (dim ** 0.5)] * dim
     eig = 0.0
-    # persist: each iteration's aggregate re-reads the centered matrix;
-    # without it every iteration re-scans the source and re-folds the
-    # centering zip_with. Measured NEUTRAL at local scale (2.6 s vs
-    # 2.5 s warm, sf0.1 — a 2000-row re-scan is free) but at 100 TB
-    # the per-iteration corpus re-read IS the cost, same rationale as
-    # the kmeans/minhash persists. Freed at function exit.
+    # checkpointed: each iteration's aggregate re-reads the centered
+    # matrix; without it every iteration re-scans the source and re-folds
+    # the centering zip_with. At 100 TB the per-iteration corpus re-read
+    # IS the cost, same rationale as the kmeans/minhash checkpoints.
     centered = emb.select(
         "id", F.zip_with("v", _as_vec_lit(mu), lambda x, m: x - m).alias("c")
-    ).persist()
-    # try/finally: release on EVERY exit — the zero-variance
-    # ValueError (or a failed collect) would otherwise leak the
-    # cached block for the session lifetime
-    try:
-        for _ in range(iterations):
-            s = F.round(
-                F.aggregate(
-                    F.zip_with("c", _as_vec_lit(v), lambda x, w: x * w),
-                    F.lit(0.0),
-                    lambda acc, t: acc + t,
-                ),
-                6,
+    ).localCheckpoint()
+    for _ in range(iterations):
+        s = F.round(
+            F.aggregate(
+                F.zip_with("c", _as_vec_lit(v), lambda x, w: x * w),
+                F.lit(0.0),
+                lambda acc, t: acc + t,
+            ),
+            6,
+        )
+        w_rows = (
+            centered.select(s.alias("s"), F.posexplode("c").alias("dim", "x"))
+            .groupBy("dim")
+            .agg(
+                F.round(
+                    F.sum(micro(F.col("s") * F.col("x"))) / F.count(F.lit(1)) / F.lit(1000000.0), 6
+                ).alias("w")
             )
-            w_rows = (
-                centered.select(s.alias("s"), F.posexplode("c").alias("dim", "x"))
-                .groupBy("dim")
-                .agg(
-                    F.round(
-                        F.sum(micro(F.col("s") * F.col("x"))) / F.count(F.lit(1)) / F.lit(1000000.0), 6
-                    ).alias("w")
-                )
-                .collect()
-            )
-            w = [0.0] * dim
-            for r in w_rows:
-                w[r.dim] = r.w
-            norm = sum(x * x for x in w) ** 0.5
-            if norm == 0.0:
-                # all centered vectors are 0 (constant corpus slice): the
-                # top component is undefined — fail loudly like the empty-
-                # input guard rather than ZeroDivisionError mid-iteration
-                raise ValueError("pca_top_component: zero-variance input")
-            eig = _round_half_up(norm)  # Rayleigh estimate ‖C·v‖ (v is unit)
-            v = [_round_half_up(x / norm) for x in w]
-
-    finally:
-        centered.unpersist()
+            .collect()
+        )
+        w = [0.0] * dim
+        for r in w_rows:
+            w[r.dim] = r.w
+        norm = sum(x * x for x in w) ** 0.5
+        if norm == 0.0:
+            # all centered vectors are 0 (constant corpus slice): the
+            # top component is undefined — fail loudly like the empty-
+            # input guard rather than ZeroDivisionError mid-iteration
+            raise ValueError("pca_top_component: zero-variance input")
+        eig = _round_half_up(norm)  # Rayleigh estimate ‖C·v‖ (v is unit)
+        v = [_round_half_up(x / norm) for x in w]
     out = [(i, v[i], eig) for i in range(dim)]
     return df.sparkSession.createDataFrame(out, "dim int, loading double, eigenvalue double")
 
@@ -1066,7 +1016,7 @@ def pq_adc_topk(
     lut = _int_rows_df(spark, rows, "sub int, code int, d2_micro long")
     joined = codes.join(F.broadcast(lut), ["sub", "code"])
     # ONE groupBy produces both the distance sum and the wide code
-    # columns — a separate pivot pass would re-execute the unpersisted
+    # columns — a separate pivot pass would re-execute the uncheckpointed
     # codes lineage (the full per-row PQ assignment scan) a second time
     adc = joined.groupBy("id").agg(
         F.sum("d2_micro").alias("__micro"),
@@ -1313,7 +1263,7 @@ def ivfpq_topk(
     residual table is one map-side join + zip_with pass; the ADC scan
     joins an (n_probe·m·k_codes)-row broadcast LUT onto the probed
     cells' codes — shuffle is the single (id, cell) aggregate over
-    n_probe/kc of the corpus. Persisting the residual table avoids
+    n_probe/kc of the corpus. Checkpointing the residual table avoids
     re-running the coarse assignment for each PQ training pass.
     """
     head = df.select(F.size(vec_col).alias("d")).first()
@@ -1343,7 +1293,7 @@ def ivfpq_topk(
                 lambda x, y: F.round(x - y, 6),
             ).alias("residual"),
         )
-        .persist()
+        .localCheckpoint()
     )
     codes, books = pq_train_encode(
         res, m=m, k=k_codes, iterations=1, vec_col="residual", id_col="id"
@@ -1532,7 +1482,7 @@ def mmr_diversify(
         df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"), rel.alias("rel"))
         .orderBy(F.col("rel").desc(), F.col("id"))
         .limit(int(pool))
-        .persist()
+        .localCheckpoint()
     )
     sim = F.round(
         array_dot(F.col("a.v"), F.col("b.v"))
@@ -1546,7 +1496,7 @@ def mmr_diversify(
         .select(
             F.col("a.id").alias("ca"), F.col("b.id").alias("cb"), sim.alias("s")
         )
-        .persist()
+        .localCheckpoint()
     )
     chosen: list[tuple[int, object, float, float]] = []
     cand = pooled.select("id", "rel")
@@ -1581,12 +1531,6 @@ def mmr_diversify(
         r = top[0]
         chosen.append((step, r["id"], float(r["rel"]), float(r["score"])))
         cand = cand.filter(F.col("id") != F.lit(r["id"]))
-    # the returned frame is a driver-local createDataFrame — unlike the
-    # keep-the-cache contract elsewhere, nothing downstream references
-    # pooled/sims, so release them now instead of leaking until LRU
-    # eviction (round-8 ADVICE).
-    sims.unpersist()
-    pooled.unpersist()
     spark = df.sparkSession
     return spark.createDataFrame(
         [(s, i, rl, sc) for s, i, rl, sc in chosen],

@@ -223,22 +223,28 @@ def test_repeated_pagerank_compiles_no_new_classes(spark):
     assert compiles.getCount() == before
 
 
-def test_iterative_checkpoints_are_released_after_gc(spark):
-    """PageRank and the Arrow-tier k-means hold their loop inputs in
-    localCheckpoint blocks, which Spark frees once the frames are
-    garbage-collected; persist() blocks would stay pinned."""
+def test_iterative_checkpoints_are_released_after_gc(spark, sf_dir):
+    """Operators materialize only with localCheckpoint: after PageRank,
+    the Arrow-tier k-means, mmr_diversify and the q_dedup_minhash and
+    q_assoc_rules registry ids at sf0.01, the session's CacheManager is
+    empty and every block they stored is freed once the frames are
+    garbage-collected."""
     import gc
+    import os
     import time
 
+    import __spark_entry__ as E
     from nyc_tlc_trip_data_pipelines_spark.operators import graph as GR
     from nyc_tlc_trip_data_pipelines_spark.operators import vectors as V
 
     store = spark.sparkContext._jsc.sc().statusStore()
+    cache = spark._jsparkSession.sharedState().cacheManager()
 
     def stored_ids():
         infos = store.rddList(True)
         return {infos.apply(i).id() for i in range(infos.size())}
 
+    spark.catalog.clearCache()
     before = stored_ids()
     edges = spark.createDataFrame([("a", "b"), ("b", "c"), ("c", "a")], "src string, dst string")
     GR.pagerank(edges).collect()
@@ -247,15 +253,44 @@ def test_iterative_checkpoints_are_released_after_gc(spark):
     )
     assigned, _ = V.kmeans_train(pts, k=2)
     assigned.collect()
-    del edges, pts, assigned
+    vecs = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.9, 0.1]), (3, [0.0, 1.0]), (4, [0.5, 0.5])],
+        "vec_id long, embedding array<double>",
+    )
+    assert len(V.mmr_diversify(vecs, [1.0, 0.2], k=2, pool=4).collect()) == 2
+    sf01 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    qs = E.queries()
+    for qid in ("q_dedup_minhash", "q_assoc_rules"):
+        qs[qid](spark, sf01).write.format("noop").mode("overwrite").save()
+    assert cache.isEmpty()
+    del edges, pts, assigned, vecs
     assert stored_ids() - before  # the checkpoints were stored
-    for _ in range(40):
+    for _ in range(80):
         gc.collect()
         spark.sparkContext._jvm.System.gc()
         if not stored_ids() - before:
             break
         time.sleep(0.25)
     assert not stored_ids() - before
+    assert cache.isEmpty()
+
+
+def test_package_never_uses_the_session_cache():
+    """localCheckpoint is the engine's only materialization: no package
+    module registers a CacheManager entry or releases one."""
+    import pathlib
+    import re
+
+    import nyc_tlc_trip_data_pipelines_spark as pkg
+
+    calls = re.compile(r"\.persist\(|\.cache\(\)|\.unpersist\(")
+    found = [
+        f"{path.name}:{n}"
+        for path in sorted(pathlib.Path(pkg.__file__).parent.rglob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if calls.search(line)
+    ]
+    assert not found, found
 
 
 def test_cohort_retention_daily(spark):

