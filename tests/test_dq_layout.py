@@ -225,9 +225,9 @@ def test_repeated_pagerank_compiles_no_new_classes(spark):
 
 def test_iterative_checkpoints_are_released_after_gc(spark, sf_dir):
     """Operators materialize only with localCheckpoint: after PageRank,
-    the Arrow-tier k-means, mmr_diversify and the q_dedup_minhash and
-    q_assoc_rules registry ids at sf0.01, the session's CacheManager is
-    empty and every block they stored is freed once the frames are
+    the Arrow-tier k-means and the q_dedup_minhash and q_assoc_rules
+    registry ids at sf0.01, the session's CacheManager is empty and
+    every block they stored is freed once the frames are
     garbage-collected."""
     import gc
     import os
@@ -253,17 +253,12 @@ def test_iterative_checkpoints_are_released_after_gc(spark, sf_dir):
     )
     assigned, _ = V.kmeans_train(pts, k=2)
     assigned.collect()
-    vecs = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (2, [0.9, 0.1]), (3, [0.0, 1.0]), (4, [0.5, 0.5])],
-        "vec_id long, embedding array<double>",
-    )
-    assert len(V.mmr_diversify(vecs, [1.0, 0.2], k=2, pool=4).collect()) == 2
     sf01 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
     qs = E.queries()
     for qid in ("q_dedup_minhash", "q_assoc_rules"):
         qs[qid](spark, sf01).write.format("noop").mode("overwrite").save()
     assert cache.isEmpty()
-    del edges, pts, assigned, vecs
+    del edges, pts, assigned
     assert stored_ids() - before  # the checkpoints were stored
     for _ in range(80):
         gc.collect()
